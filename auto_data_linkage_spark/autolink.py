@@ -257,7 +257,16 @@ class AutoLinker:
                 df.where(F.col("__src") == "r"),
             )
 
-        n = df.count()  # materializes the cache; guards key on n
+        # one job materializes the cache; guards key on n, the prior on
+        # the frame predict scores (the left table in link mode)
+        n, n_left = df.agg(
+            F.count("*"),
+            F.count(F.when(F.col("__src") == "l", 1)) if link_mode else F.lit(0),
+        ).first()
+        # the one place the prior is decided: 1/N of the frame predict
+        # counts, pinned on every trial model, so search, best
+        # predictions and incremental folds all score with the same value
+        self._prior = 1.0 / max(n_left if link_mode else n, 2)
         (
             self.resolved_max_block_size,
             self.resolved_total_pairs_guard,
@@ -327,6 +336,7 @@ class AutoLinker:
             unique_id=self.unique_id,
             max_block_size=self.resolved_max_block_size,
             block_cap_mode=self.block_cap_mode,
+            prior=self._prior,
         )
         model.estimate_u(df, target_pairs=100_000, seed=self.random_seed)
         if training_rule is not None:
@@ -441,11 +451,9 @@ class AutoLinker:
                 "the base — incremental_update requires disjoint ids"
             )
 
+        # the model's prior was pinned by auto_link, so folds score with
+        # the prior the base clustering used, whatever the batch size
         model = self.best_trial.model
-        if model.prior is None:
-            # pin the prior once: incremental scoring must not drift with
-            # the batch size the way a per-call 1/N prior would
-            model.prior = 1.0 / max(self.clean_data.count(), 2)
         base = self.best_clusters_at_threshold(threshold)
         if link_mode:
             # link_only: the batch may pair only with the OPPOSITE table;

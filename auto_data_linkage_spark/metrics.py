@@ -10,7 +10,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -147,11 +147,17 @@ def clustering_scores(
 ) -> dict[str, float]:
     """Supervised clustering scores computed IN SPARK from the
     (cluster, label) contingency counts — replaces the reference's
-    ``toPandas`` + sklearn path (autolinker.py:1234-1257) with three
-    aggregations; no driver-side row data.
+    ``toPandas`` + sklearn path (autolinker.py:1234-1257); no
+    driver-side row data, two jobs over one cached contingency table.
 
-    Returns homogeneity, completeness, V-measure (entropy-based; public
-    formulas) and adjusted Rand index (pair-count formula).
+    Returns homogeneity, completeness, V-measure and adjusted Rand index
+    with sklearn's formulas: homogeneity = I(C;K)/H(C) and completeness
+    = I(C;K)/H(K), the mutual information summed over the contingency
+    cells. Each cell term is ``(n/N)·((ln N − ln n_c) + (ln n − ln
+    n_k))`` (with the roles of c and k swapped for completeness): when
+    one side is constant, or the clustering equals the labels, the two
+    brackets cancel exactly, so the degenerate scores are exactly 0.0
+    and the perfect ones exactly 1.0 whatever the partitioning.
     """
     cont = (
         clusters.groupBy(cluster_col, true_label)
@@ -162,53 +168,44 @@ def clustering_scores(
             F.col("count").cast("double").alias("n"),
         )
     ).cache()
-    n_total = cont.agg(F.sum("n")).collect()[0][0]
+    n_total = cont.agg(F.sum("n")).first()[0]
     if not n_total:
+        cont.unpersist()
         return {k: 0.0 for k in (
             "homogeneity", "completeness", "v_measure", "adjusted_rand"
         )}
-
-    def entropy_of(keys: list[str]) -> float:
-        sizes = cont.groupBy(*keys).agg(F.sum("n").alias("m"))
-        row = sizes.agg(
-            F.sum(-(F.col("m") / n_total) * F.log(F.col("m") / n_total))
-        ).collect()[0]
-        return float(row[0] or 0.0)
-
-    h_c = entropy_of(["c"])
-    h_k = entropy_of(["k"])
-    # H(C|K) = -Σ_{k,c} (n/N) ln(n / n_k)
-    nk = cont.groupBy("k").agg(F.sum("n").alias("nk"))
-    joint = cont.join(nk, "k")
-    h_c_given_k = float(
-        joint.agg(
-            F.sum(-(F.col("n") / n_total) * F.log(F.col("n") / F.col("nk")))
-        ).collect()[0][0]
-        or 0.0
+    n, nk, nc = F.col("n"), F.col("nk"), F.col("nc")
+    # every logarithm is Spark's, so ln N and ln n_k cancel bit-exactly
+    # when n_k = N
+    ln_n, ln_nk, ln_nc = F.log(n), F.log(nk), F.log(nc)
+    ln_total = F.log(F.lit(float(n_total)))
+    w = n / F.lit(float(n_total))
+    # marginals ride each cell (two windows); a sum over a marginal is
+    # a sum over its cells weighted by n / n_marginal, e.g.
+    # H(C) = -Σ_c (n_c/N) ln(n_c/N) = Σ_cells (n/N)(ln N - ln n_c)
+    h_c, h_k, mi_c, mi_k, sum_ij, sum_k, sum_c = (
+        cont.withColumn("nk", F.sum("n").over(Window.partitionBy("k")))
+        .withColumn("nc", F.sum("n").over(Window.partitionBy("c")))
+        .agg(
+            F.sum(w * (ln_total - ln_nc)),
+            F.sum(w * (ln_total - ln_nk)),
+            F.sum(w * ((ln_total - ln_nc) + (ln_n - ln_nk))),
+            F.sum(w * ((ln_total - ln_nk) + (ln_n - ln_nc))),
+            # adjusted Rand pair counts: Σ C(n,2), Σ_k C(n_k,2), Σ_c C(n_c,2)
+            F.sum(n * (n - 1) / 2),
+            F.sum(n * (nk - 1) / 2),
+            F.sum(n * (nc - 1) / 2),
+        )
+        .first()
     )
-    nc = cont.groupBy("c").agg(F.sum("n").alias("nc"))
-    joint_c = cont.join(nc, "c")
-    h_k_given_c = float(
-        joint_c.agg(
-            F.sum(-(F.col("n") / n_total) * F.log(F.col("n") / F.col("nc")))
-        ).collect()[0][0]
-        or 0.0
-    )
-    homogeneity = 1.0 if h_c == 0 else 1.0 - h_c_given_k / h_c
-    completeness = 1.0 if h_k == 0 else 1.0 - h_k_given_c / h_k
+    cont.unpersist()
+    homogeneity = 1.0 if h_c == 0 else max(mi_c, 0.0) / h_c
+    completeness = 1.0 if h_k == 0 else max(mi_k, 0.0) / h_k
     v = (
         0.0
         if homogeneity + completeness == 0
         else 2 * homogeneity * completeness / (homogeneity + completeness)
     )
-
-    # adjusted Rand from pair counts
-    def comb2(col):
-        return col * (col - 1) / 2
-
-    sum_ij = cont.agg(F.sum(comb2(F.col("n")))).collect()[0][0] or 0.0
-    sum_k = nk.agg(F.sum(comb2(F.col("nk")))).collect()[0][0] or 0.0
-    sum_c = nc.agg(F.sum(comb2(F.col("nc")))).collect()[0][0] or 0.0
     total_pairs = n_total * (n_total - 1) / 2
     expected = sum_k * sum_c / total_pairs if total_pairs else 0.0
     max_index = (sum_k + sum_c) / 2
@@ -217,11 +214,10 @@ def clustering_scores(
         if max_index == expected
         else (sum_ij - expected) / (max_index - expected)
     )
-    cont.unpersist()
     return {
-        "homogeneity": homogeneity,
-        "completeness": completeness,
-        "v_measure": v,
+        "homogeneity": float(homogeneity),
+        "completeness": float(completeness),
+        "v_measure": float(v),
         "adjusted_rand": float(ari),
     }
 

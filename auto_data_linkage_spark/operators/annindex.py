@@ -3,17 +3,18 @@ a directory, and serve top-k from the stored index in any later
 session — the amortization a 100 TB corpus demands (encoding 10¹⁰
 vectors is a full corpus pass; queries should not pay it again).
 
-Index layout under ``path/``:
+Index tables under ``path/``:
 
-- ``coded/`` — the PQ-coded corpus ``(neighbor_id, codes, __cn)``
+- ``coded`` — the PQ-coded corpus ``(neighbor_id, codes, __cn)``
   written ``partitionBy(cell)``: a probe of ``nprobe`` cells becomes a
   PARQUET PARTITION-PRUNED scan (only the probed ``cell=N/``
   directories are read — the on-disk analog of the in-memory cell
   equi-join, plan-tested);
-- ``centroids/`` — the ``(cell, centroid)`` routing table (tiny,
+- ``centroids`` — the ``(cell, centroid)`` routing table (tiny,
   broadcast at query time);
-- ``index.json`` — codebooks + parameters (m, n_codewords, dims,
-  column names, row/cell counts).
+- ``tombstones`` — the deleted-ids mask (:func:`delete_from_ann_index`);
+- the manifest ``meta`` — codebooks + parameters (m, n_codewords,
+  dims, column names, row/cell counts).
 
 Serving reuses :func:`similarity._ivfpq_score` — the SAME plan as the
 inline :func:`similarity.ivfpq_topk`, so the stored index returns
@@ -24,19 +25,16 @@ No reference analogue (the reference has no ANN surface) — LLM-brief
 scope, Spark-first: every artifact is a parquet table or a JSON
 literal; no sidecar services, no custom file formats.
 
-Two storage layouts, chosen at build time and auto-detected after
-(identical contract to :mod:`.lexindex` — see its docstring):
-``layout="manifest"`` (default; immutable ``gen=N`` dirs +
-one-JSON-commit manifests, :mod:`.manifestfs`: zero renames →
-object-store-safe, atomic deletes and whole-store cutover,
-snapshot-pinned readers, explicit :func:`vacuum_ann_index`) or
-``layout="rename"`` (opt-in; in-place ``cell=N`` dirs, two-rename
-swap + load-time repair, single-writer POSIX fast path).
+Storage is the manifest protocol shared with :mod:`.lexindex` (see its
+docstring): immutable ``gen=N`` dirs + one-JSON-commit manifests
+(:mod:`.manifestfs`) — zero renames, object-store-safe, atomic deletes
+and whole-store cutover, snapshot-pinned readers, explicit
+:func:`vacuum_ann_index`. Indexes in the retired in-place ``rename``
+layout are refused with a ``ValueError``; rebuild them at a new path.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -44,56 +42,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifestfs as M
-from .lexindex import _mask_tombstoned
-from .storefs import repair_swept_dirs, swap_dir
+from .lexindex import _mask_tombstoned, _RestampRequired
 
 _VERSION = 1
 
 
-def repair_ann_index(path: str) -> dict:
-    """Crash-repair sweep for torn :func:`compact_ann_index` swaps:
-    restore any ``cell=N__old`` whose live dir is missing, drop
-    completed-swap leftovers and scratch trees (see
-    :mod:`.storefs` for the crash states). One ``listdir`` when the
-    index is healthy — ran automatically by :func:`load_ann_index` and
-    at the start of every compaction, callable directly after a known
-    crash. A manifest-layout store has no torn states (uncommitted
-    generations are invisible) — no-op there; reclamation is
-    :func:`vacuum_ann_index`. Returns
-    ``{"restored": [...], "removed": [...]}``."""
-    from .storefs import repair_swapped_dir
-
-    if M.is_manifest_store(path):
-        return {"restored": [], "removed": []}
-    local = _local(path)
-    # whole-index rebuild swap first (restores a parked index whose
-    # promotion crashed; does NOT touch a sibling __rebuild tree — an
-    # in-progress rebuild may legitimately be writing there)
-    out = repair_swapped_dir(local)
-    coded = os.path.join(local, "coded")
-    swept = repair_swept_dirs(coded, tmp_roots=(coded + "__compact",))
-    out["restored"] += swept["restored"]
-    out["removed"] += swept["removed"]
-    return out
-
-
-def _local(path: str) -> str:
-    return path[7:] if path.startswith("file://") else path
-
-
-def _write_meta(local: str, meta: dict) -> None:
-    """Atomic index.json update: write a temp file and os.replace() it
-    (the PosixCommitStore.replace pattern — sources/layout.py). A crash
-    mid-write, or a concurrent load_ann_index / ann_index_sink reader,
-    therefore always sees either the old or the new complete JSON,
-    never a torn/empty file. ``generation`` increments on every edit so
-    readers can detect staleness cheaply."""
-    meta["generation"] = int(meta.get("generation", 0)) + 1
-    target = os.path.join(local, "index.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, target)
+def _read_meta(snap: dict) -> dict:
+    """The snapshot's metadata, checked against the supported version."""
+    meta = dict(snap["meta"])
+    if meta.get("version") != _VERSION:
+        raise ValueError(
+            f"unsupported ann-index version {meta.get('version')!r}"
+        )
+    return meta
 
 
 @dataclass
@@ -280,13 +241,12 @@ def build_ann_index(
     n_cells: int | None = None,
     kmeans_iter: int = 5,
     seed: int = 0,
-    layout: str = "manifest",
     _expected_version: int = 0,
 ) -> dict:
-    """One corpus pass → stored index. Centroids are the per-cell
-    means of the existing ``cell_col`` labels; codebooks are the
-    deterministic md5-rank sampled PQ codebooks. Returns the metadata
-    dict (also written to ``index.json``).
+    """One corpus pass → stored index, committed as manifest v1.
+    Centroids are the per-cell means of the existing ``cell_col``
+    labels; codebooks are the deterministic md5-rank sampled PQ
+    codebooks. Returns the metadata dict.
 
     ``n_cells`` LEARNS the routing cells instead of requiring a label
     column: k-means (:func:`similarity.kmeans_centroids`, deterministic
@@ -297,17 +257,9 @@ def build_ann_index(
     ``codec`` picks the compression rung: ``"pq"`` (default, 8-byte
     codes — smallest scan, approximate scores) or ``"sq8"`` (int8
     per-dimension codes — 4× smaller than floats at ~full recall,
-    scored scale-invariantly; ``m``/``n_codewords`` are ignored).
-
-    ``layout`` defaults to ``"manifest"`` (immutable generations + a
-    manifest log — atomic commits, exactly-once sinks, time travel,
-    object-store-safe); ``layout="rename"`` opts into the in-place
-    single-writer POSIX layout (:mod:`.lexindex` module docstring for
-    the trade). Existing stores auto-detect their layout."""
+    scored scale-invariantly; ``m``/``n_codewords`` are ignored)."""
     if codec not in ("pq", "sq8"):
         raise ValueError(f"codec must be 'pq' or 'sq8', got {codec!r}")
-    if layout not in ("rename", "manifest"):
-        raise ValueError(f"layout must be 'rename' or 'manifest', got {layout!r}")
     from auto_data_linkage_spark.operators.similarity import (
         _pq_recon_norm,
         assign_cells,
@@ -317,7 +269,7 @@ def build_ann_index(
         pq_encode,
     )
 
-    local = _local(path)
+    local = M.local_path(path)
     os.makedirs(local, exist_ok=True)
 
     if n_cells is not None:
@@ -358,21 +310,17 @@ def build_ann_index(
             "codes",
             _pq_recon_norm(cbs).alias("__cn"),
         )
-    if layout == "manifest":
-        gc_ = M.next_gen(path, "coded")
-        gn = M.next_gen(path, "centroids")
-        coded_dir = os.path.join(local, "coded", gc_)
-        cents_dir = os.path.join(local, "centroids", gn)
-    else:
-        coded_dir = os.path.join(local, "coded")
-        cents_dir = os.path.join(local, "centroids")
+    gc_ = M.next_gen(path, "coded")
+    gn = M.next_gen(path, "centroids")
+    coded_dir = os.path.join(local, "coded", gc_)
+    cents_dir = os.path.join(local, "centroids", gn)
     coded = coded.withColumn("__seq", F.lit(1))
     coded.write.mode("overwrite").partitionBy("cell").parquet(coded_dir)
     cents.write.mode("overwrite").parquet(cents_dir)
 
     spark = corpus.sparkSession
     stats_src = spark.read.option(
-        "basePath", os.path.dirname(coded_dir) if layout == "manifest" else coded_dir
+        "basePath", os.path.dirname(coded_dir)
     ).parquet(coded_dir)
     n_rows, cells = (
         stats_src.agg(F.count("*"), F.collect_set("cell")).first()
@@ -408,19 +356,15 @@ def build_ann_index(
         # appends accumulate route_sum/route_rows against it
         "route_err": route_err,
     }
-    if layout == "manifest":
-        tables = M.add_gens(
-            {}, "coded", M.written_parts(path, "coded", gc_), gc_
-        )
-        tables = M.add_gens(
-            tables, "centroids", M.written_parts(path, "centroids", gn), gn
-        )
-        M.commit_manifest(
-            path, tables=tables, meta=meta,
-            expected_version=_expected_version,
-        )
-        return meta
-    _write_meta(local, meta)
+    tables = M.add_gens(
+        {}, "coded", M.written_parts(path, "coded", gc_), gc_
+    )
+    tables = M.add_gens(
+        tables, "centroids", M.written_parts(path, "centroids", gn), gn
+    )
+    M.commit_manifest(
+        path, tables=tables, meta=meta, expected_version=_expected_version,
+    )
     return meta
 
 
@@ -445,36 +389,21 @@ def append_ann_index(
     search), so unknown cells raise. Returns the updated metadata.
 
     Cost is O(delta): row/cell counts update from one aggregate over
-    the delta plus the occupied-cell inventory kept in ``index.json``
-    — the full ``coded/`` tree is never rescanned (it used to be, which
-    made the streaming sink pay an O(index) scan per micro-batch).
-
-    Runs the torn-compaction sweep first: appending into a store whose
-    cell is parked as ``__old`` would recreate the live dir, and the
-    NEXT sweep would then mistake the parked original for a
-    completed-swap leftover and drop it — repair-before-append closes
-    that window."""
+    the delta plus the occupied-cell inventory kept in the manifest
+    meta — the full ``coded`` table is never rescanned. The coded
+    delta lands in a fresh generation and becomes visible at one
+    manifest commit, which also records the ``txn`` idempotence token
+    (see :func:`lexindex.append_lex_index`)."""
     from auto_data_linkage_spark.operators.similarity import (
         _pq_recon_norm,
         pq_encode,
     )
 
-    local = _local(path)
+    local = M.local_path(path)
     spark = delta.sparkSession
-    manifest = M.is_manifest_store(path)
-    if manifest:
-        snap = M.read_manifest(path)
-        meta = dict(snap["meta"])
-        cents_df = M.read_table(spark, path, "centroids", snap)
-    else:
-        repair_ann_index(path)
-        with open(os.path.join(local, "index.json")) as f:
-            meta = json.load(f)
-        cents_df = spark.read.parquet(os.path.join(local, "centroids"))
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
+    snap = M.read_manifest(path)
+    meta = _read_meta(snap)
+    cents_df = M.read_table(spark, path, "centroids", snap)
     if txn is not None and M.txn_version(meta, txn[0]) >= int(txn[1]):
         return meta  # this batch already committed: a checkpoint replay
     cbs = meta["codebooks"]
@@ -576,128 +505,84 @@ def append_ann_index(
     seq_aware = "seq" in meta
     if seq_aware:
         coded = coded.withColumn("__seq", F.lit(int(meta["seq"]) + 1))
-    if manifest:
-        gc_ = M.next_gen(path, "coded")
-        coded.write.partitionBy("cell").parquet(
-            os.path.join(local, "coded", gc_)
-        )
-    else:
-        coded.write.mode("append").partitionBy("cell").parquet(
-            os.path.join(local, "coded")
-        )
-    if "cells" not in meta:
-        # index written by a pre-inventory build (rename layout only —
-        # manifest builds always record the inventory): seed the
-        # occupied-cell list with one full scan (once), then stay
-        # O(delta) forever
-        meta["cells"] = [
-            r["cell"]
-            for r in spark.read.parquet(os.path.join(local, "coded"))
-            .select("cell")
-            .distinct()
-            .collect()
-        ]
-        delta_cells = []
-    if manifest:
-        # merge-retry commit: the coded generation is already written
-        # and immutable; losing the version race to a concurrent
-        # append/delete/compaction only re-runs this manifest merge.
-        # A concurrent rebuild changes the encode state (codebooks /
-        # centroids) — our delta was encoded against the OLD state, so
-        # that case is guarded and loud.
-        cp = M.written_parts(path, "coded", gc_)
-        orig = snap["meta"]
+    gc_ = M.next_gen(path, "coded")
+    coded.write.partitionBy("cell").parquet(os.path.join(local, "coded", gc_))
+    # merge-retry commit: the coded generation is already written and
+    # immutable; losing the version race to a concurrent
+    # append/delete/compaction only re-runs this manifest merge. A
+    # concurrent rebuild changes the encode state (codebooks /
+    # centroids) — our delta was encoded against the OLD state, so that
+    # case is guarded and loud.
+    cp = M.written_parts(path, "coded", gc_)
+    orig = snap["meta"]
 
-        def mutate(fresh: dict):
-            fm = fresh["meta"]
-            if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
-                # same-token concurrent writer won since the entry
-                # check: merging would double-append — abort atomically
-                # with the commit (see lexindex.append_lex_index)
-                raise M.AlreadyApplied(fresh)
-            # route_err is in the guard set because it is recomputed by
-            # every rebuild — it catches a concurrent rebuild even on
-            # SQ8 indexes, whose codebooks are None before AND after
-            for k in ("version", "codec", "m", "n_codewords", "vec_col",
-                      "id_col", "cell_col", "codebooks", "route_err"):
-                if fm.get(k) != orig.get(k):
-                    raise M.ManifestConflictError(
-                        f"ann-index parameter {k!r} changed under this "
-                        "append (concurrent rebuild?) — re-encode the "
-                        "delta against the new index"
-                    )
-            if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
-                # stale __seq stamp vs a possibly-interleaved delete:
-                # restamp if any fresh cut covers our rows (see
-                # lexindex.append_lex_index)
-                tombs = M.read_table(spark, path, "tombstones", fresh)
-                if tombs is not None and "as_of_seq" in tombs.columns:
-                    mx = tombs.agg(F.max("as_of_seq")).first()[0]
-                    if mx is not None and int(mx) >= int(
-                        orig.get("seq", 0)
-                    ) + 1:
-                        from .lexindex import _RestampRequired
-
-                        raise _RestampRequired()
-            m2 = dict(fm)
-            c2 = sorted(set(fm["cells"]) | set(delta_cells))
-            m2["n_rows"] = int(fm["n_rows"]) + int(n_delta)
-            m2["cells"] = c2
-            m2["n_cells"] = len(c2)
-            if seq_aware:
-                m2["seq"] = int(fm.get("seq", 0)) + 1
-            if err is not None:
-                m2["err_sum"] = float(fm.get("err_sum", 0.0)) + err * int(
-                    n_delta
-                )
-                m2["err_rows"] = int(fm.get("err_rows", 0)) + int(n_delta)
-                m2["last_err"] = float(err)
-            if rerr is not None:
-                m2["route_sum"] = float(
-                    fm.get("route_sum", 0.0)
-                ) + rerr * int(n_delta)
-                m2["route_rows"] = int(fm.get("route_rows", 0)) + int(
-                    n_delta
-                )
-                m2["last_route_err"] = float(rerr)
-            m2 = M.with_txn(m2, txn)
-            return M.add_gens(fresh["tables"], "coded", cp, gc_), m2
-
-        from .lexindex import _RestampRequired
-
-        try:
-            return M.commit_with_retry(path, mutate)["meta"]
-        except M.AlreadyApplied as e:
-            return dict(e.snapshot["meta"])
-        except _RestampRequired:
-            if _attempts <= 1:
+    def mutate(fresh: dict):
+        fm = fresh["meta"]
+        if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
+            # same-token concurrent writer won since the entry
+            # check: merging would double-append — abort atomically
+            # with the commit (see lexindex.append_lex_index)
+            raise M.AlreadyApplied(fresh)
+        # route_err is in the guard set because it is recomputed by
+        # every rebuild — it catches a concurrent rebuild even on
+        # SQ8 indexes, whose codebooks are None before AND after
+        for k in ("version", "codec", "m", "n_codewords", "vec_col",
+                  "id_col", "cell_col", "codebooks", "route_err"):
+            if fm.get(k) != orig.get(k):
                 raise M.ManifestConflictError(
-                    "this append keeps racing concurrent deletes whose "
-                    "tombstone cuts cover its row stamps — serialize "
-                    "the writers"
-                ) from None
-            return append_ann_index(
-                delta, path, txn=txn, _attempts=_attempts - 1
+                    f"ann-index parameter {k!r} changed under this "
+                    "append (concurrent rebuild?) — re-encode the "
+                    "delta against the new index"
+                )
+        if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
+            # stale __seq stamp vs a possibly-interleaved delete:
+            # restamp if any fresh cut covers our rows (see
+            # lexindex.append_lex_index)
+            tombs = M.read_table(spark, path, "tombstones", fresh)
+            if tombs is not None and "as_of_seq" in tombs.columns:
+                mx = tombs.agg(F.max("as_of_seq")).first()[0]
+                if mx is not None and int(mx) >= int(
+                    orig.get("seq", 0)
+                ) + 1:
+                    raise _RestampRequired()
+        m2 = dict(fm)
+        c2 = sorted(set(fm["cells"]) | set(delta_cells))
+        m2["n_rows"] = int(fm["n_rows"]) + int(n_delta)
+        m2["cells"] = c2
+        m2["n_cells"] = len(c2)
+        if seq_aware:
+            m2["seq"] = int(fm.get("seq", 0)) + 1
+        if err is not None:
+            m2["err_sum"] = float(fm.get("err_sum", 0.0)) + err * int(
+                n_delta
             )
-    cells = sorted(set(meta["cells"]) | set(delta_cells))
-    meta["n_rows"] = int(meta["n_rows"]) + int(n_delta)
-    meta["cells"] = cells
-    meta["n_cells"] = len(cells)
-    if seq_aware:
-        meta["seq"] = int(meta["seq"]) + 1
-    if err is not None:
-        meta["err_sum"] = float(meta.get("err_sum", 0.0)) + err * int(n_delta)
-        meta["err_rows"] = int(meta.get("err_rows", 0)) + int(n_delta)
-        meta["last_err"] = float(err)
-    if rerr is not None:
-        meta["route_sum"] = float(meta.get("route_sum", 0.0)) + rerr * int(
-            n_delta
+            m2["err_rows"] = int(fm.get("err_rows", 0)) + int(n_delta)
+            m2["last_err"] = float(err)
+        if rerr is not None:
+            m2["route_sum"] = float(
+                fm.get("route_sum", 0.0)
+            ) + rerr * int(n_delta)
+            m2["route_rows"] = int(fm.get("route_rows", 0)) + int(
+                n_delta
+            )
+            m2["last_route_err"] = float(rerr)
+        m2 = M.with_txn(m2, txn)
+        return M.add_gens(fresh["tables"], "coded", cp, gc_), m2
+
+    try:
+        return M.commit_with_retry(path, mutate)["meta"]
+    except M.AlreadyApplied as e:
+        return dict(e.snapshot["meta"])
+    except _RestampRequired:
+        if _attempts <= 1:
+            raise M.ManifestConflictError(
+                "this append keeps racing concurrent deletes whose "
+                "tombstone cuts cover its row stamps — serialize "
+                "the writers"
+            ) from None
+        return append_ann_index(
+            delta, path, txn=txn, _attempts=_attempts - 1
         )
-        meta["route_rows"] = int(meta.get("route_rows", 0)) + int(n_delta)
-        meta["last_route_err"] = float(rerr)
-    meta = M.with_txn(meta, txn)
-    _write_meta(local, meta)
-    return meta
 
 
 def delete_from_ann_index(
@@ -727,21 +612,12 @@ def delete_from_ann_index(
     (filter the ingest) rather than by tombstone. Returns
     ``{"deleted": n, "meta": updated-metadata}``.
 
-    Crash window (stat drift only): a crash AFTER the tombstone append
-    but BEFORE the meta write leaves ``n_rows`` overstated — the docs
-    are correctly masked, but a retry anti-joins the now-present
-    tombstones to empty (``n_del=0``, correctly no-ops the mask) and
-    cannot recover the missed decrement. Probe results are unaffected
-    (``n_rows`` gates nothing at query time); the drift heals at the
-    next :func:`compact_ann_index`, which recounts the live rows
-    exactly whenever a tombstone mask exists. Manifest layout: the
-    tombstone batch and the decremented metadata land in ONE manifest
-    commit — the delete is atomic, no drift is possible.
-
-    Concurrency (manifest layout): a delete that loses the version
-    race to another commit re-RUNS fully against the fresh snapshot
-    (its counts were computed from the snapshot it read, so a racing
-    append may have added rows with the very ids being deleted) — see
+    The tombstone batch and the decremented metadata land in ONE
+    manifest commit — the delete is atomic, so ``n_rows`` cannot
+    drift. A delete that loses the version race to another commit
+    re-RUNS fully against the fresh snapshot (its counts were computed
+    from the snapshot it read, so a racing append may have added rows
+    with the very ids being deleted) — see
     :func:`manifestfs.retry_on_conflict`; the losing attempt's
     tombstone generation is a vacuumable orphan.
 
@@ -749,55 +625,30 @@ def delete_from_ann_index(
     as :func:`lexindex.delete_from_lex_index`: no-op when the fresh
     snapshot already carries the token (atomic with the commit via the
     version CAS + full re-run), closing the overlapping-sync
-    re-cut-after-re-append race. Manifest layout only."""
-    if M.is_manifest_store(path):
-        return M.retry_on_conflict(
-            lambda: _delete_ann_once(spark, path, ids, guard_txn=guard_txn)
-        )
-    return _delete_ann_once(spark, path, ids)
+    re-cut-after-re-append race."""
+    return M.retry_on_conflict(
+        lambda: _delete_ann_once(spark, path, ids, guard_txn=guard_txn)
+    )
 
 
 def _delete_ann_once(
     spark: SparkSession, path: str, ids, *, guard_txn: tuple | None = None
 ) -> dict:
-    local = _local(path)
-    manifest = M.is_manifest_store(path)
-    if manifest:
-        snap = M.read_manifest(path)
-        meta = dict(snap["meta"])
-        if guard_txn is not None and M.txn_version(
-            meta, guard_txn[0]
-        ) >= int(guard_txn[1]):
-            # token already committed by another sync pass: cutting now
-            # would mask its re-appended rows (see lexindex)
-            return {"deleted": 0, "meta": meta, "skipped_txn": True}
-        coded = M.read_table(spark, path, "coded", snap)
-        tombs = M.read_table(spark, path, "tombstones", snap)
-    else:
-        repair_ann_index(path)
-        with open(os.path.join(local, "index.json")) as f:
-            meta = json.load(f)
-        if guard_txn is not None and M.txn_version(
-            meta, guard_txn[0]
-        ) >= int(guard_txn[1]):
-            # best-effort only on the rename layout (no atomic commit
-            # to ride): syncs keep a single-concurrent-writer contract
-            return {"deleted": 0, "meta": meta, "skipped_txn": True}
-        coded = spark.read.parquet(os.path.join(local, "coded"))
-        tomb_dir = os.path.join(local, "tombstones")
-        tombs = (
-            spark.read.parquet(tomb_dir)
-            if os.path.isdir(tomb_dir)
-            else None
-        )
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
+    local = M.local_path(path)
+    snap = M.read_manifest(path)
+    meta = _read_meta(snap)
+    if guard_txn is not None and M.txn_version(
+        meta, guard_txn[0]
+    ) >= int(guard_txn[1]):
+        # token already committed by another sync pass: cutting now
+        # would mask its re-appended rows (see lexindex)
+        return {"deleted": 0, "meta": meta, "skipped_txn": True}
+    coded = M.read_table(spark, path, "coded", snap)
+    tombs = M.read_table(spark, path, "tombstones", snap)
     if coded is not None:
         id_type = coded.schema["neighbor_id"].dataType
     else:
-        # empty-corpus manifest store: no coded partitions were ever
+        # empty-corpus store: no coded partitions were ever
         # written; the stored schema string still types the tombstone
         # mask so ids deleted now mask rows appended later
         id_type = meta.get("id_type", "string")
@@ -831,81 +682,27 @@ def _delete_ann_once(
         else None
     )
     n_del = live_hits.count() if live_hits is not None else 0
-    if manifest:
-        if ids.count() == 0 or (seq_aware and not n_del):
-            # absent or already-masked ids need no new cut (a cut
-            # masks nothing appended after it) — nothing to commit
-            return {"deleted": 0, "meta": meta}
-        gb = M.next_gen(path, "tombstones")
-        out_ids = (
-            live_hits.select("neighbor_id").distinct()
-            .withColumn("as_of_seq", F.lit(int(meta["seq"])))
-            if seq_aware
-            else ids
-        )
-        out_ids.write.parquet(os.path.join(local, "tombstones", gb))
-        tables = M.add_gens(
-            snap["tables"], "tombstones",
-            M.written_parts(path, "tombstones", gb), gb,
-        )
-        meta["n_rows"] = int(meta["n_rows"]) - int(n_del)
-        M.commit_manifest(
-            path, tables=tables, meta=meta, expected_version=snap["version"]
-        )
-        return {"deleted": int(n_del), "meta": meta}
-    if seq_aware and not n_del:
+    if ids.count() == 0 or (seq_aware and not n_del):
+        # absent or already-masked ids need no new cut (a cut masks
+        # nothing appended after it) — nothing to commit
         return {"deleted": 0, "meta": meta}
+    gb = M.next_gen(path, "tombstones")
     out_ids = (
         live_hits.select("neighbor_id").distinct()
         .withColumn("as_of_seq", F.lit(int(meta["seq"])))
         if seq_aware
         else ids
     )
-    out_ids.write.mode("append").parquet(tomb_dir)
-    meta["n_rows"] = int(meta["n_rows"]) - int(n_del)
-    _write_meta(local, meta)
-    return {"deleted": int(n_del), "meta": meta}
-
-
-def _heal_n_rows(spark: SparkSession, local: str, meta: dict) -> bool:
-    """Heal ``n_rows`` drift in place: a delete that crashed between its
-    tombstone append and its meta write left ``n_rows`` overstated, and
-    retries anti-join to 0 so they cannot recover it (see
-    :func:`delete_from_ann_index`). Whenever a tombstone mask exists,
-    recount the live rows exactly (one neighbor_id-column scan — a
-    maintenance-time cost, and only on indexes that ever saw a delete).
-    Mutates ``meta`` and returns True when it did."""
-    tomb_dir = os.path.join(local, "tombstones")
-    if not os.path.isdir(tomb_dir):
-        return False
-    coded_dir = os.path.join(local, "coded")
-    has_data = any(
-        e.startswith("cell=") and os.path.isdir(os.path.join(coded_dir, e))
-        for e in os.listdir(coded_dir)
+    out_ids.write.parquet(os.path.join(local, "tombstones", gb))
+    tables = M.add_gens(
+        snap["tables"], "tombstones",
+        M.written_parts(path, "tombstones", gb), gb,
     )
-    live = 0
-    if has_data:
-        live = _mask_tombstoned(
-            spark.read.parquet(coded_dir),
-            spark.read.parquet(tomb_dir),
-            id_col="neighbor_id",
-        ).count()
-    meta["n_rows"] = int(live)
-    return True
-
-
-def _cell_file_counts(local: str) -> dict[str, int]:
-    """Parquet data-file count per ``cell=*/`` directory of ``coded/``."""
-    coded = os.path.join(local, "coded")
-    out: dict[str, int] = {}
-    for entry in os.listdir(coded):
-        cell_dir = os.path.join(coded, entry)
-        if not (entry.startswith("cell=") and os.path.isdir(cell_dir)):
-            continue
-        out[entry] = sum(
-            1 for f in os.listdir(cell_dir) if f.endswith(".parquet")
-        )
-    return out
+    meta["n_rows"] = int(meta["n_rows"]) - int(n_del)
+    M.commit_manifest(
+        path, tables=tables, meta=meta, expected_version=snap["version"]
+    )
+    return {"deleted": int(n_del), "meta": meta}
 
 
 def compact_ann_index(
@@ -915,126 +712,24 @@ def compact_ann_index(
     max_files_per_cell: int = 8,
     target_rows_per_file: int = 5_000_000,
 ) -> dict:
-    """Rewrite over-fragmented cell directories of ``coded/`` into few
-    large files — the index-side mirror of
-    :func:`..sources.layout.compact_corpus`. Streaming ingestion via
-    :func:`ann_index_sink` appends one small parquet file per cell per
-    micro-batch, so without maintenance a long-running stream degrades
-    every probe-time scan into thousands-of-tiny-files I/O.
+    """Rewrite over-fragmented cells of ``coded`` into few large files
+    — the index-side mirror of :func:`..sources.layout.compact_corpus`.
+    Streaming ingestion via :func:`ann_index_sink` appends one small
+    parquet file per cell per micro-batch, so without maintenance a
+    long-running stream degrades every probe-time scan into
+    thousands-of-tiny-files I/O.
 
     Only cells whose data-file count exceeds ``max_files_per_cell`` are
     rewritten (a cell-targeted parquet read; untouched cells are never
-    scanned). Results are written to a sibling temp tree, then each
-    rewritten cell directory is swapped in with two renames — atomic at
-    cell granularity, the same contract compact_corpus documents. A
-    crash between the renames is repaired by :func:`repair_ann_index`,
-    which both this function and :func:`load_ann_index` run first.
-    SINGLE WRITER + POSIX renames assumed — see :mod:`.storefs` (on
-    object stores run compaction from a maintenance window; concurrent
-    appends/reads during the swap are not safe). Codebooks and
-    centroids are untouched; ``index.json`` is rewritten atomically
-    with a bumped ``generation``. Returns a summary dict
-    ``{cells_rewritten, files_before, files_after, rows_rewritten}``.
-    Manifest layout: rewrites land in a fresh generation and every
+    scanned), tombstone-purged, into one fresh generation; every
     rewritten cell cuts over in one atomic manifest commit (pinned
     readers untouched; superseded generations reclaimed by
-    :func:`vacuum_ann_index`).
-    """
-    import shutil
-
-    if M.is_manifest_store(path):
-        return _compact_manifest_ann(
-            spark,
-            path,
-            max_files_per_cell=max_files_per_cell,
-            target_rows_per_file=target_rows_per_file,
-        )
-    local = _local(path)
-    with open(os.path.join(local, "index.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
-    repair_ann_index(path)
-    counts = _cell_file_counts(local)
-    hot = sorted(e for e, n in counts.items() if n > max_files_per_cell)
-    if not hot:
-        if _heal_n_rows(spark, local, meta):
-            _write_meta(local, meta)
-        return {
-            "cells_rewritten": 0,
-            "files_before": sum(counts.values()),
-            "files_after": sum(counts.values()),
-            "rows_rewritten": 0,
-        }
-    coded_dir = os.path.join(local, "coded")
-    tmp_root = os.path.join(local, "coded__compact")
-    shutil.rmtree(tmp_root, ignore_errors=True)
-
-    # read ONLY the hot cell directories (path-targeted scan; the cell
-    # partition value comes back via basePath) and rewrite size-targeted
-    df = (
-        spark.read.option("basePath", coded_dir)
-        .parquet(*[os.path.join(coded_dir, e) for e in hot])
-    )
-    tomb_dir = os.path.join(local, "tombstones")
-    if os.path.isdir(tomb_dir):
-        # physical purge of deleted rows in the rewritten cells (probe
-        # results unchanged — the tombstone anti-join already masked
-        # them); the mask stays for the unrewritten cells.
-        df = _mask_tombstoned(
-            df, spark.read.parquet(tomb_dir), id_col="neighbor_id"
-        )
-    rows = df.count()
-    files = max(1, -(-rows // target_rows_per_file))  # ceil
-    (
-        df.repartition(files, "cell")
-        .sortWithinPartitions("cell", "neighbor_id")
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy("cell")
-        .parquet(tmp_root)
-    )
-    from .storefs import remove_dir
-
-    for entry in hot:
-        new_dir = os.path.join(tmp_root, entry)
-        if os.path.isdir(new_dir):
-            swap_dir(os.path.join(coded_dir, entry), new_dir)
-        else:
-            # the purge emptied this cell — nothing was written for it;
-            # park-then-delete (crash-safe, see storefs.remove_dir)
-            remove_dir(os.path.join(coded_dir, entry))
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    _heal_n_rows(spark, local, meta)
-    _write_meta(local, meta)
-    after = _cell_file_counts(local)
-    return {
-        "cells_rewritten": len(hot),
-        "files_before": sum(counts.values()),
-        "files_after": sum(after.values()),
-        "rows_rewritten": int(rows),
-    }
-
-
-def _compact_manifest_ann(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_files_per_cell: int,
-    target_rows_per_file: int,
-) -> dict:
-    """Manifest-layout ANN compaction: rewrite over-fragmented cells
-    (tombstone-purged) into one fresh generation and commit the cutover
-    of ALL of them in one manifest. ``n_rows`` drift cannot exist in
-    this layout (deletes are atomic), so no heal pass is needed."""
+    :func:`vacuum_ann_index`). Codebooks and centroids are untouched.
+    Returns a summary dict ``{cells_rewritten, files_before,
+    files_after, rows_rewritten}``."""
     snap = M.read_manifest(path)
-    meta = snap["meta"]
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
-    local = _local(path)
+    meta = _read_meta(snap)
+    local = M.local_path(path)
     counts = M.part_file_counts(path, "coded", snap)
     hot = sorted(p for p, c in counts.items() if c > max_files_per_cell)
     if not hot:
@@ -1052,6 +747,9 @@ def _compact_manifest_ann(
     )
     tombstones = M.read_table(spark, path, "tombstones", snap)
     if tombstones is not None:
+        # physical purge of deleted rows in the rewritten cells (probe
+        # results unchanged — the tombstone anti-join already masked
+        # them); the mask stays for the unrewritten cells.
         df = _mask_tombstoned(df, tombstones, id_col="neighbor_id")
     rows = df.count()
     files = max(1, -(-rows // target_rows_per_file))  # ceil
@@ -1080,14 +778,9 @@ def vacuum_ann_index(
     path: str, *, keep_manifests: int = 2, min_age_seconds: float = 3600.0
 ) -> dict:
     """Reclaim generations superseded by compaction/rebuild and orphans
-    of crashed writers (manifest layout only) — see
-    :func:`manifestfs.vacuum` for the reader-pinning grace contract and
-    the ``min_age_seconds`` misuse guard."""
-    if not M.is_manifest_store(path):
-        raise ValueError(
-            "vacuum applies to manifest-layout indexes only; rename-"
-            "layout stores reclaim inline (two-rename swap + repair)"
-        )
+    of crashed writers — see :func:`manifestfs.vacuum` for the
+    reader-pinning grace contract and the ``min_age_seconds`` misuse
+    guard."""
     return M.vacuum(
         path, keep_manifests=keep_manifests, min_age_seconds=min_age_seconds
     )
@@ -1098,63 +791,21 @@ def rebuild_ann_index(corpus: DataFrame, path: str, **build_kwargs) -> dict:
     it atomically — the documented answer to codebook/centroid drift
     (appends keep build-time cells fixed; when the embedding
     distribution moves, recall degrades gradually and a rebuild
-    retrains). The new index is built into a sibling ``__rebuild``
-    tree (readers keep serving the old index the whole time), then
-    promoted with the same two-rename swap every compaction uses —
-    a crash between the renames is healed by the sweep every load
-    runs (the OLD index is restored and keeps serving; the finished
-    rebuild tree survives for the next attempt). Same single-writer +
-    POSIX contract as compaction (:mod:`.storefs`).
+    retrains). The rebuild writes fresh generations and promotes them
+    in one manifest commit that replaces every table and drops the
+    tombstone mask — pinned readers keep the old index until
+    :func:`vacuum_ann_index`, and a crash before the commit leaves the
+    old index serving.
 
     Tombstones do NOT carry over: the rebuild reflects exactly the
     corpus passed in (deletions should already be gone from it), so
     the mask resets — the one moment deleted ids become reusable.
     ``build_kwargs`` forward to :func:`build_ann_index` (m,
-    n_codewords, column names...). Returns the new metadata.
-
-    Manifest layout: the rebuild writes fresh generations and promotes
-    them in one manifest commit that replaces every table and drops
-    the tombstone mask — no rename, pinned readers keep the old index
-    until :func:`vacuum_ann_index`."""
-    from .storefs import swap_dir
-
-    if M.is_manifest_store(path):
-        # a rebuild keeps the store's layout: an explicit layout= in
-        # build_kwargs would otherwise collide with the one we set
-        want = build_kwargs.pop("layout", "manifest")
-        if want != "manifest":
-            raise ValueError(
-                "rebuild cannot change a store's layout in place "
-                f"(store is manifest-layout, got layout={want!r}); "
-                "build a new index at a new path instead"
-            )
-        snap = M.read_manifest(path)
-        return build_ann_index(
-            corpus,
-            path,
-            layout="manifest",
-            _expected_version=snap["version"],
-            **build_kwargs,
-        )
-    local = _local(path)
-    # a rebuild keeps the store's layout: this is a rename store, so
-    # the scratch build must be rename too (the flipped manifest
-    # default must not leak a manifest log into the swap)
-    want = build_kwargs.pop("layout", "rename")
-    if want != "rename":
-        raise ValueError(
-            "rebuild cannot change a store's layout in place (store "
-            f"is rename-layout, got layout={want!r}); build a new "
-            "index at a new path instead"
-        )
-    tmp = local + "__rebuild"
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    meta = build_ann_index(corpus, tmp, layout="rename", **build_kwargs)
-    repair_ann_index(path)  # clear any parked __old before the swap
-    swap_dir(local, tmp)
-    return meta
+    n_codewords, column names...). Returns the new metadata."""
+    snap = M.read_manifest(path)
+    return build_ann_index(
+        corpus, path, _expected_version=snap["version"], **build_kwargs
+    )
 
 
 def ann_index_sink(
@@ -1167,30 +818,23 @@ def ann_index_sink(
     the persisted index via :func:`append_ann_index` — continuous
     embedding ingestion (the streaming analog of
     ``streaming.documents.upsert_sink``). The index must already exist
-    (:func:`build_ann_index` on the initial corpus). On a MANIFEST-
-    layout index with ``app_id`` set, appends are EXACTLY-ONCE across
-    replays: the ``(app_id, batch_id)`` idempotence token commits
-    atomically with the batch's coded rows, so a batch replayed after
-    a crash — before OR after its commit — lands exactly once (see
+    (:func:`build_ann_index` on the initial corpus). With ``app_id``
+    set, appends are EXACTLY-ONCE across replays: the ``(app_id,
+    batch_id)`` idempotence token commits atomically with the batch's
+    coded rows, so a batch replayed after a crash — before OR after
+    its commit — lands exactly once (see
     :func:`manifestfs.txn_version`). ``app_id`` names the query's
-    checkpoint lineage and is OPT-IN (default None = no token): an
-    implicit shared default would silently drop the first batches of a
-    new query whose fresh checkpoint resets batch ids — a new
-    checkpoint dir must come with a new app_id. On the rename layout
-    the token is best-effort (recorded after the data): dedup ids
-    upstream, the standard append-sink caveat.
+    checkpoint lineage and is OPT-IN (default None = no token,
+    at-least-once): an implicit shared default would silently drop the
+    first batches of a new query whose fresh checkpoint resets batch
+    ids — a new checkpoint dir must come with a new app_id.
 
     ``compact_over`` enables inline maintenance: after each append, any
-    cell directory holding more than that many parquet files is
-    rewritten via :func:`compact_ann_index` (each micro-batch appends
-    one small file per touched cell, so a long-running stream otherwise
-    fragments probe-time scans without bound). Inline compaction
-    assumes this sink is the index's ONLY writer AND that no other
-    session serves queries during the swap window (a concurrent reader
-    that resolved file paths before the swap can miss a cell) — for
-    concurrently-served indexes leave ``compact_over`` unset and run
-    :func:`compact_ann_index` from an explicit maintenance window
-    instead. See :mod:`.storefs` for the POSIX-rename assumption.
+    cell holding more than that many parquet files is rewritten via
+    :func:`compact_ann_index` (each micro-batch appends one small file
+    per touched cell, so a long-running stream otherwise fragments
+    probe-time scans without bound). The compaction commit interleaves
+    with the appends; concurrent readers keep their pinned snapshot.
 
     Usage::
 
@@ -1217,51 +861,18 @@ def ann_index_sink(
 def load_ann_index(
     spark: SparkSession, path: str, *, version: int | None = None
 ) -> AnnIndex:
-    """Handle over the stored index. Manifest layout: the manifest
-    read PINS the snapshot — the returned DataFrames name immutable
-    generation directories, so later appends/compactions/rebuilds
-    never change what this handle serves (until vacuum). ``version``
-    TIME-TRAVELS to that exact committed snapshot (see
+    """Handle over the stored index. The manifest read PINS the
+    snapshot — the returned DataFrames name immutable generation
+    directories, so later appends/compactions/rebuilds never change
+    what this handle serves (until vacuum). ``version`` TIME-TRAVELS
+    to that exact committed snapshot (see
     :func:`lexindex.load_lex_index`)."""
-    if version is not None and not M.is_manifest_store(path):
-        raise ValueError(
-            "version= time travel needs a manifest-layout index "
-            '(build_ann_index(layout="manifest"))'
-        )
-    if M.is_manifest_store(path):
-        snap = M.read_manifest(path, version)
-        meta = snap["meta"]
-        if meta.get("version") != _VERSION:
-            raise ValueError(
-                f"unsupported ann-index version {meta.get('version')!r}"
-            )
-        return AnnIndex(
-            meta=meta,
-            centroids=M.read_table(spark, path, "centroids", snap),
-            coded=M.read_table(spark, path, "coded", snap),
-            tombstones=M.read_table(spark, path, "tombstones", snap),
-        )
-    # torn-compaction sweep first (one listdir when healthy) — a crash
-    # between compaction's two renames otherwise silently serves top-k
-    # MISSING the parked cell's rows (no error — just wrong neighbors).
-    repair_ann_index(path)
-    local = _local(path)
-    with open(os.path.join(local, "index.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
-    tomb_dir = os.path.join(local, "tombstones")
+    snap = M.read_manifest(path, version)
     return AnnIndex(
-        meta=meta,
-        centroids=spark.read.parquet(os.path.join(local, "centroids")),
-        coded=spark.read.parquet(os.path.join(local, "coded")),
-        tombstones=(
-            spark.read.parquet(tomb_dir)
-            if os.path.isdir(tomb_dir)
-            else None
-        ),
+        meta=_read_meta(snap),
+        centroids=M.read_table(spark, path, "centroids", snap),
+        coded=M.read_table(spark, path, "coded", snap),
+        tombstones=M.read_table(spark, path, "tombstones", snap),
     )
 
 

@@ -40,6 +40,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import manifestfs as M
 from .text import ensure_parallelism
 from .urls import registered_domain
 
@@ -50,7 +51,6 @@ __all__ = [
     "init_edge_store",
     "load_edges",
     "delete_domains_from_edge_store",
-    "repair_edge_store",
     "vacuum_edge_store",
     "refresh_hits",
     "refresh_pagerank",
@@ -869,20 +869,20 @@ def edge_store_sink(
         pages.writeStream.foreachBatch(edge_store_sink("/edges"))
              .option("checkpointLocation", ckpt).start()
 
-    RENAME-layout replays after a failure append duplicate deltas
-    (n_links inflates, edge EXISTENCE — what PageRank consumes — is
-    unaffected since :func:`pagerank` drops multiplicity); point a
-    checkpointLocation at the query, the standard append-sink caveat.
-
-    A store created with :func:`init_edge_store`'s ``layout="manifest"``
-    is auto-detected and — with ``app_id`` set — EXACTLY-ONCE: each
-    micro-batch's delta lands in a fresh ``gen=N`` dir under
-    ``<path>/edges`` and becomes visible at ONE manifest commit
-    (:mod:`.manifestfs`) that also records the ``(app_id, batch_id)``
-    idempotence token — a replay of a batch whose commit never
-    happened appends cleanly, a replay of a batch that DID commit
-    (crash before the checkpoint advanced) is skipped by its token,
-    and no rename is ever performed (object-store-safe maintenance).
+    The store is a manifest store (:mod:`.manifestfs`); the sink
+    creates it on first use exactly as ``init_edge_store(path,
+    n_buckets=n_buckets)`` would (an existing store keeps its own
+    ``n_buckets``). Each micro-batch's delta lands in a fresh
+    ``gen=N`` dir under ``<path>/edges`` and becomes visible at ONE
+    manifest commit — with ``app_id`` set, that commit also records
+    the ``(app_id, batch_id)`` idempotence token, making the sink
+    EXACTLY-ONCE: a replay of a batch whose commit never happened
+    appends cleanly, a replay of a batch that DID commit (crash before
+    the checkpoint advanced) is skipped by its token, and no rename is
+    ever performed (object-store-safe maintenance). Without
+    ``app_id``, a replay of a committed batch appends duplicate deltas
+    (n_links inflates; edge EXISTENCE — what PageRank consumes — is
+    unaffected since :func:`pagerank` drops multiplicity).
     ``app_id`` names the query's checkpoint lineage and is OPT-IN
     (default None = no token): an implicit shared default would
     silently drop the first batches of a new query whose fresh
@@ -894,103 +894,65 @@ def edge_store_sink(
     :func:`annindex.ann_index_sink`): after each append, buckets whose
     live data-file count exceeds the threshold are merged via
     :func:`compact_edge_store` — so a long-running stream bounds its
-    own fragmentation instead of waiting for an operator. On the
-    rename layout this inherits the single-writer/no-concurrent-reader
-    swap caveat; on the manifest layout pinned readers are untouched
-    and the compaction commit simply interleaves with the appends.
+    own fragmentation instead of waiting for an operator; pinned
+    readers are untouched and the compaction commit simply interleaves
+    with the appends.
     """
-    from . import manifestfs as M
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        manifest = M.is_manifest_store(path)
-        if app_id is not None and not manifest:
-            # validate BEFORE the empty-batch early-return, so a
-            # misconfigured query fails on batch 0 instead of dying
-            # mid-run when real data first arrives
-            raise ValueError(
-                "app_id idempotence tokens need a manifest-layout edge "
-                "store (create it with init_edge_store(path)); the "
-                "rename layout keeps the documented at-least-once "
-                "append contract"
-            )
+        if M.is_manifest_store(path):
+            snap = M.read_manifest(path)
+        else:
+            snap = init_edge_store(path, n_buckets=n_buckets)
+        if app_id is not None and (
+            M.txn_version(snap["meta"], app_id) >= batch_id
+        ):
+            return  # batch already committed: a checkpoint replay
         if batch_df.isEmpty():
             return
-        if manifest:
-            snap = M.read_manifest(path)
-            if app_id is not None and (
-                M.txn_version(snap["meta"], app_id) >= batch_id
-            ):
-                return  # batch already committed: a checkpoint replay
-            nb = int(snap["meta"].get("n_buckets", n_buckets))
-            local = M.local_path(path)
-            gen = M.next_gen(path, "edges")
-            edges = extract_links(
-                batch_df, html_col, url_col, drop_self=drop_self
-            )
-            (
-                edges.withColumn(
-                    "bucket", _edge_bucket(F.col("src_domain"), nb)
-                )
-                .write.partitionBy("bucket")
-                .parquet(os.path.join(local, "edges", gen))
-            )
-            parts = M.written_parts(path, "edges", gen)
-            if parts:
-                # merge-retry commit: the delta generation is
-                # immutable; losing the version race (a concurrent
-                # takedown or compaction) re-runs only this manifest
-                # merge, so the sink keeps streaming through
-                # maintenance commits. The (app_id, batch_id) token
-                # commits WITH the data: a replay of an already-
-                # committed batch is skipped above — exactly-once.
-                def mutate(fresh: dict):
-                    if int(fresh["meta"].get("n_buckets", nb)) != nb:
-                        raise M.ManifestConflictError(
-                            "edge-store n_buckets changed under this "
-                            "append — re-bucket the delta"
-                        )
-                    if app_id is not None and (
-                        M.txn_version(fresh["meta"], app_id) >= batch_id
-                    ):
-                        # same-token concurrent sink instance won since
-                        # the entry check: merging would double-append
-                        # — abort atomically with the commit
-                        raise M.AlreadyApplied(fresh)
-                    return (
-                        M.add_gens(fresh["tables"], "edges", parts, gen),
-                        M.with_txn(
-                            fresh["meta"],
-                            None
-                            if app_id is None
-                            else (app_id, batch_id),
-                        ),
-                    )
-
-                try:
-                    M.commit_with_retry(path, mutate)
-                except M.AlreadyApplied:
-                    return
-            if compact_over is not None:
-                compact_edge_store(
-                    batch_df.sparkSession, path,
-                    max_files_per_bucket=compact_over,
-                )
-            return
-        # repair-before-append: writing into a store whose bucket is
-        # parked as __old would recreate the live dir and make the next
-        # sweep drop the parked original (see append_lex_index).
-        repair_edge_store(path)
-        edges = extract_links(
-            batch_df, html_col, url_col, drop_self=drop_self
-        )
+        nb = int(snap["meta"].get("n_buckets", n_buckets))
+        local = M.local_path(path)
+        gen = M.next_gen(path, "edges")
+        edges = extract_links(batch_df, html_col, url_col, drop_self=drop_self)
         (
-            edges.withColumn(
-                "bucket", _edge_bucket(F.col("src_domain"), n_buckets)
-            )
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(path)
+            edges.withColumn("bucket", _edge_bucket(F.col("src_domain"), nb))
+            .write.partitionBy("bucket")
+            .parquet(os.path.join(local, "edges", gen))
         )
+        parts = M.written_parts(path, "edges", gen)
+        if parts:
+            # merge-retry commit: the delta generation is immutable;
+            # losing the version race (a concurrent takedown or
+            # compaction) re-runs only this manifest merge, so the sink
+            # keeps streaming through maintenance commits. The
+            # (app_id, batch_id) token commits WITH the data: a replay
+            # of an already-committed batch is skipped above —
+            # exactly-once.
+            def mutate(fresh: dict):
+                if int(fresh["meta"].get("n_buckets", nb)) != nb:
+                    raise M.ManifestConflictError(
+                        "edge-store n_buckets changed under this "
+                        "append — re-bucket the delta"
+                    )
+                if app_id is not None and (
+                    M.txn_version(fresh["meta"], app_id) >= batch_id
+                ):
+                    # same-token concurrent sink instance won since the
+                    # entry check: merging would double-append — abort
+                    # atomically with the commit
+                    raise M.AlreadyApplied(fresh)
+                return (
+                    M.add_gens(fresh["tables"], "edges", parts, gen),
+                    M.with_txn(
+                        fresh["meta"],
+                        None if app_id is None else (app_id, batch_id),
+                    ),
+                )
+
+            try:
+                M.commit_with_retry(path, mutate)
+            except M.AlreadyApplied:
+                return
         if compact_over is not None:
             compact_edge_store(
                 batch_df.sparkSession, path,
@@ -1001,13 +963,10 @@ def edge_store_sink(
 
 
 def init_edge_store(path: str, *, n_buckets: int = 16) -> dict:
-    """Create an empty MANIFEST-layout edge store (commit v1). The
-    rename layout needs no init — its sink appends into the root
-    directly; call this once when the store should live on an object
-    store or serve concurrent readers during maintenance (see
-    :mod:`.manifestfs` for the contract)."""
-    from . import manifestfs as M
-
+    """Create an empty edge store (commit manifest v1 — see
+    :mod:`.manifestfs` for the contract). :func:`edge_store_sink` does
+    this on first use; call it directly to fix ``n_buckets`` before
+    any data arrives. Returns the committed manifest."""
     local = M.local_path(path)
     os.makedirs(local, exist_ok=True)
     return M.init_manifest_store(
@@ -1023,36 +982,12 @@ def init_edge_store(path: str, *, n_buckets: int = 16) -> dict:
 def vacuum_edge_store(
     path: str, *, keep_manifests: int = 2, min_age_seconds: float = 3600.0
 ) -> dict:
-    """Reclaim superseded/orphaned generations of a manifest-layout
-    edge store — see :func:`manifestfs.vacuum` for the reader-pinning
-    grace contract and the ``min_age_seconds`` misuse guard."""
-    from . import manifestfs as M
-
-    if not M.is_manifest_store(path):
-        raise ValueError(
-            "vacuum applies to manifest-layout edge stores only"
-        )
+    """Reclaim superseded/orphaned generations of an edge store — see
+    :func:`manifestfs.vacuum` for the reader-pinning grace contract and
+    the ``min_age_seconds`` misuse guard."""
     return M.vacuum(
         path, keep_manifests=keep_manifests, min_age_seconds=min_age_seconds
     )
-
-
-def repair_edge_store(path: str) -> dict:
-    """Crash-repair sweep for torn :func:`compact_edge_store` swaps:
-    restore any ``bucket=N__old`` whose live dir is missing, drop
-    completed-swap leftovers and scratch trees (crash states in
-    :mod:`.storefs`). One ``listdir`` when the store is healthy — ran
-    automatically by :func:`load_edges` and at the start of every
-    compaction. Manifest-layout stores have no torn states — no-op
-    there (reclamation is :func:`vacuum_edge_store`). Returns
-    ``{"restored": [...], "removed": [...]}``."""
-    from . import manifestfs as M
-    from .storefs import local_path, repair_swept_dirs
-
-    if M.is_manifest_store(path):
-        return {"restored": [], "removed": []}
-    local = local_path(path)
-    return repair_swept_dirs(local, tmp_roots=(local + "__compact",))
 
 
 def delete_domains_from_edge_store(spark, path: str, domains) -> dict:
@@ -1067,15 +1002,10 @@ def delete_domains_from_edge_store(spark, path: str, domains) -> dict:
     a one-column DataFrame or a Python list. Compaction purges masked
     edges physically in rewritten buckets; the mask itself is
     permanent (re-crawled pages of a taken-down domain stay masked —
-    the point of a takedown). Returns ``{"deleted": n}`` (count of
-    newly masked domain names). Manifest layout: the mask lands as a
-    new tombstone generation committed atomically."""
-    from . import manifestfs as M
-    from .storefs import local_path
-
-    repair_edge_store(path)
-    local = local_path(path)
-    manifest = M.is_manifest_store(path)
+    the point of a takedown). The mask lands as a new tombstone
+    generation committed atomically. Returns ``{"deleted": n}`` (count
+    of newly masked domain names)."""
+    snap = M.read_manifest(path)
     if not isinstance(domains, DataFrame):
         from auto_data_linkage_spark.session import local_rows_df
 
@@ -1087,84 +1017,49 @@ def delete_domains_from_edge_store(spark, path: str, domains) -> dict:
             F.col(domains.columns[0]).cast("string").alias("domain")
         )
     domains = domains.distinct()
-    if manifest:
-        snap = M.read_manifest(path)
-        tombs = M.read_table(spark, path, "tombstones", snap)
-        if tombs is not None:
-            domains = domains.join(tombs, "domain", "left_anti")
-        domains = domains.localCheckpoint(eager=True)
-        n = domains.count()
-        if n:
-            gen = M.next_gen(path, "tombstones")
-            domains.write.parquet(os.path.join(local, "tombstones", gen))
-            parts = M.written_parts(path, "tombstones", gen)
-
-            # merge-retry commit: the mask is a SET (readers anti-join
-            # it), so a concurrent takedown that re-masked one of our
-            # domains in between only makes `deleted` an overcount —
-            # never a wrong mask.
-            def mutate(fresh: dict):
-                return (
-                    M.add_gens(fresh["tables"], "tombstones", parts, gen),
-                    fresh["meta"],
-                )
-
-            M.commit_with_retry(path, mutate)
-        return {"deleted": int(n)}
-    tomb_dir = os.path.join(local, "_tombstones")
-    if os.path.isdir(tomb_dir):
-        domains = domains.join(
-            spark.read.parquet(tomb_dir), "domain", "left_anti"
-        )
+    tombs = M.read_table(spark, path, "tombstones", snap)
+    if tombs is not None:
+        domains = domains.join(tombs, "domain", "left_anti")
     domains = domains.localCheckpoint(eager=True)
     n = domains.count()
     if n:
-        domains.write.mode("append").parquet(tomb_dir)
+        gen = M.next_gen(path, "tombstones")
+        domains.write.parquet(
+            os.path.join(M.local_path(path), "tombstones", gen)
+        )
+        parts = M.written_parts(path, "tombstones", gen)
+
+        # merge-retry commit: the mask is a SET (readers anti-join it),
+        # so a concurrent takedown that re-masked one of our domains in
+        # between only makes `deleted` an overcount — never a wrong
+        # mask.
+        def mutate(fresh: dict):
+            return (
+                M.add_gens(fresh["tables"], "tombstones", parts, gen),
+                fresh["meta"],
+            )
+
+        M.commit_with_retry(path, mutate)
     return {"deleted": int(n)}
-
-
-def _edge_tombstones(spark, local: str) -> DataFrame | None:
-    tomb_dir = os.path.join(local, "_tombstones")
-    return (
-        spark.read.parquet(tomb_dir) if os.path.isdir(tomb_dir) else None
-    )
 
 
 def load_edges(spark, path: str, *, version: int | None = None) -> DataFrame:
     """Aggregated edge table from an :func:`edge_store_sink` store:
     delta rows summed to one (src_domain, dst_domain, n_links) row per
     edge — the input shape :func:`pagerank` / :func:`link_graph_stats`
-    expect. Runs the torn-compaction sweep first (one listdir when
-    healthy) — a crash between compaction's two renames otherwise
-    silently drops the parked bucket's edges from every refresh — and
-    applies the domain-takedown mask
+    expect — with the domain-takedown mask applied
     (:func:`delete_domains_from_edge_store`): edges touching a masked
     domain never reach a reader (two deleted-domains-sized anti-joins;
-    AQE broadcasts them). Manifest layout: the manifest read PINS the
-    snapshot — concurrent appends/compactions/takedowns committing
+    AQE broadcasts them). The manifest read PINS the snapshot — concurrent appends/compactions/takedowns committing
     later never change what this reader aggregates; ``version``
     TIME-TRAVELS to that exact committed snapshot (e.g. the edge
     graph as of a crawl epoch, pre-takedown — within vacuum's
     keep-window)."""
-    from . import manifestfs as M
-    from .storefs import local_path
-
-    if version is not None and not M.is_manifest_store(path):
-        raise ValueError(
-            "version= time travel needs a manifest-layout edge store "
-            "(init_edge_store)"
-        )
-    repair_edge_store(path)
-    local = local_path(path)
-    if M.is_manifest_store(path):
-        snap = M.read_manifest(path, version)
-        edges = M.read_table(spark, path, "edges", snap)
-        if edges is None:
-            edges = spark.createDataFrame([], snap["meta"]["edges_schema"])
-        tombs = M.read_table(spark, path, "tombstones", snap)
-    else:
-        edges = spark.read.parquet(path)
-        tombs = _edge_tombstones(spark, local)
+    snap = M.read_manifest(path, version)
+    edges = M.read_table(spark, path, "edges", snap)
+    if edges is None:
+        edges = spark.createDataFrame([], snap["meta"]["edges_schema"])
+    tombs = M.read_table(spark, path, "tombstones", snap)
     if tombs is not None:
         edges = edges.join(
             tombs.select(F.col("domain").alias("src_domain")),
@@ -1256,20 +1151,14 @@ def _commit_vector(
     """Shared replace-whole derived-vector commit (`ranks`/`hits`):
     write a fresh generation, swap it in atomically, record the
     scoring provenance under ``meta[table]``."""
-    from . import manifestfs as M
-
-    if not M.is_manifest_store(path):
-        raise ValueError(
-            f"persisted {table} need a manifest-layout edge store "
-            "(init_edge_store)"
-        )
+    head = M.read_manifest(path)
     if at_version is None:
         # fallback for direct callers; under a concurrent append this
         # fresh read can postdate the snapshot the vector was scored
         # from, so loops that pin their scored edges to a snapshot
         # (refresh_pagerank / refresh_hits) pass that snapshot's
         # version explicitly
-        at_version = M.read_manifest(path)["version"]
+        at_version = head["version"]
     local = M.local_path(path)
     gen = M.next_gen(path, table)
     df.select(*columns).write.parquet(os.path.join(local, table, gen))
@@ -1313,7 +1202,7 @@ def _edge_state_key(snapshot: dict) -> str:
     commits don't touch them, so the key survives the refresh's own
     commit; any append or takedown changes it. Compaction changes the
     raw key too (new generations, identical logical edges), but
-    :func:`_compact_edges_manifest` re-fingerprints a rank vector that
+    :func:`compact_edge_store` re-fingerprints a rank vector that
     was current at swap time, so quiescence survives a compact on a
     quiet graph."""
     import hashlib
@@ -1336,8 +1225,6 @@ def load_ranks(
     ``meta["ranks"]["at_version"]`` (via
     :func:`manifestfs.read_manifest`) says which edge-store version it
     scored."""
-    from . import manifestfs as M
-
     snap = M.read_manifest(path, version)
     return M.read_table(spark, path, "ranks", snap)
 
@@ -1376,11 +1263,7 @@ def refresh_pagerank(
     tol_scaled=...)`` on a schedule, each pass O(edges) per update
     with 1-2 updates once the graph is quiet. The persisted vector is
     eagerly materialized (its own compute feeds the write), so the
-    returned DataFrame re-reads cheaply. Rank persistence needs the
-    manifest layout: on a rename-layout store ``warm=True`` has no
-    ranks table to read and degrades to a cold start, and
-    ``persist=True`` raises in :func:`commit_ranks` — keep feeding
-    ``prev_ranks`` by hand there.
+    returned DataFrame re-reads cheaply.
 
     TRUSTRANK IS THIS FUNCTION: TrustRank (Gyöngyi'04) is PageRank
     with teleportation restricted to a trusted seed set, which is
@@ -1416,14 +1299,10 @@ def refresh_pagerank(
     ``skip_current=False`` to force that extra update. A ``stats``
     dict gets ``{"iterations_run": 0, "final_l1": None,
     "skipped": True}`` on the skip."""
-    from . import manifestfs as M
-
     params = _pagerank_params(iterations, pagerank_kwargs)
-    snap = key = None
-    if M.is_manifest_store(store_path):
-        snap = M.read_manifest(store_path)
-        key = _edge_state_key(snap)
-    if warm and prev_ranks is None and snap is not None:
+    snap = M.read_manifest(store_path)
+    key = _edge_state_key(snap)
+    if warm and prev_ranks is None:
         rk = snap["meta"].get("ranks")
         if (
             skip_current
@@ -1450,11 +1329,7 @@ def refresh_pagerank(
     # describes — a concurrent append landing after this read misses
     # the next skip check instead of being silently claimed as scored
     out = pagerank(
-        load_edges(
-            spark,
-            store_path,
-            version=None if snap is None else snap["version"],
-        ),
+        load_edges(spark, store_path, version=snap["version"]),
         iterations=iterations,
         init_ranks=prev_ranks,
         **pagerank_kwargs,
@@ -1467,7 +1342,7 @@ def refresh_pagerank(
             out,
             params=params,
             edge_state=key,
-            at_version=None if snap is None else snap["version"],
+            at_version=snap["version"],
         )
     return out
 
@@ -1480,8 +1355,6 @@ def load_hits(
     ever committed; ``version`` time-travels like :func:`load_edges`.
     ``meta["hits"]["at_version"]`` says which edge-store version it
     scored."""
-    from . import manifestfs as M
-
     snap = M.read_manifest(path, version)
     return M.read_table(spark, path, "hits", snap)
 
@@ -1521,14 +1394,12 @@ def refresh_hits(
     so a scheduled HITS-based curation gate stops re-deriving from
     scratch on a quiet graph. Compaction carries a current
     fingerprint forward exactly as for ranks. ``version`` time-travels
-    a manifest-layout store to score a historical crawl epoch
+    the store to score a historical crawl epoch
     (time-travel reads never skip or persist — they are not the
     head-state loop). Returns ``(domain, hub_scaled, auth_scaled)``."""
-    from . import manifestfs as M
-
     params = _hits_params(iterations, hits_kwargs)
     snap = key = None
-    if version is None and M.is_manifest_store(store_path):
+    if version is None:
         snap = M.read_manifest(store_path)
         key = _edge_state_key(snap)
         hk = snap["meta"].get("hits")
@@ -1582,111 +1453,12 @@ def compact_edge_store(
 ) -> dict:
     """Merge delta rows of over-fragmented edge-store buckets back to
     one row per edge and few files per bucket (streaming appends write
-    one small file per touched bucket per micro-batch). Same
-    two-rename bucket-atomic swap as the index compactions; a crash
-    between the renames is repaired by :func:`repair_edge_store`, which
-    both this function and :func:`load_edges` run first. SINGLE WRITER
-    + POSIX renames assumed — see :mod:`.storefs` (on object stores run
-    compaction from a maintenance window; pause the streaming sink —
-    appends landing in a bucket after it is parked are dropped with
-    it). Manifest layout: all rewritten buckets cut over in one atomic
-    manifest commit; pinned readers untouched; superseded generations
-    reclaimed by :func:`vacuum_edge_store`. Returns
+    one small file per touched bucket per micro-batch), purging
+    taken-down domains' edges on the way. The rewrite lands in one
+    fresh generation and every rewritten bucket cuts over in ONE
+    manifest commit; pinned readers are untouched and superseded
+    generations are reclaimed by :func:`vacuum_edge_store`. Returns
     ``{buckets_rewritten, files_before, files_after}``."""
-    import os
-    import shutil
-
-    from . import manifestfs as M
-
-    if M.is_manifest_store(path):
-        return _compact_edges_manifest(
-            spark,
-            path,
-            max_files_per_bucket=max_files_per_bucket,
-            target_rows_per_file=target_rows_per_file,
-        )
-    repair_edge_store(path)
-    local = path[7:] if path.startswith("file://") else path
-    counts: dict[str, int] = {}
-    for entry in os.listdir(local):
-        d = os.path.join(local, entry)
-        if entry.startswith("bucket=") and os.path.isdir(d):
-            counts[entry] = sum(
-                1 for f in os.listdir(d) if f.endswith(".parquet")
-            )
-    hot = sorted(e for e, c in counts.items() if c > max_files_per_bucket)
-    summary = {
-        "buckets_rewritten": len(hot),
-        "files_before": sum(counts.values()),
-        "files_after": sum(counts.values()),
-    }
-    if not hot:
-        return summary
-    tmp_root = local + "__compact"
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    df = spark.read.option("basePath", local).parquet(
-        *[os.path.join(local, e) for e in hot]
-    )
-    tombs = _edge_tombstones(spark, local)
-    if tombs is not None:
-        # physical purge of taken-down domains' edges in the rewritten
-        # buckets (reads already masked them; the bytes stop being
-        # carried). The mask stays for the unrewritten buckets.
-        df = df.join(
-            tombs.select(F.col("domain").alias("src_domain")),
-            "src_domain",
-            "left_anti",
-        ).join(
-            tombs.select(F.col("domain").alias("dst_domain")),
-            "dst_domain",
-            "left_anti",
-        )
-    df = df.groupBy("bucket", "src_domain", "dst_domain").agg(
-        F.sum("n_links").cast("bigint").alias("n_links")
-    )
-    rows = df.count()
-    files = max(1, -(-rows // target_rows_per_file))  # ceil
-    (
-        df.repartition(files, "bucket")
-        .sortWithinPartitions("bucket", "src_domain", "dst_domain")
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy("bucket")
-        .parquet(tmp_root)
-    )
-    from .storefs import remove_dir, swap_dir
-
-    for entry in hot:
-        new = os.path.join(tmp_root, entry)
-        if os.path.isdir(new):
-            swap_dir(os.path.join(local, entry), new)
-        else:
-            # the purge emptied this bucket — nothing was written for
-            # it; park-then-delete (crash-safe, see storefs.remove_dir)
-            remove_dir(os.path.join(local, entry))
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    files_after = 0
-    for entry in os.listdir(local):
-        d = os.path.join(local, entry)
-        if entry.startswith("bucket=") and os.path.isdir(d):
-            files_after += sum(
-                1 for f in os.listdir(d) if f.endswith(".parquet")
-            )
-    summary["files_after"] = files_after
-    return summary
-
-
-def _compact_edges_manifest(
-    spark,
-    path: str,
-    *,
-    max_files_per_bucket: int,
-    target_rows_per_file: int,
-) -> dict:
-    """Manifest-layout edge compaction: merge over-fragmented buckets'
-    delta rows (takedown-purged) into one fresh generation, cut every
-    rewritten bucket over in ONE manifest commit."""
-    from . import manifestfs as M
-
     snap = M.read_manifest(path)
     local = M.local_path(path)
     counts = M.part_file_counts(path, "edges", snap)

@@ -66,20 +66,11 @@ def _index_kind(path: str) -> str | None:
     :func:`..operators.graph.init_edge_store`) from the store's meta;
     None when the path no longer holds a readable store (a retired
     consumer whose store was deleted without
-    :func:`..sources.corpusstore.unregister_corpus_consumer`). Rename-
-    layout edge stores are bare parquet directories with no meta —
-    undetectable here by design (their compaction is the POSIX
-    single-writer path; schedule it next to the sink, not from this
-    object-store-safe pass)."""
+    :func:`..sources.corpusstore.unregister_corpus_consumer`)."""
     try:
         meta = M.read_manifest(path)["meta"]
     except FileNotFoundError:
-        if not os.path.exists(os.path.join(M.local_path(path), "index.json")):
-            return None
-        import json
-
-        with open(os.path.join(M.local_path(path), "index.json")) as f:
-            meta = json.load(f)
+        return None
     if meta.get("kind") == "linkage-state":
         return "linkage"
     if meta.get("kind") == "corpus":
@@ -143,21 +134,20 @@ def _maintain_store(
                     "current": vk.get("edge_state")
                     == G._edge_state_key(snap),
                 }
-    if M.is_manifest_store(path):
-        if checkpoint:
-            M.checkpoint_manifest_log(path)
-        if kind == "corpus":
-            out["vacuum"] = C.vacuum_corpus_snapshot(
-                path,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
-        else:
-            out["vacuum"] = M.vacuum(
-                path,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
+    if checkpoint:
+        M.checkpoint_manifest_log(path)
+    if kind == "corpus":
+        out["vacuum"] = C.vacuum_corpus_snapshot(
+            path,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
+    else:
+        out["vacuum"] = M.vacuum(
+            path,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
     return out
 
 
@@ -292,14 +282,13 @@ def maintain_corpus(
                 rebuild_over=rebuild_over, compact_over=compact_over,
             )
         report["synced"][idx] = out
-        if M.is_manifest_store(idx):
-            if checkpoint:
-                M.checkpoint_manifest_log(idx)
-            report["index_vacuum"][idx] = M.vacuum(
-                idx,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
+        if checkpoint:
+            M.checkpoint_manifest_log(idx)
+        report["index_vacuum"][idx] = M.vacuum(
+            idx,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
     for path in extra_stores or []:
         kind = _index_kind(path)
         if kind is None:

@@ -1,9 +1,7 @@
-"""Manifest-committed store layout — the object-store-safe second
-implementation of the maintenance seam (:mod:`.storefs` is the POSIX
-rename-swap one). Chosen per store at build time (``layout="manifest"``)
-and auto-detected afterwards; the persisted stores (lexical index, ANN
-index, edge store) run every lifecycle operation through whichever seam
-the store was built with.
+"""Manifest-committed store layout — the one commit protocol of every
+persisted store (lexical index, ANN index, edge store, streaming-linker
+state, corpus snapshots): each lifecycle operation writes immutable
+data and publishes it with one manifest commit.
 
 Layout under ``<root>/``::
 
@@ -44,9 +42,13 @@ Crash model: a writer that dies before its commit leaves orphan
 ``gen=N`` directories that no manifest references — invisible to every
 reader, removed by :func:`vacuum`. There is NO torn state and NO
 repair sweep; the retry of a crashed append/delete re-runs cleanly
-(nothing of the failed attempt was committed). Compare storefs.py,
-whose two-rename swap has two torn states needing load-time repair and
-which is unusable on object stores (no atomic rename).
+(nothing of the failed attempt was committed).
+
+Stores written by older versions in the retired in-place ``rename``
+layout (an ``index.json`` side file, or live ``bucket=N`` / ``cell=N``
+/ ``batch=N`` directories, and no manifest log) are refused with a
+``ValueError`` naming the path (:func:`reject_legacy_store`): rebuild
+them at a new path.
 
 What still assumes a single MAINTENANCE writer: generation numbers are
 allocated from a directory listing and commits race on the version
@@ -74,9 +76,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .storefs import local_path
-
 MANIFEST_DIR = "_manifests"
+_LEGACY_DIRS = ("bucket=", "cell=", "batch=")
 
 __all__ = [
     "ManifestConflictError",
@@ -84,7 +85,9 @@ __all__ = [
     "AlreadyApplied",
     "use_commit_log",
     "clear_commit_log",
+    "local_path",
     "is_manifest_store",
+    "reject_legacy_store",
     "init_manifest_store",
     "read_manifest",
     "commit_manifest",
@@ -145,6 +148,11 @@ class TransientCommitError(RuntimeError):
     protocol to absorb; anything else propagates as a hard error."""
 
 
+def local_path(path: str) -> str:
+    """Strip a ``file://`` scheme so ``os`` calls work on the path."""
+    return path[7:] if path.startswith("file://") else path
+
+
 def _mdir(root: str) -> str:
     return os.path.join(local_path(root), MANIFEST_DIR)
 
@@ -194,6 +202,35 @@ def is_manifest_store(root: str) -> bool:
     if be is not None:
         return bool(_manifest_names(root))
     return os.path.isdir(_mdir(root))
+
+
+def reject_legacy_store(root: str) -> None:
+    """Raise ``ValueError`` when ``root`` holds a store written in the
+    retired ``rename`` layout: no manifest log, but an ``index.json``
+    side file or live ``bucket=N`` / ``cell=N`` / ``batch=N``
+    directories at the root or one level below it. Such a store is
+    input from an older version; it is never read or written in place.
+    A missing or empty directory passes."""
+    local = local_path(root)
+    if is_manifest_store(root) or not os.path.isdir(local):
+        return
+    entries = os.listdir(local)
+    legacy = "index.json" in entries
+    for entry in entries:
+        if legacy:
+            break
+        sub = os.path.join(local, entry)
+        if entry.startswith(_LEGACY_DIRS):
+            legacy = True
+        elif os.path.isdir(sub) and entry != MANIFEST_DIR:
+            legacy = any(e.startswith(_LEGACY_DIRS) for e in os.listdir(sub))
+    if legacy:
+        raise ValueError(
+            f"{root} holds a store written in the retired rename layout "
+            "(index.json or bucket=N/cell=N/batch=N directories, no "
+            "manifest log); this version reads manifest-layout stores "
+            "only — rebuild it at a new path"
+        )
 
 
 def _manifest_names(root: str) -> list[str]:
@@ -265,6 +302,7 @@ def read_manifest(root: str, version: int | None = None) -> dict:
     if version is not None:
         m = _get_manifest(root, _vname(int(version)))
         if not m:
+            reject_legacy_store(root)
             raise FileNotFoundError(
                 f"manifest version {version} of {root} is not readable "
                 "— it may have been reclaimed by vacuum (raise "
@@ -275,6 +313,7 @@ def read_manifest(root: str, version: int | None = None) -> dict:
         m = _get_manifest(root, name)
         if m is not None and int(m.get("version", -1)) == int(name[1:-5]):
             return m
+    reject_legacy_store(root)
     raise FileNotFoundError(f"no readable manifest for {root}")
 
 
@@ -329,6 +368,8 @@ def commit_manifest(
     readers skip the torn file, so every retry would re-commit the
     same version and lose to its own debris forever. Raises
     :class:`ManifestConflictError` on a genuinely lost race."""
+    if not expected_version:
+        reject_legacy_store(root)
     version = int(expected_version) + 1
     manifest = {"version": version, "meta": meta, "tables": tables}
     if op is not None:
@@ -675,7 +716,8 @@ def read_table(
     (``None`` when the table has none). Partitioned tables read with
     ``basePath=<table root>`` so the partition column (``bucket=``/
     ``cell=``) is recovered and predicate/partition pruning work
-    exactly as in the rename layout; the ``gen`` column is dropped."""
+    exactly as on a plain partitioned table; the ``gen`` column is
+    dropped."""
     paths = table_paths(root, table, snapshot)
     if not paths:
         return None
@@ -990,6 +1032,7 @@ def vacuum(
 
     readable = [(n, m) for n, m in manifests if m is not None]
     if not readable:
+        reject_legacy_store(root)
         raise FileNotFoundError(
             f"no readable manifest for {root} — refusing to vacuum a "
             "store whose live set cannot be established"

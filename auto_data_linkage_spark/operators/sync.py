@@ -43,14 +43,12 @@ the log.
 Canonical flows::
 
     # lexical: start EMPTY, let the feed build it (cursor from v=0)
-    build_lex_index(load_corpus_snapshot(spark, c).limit(0), idx,
-                    layout="manifest")
+    build_lex_index(load_corpus_snapshot(spark, c).limit(0), idx)
     sync_lex_index(spark, c, idx)              # ...and per cadence
 
     # ANN needs training data (codebooks/centroids): build from head
     # version V, then sync with since=V once
-    build_ann_index(load_corpus_snapshot(spark, c), idx,
-                    layout="manifest", n_cells=16)
+    build_ann_index(load_corpus_snapshot(spark, c), idx, n_cells=16)
     sync_ann_index(spark, c, idx, since=V)     # first call
     sync_ann_index(spark, c, idx)              # thereafter
 
@@ -77,7 +75,7 @@ def _sync_app_id(corpus_path: str) -> str:
     return f"corpus-sync:{os.path.abspath(M.local_path(corpus_path))}"
 
 
-def _make_cursor_io(index_path: str, write_meta):
+def _make_cursor_io(index_path: str):
     """(record, read) pair over the index's stored sync token: record
     is a cursor-only commit (skipped when the stored token already
     covers the target version; with_txn is monotone, so a racing
@@ -87,32 +85,16 @@ def _make_cursor_io(index_path: str, write_meta):
     token-guarded inside the index append itself)."""
 
     def read(app: str) -> int:
-        if M.is_manifest_store(index_path):
-            return M.txn_version(M.read_manifest(index_path)["meta"], app)
-        import json as _json
-
-        local = M.local_path(index_path)
-        with open(os.path.join(local, "index.json")) as f:
-            return M.txn_version(_json.load(f), app)
+        return M.txn_version(M.read_manifest(index_path)["meta"], app)
 
     def record(app: str, v: int) -> None:
-        if M.is_manifest_store(index_path):
-            if M.txn_version(M.read_manifest(index_path)["meta"], app) >= v:
-                return
-
-            def mutate(fresh: dict):
-                return fresh["tables"], M.with_txn(fresh["meta"], (app, v))
-
-            M.commit_with_retry(index_path, mutate, op="sync-cursor")
+        if read(app) >= v:
             return
-        import json as _json
 
-        local = M.local_path(index_path)
-        with open(os.path.join(local, "index.json")) as f:
-            meta = _json.load(f)
-        if M.txn_version(meta, app) >= v:
-            return
-        write_meta(local, M.with_txn(meta, (app, v)))
+        def mutate(fresh: dict):
+            return fresh["tables"], M.with_txn(fresh["meta"], (app, v))
+
+        M.commit_with_retry(index_path, mutate, op="sync-cursor")
 
     return record, read
 
@@ -300,7 +282,7 @@ def sync_lex_index(
         id_col=meta["id_col"],
         cols=[meta["id_col"], meta["text_col"]],
         kind="lexical",
-        cursor_io=_make_cursor_io(index_path, L._write_meta),
+        cursor_io=_make_cursor_io(index_path),
         index_empty=int(meta.get("n_docs", 0)) == 0,
     )
     out["compacted"] = False
@@ -364,7 +346,7 @@ def sync_ann_index(
     def delete(ids, guard_txn):
         A.delete_from_ann_index(spark, index_path, ids, guard_txn=guard_txn)
 
-    cursor_io = _make_cursor_io(index_path, A._write_meta)
+    cursor_io = _make_cursor_io(index_path)
     out = _sync(
         spark, corpus_path, index_path,
         since=since, index_meta=meta, append=append, delete=delete,

@@ -12,6 +12,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+_JAVA_OPTIONS = ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions")
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
+    a quarter of physical memory (``MemTotal`` in ``meminfo``), between
+    1 and 4 GiB, so the driver heap never exceeds the host's RAM. Hosts
+    without ``/proc/meminfo`` get 4g."""
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(1, min(4, int(kib / 2**20 // 4)))}g"
+
+
+def _with_code_cache(java_options: str | None) -> str:
+    """``java_options`` with the JIT code-cache reservation appended; an
+    explicit ``-XX:ReservedCodeCacheSize`` already in them wins."""
+    flag = "-XX:ReservedCodeCacheSize=" + os.environ.get(
+        "SPARK_GRAFT_CODE_CACHE", "512m"
+    )
+    if not java_options:
+        return flag
+    if "-XX:ReservedCodeCacheSize=" in java_options:
+        return java_options
+    return f"{java_options} {flag}"
+
 
 def get_spark(
     app_name: str = "auto_data_linkage_spark",
@@ -23,7 +54,11 @@ def get_spark(
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
     partitions default to the core count — correct for local mode; on a real
-    cluster callers pass ~2-3x total executor cores instead.
+    cluster callers pass ~2-3x total executor cores instead. The driver heap
+    is ``$SPARK_GRAFT_DRIVER_MEM`` or :func:`_default_driver_memory`.
+    ``extra_conf`` entries override the defaults, except that JVM options
+    given for ``spark.driver/executor.extraJavaOptions`` keep the code-cache
+    flag appended.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -47,7 +82,10 @@ def get_spark(
         # Spark 4 rejects parquet TIMESTAMP(NANOS) outright; read the raw
         # int64 and let loaders rebuild µs timestamps (see load_tables)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Iterative algorithms (connected components, EM) checkpoint to
         # truncate lineage; local dir works in local mode, DFS on a cluster.
@@ -84,28 +122,20 @@ def get_spark(
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
         )
-        # JIT code cache. The JVM default (240 MB) fills under thousands
-        # of distinct compiled codegen units; once full the JIT stops
-        # compiling and hot query loops run interpreted (flushing also
-        # discards still-hot methods). Raising the reservation is free
-        # (virtual until used): measured 97.5 s → 80.3 s on the same
-        # pass, on top of the class-cache fix. Applied to executors too —
-        # they compile the same generated sources. No-op when the JVM is
-        # already running (getOrCreate reuse).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m"),
-        )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # JIT code cache. The JVM default (240 MB) fills under thousands of
+    # distinct compiled codegen units; once full the JIT stops compiling
+    # and hot query loops run interpreted (flushing also discards
+    # still-hot methods). Raising the reservation is free (virtual until
+    # used): measured 97.5 s → 80.3 s on the same pass, on top of the
+    # class-cache fix. Applied to executors too — they compile the same
+    # generated sources — and appended to any JVM options the caller
+    # passes. No-op when the JVM is already running (getOrCreate reuse).
+    extra_conf = dict(extra_conf or {})
+    for key in _JAVA_OPTIONS:
+        extra_conf[key] = _with_code_cache(extra_conf.get(key))
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import manifestfs as M
-from ..operators.storefs import local_path
 
 _VERSION = 1
 _TABLE = "data"
@@ -90,7 +89,7 @@ def _write_gen(
         out.write.mode("error")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_by)
-        .parquet(os.path.join(local_path(root), _TABLE, gen))
+        .parquet(os.path.join(M.local_path(root), _TABLE, gen))
     )
     return M.written_parts(root, _TABLE, gen)
 
@@ -116,7 +115,7 @@ def build_corpus_snapshot(
     re-apply over its own rows."""
     if not partition_by:
         raise ValueError("corpus snapshots require partition_by columns")
-    local = local_path(path)
+    local = M.local_path(path)
     os.makedirs(local, exist_ok=True)
     if M.is_manifest_store(path):
         raise FileExistsError(
@@ -404,7 +403,7 @@ def compact_corpus_snapshot(
     if not sel:
         return {"compacted": [], "version": snap["version"]}
     paths = M.table_paths(path, _TABLE, snap, parts=sel)
-    tdir = os.path.join(local_path(path), _TABLE)
+    tdir = os.path.join(M.local_path(path), _TABLE)
     df = spark.read.option("basePath", tdir).parquet(*paths).drop("gen")
     gen = M.next_gen(path, _TABLE)
     parts = _write_gen(
@@ -555,7 +554,7 @@ def corpus_snapshot_changes(
         if int(since) == 0
         else M.read_manifest(path, version=since)
     )
-    tdir = os.path.join(local_path(path), _TABLE)
+    tdir = os.path.join(M.local_path(path), _TABLE)
     for v in range(int(since) + 1, last + 1):
         cur = M.read_manifest(path, version=v)
         if cur.get("op") == "compact":

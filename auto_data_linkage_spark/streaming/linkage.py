@@ -8,10 +8,10 @@ base is a long-lived asset, each micro-batch does delta-sized work
 (:mod:`auto_data_linkage_spark.incremental`), and the state is versioned
 so replays are idempotent.
 
-State layouts — the same two-seam contract as the persisted indexes
-(:mod:`..operators.lexindex`) and the corpus snapshot store
-(:mod:`..sources.corpusstore`), chosen at first use and auto-detected
-afterwards:
+State layouts — both are manifest-committed stores
+(:mod:`..operators.manifestfs`), like the persisted indexes and the
+corpus snapshot store; the layout is chosen at first use and
+auto-detected afterwards:
 
 - ``layout="manifest"`` (default): the cluster table lives in a
   manifest-committed store (:mod:`..operators.manifestfs`). Each batch
@@ -36,12 +36,10 @@ afterwards:
   every upsert commit after); ``version=`` time travel and the shared
   vacuum apply unchanged. Untouched buckets' files keep serving
   byte-identically across batches (tested).
-- ``layout="rename"`` (opt-in POSIX fast path): one parquet snapshot
-  per micro-batch id under ``state_dir/batch=<id>/``. A replayed batch
-  folds into the snapshot BEFORE its own (same batch_id ⇒ same
-  directory ⇒ same result) and old snapshots are pruned by
-  ``retain_versions``. Single writer, POSIX rename semantics; no
-  token, no time travel API.
+
+State written by older versions in the retired ``rename`` layout (one
+``batch=<id>/`` snapshot directory per micro-batch) is refused with a
+``ValueError``; start the linker on a new ``state_dir``.
 
 ``app_id`` identifies the streaming query's checkpoint lineage
 (:func:`..operators.manifestfs.txn_version`): restarting from a NEW
@@ -87,7 +85,7 @@ class StreamingLinker:
     fixed ``prior`` — scoring must not depend on batch size). The first
     batch is clustered outright; every later batch folds in via
     incremental assignment. ``current_clusters`` exposes the latest state
-    (or, on the manifest layout, any retained historical ``version=``).
+    (or any retained historical ``version=``).
     """
 
     def __init__(
@@ -103,10 +101,9 @@ class StreamingLinker:
         vacuum_age_seconds: float = 3600.0,
         n_buckets: int = 16,
     ):
-        if layout not in ("manifest", "merge", "rename"):
+        if layout not in ("manifest", "merge"):
             raise ValueError(
-                "layout must be 'manifest', 'merge', or 'rename', "
-                f"got {layout!r}"
+                f"layout must be 'manifest' or 'merge', got {layout!r}"
             )
         self.model = model
         self.state_dir = state_dir
@@ -114,12 +111,9 @@ class StreamingLinker:
         self.unique_id = unique_id
         self.layout = layout
         self.app_id = app_id
-        # snapshots/manifest versions to keep. On the rename layout ≥2
-        # is required for crash replay (a replayed batch folds into the
-        # snapshot BEFORE its own); on the manifest layout the token
-        # skips replays outright, so retain_versions only buys time
-        # travel — still floored at 2 so the pre-batch snapshot stays
-        # readable for concurrent readers.
+        # manifest versions to keep. The token skips replays outright,
+        # so retain_versions only buys time travel — floored at 2 so
+        # the pre-batch snapshot stays readable for concurrent readers.
         self.retain_versions = max(2, retain_versions)
         # the shared vacuum safety floor: a generation or manifest
         # younger than this is never reclaimed by the per-batch vacuum
@@ -149,16 +143,13 @@ class StreamingLinker:
         """Existing stores auto-detect their layout; a fresh state_dir
         follows the constructor's ``layout``. A merge-layout store is a
         corpus snapshot (meta kind="corpus"); the snapshot-per-batch
-        manifest store carries kind="linkage-state"."""
+        manifest store carries kind="linkage-state". A state_dir left
+        by the retired rename layout raises ``ValueError``."""
         if M.is_manifest_store(self.state_dir):
             meta = M.read_manifest(self.state_dir)["meta"]
             return "merge" if meta.get("kind") == "corpus" else "manifest"
-        if self._versions():
-            return "rename"
+        M.reject_legacy_store(self.state_dir)
         return self.layout
-
-    def _is_manifest(self) -> bool:
-        return self._mode() == "manifest"
 
     def _bucketed(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -166,67 +157,15 @@ class StreamingLinker:
             F.pmod(F.xxhash64(F.col(self.unique_id)), F.lit(self.n_buckets)),
         )
 
-    # ------------------------------------------------- rename state io
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.state_dir):
-            return []
-        out = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith("batch="):
-                try:
-                    out.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def _state_before(
-        self, spark: SparkSession, batch_id: int
-    ) -> DataFrame | None:
-        """Rename layout: latest snapshot written by a batch EARLIER than
-        ``batch_id``. A replayed batch (crash after snapshot write,
-        before checkpoint commit) must fold into the state as of its
-        original run — reading the overall latest would fold its own
-        snapshot in twice."""
-        versions = [v for v in self._versions() if v < batch_id]
-        if not versions:
-            return None
-        return spark.read.parquet(
-            f"{self.state_dir}/batch={versions[-1]}"
-        )
-
-    def _write_state(self, df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(
-            f"{self.state_dir}/batch={batch_id}"
-        )
-        self._prune(keep_latest=batch_id)
-
-    def _prune(self, keep_latest: int) -> None:
-        """Rename layout: drop snapshots beyond ``retain_versions``,
-        never the one just written nor those after it."""
-        import shutil
-
-        keep = set(
-            sorted(v for v in self._versions() if v <= keep_latest)[
-                -self.retain_versions:
-            ]
-        )
-        keep.add(keep_latest)
-        for v in self._versions():
-            if v not in keep and v < keep_latest:
-                shutil.rmtree(
-                    f"{self.state_dir}/batch={v}", ignore_errors=True
-                )
-
     # ----------------------------------------------------- public state
     def current_clusters(
         self, spark: SparkSession, *, version: int | None = None
     ) -> DataFrame | None:
         """Latest cluster-table snapshot, or None before the first batch.
-        ``version=`` (manifest layout only) pins a retained historical
-        manifest version — the pre-merge state for an audit, the
-        pre-batch state for a diff — served bit-exactly."""
-        mode = self._mode()
-        if mode == "merge":
+        ``version=`` pins a retained historical manifest version — the
+        pre-merge state for an audit, the pre-batch state for a diff —
+        served bit-exactly."""
+        if self._mode() == "merge":
             try:
                 return C.load_corpus_snapshot(
                     spark, self.state_dir, version=version
@@ -235,25 +174,13 @@ class StreamingLinker:
                 if version is not None:
                     raise
                 return None
-        if mode == "manifest":
-            try:
-                snap = M.read_manifest(self.state_dir, version=version)
-            except FileNotFoundError:
-                if version is not None:
-                    raise
-                return None
-            return M.read_table(spark, self.state_dir, _TABLE, snap)
-        if version is not None:
-            raise ValueError(
-                "version= time travel needs a manifest-layout state "
-                "store (StreamingLinker(layout='manifest'))"
-            )
-        versions = self._versions()
-        if not versions:
+        try:
+            snap = M.read_manifest(self.state_dir, version=version)
+        except FileNotFoundError:
+            if version is not None:
+                raise
             return None
-        return spark.read.parquet(
-            f"{self.state_dir}/batch={versions[-1]}"
-        )
+        return M.read_table(spark, self.state_dir, _TABLE, snap)
 
     def vacuum(
         self,
@@ -261,16 +188,12 @@ class StreamingLinker:
         keep_versions: int | None = None,
         min_age_seconds: float | None = None,
     ) -> dict:
-        """Reclaim superseded state (manifest layout): generations and
-        manifests outside the last ``keep_versions`` readable manifests
-        and older than ``min_age_seconds`` (defaults: the constructor's
+        """Reclaim superseded state: generations and manifests outside
+        the last ``keep_versions`` readable manifests and older than
+        ``min_age_seconds`` (defaults: the constructor's
         ``retain_versions`` / ``vacuum_age_seconds``) — the shared
-        :func:`..operators.manifestfs.vacuum` policy, identical for
-        the snapshot and merge layouts (both are manifest stores). The
-        rename layout prunes inline per batch and returns an empty
-        report here."""
-        if self._mode() == "rename":
-            return {"removed_gens": [], "removed_manifests": []}
+        :func:`..operators.manifestfs.vacuum` policy, identical for the
+        snapshot and merge layouts."""
         return M.vacuum(
             self.state_dir,
             keep_manifests=(
@@ -288,22 +211,9 @@ class StreamingLinker:
     # ------------------------------------------------------------- logic
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: fold one micro-batch into the cluster state."""
-        mode = self._mode()
-        if mode == "merge":
+        if self._mode() == "merge":
             return self._process_batch_merge(batch_df, batch_id)
-        if mode == "manifest":
-            return self._process_batch_manifest(batch_df, batch_id)
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        uid = self.unique_id
-        base = self._state_before(spark, batch_id)
-        clustered = self._fold(base, batch_df, uid)
-        self._write_state(clustered, batch_id)
-        self.last_batch_report = {
-            "mode": "rename", "batch_id": int(batch_id),
-            "action": "snapshot",
-        }
+        return self._process_batch_manifest(batch_df, batch_id)
 
     def _fold(self, base, batch_df: DataFrame, uid: str) -> DataFrame:
         if base is None:

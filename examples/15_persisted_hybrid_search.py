@@ -84,16 +84,13 @@ def main() -> None:
     print("== lexical top-5 after append (new docs now retrievable) ==")
     lex2.orderBy("query_id", "rank").show()
 
-    # maintenance: appends fragment bucket dirs; compact from an
-    # explicit MAINTENANCE WINDOW (single writer, no concurrent probe
-    # sessions, POSIX renames — see operators/storefs.py; on object
-    # stores the two-rename swap is not atomic). A crash between the
-    # renames is healed automatically: every load runs the
-    # repair_lex_index / repair_ann_index sweep first.
+    # maintenance: appends fragment buckets; compaction rewrites them
+    # into a fresh generation and cuts over in one manifest commit
+    # (readers pinned to the previous version keep serving it; see
+    # operators/manifestfs.py), and vacuum_lex_index later reclaims
+    # the superseded generations.
     summary = L.compact_lex_index(spark, lex_path, max_files_per_bucket=2)
     print("compacted:", summary)
-    print("post-compaction repair sweep (healthy -> no-op):",
-          L.repair_lex_index(lex_path))
     spark.stop()
 
 

@@ -1,10 +1,11 @@
-"""Index LIFECYCLE (round 10): crash repair, deletion, adaptive
+"""Index LIFECYCLE (round 10): manifest commits, deletion, adaptive
 refresh — the maintenance story a long-running serving store needs.
 
-1. a compaction crash between its two renames leaves a bucket parked
-   as ``bucket=N__old`` — a plain ``load_lex_index`` heals it (the
-   repair sweep runs on every load/append/compaction) and serves
-   BIT-IDENTICAL results;
+1. every mutation is one manifest commit over immutable generations: a
+   reader PINS the version it loaded, so an append and a compaction
+   committing later never change what it serves; ``version=`` replays
+   any retained version, and ``vacuum_lex_index`` reclaims the
+   generations no kept version names;
 2. ``delete_from_lex_index`` removes documents as DELTAS (tombstone +
    negative df rows): post-delete BM25 equals an index freshly built
    without the docs, exactly;
@@ -31,7 +32,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import lexindex as L
-from auto_data_linkage_spark.operators import storefs
+from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators.graph import (
     delete_domains_from_edge_store,
     edge_store_sink,
@@ -64,31 +65,33 @@ def main() -> None:
         docs.orderBy("doc_id").limit(3), n_terms=6
     ).localCheckpoint(eager=False)
 
-    # 1. torn compaction -> load heals it
+    # 1. manifest lifecycle: pinned reader, time travel, vacuum
     lex = os.path.join(root, "lex")
-    L.build_lex_index(docs, lex, n_buckets=4, layout="rename")
-    want = topk(spark, lex, probes)
-    postings = os.path.join(lex, "postings")
-    bucket = sorted(
-        e for e in os.listdir(postings) if e.startswith("bucket=")
-    )[0]
-    os.rename(  # simulate the crash state between the two renames
-        os.path.join(postings, bucket),
-        os.path.join(postings, bucket + storefs.OLD_SUFFIX),
-    )
-    print("torn state:", [e for e in os.listdir(postings)
-                          if e.endswith(storefs.OLD_SUFFIX)])
-    assert topk(spark, lex, probes) == want  # load ran the sweep
-    print("after plain load: healed, top-k bit-identical ->",
-          [e for e in os.listdir(postings)
-           if e.endswith(storefs.OLD_SUFFIX)] == [])
+    L.build_lex_index(docs.where(F.col("doc_id") % 2 == 0), lex,
+                      n_buckets=4)                                # v1
+    pinned = L.load_lex_index(spark, lex)
+    want = sorted(map(tuple, L.lex_index_topk(pinned, probes, k=5).collect()))
+    L.append_lex_index(docs.where(F.col("doc_id") % 2 == 1), lex)  # v2
+    L.compact_lex_index(spark, lex, max_files_per_bucket=1)         # v3
+    print("versions:", [h["version"] for h in M.history(lex)])
+    print("pinned v1 reader unchanged after append + compaction:",
+          sorted(map(tuple, L.lex_index_topk(pinned, probes, k=5)
+                     .collect())) == want)
+    print("version=1 time travel == pinned reader:",
+          sorted(map(tuple, L.lex_index_topk(
+              L.load_lex_index(spark, lex, version=1), probes, k=5
+          ).collect())) == want)
+    head = topk(spark, lex, probes)
+    reclaimed = L.vacuum_lex_index(lex, keep_manifests=1, min_age_seconds=0)
+    print(f"vacuum reclaimed {len(reclaimed['removed_gens'])} generations; "
+          "head unchanged:", topk(spark, lex, probes) == head)
 
     # 2. deletion as deltas: equals a fresh build without the docs
     victims = docs.where(F.col("doc_id") % 5 == 0).select("doc_id")
     out = L.delete_from_lex_index(spark, lex, victims)
     fresh = os.path.join(root, "lex_fresh")
     L.build_lex_index(docs.where(F.col("doc_id") % 5 != 0), fresh,
-                      n_buckets=4, layout="rename")
+                      n_buckets=4)
     same = topk(spark, lex, probes) == topk(spark, fresh, probes)
     print(f"deleted {out['deleted']} docs; "
           f"top-k == fresh build without them: {same}")
@@ -99,7 +102,7 @@ def main() -> None:
     # default fragmentation threshold)
     before = topk(spark, lex, probes)
     L.compact_lex_index(spark, lex, max_files_per_bucket=0)
-    left = (spark.read.parquet(postings)
+    left = (L.load_lex_index(spark, lex).postings
             .join(victims, "doc_id", "left_semi").count())
     print("after compaction: masked rows on disk =", left,
           "| probe unchanged:", topk(spark, lex, probes) == before)

@@ -1,9 +1,8 @@
-"""Manifest-layout stores (round 11): the object-store-safe lifecycle.
+"""Manifest-committed stores (round 11): the object-store-safe lifecycle.
 
-The rename-layout stores (examples 08/17) mutate live directories with
-POSIX ``os.rename`` — atomic locally, impossible on S3/GCS. Building a
-store with ``layout="manifest"`` switches every lifecycle operation to
-the immutable-generations + manifest-log design (operators/manifestfs):
+Every persisted store (lexical and ANN indexes, edge store, linker
+state) runs its lifecycle on the immutable-generations + manifest-log
+design (operators/manifestfs):
 
 1. ZERO renames anywhere — data lands in fresh ``gen=N`` dirs and a
    mutation becomes visible by atomically CREATING one JSON manifest
@@ -58,7 +57,7 @@ def main():
     # 1. build + append: each mutation is one manifest version
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, path, n_buckets=8, layout="manifest")
+    L.build_lex_index(a, path, n_buckets=8)
     L.append_lex_index(b, path)
     print("manifest version after build+append:",
           M.read_manifest(path)["version"])

@@ -53,7 +53,7 @@ def main() -> None:
     )
     build_lex_index(
         load_corpus_snapshot(spark, corpus).limit(0), index,
-        n_buckets=8, layout="manifest",
+        n_buckets=8,
     )
     print("initial sync:", sync_lex_index(spark, corpus, index)["applied"])
 

@@ -80,7 +80,7 @@ def main():
         # --- 1. lifecycle with the log in the bucket -----------------
         path = os.path.join(work, "lex")
         M.use_commit_log(path, store)
-        L.build_lex_index(a, path, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, path, n_buckets=4)
         L.append_lex_index(b, path)
         L.delete_from_lex_index(spark, path, a.select("doc_id").limit(10))
         assert not os.path.isdir(os.path.join(path, "_manifests"))
@@ -114,7 +114,7 @@ def main():
             inner, seed=3, fail_rate=0.3, ambiguous_rate=0.3
         )
         M.use_commit_log(stormy, flaky)
-        L.build_lex_index(a, stormy, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, stormy, n_buckets=4)
         L.append_lex_index(b, stormy)
         L.delete_from_lex_index(spark, stormy, a.select("doc_id").limit(10))
         print(

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import annindex as A
+from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators.similarity import ivfpq_topk
 
 
@@ -66,15 +67,13 @@ def test_coded_scan_partition_prunes(spark, vecs, tmp_path):
 
 
 def test_version_guard(spark, vecs, tmp_path):
-    import json
-    import os
-
     out = str(tmp_path / "annidx_v")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout="rename")
-    p = os.path.join(out, "index.json")
-    meta = json.load(open(p))
-    meta["version"] = 99
-    json.dump(meta, open(p, "w"))
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
+    snap = M.read_manifest(out)
+    M.commit_manifest(
+        out, tables=snap["tables"], meta={**snap["meta"], "version": 99},
+        expected_version=snap["version"],
+    )
     with pytest.raises(ValueError, match="version"):
         A.load_ann_index(spark, out)
 
@@ -151,11 +150,9 @@ def test_ann_index_sink_streams_vectors_into_index(spark, vecs, tmp_path):
 def test_compact_ann_index_shrinks_files_same_results(spark, vecs, tmp_path):
     """N appends fragment cell dirs into one file per append; compaction
     must drop the file count and leave ann_index_topk bit-identical."""
-    import os
-
     out = str(tmp_path / "annidx_cmp")
     base = vecs.where(F.col("vec_id") < 300)
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="rename")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     for lo, hi in [(300, 350), (350, 400), (400, 450), (450, 10**9)]:
         A.append_ann_index(
             vecs.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)), out
@@ -167,12 +164,12 @@ def test_compact_ann_index_shrinks_files_same_results(spark, vecs, tmp_path):
             A.load_ann_index(spark, out), queries, k=5, nprobe=3
         ).collect()
     }
-    n_before = sum(A._cell_file_counts(out).values())
+    n_before = sum(_cell_file_counts(out).values())
     report = A.compact_ann_index(spark, out, max_files_per_cell=2)
     assert report["cells_rewritten"] >= 1
     assert report["files_after"] < n_before == report["files_before"]
     # every cell now within the threshold
-    assert max(A._cell_file_counts(out).values()) <= 2
+    assert max(_cell_file_counts(out).values()) <= 2
     after = {
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
         for r in A.ann_index_topk(
@@ -180,7 +177,7 @@ def test_compact_ann_index_shrinks_files_same_results(spark, vecs, tmp_path):
         ).collect()
     }
     assert before == after
-    # metadata survives with counts intact and a bumped generation
+    # metadata survives with counts intact
     idx = A.load_ann_index(spark, out)
     assert idx.meta["n_rows"] == vecs.count()
     # idempotent: nothing left over the threshold → no-op
@@ -197,21 +194,17 @@ def test_append_rejects_unknown_cells(spark, vecs, tmp_path):
 
 
 def test_append_updates_meta_incrementally_and_atomically(spark, vecs, tmp_path):
-    import json
-    import os
-
     out = str(tmp_path / "annidx_meta")
     base = vecs.where(F.col("vec_id") < 400)
-    m0 = A.build_ann_index(base, out, m=4, n_codewords=8, layout="rename")
+    m0 = A.build_ann_index(base, out, m=4, n_codewords=8)
     m1 = A.append_ann_index(vecs.where(F.col("vec_id") >= 400), out)
-    assert m1["generation"] > m0["generation"]
     assert m1["n_rows"] == vecs.count()
     assert set(m1["cells"]) >= set(m0["cells"])
     assert m1["n_cells"] == len(m1["cells"])
-    # no torn temp file left behind
-    assert not os.path.exists(os.path.join(out, "index.json.tmp"))
-    on_disk = json.load(open(os.path.join(out, "index.json")))
-    assert on_disk["n_rows"] == m1["n_rows"]
+    # the append is one manifest commit carrying the updated meta
+    head = M.read_manifest(out)
+    assert head["version"] == 2
+    assert head["meta"] == m1
 
 
 def test_served_topk_exclude_self_flag(spark, vecs, tmp_path):
@@ -238,7 +231,7 @@ def test_ann_index_sink_inline_compaction(spark, vecs, tmp_path):
     out = str(tmp_path / "annidx_stream_cmp")
     base = vecs.where(F.col("vec_id") < 400)
     delta = vecs.where(F.col("vec_id") >= 400).repartition(6)
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="rename")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
 
     src_dir = str(tmp_path / "incoming_cmp")
     delta.write.parquet(src_dir)
@@ -255,7 +248,7 @@ def test_ann_index_sink_inline_compaction(spark, vecs, tmp_path):
     )
     q.awaitTermination(120)
 
-    assert max(A._cell_file_counts(out).values()) <= 2
+    assert max(_cell_file_counts(out).values()) <= 2
     idx = A.load_ann_index(spark, out)
     assert idx.meta["n_rows"] == vecs.count()
     got = A.ann_index_topk(
@@ -379,3 +372,8 @@ def test_append_routes_unlabeled_delta_to_learned_cells(spark, vecs, tmp_path):
         idx, probe, k=1, nprobe=meta["n_cells"], exclude_self=False
     ).collect()
     assert {r.query_id for r in hits} == {r.neighbor_id for r in hits}
+
+
+def _cell_file_counts(out):
+    """Live parquet data-file count per ``cell=N`` of the coded table."""
+    return M.part_file_counts(out, "coded", M.read_manifest(out))

@@ -232,9 +232,9 @@ def test_ambiguous_append_does_not_double_count(spark, docs, probes, tmp_path):
     flaky = FlakyCommitStore(MemoryCommitStore(), seed=1, ambiguous_rate=1.0)
     M.use_commit_log(out, flaky)
     try:
-        L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, out, n_buckets=4)
         meta = L.append_lex_index(b, out)
-        L.build_lex_index(a, ref, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, ref, n_buckets=4)
         ref_meta = L.append_lex_index(b, ref)
         assert meta["n_docs"] == ref_meta["n_docs"]
         assert meta["sum_dl"] == ref_meta["sum_dl"]
@@ -265,7 +265,7 @@ def test_full_lifecycle_under_mixed_weather(spark, docs, probes, tmp_path):
     M.use_commit_log(out, flaky)
     try:
         for root in (out, ref):
-            L.build_lex_index(a, root, n_buckets=4, layout="manifest")
+            L.build_lex_index(a, root, n_buckets=4)
             L.append_lex_index(b, root)
             L.delete_from_lex_index(spark, root, dels)
             L.compact_lex_index(spark, root, max_files_per_bucket=1)

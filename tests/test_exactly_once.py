@@ -5,10 +5,9 @@ The crash window the token closes: foreachBatch COMMITTED the append,
 then the process died before the streaming checkpoint advanced —
 Structured Streaming replays the batch, and a token-less sink appends
 it twice. The replay is simulated exactly as the runtime produces it:
-the sink callable invoked again with the SAME batch_id. On the
-manifest layout the token rides the same atomic commit as the data,
-so this is true exactly-once; on the rename layout it is recorded
-after the data (best-effort, clean-replay only) — both asserted.
+the sink callable invoked again with the SAME batch_id. The token
+rides the same atomic manifest commit as the data, so this is true
+exactly-once.
 """
 
 import pytest
@@ -53,8 +52,7 @@ def _lex_topk(spark, path, probes):
     }
 
 
-@pytest.mark.parametrize("layout", ["manifest", "rename"])
-def test_lex_sink_replay_appends_once(spark, docs, tmp_path, layout):
+def test_lex_sink_replay_appends_once(spark, docs, tmp_path):
     root = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     b = (
@@ -62,23 +60,16 @@ def test_lex_sink_replay_appends_once(spark, docs, tmp_path, layout):
         .select("doc_id", "text")
         .localCheckpoint(eager=True)
     )
-    L.build_lex_index(a, root, n_buckets=4, layout=layout)
+    L.build_lex_index(a, root, n_buckets=4)
     sink = L.lex_index_sink(root, app_id="q1")
     probes = query_terms_from_docs(docs.orderBy("doc_id").limit(5), n_terms=6)
     sink(b, 0)
-    n_docs = (
-        M.read_manifest(root)["meta"]["n_docs"]
-        if layout == "manifest"
-        else L.load_lex_index(spark, root).meta["n_docs"]
-    )
+    n_docs = M.read_manifest(root)["meta"]["n_docs"]
     served = _lex_topk(spark, root, probes)
     sink(b, 0)  # checkpoint replay of the SAME batch
-    if layout == "manifest":
-        meta2 = M.read_manifest(root)["meta"]
-        assert meta2["n_docs"] == n_docs
-        assert M.txn_version(meta2, "q1") == 0
-    else:
-        assert L.load_lex_index(spark, root).meta["n_docs"] == n_docs
+    meta2 = M.read_manifest(root)["meta"]
+    assert meta2["n_docs"] == n_docs
+    assert M.txn_version(meta2, "q1") == 0
     assert _lex_topk(spark, root, probes) == served
     # the NEXT batch id appends normally
     c = (
@@ -87,12 +78,7 @@ def test_lex_sink_replay_appends_once(spark, docs, tmp_path, layout):
         .select("doc_id", "text")
     )
     sink(c, 1)
-    meta3 = (
-        M.read_manifest(root)["meta"]
-        if layout == "manifest"
-        else L.load_lex_index(spark, root).meta
-    )
-    assert meta3["n_docs"] == n_docs + 3
+    assert M.read_manifest(root)["meta"]["n_docs"] == n_docs + 3
 
 
 def test_lex_manifest_replay_skip_is_one_commit_atomic(spark, docs, tmp_path):
@@ -102,7 +88,7 @@ def test_lex_manifest_replay_skip_is_one_commit_atomic(spark, docs, tmp_path):
     root = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     b = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text")
-    L.build_lex_index(a, root, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, root, n_buckets=4)
     sink = L.lex_index_sink(root, app_id="q1")
     sink(b, 0)
     v = M.read_manifest(root)["version"]
@@ -115,7 +101,7 @@ def test_ann_sink_replay_appends_once(spark, emb, tmp_path):
     root = str(tmp_path / "ann")
     a = emb.where(F.col("vec_id") % 2 == 0)
     b = emb.where(F.col("vec_id") % 2 == 1).localCheckpoint(eager=True)
-    A.build_ann_index(a, root, layout="manifest")
+    A.build_ann_index(a, root)
     sink = A.ann_index_sink(root, app_id="q1")
     sink(b, 0)
     meta = M.read_manifest(root)["meta"]
@@ -228,18 +214,25 @@ def test_corpus_upsert_sink_replay_is_exactly_once(spark, docs, tmp_path):
     } == {"v2"}
 
 
-def test_rename_edge_store_rejects_app_id(spark, tmp_path):
-    """The rename-layout edge store has no metadata file, so app_id
-    tokens cannot be tracked — the sink must fail loudly instead of
-    silently accepting an app_id that protects nothing."""
-    root = str(tmp_path / "edges_plain")
+def test_edge_sink_initialises_store_on_first_use(spark, tmp_path):
+    """A sink pointed at a path with no store creates one exactly as
+    init_edge_store(path, n_buckets=...) would, and its app_id tokens
+    make the very first batch exactly-once."""
+    root = str(tmp_path / "edges_fresh")
+    ref = str(tmp_path / "edges_ref")
     pages = spark.createDataFrame(
         [("http://a.com/1", '<a href="http://b.com/x">b</a>')],
         "url string, html string",
     )
     sink = G.edge_store_sink(root, n_buckets=2, app_id="crawl")
-    with pytest.raises(ValueError, match="manifest-layout edge"):
-        sink(pages, 0)
+    sink(pages, 0)
+    sink(pages, 0)  # checkpoint replay of the SAME batch
+    head = M.read_manifest(root)
+    assert M.txn_version(head["meta"], "crawl") == 0
+    init = G.init_edge_store(ref, n_buckets=2)
+    assert {k: v for k, v in head["meta"].items() if k != "txn"} == init["meta"]
+    edges = {tuple(r) for r in G.load_edges(spark, root).collect()}
+    assert edges == {("a.com", "b.com", 1)}
 
 
 def test_two_apps_do_not_collide(spark, docs, tmp_path):
@@ -247,7 +240,7 @@ def test_two_apps_do_not_collide(spark, docs, tmp_path):
     lineages) both at batch 0 must BOTH append."""
     root = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-    L.build_lex_index(a, root, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, root, n_buckets=4)
     n0 = M.read_manifest(root)["meta"]["n_docs"]
     b = (
         docs.where(F.col("doc_id") % 2 == 1)
@@ -280,7 +273,7 @@ def test_lex_same_token_interleaved_writers_append_once(
         .select("doc_id", "text")
         .localCheckpoint(eager=True)
     )
-    L.build_lex_index(base, root, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, root, n_buckets=4)
     n0 = M.read_manifest(root)["meta"]["n_docs"]
     nb = b.count()
 
@@ -354,7 +347,7 @@ def test_ann_same_token_interleaved_writers_append_once(
     root = str(tmp_path / "ann")
     base = emb.where(F.col("vec_id") % 2 == 0)
     b = emb.where(F.col("vec_id") % 2 == 1).localCheckpoint(eager=True)
-    A.build_ann_index(base, root, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, root, m=4, n_codewords=8)
     n0 = M.read_manifest(root)["meta"]["n_rows"]
     nb = b.count()
 

@@ -264,3 +264,68 @@ def test_autolinker_incremental_update_link_mode(spark):
     )
     inc2 = linker.incremental_update(extra, threshold=threshold, side="l")
     assert inc2.assignments.count() == 5
+
+
+def test_link_mode_fold_scores_with_the_search_prior(spark):
+    """Link-mode regression: the search clusters with the prior
+    ``model.predict`` uses (1 / n_left) and a right-side fold must score
+    with the same value. With folds re-pinning 1/(n_left + n_right),
+    the base clustering kept a pair a full re-link rejects: on this
+    population (4 attributes, renamed right columns, one right-side
+    batch) the folded clustering differed from the re-link on one
+    left record."""
+    import random
+
+    from auto_data_linkage_spark.autolink import AutoLinker
+    from auto_data_linkage_spark.cluster import cluster_at_threshold
+
+    attrs = ("given_name", "surname", "postcode", "date_of_birth")
+    keep = (0, 1, 3, 5)  # the attrs' positions among make_people's columns
+    rows = make_people(500, 0.9, seed=51, corruptions=2)
+    rng = random.Random(51)
+    ids = list(range(1, len(rows) + 1))
+    rng.shuffle(ids)
+    seen, left, right = set(), [], []
+    for (_, *vals, recid), uid in zip(rows, ids):
+        vals = [vals[i] for i in keep]
+        if recid in seen:
+            right.append((f"R{uid}", *vals))
+        else:
+            seen.add(recid)
+            left.append((f"L{uid}", *vals))
+    # hold back two batches of right records; fold the first
+    per = int(len(right) * 0.3) // 2
+    batch, right = right[:per], right[2 * per:]
+    rng.shuffle(left)
+    rng.shuffle(right)
+    rng.shuffle(batch)
+
+    def frame(data, cols):
+        return spark.createDataFrame(
+            data, "unique_id string, " + ", ".join(f"{c} string" for c in cols)
+        )
+
+    linker = AutoLinker(
+        comparison_size_limit=200_000, max_evals=1, random_seed=7
+    )
+    linker.auto_link(
+        [frame(left, attrs), frame(right, [f"r_{a}" for a in attrs])]
+    )
+    model = linker.best_trial.model
+    assert model.prior == 1.0 / len(left)
+    threshold = 0.8
+    linker.best_clusters_at_threshold(threshold).count()
+    linker.incremental_update(
+        frame(
+            [("B" + uid[1:], *vals) for uid, *vals in batch],
+            [f"{a}_r_{a}" for a in attrs],
+        ),
+        threshold,
+        side="r",
+    )
+    assert model.prior == 1.0 / len(left)
+    merged = linker.best_clusters_at_threshold(threshold)
+    expected = cluster_at_threshold(
+        linker.clean_data, linker._predict(model), threshold
+    )
+    assert _assignments(merged) == _assignments(expected)

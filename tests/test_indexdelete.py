@@ -5,13 +5,12 @@ must re-rank over the survivors, deletes must be idempotent, and
 compaction must purge masked rows without changing any probe result.
 """
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import annindex as A
 from auto_data_linkage_spark.operators import lexindex as L
+from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators.retrieval import (
     query_terms_from_docs,
 )
@@ -49,10 +48,7 @@ def _lex_topk(spark, path, probes, k=5):
 
 
 # ------------------------------------------------------------------ lex
-@pytest.mark.parametrize("layout", ["rename", "manifest"])
-def test_lex_reinsert_after_delete_is_live(
-    spark, docs, probes, tmp_path, layout
-):
+def test_lex_reinsert_after_delete_is_live(spark, docs, probes, tmp_path):
     """Revision flow: delete ids, then RE-APPEND the same ids with new
     text — the re-appended rows must serve (sequence-aware tombstones
     mask only rows appended at-or-before the delete), bit-equal to a
@@ -67,14 +63,14 @@ def test_lex_reinsert_after_delete_is_live(
         .localCheckpoint(eager=True)
     )
     out = str(tmp_path / "lex")
-    L.build_lex_index(docs, out, n_buckets=4, layout=layout)
+    L.build_lex_index(docs, out, n_buckets=4)
     L.delete_from_lex_index(spark, out, revised_ids)
     L.append_lex_index(revised, out)
 
     ref = str(tmp_path / "ref")
     L.build_lex_index(
         docs.join(revised_ids, "doc_id", "left_anti").unionByName(revised),
-        ref, n_buckets=4, layout=layout,
+        ref, n_buckets=4,
     )
     assert _lex_topk(spark, out, probes) == _lex_topk(spark, ref, probes)
     assert (
@@ -91,7 +87,7 @@ def test_lex_reinsert_after_delete_is_live(
     ref2 = str(tmp_path / "ref2")
     L.build_lex_index(
         docs.join(revised_ids, "doc_id", "left_anti").unionByName(twice),
-        ref2, n_buckets=4, layout=layout,
+        ref2, n_buckets=4,
     )
     want = _lex_topk(spark, ref2, probes)
     assert _lex_topk(spark, out, probes) == want
@@ -129,9 +125,7 @@ def test_append_restamps_when_a_delete_interleaves(
         .localCheckpoint(eager=True)
     )
     out = str(tmp_path / "lex")
-    L.build_lex_index(docs, out, n_buckets=4, layout="manifest")
-
-    from auto_data_linkage_spark.operators import manifestfs as M
+    L.build_lex_index(docs, out, n_buckets=4)
 
     real = M.commit_manifest
     state = {"armed": True}
@@ -222,7 +216,7 @@ def test_lex_compaction_purges_tombstoned_rows(
 ):
     out_dir = str(tmp_path / "lex_purge")
     L.build_lex_index(docs.where(F.col("doc_id") % 2 == 0), out_dir,
-                      n_buckets=4, layout="rename")
+                      n_buckets=4)
     L.append_lex_index(docs.where(F.col("doc_id") % 2 == 1), out_dir)
     victims = [r.doc_id for r in docs.where(F.col("doc_id") % 5 == 0)
                .select("doc_id").collect()]
@@ -232,135 +226,35 @@ def test_lex_compaction_purges_tombstoned_rows(
     L.compact_lex_index(spark, out_dir, max_files_per_bucket=1)
     assert _lex_topk(spark, out_dir, probes) == want
     # physically gone from the rewritten postings
-    remaining = (
-        spark.read.parquet(os.path.join(out_dir, "postings"))
-        .where(F.col("doc_id").isin(victims))
-        .count()
-    )
+    idx = L.load_lex_index(spark, out_dir)
+    remaining = idx.postings.where(F.col("doc_id").isin(victims)).count()
     assert remaining == 0
     # merged terms carry no zero/negative df rows
     bad = (
-        spark.read.parquet(os.path.join(out_dir, "terms"))
+        idx.terms
         .groupBy("term").agg(F.sum("df").alias("df"))
         .where(F.col("df") <= 0).count()
     )
     assert bad == 0
 
 
-def test_lex_delete_crash_retry_never_double_decrements(
-    spark, docs, probes, tmp_path, monkeypatch
-):
-    """A delete that crashes AFTER its tombstone append but BEFORE the
-    negative-df-delta write must be retry-SAFE: the retry anti-joins
-    the tombstones to empty and no-ops, so df is never decremented
-    twice (the hazard of any other write order). Candidates are masked
-    from the moment of the crash; stats stay conservatively overstated
-    until rebuild."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    out_dir = str(tmp_path / "lex_crashdel")
-    L.build_lex_index(docs, out_dir, n_buckets=4, layout="rename")
-    meta0 = L.load_lex_index(spark, out_dir).meta
-    victims = [r.doc_id for r in docs.where(F.col("doc_id") % 4 == 0)
-               .select("doc_id").collect()]
-
-    real = DataFrameWriter.parquet
-    calls = {"n": 0}
-
-    def crash_on_second_write(self, path, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # 1st = tombstones, 2nd = df deltas
-            raise OSError("injected crash before the df-delta write")
-        return real(self, path, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_second_write)
-    with pytest.raises(OSError, match="injected crash"):
-        L.delete_from_lex_index(spark, out_dir, victims)
-    monkeypatch.undo()
-
-    # torn state: tombstones landed, NO df deltas, meta untouched
-    idx = L.load_lex_index(spark, out_dir)
-    assert idx.tombstones is not None
-    assert idx.terms.where(F.col("df") < 0).count() == 0
-    assert idx.meta["n_docs"] == meta0["n_docs"]
-
-    # retry NO-OPS (ids already tombstoned) — the double-decrement
-    # hazard: a retry that re-appended deltas would leave df short
-    again = L.delete_from_lex_index(spark, out_dir, victims)
-    assert again["deleted"] == 0
-    assert L.load_lex_index(spark, out_dir).terms.where(
-        F.col("df") < 0
-    ).count() == 0
-
-    # candidates are correctly masked despite the torn stats
-    served = {r.doc_id for r in L.lex_index_topk(
-        L.load_lex_index(spark, out_dir), probes, k=20
-    ).collect()}
-    assert not served & set(victims)
-
-    # rebuild heals the conservative stat residue to fresh-build parity
-    keep = docs.where(F.col("doc_id") % 4 != 0)
-    L.rebuild_lex_index(keep, out_dir, n_buckets=4)
-    fresh = str(tmp_path / "lex_crashdel_ref")
-    L.build_lex_index(keep, fresh, n_buckets=4)
-    assert _lex_topk(spark, out_dir, probes) == _lex_topk(
-        spark, fresh, probes
-    )
-
-
 def test_lex_compaction_removes_fully_emptied_buckets(
     spark, docs, probes, tmp_path
 ):
-    """A bucket emptied ENTIRELY by the tombstone purge must be
-    park-then-deleted (storefs.remove_dir), not left as a zero-file
-    husk — pinning the same explicit empty-bucket path the edge store
-    has. Deleting every doc empties every bucket of both tables."""
+    """A bucket emptied ENTIRELY by the tombstone purge must drop out of
+    the live manifest, not stay as a zero-file husk — pinning the same
+    explicit empty-bucket path the edge store has. Deleting every doc
+    empties every bucket of both tables."""
     out_dir = str(tmp_path / "lex_allgone")
     sub = docs.limit(40)
     L.build_lex_index(sub, out_dir, n_buckets=2)
     L.delete_from_lex_index(spark, out_dir, sub.select("doc_id"))
     L.compact_lex_index(spark, out_dir, max_files_per_bucket=0)
+    live = M.read_manifest(out_dir)["tables"]
     for table in ("postings", "terms"):
-        root = os.path.join(out_dir, table)
-        assert [e for e in os.listdir(root) if e.startswith("bucket=")] == []
+        assert not live.get(table)
     # the store still loads (schema from metadata) and serves empty
     assert _lex_topk(spark, out_dir, probes) == set()
-
-
-def test_ann_delete_crash_meta_drift_heals_at_compaction(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """A delete that crashes between its tombstone append and its meta
-    write leaves n_rows overstated, and a retry anti-joins to 0 so it
-    cannot recover the decrement — compaction must recount the live
-    rows exactly whenever a tombstone mask exists."""
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding", "label"
-    )
-    out_dir = str(tmp_path / "ann_drift")
-    meta0 = A.build_ann_index(vecs, out_dir, m=4, n_codewords=8,
-                              layout="rename")
-    victims = [r.vec_id for r in vecs.where(F.col("vec_id") % 9 == 0)
-               .select("vec_id").collect()]
-
-    def crash(local, meta):
-        raise OSError("injected crash before the meta write")
-
-    monkeypatch.setattr(A, "_write_meta", crash)
-    with pytest.raises(OSError, match="injected crash"):
-        A.delete_from_ann_index(spark, out_dir, victims)
-    monkeypatch.undo()
-
-    # torn: docs masked, n_rows overstated; retry cannot recover it
-    assert A.load_ann_index(spark, out_dir).meta["n_rows"] == meta0["n_rows"]
-    again = A.delete_from_ann_index(spark, out_dir, victims)
-    assert again["deleted"] == 0
-    assert again["meta"]["n_rows"] == meta0["n_rows"]  # still overstated
-
-    # compaction heals the drift even when nothing is fragmented
-    A.compact_ann_index(spark, out_dir)
-    healed = A.load_ann_index(spark, out_dir).meta["n_rows"]
-    assert healed == meta0["n_rows"] - len(victims)
 
 
 # ------------------------------------------------------------------ ann
@@ -399,8 +293,7 @@ def test_ann_delete_reranks_survivors(spark, sf_dir, tmp_path):
             for r in got} == want
 
 
-@pytest.mark.parametrize("layout", ["rename", "manifest"])
-def test_ann_reinsert_after_delete_is_live(spark, sf_dir, tmp_path, layout):
+def test_ann_reinsert_after_delete_is_live(spark, sf_dir, tmp_path):
     """Revision flow on the ANN index: deleted ids re-appended with new
     vectors must serve their NEW rows (sequence-aware mask), equal to
     build+append with the revised vectors; n_rows stays exact and
@@ -418,14 +311,14 @@ def test_ann_reinsert_after_delete_is_live(spark, sf_dir, tmp_path, layout):
         .localCheckpoint(eager=True)
     )
     out = str(tmp_path / "ann")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout=layout)
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
     A.delete_from_ann_index(spark, out, victims)
     A.append_ann_index(revised, out)
 
     ref = str(tmp_path / "ref")
     A.build_ann_index(
         vecs.join(victims, "vec_id", "left_anti"), ref,
-        m=4, n_codewords=8, layout=layout,
+        m=4, n_codewords=8,
     )
     A.append_ann_index(revised, ref)
     q = vecs.orderBy(F.col("vec_id").desc()).limit(5)
@@ -478,7 +371,6 @@ def test_ann_delete_idempotent_and_compaction_purges(
     out_dir = str(tmp_path / "ann_purge")
     A.build_ann_index(
         vecs.where(F.col("vec_id") % 3 == 0), out_dir, m=4, n_codewords=8,
-        layout="rename",
     )
     for m in range(1, 3):
         A.append_ann_index(vecs.where(F.col("vec_id") % 3 == m), out_dir)
@@ -502,7 +394,7 @@ def test_ann_delete_idempotent_and_compaction_purges(
     A.compact_ann_index(spark, out_dir, max_files_per_cell=1)
     assert topk() == want
     remaining = (
-        spark.read.parquet(os.path.join(out_dir, "coded"))
+        A.load_ann_index(spark, out_dir).coded
         .where(F.col("neighbor_id").isin(victims))
         .count()
     )
@@ -525,49 +417,6 @@ def test_lex_rebuild_resets_tombstones_and_serves_fresh(
     assert idx.tombstones is None  # mask reset by the rebuild
     fresh = str(tmp_path / "lex_rb_ref")
     L.build_lex_index(keep, fresh, n_buckets=4)
-    assert _lex_topk(spark, out_dir, probes) == _lex_topk(
-        spark, fresh, probes
-    )
-
-
-def test_rebuild_crash_between_renames_keeps_old_index_serving(
-    spark, docs, probes, tmp_path, monkeypatch
-):
-    """A crash in the whole-index promotion must leave the OLD index
-    serving after the load-time sweep (and the finished rebuild tree
-    on disk for the next attempt)."""
-    from auto_data_linkage_spark.operators import storefs
-
-    out_dir = str(tmp_path / "lex_rbc")
-    half = docs.where(F.col("doc_id") % 2 == 0)
-    L.build_lex_index(half, out_dir, n_buckets=4, layout="rename")
-    want_old = _lex_topk(spark, out_dir, probes)
-
-    class _Crash:
-        def __init__(self, real):
-            self.real, self.calls = real, 0
-
-        def __call__(self, src, dst):
-            self.calls += 1
-            if self.calls == 2:
-                raise OSError("injected crash between renames")
-            return self.real(src, dst)
-
-    monkeypatch.setattr(storefs.os, "rename", _Crash(os.rename))
-    with pytest.raises(OSError, match="injected crash"):
-        L.rebuild_lex_index(docs, out_dir, n_buckets=4)
-    monkeypatch.undo()
-
-    assert not os.path.isdir(out_dir)  # torn: live parked as __old
-    assert os.path.isdir(out_dir + storefs.OLD_SUFFIX)
-    assert os.path.isdir(out_dir + "__rebuild")  # survives for retry
-
-    # plain load heals and serves the OLD index bit-identically
-    assert _lex_topk(spark, out_dir, probes) == want_old
-    # retry completes and serves the NEW corpus
-    L.rebuild_lex_index(docs, out_dir, n_buckets=4)
-    fresh = str(tmp_path / "lex_rbc_ref")
-    L.build_lex_index(docs, fresh, n_buckets=4)
     assert _lex_topk(spark, out_dir, probes) == _lex_topk(
         spark, fresh, probes
     )

@@ -2,13 +2,11 @@
 the inline bm25_topk plan, O(delta) appends (append == union build),
 on-disk term-bucket partition pruning, compaction, streaming sink."""
 
-import json
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import lexindex as L
+from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators.retrieval import (
     bm25_topk,
     query_terms_from_docs,
@@ -52,19 +50,19 @@ def test_append_equals_union_build(spark, docs, probes, tmp_path):
     half_b = docs.where(F.col("doc_id") % 2 == 1)
 
     inc = str(tmp_path / "lex_inc")
-    L.build_lex_index(half_a, inc, n_buckets=16, layout="rename")
+    L.build_lex_index(half_a, inc, n_buckets=16)
     meta = L.append_lex_index(half_b, inc)
     assert meta["n_docs"] == docs.count()
 
     full = str(tmp_path / "lex_full")
-    L.build_lex_index(docs, full, n_buckets=16, layout="rename")
+    L.build_lex_index(docs, full, n_buckets=16)
 
     got = L.lex_index_topk(L.load_lex_index(spark, inc), probes, k=5)
     want = L.lex_index_topk(L.load_lex_index(spark, full), probes, k=5)
     assert _as_set(got) == _as_set(want)
     # exact metadata parity too (sum over deltas == one-shot aggregate)
-    mi = json.load(open(os.path.join(inc, "index.json")))
-    mf = json.load(open(os.path.join(full, "index.json")))
+    mi = L.load_lex_index(spark, inc).meta
+    mf = L.load_lex_index(spark, full).meta
     assert (mi["n_docs"], mi["sum_dl"]) == (mf["n_docs"], mf["sum_dl"])
 
 
@@ -88,18 +86,23 @@ def test_probe_scan_partition_prunes(spark, docs, probes, tmp_path):
 def test_compaction_merges_and_preserves_results(spark, docs, probes, tmp_path):
     out = str(tmp_path / "lex_cc")
     L.build_lex_index(docs.where(F.col("doc_id") % 4 == 0), out,
-                      n_buckets=4, layout="rename")
+                      n_buckets=4)
     for m in range(1, 4):
         L.append_lex_index(docs.where(F.col("doc_id") % 4 == m), out)
 
     before = L.lex_index_topk(L.load_lex_index(spark, out), probes, k=5)
     before_rows = _as_set(before)
-    files_before = sum(L._bucket_file_counts(out, "terms").values())
+    def term_files():
+        return sum(
+            M.part_file_counts(out, "terms", M.read_manifest(out)).values()
+        )
+
+    files_before = term_files()
 
     summary = L.compact_lex_index(spark, out, max_files_per_bucket=2)
     assert summary["buckets_rewritten"] > 0
     assert summary["files_after"] < summary["files_before"]
-    assert sum(L._bucket_file_counts(out, "terms").values()) < files_before
+    assert term_files() < files_before
 
     after = L.lex_index_topk(L.load_lex_index(spark, out), probes, k=5)
     assert _as_set(after) == before_rows
@@ -142,11 +145,12 @@ def test_empty_query_set(spark, docs, tmp_path):
 
 def test_version_guard(spark, docs, tmp_path):
     out = str(tmp_path / "lex_v")
-    L.build_lex_index(docs.limit(10), out, n_buckets=4, layout="rename")
-    p = os.path.join(out, "index.json")
-    meta = json.load(open(p))
-    meta["version"] = 99
-    json.dump(meta, open(p, "w"))
+    L.build_lex_index(docs.limit(10), out, n_buckets=4)
+    snap = M.read_manifest(out)
+    M.commit_manifest(
+        out, tables=snap["tables"], meta={**snap["meta"], "version": 99},
+        expected_version=snap["version"],
+    )
     with pytest.raises(ValueError, match="version"):
         L.load_lex_index(spark, out)
 
@@ -154,7 +158,7 @@ def test_version_guard(spark, docs, tmp_path):
 def test_streaming_sink_appends_and_compacts(spark, docs, tmp_path):
     out = str(tmp_path / "lex_stream")
     L.build_lex_index(docs.where(F.col("doc_id") < 100), out,
-                      n_buckets=4, layout="rename")
+                      n_buckets=4)
 
     src_dir = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
@@ -176,9 +180,9 @@ def test_streaming_sink_appends_and_compacts(spark, docs, tmp_path):
     )
     q.awaitTermination(120)
 
-    meta = json.load(open(os.path.join(out, "index.json")))
-    assert meta["n_docs"] == 100 + batch.count()
     idx = L.load_lex_index(spark, out)
+    meta = idx.meta
+    assert meta["n_docs"] == 100 + batch.count()
     got = idx.postings.select("doc_id").distinct().count()
     assert got == meta["n_docs"]
 
@@ -239,8 +243,7 @@ def test_empty_corpus_build_and_probe(spark, tmp_path):
 
 def test_append_empty_delta_is_noop(spark, docs, tmp_path):
     out = str(tmp_path / "lex_noop")
-    L.build_lex_index(docs.limit(20), out, n_buckets=4, layout="rename")
-    before = json.load(open(os.path.join(out, "index.json")))
+    before = L.build_lex_index(docs.limit(20), out, n_buckets=4)
     empty = spark.createDataFrame([], "doc_id bigint, text string")
     after = L.append_lex_index(empty, out)
     assert (after["n_docs"], after["sum_dl"]) == (

@@ -12,8 +12,10 @@ object-store-safe seam. What these tests pin, per the design contract:
   a pinned reader serves;
 - a whole-store rebuild is observed fully-old or fully-new, never
   mixed (the one-commit cutover);
-- semantics parity with the rename layout: delete is bit-equal to a
-  fresh build, delete+append == union build, compaction purges.
+- delete is bit-equal to a fresh build, delete+append == union
+  build, compaction purges;
+- stores left by the retired in-place rename layout are refused with a
+  ValueError, never read or written in place.
 """
 
 import os
@@ -323,7 +325,7 @@ def test_append_survives_losing_version_race(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 3 == 0)
     b = docs.where(F.col("doc_id") % 3 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
 
     real = M.commit_manifest
     state = {"stolen": False}
@@ -358,7 +360,7 @@ def test_append_refuses_merge_across_concurrent_rebuild(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 3 == 0)
     b = docs.where(F.col("doc_id") % 3 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
 
     real = M.commit_manifest
     state = {"stolen": False}
@@ -405,7 +407,7 @@ def test_manifest_lifecycle_performs_zero_python_renames(
 
     out = str(tmp_path / "lex")
     half = docs.limit(60)
-    L.build_lex_index(half, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(half, out, n_buckets=4)
     L.append_lex_index(docs.limit(80).subtract(half), out)
     L.delete_from_lex_index(
         spark, out, half.select("doc_id").limit(10)
@@ -432,7 +434,7 @@ def test_full_lifecycle_on_memory_commit_log(spark, docs, probes, tmp_path):
     try:
         a = docs.where(F.col("doc_id") % 2 == 0)
         b = docs.where(F.col("doc_id") % 2 == 1)
-        L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, out, n_buckets=4)
         L.append_lex_index(b, out)
         L.delete_from_lex_index(
             spark, out, a.select("doc_id").limit(20)
@@ -442,7 +444,7 @@ def test_full_lifecycle_on_memory_commit_log(spark, docs, probes, tmp_path):
 
         # head == the same lifecycle on a posix-log store, bit-exact
         ref = str(tmp_path / "ref")
-        L.build_lex_index(a, ref, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, ref, n_buckets=4)
         L.append_lex_index(b, ref)
         L.delete_from_lex_index(
             spark, ref, a.select("doc_id").limit(20)
@@ -489,7 +491,7 @@ def test_append_crash_is_invisible_then_retries_exactly_once(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     want_old = _lex_topk(spark, out, probes)
     v0 = M.read_manifest(out)["version"]
 
@@ -524,10 +526,9 @@ def test_delete_crash_is_fully_atomic_then_retries_fully(
 ):
     """Manifest delete = negative df deltas + tombstones + meta in ONE
     commit: a crash leaves NOTHING visible (no partial artifacts at
-    all — the rename layout can only order the windows), and the retry
-    deletes cleanly to fresh-build bit-equality."""
+    all), and the retry deletes cleanly to fresh-build bit-equality."""
     out = str(tmp_path / "lex")
-    L.build_lex_index(docs, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(docs, out, n_buckets=4)
     victims = docs.where(F.col("doc_id") % 3 == 0).select("doc_id")
     want_old = _lex_topk(spark, out, probes)
     meta0 = M.read_manifest(out)["meta"]
@@ -544,8 +545,8 @@ def test_delete_crash_is_fully_atomic_then_retries_fully(
     assert idx.meta == meta0
     assert _lex_topk(spark, out, probes) == want_old
 
-    # retry deletes FULLY (not a no-op — contrast the rename layout's
-    # tombstone-first ordering) and is bit-equal to a fresh build
+    # retry deletes FULLY (nothing of the crashed attempt is visible)
+    # and is bit-equal to a fresh build
     out2 = L.delete_from_lex_index(spark, out, victims)
     assert out2["deleted"] == victims.count()
     fresh = str(tmp_path / "fresh")
@@ -560,7 +561,7 @@ def test_compact_and_rebuild_crash_keep_old_store_serving(
 ):
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     L.append_lex_index(docs.where(F.col("doc_id") % 2 == 1), out)
     want = _lex_topk(spark, out, probes)
     v0 = M.read_manifest(out)["version"]
@@ -590,15 +591,13 @@ def test_compact_and_rebuild_crash_keep_old_store_serving(
 def test_ann_delete_crash_atomic_no_stat_drift(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The ANN n_rows drift (rename layout: tombstones land, meta
-    doesn't, retry can't recover) is impossible here: tombstones and
-    meta are one commit."""
+    """ANN n_rows cannot drift across a crashed delete: tombstones and
+    meta are one commit, so the retry deletes fully."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
     )
     out = str(tmp_path / "ann")
-    meta0 = A.build_ann_index(vecs, out, m=4, n_codewords=8,
-                              layout="manifest")
+    meta0 = A.build_ann_index(vecs, out, m=4, n_codewords=8)
     victims = [r.vec_id for r in vecs.where(F.col("vec_id") % 9 == 0)
                .select("vec_id").collect()]
 
@@ -626,7 +625,7 @@ def test_reader_pins_its_generation_across_maintenance(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     pinned = L.load_lex_index(spark, out)
     want_pinned = _handle_topk(pinned, probes)
 
@@ -652,7 +651,7 @@ def test_ann_reader_pins_across_rebuild(spark, sf_dir, tmp_path):
     queries = vecs.orderBy("vec_id").limit(5)
     out = str(tmp_path / "ann")
     A.build_ann_index(vecs.where(F.col("vec_id") % 2 == 0), out,
-                      m=4, n_codewords=8, layout="manifest")
+                      m=4, n_codewords=8)
     pinned = A.load_ann_index(spark, out)
 
     def topk(idx):
@@ -665,14 +664,12 @@ def test_ann_reader_pins_across_rebuild(spark, sf_dir, tmp_path):
     A.rebuild_ann_index(vecs, out, m=4, n_codewords=8)
     assert topk(pinned) == want
     fresh = str(tmp_path / "fresh")
-    A.build_ann_index(vecs, fresh, m=4, n_codewords=8, layout="rename")
+    A.build_ann_index(vecs, fresh, m=4, n_codewords=8)
     assert topk(A.load_ann_index(spark, out)) == topk(
         A.load_ann_index(spark, fresh)
     )
     # explicit time travel: version 1 == the pinned pre-rebuild handle
     assert topk(A.load_ann_index(spark, out, version=1)) == want
-    with pytest.raises(ValueError, match="manifest-layout"):
-        A.load_ann_index(spark, fresh, version=1)
 
 
 # ------------------------------------------------------- time travel
@@ -686,7 +683,7 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")  # v1
+    L.build_lex_index(a, out, n_buckets=4)  # v1
     v1_want = _lex_topk(spark, out, probes)
     L.append_lex_index(b, out)                                 # v2
     v2_want = _lex_topk(spark, out, probes)
@@ -698,11 +695,9 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
     assert _handle_topk(
         L.load_lex_index(spark, out, version=2), probes
     ) == v2_want
-    # v3 head == fresh build without the deleted docs (delete parity);
-    # rename layout on purpose — it doubles as the no-history negative
-    # case below
+    # v3 head == fresh build without the deleted docs (delete parity)
     fresh = str(tmp_path / "fresh")
-    L.build_lex_index(b, fresh, n_buckets=4, layout="rename")
+    L.build_lex_index(b, fresh, n_buckets=4)
     assert _lex_topk(spark, out, probes) == _lex_topk(spark, fresh, probes)
 
     # vacuumed history raises with the retention hint; retained works
@@ -711,9 +706,84 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
         L.load_lex_index(spark, out, version=1)
     assert _lex_topk(spark, out, probes) == _lex_topk(spark, fresh, probes)
 
-    # rename-layout stores have no history
-    with pytest.raises(ValueError, match="manifest-layout"):
-        L.load_lex_index(spark, fresh, version=1)
+
+def _legacy_store(root, kind):
+    """A directory laid out like a store of the retired rename layout:
+    the index side file and live bucket/cell dirs, or the linker's
+    per-batch snapshot dirs — and no manifest log."""
+    marker = {
+        "lex": ["index.json", "postings/bucket=0", "terms/bucket=0"],
+        "ann": ["index.json", "coded/cell=0", "centroids"],
+        "edges": ["bucket=0", "_tombstones"],
+        "linker": ["batch=0", "batch=1"],
+    }[kind]
+    for entry in marker:
+        path = os.path.join(root, entry)
+        if entry.endswith(".json"):
+            os.makedirs(root, exist_ok=True)
+            with open(path, "w") as f:
+                f.write('{"version": 1}')
+        else:
+            os.makedirs(path)
+            open(os.path.join(path, "part-00000.parquet"), "w").close()
+
+
+@pytest.mark.parametrize("kind", ["lex", "ann", "edges", "linker"])
+def test_legacy_rename_layout_stores_are_refused(spark, docs, tmp_path, kind):
+    """Every entry point on a store written in the retired rename layout
+    raises ValueError naming the path and the remedy, and leaves the
+    directory untouched (no manifest log is created in it)."""
+    from auto_data_linkage_spark.streaming.linkage import StreamingLinker
+
+    root = str(tmp_path / kind)
+    _legacy_store(root, kind)
+    before = sorted(os.walk(root))
+    batch = docs.limit(3)
+    pages = spark.createDataFrame(
+        [("http://a.com/1", '<a href="http://b.com/x">b</a>')],
+        "url string, html string",
+    )
+    ops = {
+        "lex": [
+            lambda: L.load_lex_index(spark, root),
+            lambda: L.load_lex_index(spark, root, version=1),
+            lambda: L.append_lex_index(batch, root),
+            lambda: L.delete_from_lex_index(spark, root, [1]),
+            lambda: L.compact_lex_index(spark, root),
+            lambda: L.rebuild_lex_index(batch, root),
+            lambda: L.vacuum_lex_index(root),
+            lambda: L.lex_index_sink(root, app_id="q")(batch, 0),
+        ],
+        "ann": [
+            lambda: A.load_ann_index(spark, root),
+            lambda: A.append_ann_index(batch, root),
+            lambda: A.delete_from_ann_index(spark, root, [1]),
+            lambda: A.compact_ann_index(spark, root),
+            lambda: A.rebuild_ann_index(batch, root),
+            lambda: A.vacuum_ann_index(root),
+            lambda: A.ann_index_sink(root)(batch, 0),
+        ],
+        "edges": [
+            lambda: G.load_edges(spark, root),
+            lambda: G.edge_store_sink(root)(pages, 0),
+            lambda: G.init_edge_store(root),
+            lambda: G.delete_domains_from_edge_store(spark, root, ["a.com"]),
+            lambda: G.compact_edge_store(spark, root),
+            lambda: G.vacuum_edge_store(root),
+            lambda: G.refresh_pagerank(spark, root),
+        ],
+        "linker": [
+            lambda: StreamingLinker(None, root).process_batch(batch, 2),
+            lambda: StreamingLinker(None, root).current_clusters(spark),
+            lambda: StreamingLinker(None, root, layout="merge")
+            .process_batch(batch, 2),
+        ],
+    }[kind]
+    for op in ops:
+        with pytest.raises(ValueError, match="rebuild it at a new path") as e:
+            op()
+        assert root in str(e.value)
+    assert sorted(os.walk(root)) == before
 
 
 def test_time_travel_edge_store_pre_takedown(spark, tmp_path):
@@ -756,8 +826,7 @@ def test_manifest_delete_then_append_equals_union_build(
     b = docs.where(F.col("doc_id") % 3 == 1)
     c = docs.where(F.col("doc_id") % 3 == 2)
     out = str(tmp_path / "lex")
-    L.build_lex_index(a.unionByName(b), out, n_buckets=8,
-                      layout="manifest")
+    L.build_lex_index(a.unionByName(b), out, n_buckets=8)
     L.delete_from_lex_index(spark, out, b.select("doc_id"))
     L.append_lex_index(c, out)
     ref = str(tmp_path / "ref")
@@ -770,7 +839,7 @@ def test_manifest_compaction_purges_and_drops_emptied_buckets(
 ):
     out = str(tmp_path / "lex")
     sub = docs.limit(40)
-    L.build_lex_index(sub, out, n_buckets=2, layout="manifest")
+    L.build_lex_index(sub, out, n_buckets=2)
     L.delete_from_lex_index(spark, out, sub.select("doc_id"))
     L.compact_lex_index(spark, out, max_files_per_bucket=0)
     snap = M.read_manifest(out)
@@ -794,7 +863,7 @@ def test_streaming_append_two_batches_restart_no_double_append(
     b2 = docs.where((F.col("doc_id") >= 160) & (F.col("doc_id") < 220))
 
     out = str(tmp_path / "lex_stream")
-    L.build_lex_index(base, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, out, n_buckets=4)
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
 
@@ -844,7 +913,7 @@ def test_streaming_ann_append_restart_no_double_append(
     b1 = vecs.where(F.col("vec_id") % 3 == 1)
     b2 = vecs.where(F.col("vec_id") % 3 == 2)
     out = str(tmp_path / "ann_stream")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
 
@@ -895,7 +964,7 @@ def test_manifest_probe_scan_still_partition_prunes(
     the bucket=N partitions the query terms hash into (bucket stays a
     partition column under basePath=<table>, gen=N rides above it)."""
     out = str(tmp_path / "lex_pp")
-    L.build_lex_index(docs, out, n_buckets=16, layout="manifest")
+    L.build_lex_index(docs, out, n_buckets=16)
     idx = L.load_lex_index(spark, out)
     plan = (
         L.lex_index_topk(idx, probes, k=3)
@@ -918,7 +987,7 @@ def test_manifest_ann_coded_scan_still_partition_prunes(
         "vec_id", "embedding", "label"
     )
     out = str(tmp_path / "ann_pp")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
     idx = A.load_ann_index(spark, out)
     one_cell = idx.coded.where(F.col("cell") == 0)
     plan = one_cell._jdf.queryExecution().executedPlan().toString()
@@ -975,6 +1044,61 @@ def test_edge_store_manifest_takedown_and_compaction(spark, tmp_path):
     ) == {"deleted": 0}
 
 
+def _site_pages(spark, lo, hi):
+    rows = [
+        (
+            f"http://site{i % 7}.com/p{i}",
+            f'<a href="http://site{(i + 1) % 7}.com/x">t</a> '
+            f'<a href="http://site{(i + 3) % 7}.com/y">u</a>',
+        )
+        for i in range(lo, hi)
+    ]
+    return spark.createDataFrame(rows, ["url", "html"])
+
+
+def test_edge_store_domain_takedown(spark, tmp_path):
+    """Takedowns are deltas: load_edges drops every edge touching a
+    masked domain, the next refresh is BIT-IDENTICAL to PageRank over
+    the filtered edge table, takedowns are idempotent, and compaction
+    purges the masked edges physically without changing any read."""
+    store = str(tmp_path / "edges_td")
+    sink = G.edge_store_sink(store, n_buckets=2)
+    for b in range(4):
+        sink(_site_pages(spark, b * 20, (b + 1) * 20), b)
+
+    full = G.load_edges(spark, store).localCheckpoint(eager=True)
+    victims = ["site1.com", "site4.com"]
+    out = G.delete_domains_from_edge_store(spark, store, victims)
+    again = G.delete_domains_from_edge_store(spark, store, victims)
+    assert out["deleted"] == 2 and again["deleted"] == 0
+
+    kept = full.where(
+        ~F.col("src_domain").isin(victims) & ~F.col("dst_domain").isin(victims)
+    )
+    masked = G.load_edges(spark, store)
+    want_edges = sorted(map(tuple, kept.collect()))
+    got = sorted(map(tuple, masked.collect()))
+    assert got == want_edges and got  # non-trivially masked
+    # authority refresh == pagerank over the filtered table, bit-exact
+    pr_store = sorted(map(tuple, G.pagerank(masked, iterations=3).collect()))
+    assert pr_store == sorted(
+        map(tuple, G.pagerank(kept, iterations=3).collect())
+    )
+    assert not any(d in victims for d, _ in pr_store)
+
+    # physical purge on compaction; reads unchanged
+    summary = G.compact_edge_store(spark, store, max_files_per_bucket=0)
+    assert summary["buckets_rewritten"] > 0
+    assert sorted(map(tuple, G.load_edges(spark, store).collect())) == want_edges
+    raw = M.read_table(spark, store, "edges", M.read_manifest(store))
+    assert (
+        raw.where(
+            F.col("src_domain").isin(victims) | F.col("dst_domain").isin(victims)
+        ).count()
+        == 0
+    )
+
+
 # ------------------------------------------------- edge-case hardening
 def test_delete_on_emptied_manifest_ann_index(spark, sf_dir, tmp_path):
     """A store whose coded table was emptied (delete-all, then a
@@ -985,7 +1109,7 @@ def test_delete_on_emptied_manifest_ann_index(spark, sf_dir, tmp_path):
         "vec_id", "embedding", "label"
     ).where(F.col("vec_id") < 64)
     out = str(tmp_path / "ann")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
     all_ids = vecs.select("vec_id")
     assert A.delete_from_ann_index(spark, out, all_ids)["deleted"] == 64
     A.compact_ann_index(spark, out, max_files_per_cell=0)
@@ -1010,31 +1134,30 @@ def test_delete_on_emptied_manifest_ann_index(spark, sf_dir, tmp_path):
     assert hits.count() > 0
 
 
-def test_rebuild_accepts_explicit_layout_kwarg(spark, sf_dir, tmp_path, docs):
-    """rebuild_*(..., layout="manifest") on a manifest store must not
-    collide with the layout the rebuild sets itself; changing layout in
-    place is rejected loudly, and lex rejects unknown kwargs instead of
-    silently dropping them."""
+def test_rebuild_rejects_unknown_kwargs(spark, sf_dir, tmp_path, docs):
+    """rebuild_* takes the build parameters and nothing else: a
+    ``layout=`` or any other unknown kwarg raises instead of being
+    silently dropped."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
     ).where(F.col("vec_id") < 200)
     aout = str(tmp_path / "ann")
-    A.build_ann_index(vecs, aout, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(vecs, aout, m=4, n_codewords=8)
     meta = A.rebuild_ann_index(
-        vecs, aout, m=4, n_codewords=8, layout="manifest"
+        vecs, aout, m=4, n_codewords=8
     )
     assert meta["n_rows"] == vecs.count()
-    with pytest.raises(ValueError, match="cannot change"):
-        A.rebuild_ann_index(vecs, aout, layout="rename")
+    with pytest.raises(TypeError, match="layout"):
+        A.rebuild_ann_index(vecs, aout, layout="manifest")
 
     lout = str(tmp_path / "lex")
     half = docs.limit(40)
-    L.build_lex_index(half, lout, n_buckets=4, layout="manifest")
-    m2 = L.rebuild_lex_index(half, lout, n_buckets=2, layout="manifest")
+    L.build_lex_index(half, lout, n_buckets=4)
+    m2 = L.rebuild_lex_index(half, lout, n_buckets=2)
     assert m2["n_buckets"] == 2
-    with pytest.raises(ValueError, match="cannot change"):
-        L.rebuild_lex_index(half, lout, layout="rename")
-    with pytest.raises(TypeError, match="unexpected"):
+    with pytest.raises(TypeError, match="layout"):
+        L.rebuild_lex_index(half, lout, layout="manifest")
+    with pytest.raises(TypeError, match="bogus"):
         L.rebuild_lex_index(half, lout, bogus=1)
 
 
@@ -1058,14 +1181,14 @@ def test_lex_delete_racing_append_equals_serial_order(
 
     # serial reference: append fully lands, then the delete
     ref = str(tmp_path / "ref")
-    L.build_lex_index(base, ref, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, ref, n_buckets=4)
     L.append_lex_index(delta, ref)
     res_ref = L.delete_from_lex_index(spark, ref, del_ids)
 
     # interleaved: the append commits BETWEEN the delete's snapshot
     # read and its commit
     out = str(tmp_path / "out")
-    L.build_lex_index(base, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, out, n_buckets=4)
     orig_commit = M.commit_manifest
     state = {"fired": False}
 
@@ -1117,12 +1240,12 @@ def test_ann_delete_racing_append_equals_serial_order(
     del_ids = [0, 1, 2, 120, 121]  # 3 in base, 2 only in the delta
 
     ref = str(tmp_path / "ref")
-    A.build_ann_index(base, ref, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, ref, m=4, n_codewords=8)
     A.append_ann_index(delta, ref)
     res_ref = A.delete_from_ann_index(spark, ref, del_ids)
 
     out = str(tmp_path / "out")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     orig_commit = M.commit_manifest
     state = {"fired": False}
 
@@ -1234,7 +1357,7 @@ def test_ann_manifest_sink_compact_over_bounds_fragmentation(
     )
     base = vecs.where(F.col("vec_id") < 80)
     out = str(tmp_path / "ann")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     sink = A.ann_index_sink(out, compact_over=2)
     batches = [
         vecs.where((F.col("vec_id") >= 80 + 20 * b)
@@ -1248,7 +1371,7 @@ def test_ann_manifest_sink_compact_over_bounds_fragmentation(
     assert counts and all(c <= 2 for c in counts.values()), counts
 
     ref = str(tmp_path / "ref")
-    A.build_ann_index(base, ref, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, ref, m=4, n_codewords=8)
     for df in batches:
         A.append_ann_index(df, ref)
     queries = vecs.orderBy("vec_id").limit(5)

@@ -187,7 +187,7 @@ def test_full_index_lifecycle_on_s3_commit_log(spark, docs, tmp_path, s3):
         a = docs.where(F.col("doc_id") % 2 == 0)
         b = docs.where(F.col("doc_id") % 2 == 1)
         for root in (out, ref):
-            L.build_lex_index(a, root, n_buckets=4, layout="manifest")
+            L.build_lex_index(a, root, n_buckets=4)
             L.append_lex_index(b, root)
             L.delete_from_lex_index(spark, root, a.select("doc_id").limit(20))
         assert not os.path.isdir(os.path.join(out, "_manifests"))
@@ -235,7 +235,7 @@ def test_lifecycle_under_s3_weather(spark, docs, tmp_path, s3):
     try:
         a = docs.where(F.col("doc_id") % 2 == 0)
         b = docs.where(F.col("doc_id") % 2 == 1)
-        L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, out, n_buckets=4)
         L.append_lex_index(b, out)
         L.delete_from_lex_index(spark, out, a.select("doc_id").limit(20))
         assert inner.list_names() == [_vname(1), _vname(2), _vname(3)]
@@ -248,7 +248,7 @@ def test_lifecycle_under_s3_weather(spark, docs, tmp_path, s3):
 
         # rows served == a calm-weather reference store
         ref = str(tmp_path / "ref")
-        L.build_lex_index(a, ref, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, ref, n_buckets=4)
         L.append_lex_index(b, ref)
         L.delete_from_lex_index(spark, ref, a.select("doc_id").limit(20))
         probes = _probe_terms(docs)

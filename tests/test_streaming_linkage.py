@@ -107,31 +107,10 @@ def test_streaming_linker_replay_is_idempotent(
     after_first = _assignments(linker.current_clusters(spark))
     n_rows = linker.current_clusters(spark).count()
 
-    # replay batch 1: must overwrite snapshot 1 with identical content
+    # replay batch 1: skipped by its token, the state is unchanged
     linker.process_batch(b1, 1)
     assert _assignments(linker.current_clusters(spark)) == after_first
     assert linker.current_clusters(spark).count() == n_rows
-
-
-def test_streaming_linker_prunes_old_snapshots(
-    spark, people_batches, tmp_path_factory
-):
-    """Rename layout (opt-in POSIX fast path): per-batch snapshot dirs,
-    inline retain_versions pruning."""
-    root = tmp_path_factory.mktemp("slink_prune")
-    state = str(root / "state")
-    _, (b0, b1, b2) = people_batches
-    linker = StreamingLinker(
-        _model(), state, threshold=THRESHOLD, retain_versions=2,
-        layout="rename",
-    )
-    for i, b in enumerate((b0, b1, b2)):
-        linker.process_batch(b, i)
-    assert linker._versions() == [1, 2]
-    # pruned history doesn't break the state or a replay of the LAST batch
-    n = linker.current_clusters(spark).count()
-    linker.process_batch(b2, 2)
-    assert linker.current_clusters(spark).count() == n
 
 
 # ------------------------------------------------- manifest state store
@@ -153,12 +132,11 @@ def test_manifest_state_replay_skipped_bit_equal(
 ):
     """Crash-between-commit-and-checkpoint replay: the token skips the
     batch BEFORE any data work, the state stays bit-equal, and no
-    python-side rename/replace/move or overwrite write ever runs."""
+    python-side rename/replace/move ever runs."""
     import os as _os
     import shutil as _sh
 
     from auto_data_linkage_spark.operators import manifestfs as M
-    from auto_data_linkage_spark.streaming import linkage as SL
 
     calls = []
 
@@ -172,13 +150,6 @@ def test_manifest_state_replay_skipped_bit_equal(
     monkeypatch.setattr(_os, "rename", spy(_os.rename))
     monkeypatch.setattr(_os, "replace", spy(_os.replace))
     monkeypatch.setattr(_sh, "move", spy(_sh.move))
-    # the overwrite path belongs to the rename layout only
-    monkeypatch.setattr(
-        SL.StreamingLinker, "_write_state",
-        lambda *a, **kw: (_ for _ in ()).throw(
-            AssertionError("rename-layout overwrite used on manifest state")
-        ),
-    )
 
     root = tmp_path_factory.mktemp("slink_manifest")
     state = str(root / "state")
@@ -277,13 +248,6 @@ def test_manifest_state_time_travel_and_vacuum(
         linker.current_clusters(spark, version=2)
     # head unaffected
     assert _rows(linker.current_clusters(spark)) == per_batch[2]
-    # rename layout refuses version=
-    rn = StreamingLinker(
-        _model(), str(root / "rn"), threshold=THRESHOLD, layout="rename"
-    )
-    rn.process_batch(b0, 0)
-    with _pytest.raises(ValueError, match="manifest-layout"):
-        rn.current_clusters(spark, version=1)
 
 
 def test_manifest_state_crash_before_commit_replays_cleanly(

@@ -64,7 +64,7 @@ def test_lex_sync_tracks_append_only_corpus(spark, docs, tmp_path, probes):
     # start EMPTY: the feed builds the index from v=1 (the build commit)
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     out = sync_lex_index(spark, corpus, idx)
     assert [(a["version"], a["action"]) for a in out["applied"]] == [
@@ -73,7 +73,7 @@ def test_lex_sync_tracks_append_only_corpus(spark, docs, tmp_path, probes):
     ref1 = str(tmp_path / "ref1")
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        ref1, n_buckets=4, layout="manifest",
+        ref1, n_buckets=4,
     )
     assert _lex_topk(spark, idx, probes) == _lex_topk(spark, ref1, probes)
 
@@ -90,7 +90,7 @@ def test_lex_sync_tracks_append_only_corpus(spark, docs, tmp_path, probes):
     ref2 = str(tmp_path / "ref2")
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        ref2, n_buckets=4, layout="manifest",
+        ref2, n_buckets=4,
     )
     assert _lex_topk(spark, idx, probes) == _lex_topk(spark, ref2, probes)
 
@@ -116,7 +116,7 @@ def test_lex_sync_resumes_after_midbacklog_crash(
     C.append_corpus_snapshot(corpus, docs.where(F.col("doc_id") % 4 == 1))
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     real = L.append_lex_index
     state = {"calls": 0}
@@ -141,7 +141,7 @@ def test_lex_sync_resumes_after_midbacklog_crash(
     ref = str(tmp_path / "ref")
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        ref, n_buckets=4, layout="manifest",
+        ref, n_buckets=4,
     )
     assert _lex_topk(spark, idx, probes) == _lex_topk(spark, ref, probes)
     assert (
@@ -162,7 +162,7 @@ def test_lex_sync_folds_upserts(spark, docs, tmp_path, probes):
     )
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     sync_lex_index(spark, corpus, idx)
     revised = (
@@ -186,7 +186,7 @@ def test_lex_sync_folds_upserts(spark, docs, tmp_path, probes):
     ref = str(tmp_path / "ref")
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        ref, n_buckets=4, layout="manifest",
+        ref, n_buckets=4,
     )
     assert _lex_topk(spark, idx, probes) == _lex_topk(spark, ref, probes)
     assert (
@@ -211,7 +211,7 @@ def test_represented_upsert_does_not_remask_revisions(
     C.build_corpus_snapshot(docs, corpus, key="doc_id", partition_by=["lang"])
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     sync_lex_index(spark, corpus, idx)
     revised = (
@@ -249,7 +249,7 @@ def test_first_sync_without_since_on_nonempty_index_raises(
     )
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        idx, n_buckets=4, layout="manifest",
+        idx, n_buckets=4,
     )
     with pytest.raises(ValueError, match="since="):
         sync_lex_index(spark, corpus, idx)
@@ -270,7 +270,7 @@ def test_sync_refuses_upserts_on_legacy_index(spark, docs, tmp_path):
     )
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     sync_lex_index(spark, corpus, idx)
     # age the index: strip the sequence counter as a pre-seq build had
@@ -297,7 +297,7 @@ def test_ann_sync_matches_manual_appends(spark, emb, tmp_path):
 
     # index trained on corpus head v1; first sync anchors with since=1
     A.build_ann_index(
-        C.load_corpus_snapshot(spark, corpus), idx, layout="manifest"
+        C.load_corpus_snapshot(spark, corpus), idx
     )
     out = sync_ann_index(spark, corpus, idx, since=1)
     assert out["applied"] == [] and out["version"] == 1
@@ -310,7 +310,7 @@ def test_ann_sync_matches_manual_appends(spark, emb, tmp_path):
     ]
 
     # reference: the same initial build + a manual append of the delta
-    A.build_ann_index(half, ref, layout="manifest")
+    A.build_ann_index(half, ref)
     A.append_ann_index(delta, ref)
     q = emb.orderBy("vec_id").limit(5)
     got = {
@@ -351,7 +351,7 @@ def test_overlapping_sync_delete_cannot_remask_revisions(
     C.build_corpus_snapshot(docs, corpus, key="doc_id", partition_by=["lang"])
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     sync_lex_index(spark, corpus, idx)
     revised = (
@@ -385,7 +385,7 @@ def test_overlapping_sync_delete_cannot_remask_revisions(
     ref = str(tmp_path / "ref")
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).select("doc_id", "text"),
-        ref, n_buckets=4, layout="manifest",
+        ref, n_buckets=4,
     )
     # the revision rows still serve — the follower's late delete was a
     # guarded no-op, not a permanent mask
@@ -407,7 +407,7 @@ def test_guarded_delete_skips_when_token_committed(spark, docs, tmp_path):
     C.build_corpus_snapshot(docs, corpus, key="doc_id", partition_by=["lang"])
     L.build_lex_index(
         C.load_corpus_snapshot(spark, corpus).limit(0), idx,
-        n_buckets=4, layout="manifest",
+        n_buckets=4,
     )
     sync_lex_index(spark, corpus, idx)  # token ("corpus-sync:...", 1)
     from auto_data_linkage_spark.operators.sync import _sync_app_id

@@ -1,11 +1,10 @@
-"""A/B: manifest-layout vs rename-layout READ PATH (VERDICT r11 #2).
+"""READ-path cost of the manifest-committed index stores by store state.
 
-Builds the same lexical (BM25) and ANN (IVF-PQ) indexes in both
-layouts at the given scale factor, then times LOAD (handle open: one
-manifest JSON read + DataFrame plan vs index.json read) and PROBE
-(the full top-k query) separately, over R repetitions, reporting the
-minimum (quiet-machine estimate) and median. Three manifest states
-are measured:
+Builds lexical (BM25) and ANN (IVF-PQ) indexes at the given scale
+factor, then times LOAD (handle open: one manifest JSON read +
+DataFrame plan) and PROBE (the full top-k query) separately, over R
+repetitions, reporting the minimum (quiet-machine estimate) and
+median. Three store states are measured:
 
 - ``manifest``      — freshly built, 1 generation per partition;
 - ``manifest-frag`` — after 20 appends (21 generations per touched
@@ -72,14 +71,10 @@ def main() -> None:
         # ------------------------------------------------------- lexical
         head = docs.where(F.col("doc_id") % 21 == 0)
         slices = [docs.where(F.col("doc_id") % 21 == i) for i in range(1, 21)]
-        roots = {
-            "rename": os.path.join(work, "lex_rename"),
-            "manifest": os.path.join(work, "lex_manifest"),
-        }
-        for layout, root in roots.items():
-            L.build_lex_index(docs, root, n_buckets=32, layout=layout)
+        fresh = os.path.join(work, "lex_manifest")
+        L.build_lex_index(docs, fresh, n_buckets=32)
         frag = os.path.join(work, "lex_frag")
-        L.build_lex_index(head, frag, n_buckets=32, layout="manifest")
+        L.build_lex_index(head, frag, n_buckets=32)
         for s in slices:
             L.append_lex_index(s, frag)
 
@@ -93,7 +88,7 @@ def main() -> None:
 
             return run
 
-        for name, root in list(roots.items()) + [("manifest-frag", frag)]:
+        for name, root in (("manifest", fresh), ("manifest-frag", frag)):
             out["lex"][name] = {
                 "load": timed(lex_load(root), reps),
                 "probe": timed(lex_probe(root), reps),
@@ -105,15 +100,11 @@ def main() -> None:
         }
 
         # ----------------------------------------------------------- ann
-        aroots = {
-            "rename": os.path.join(work, "ann_rename"),
-            "manifest": os.path.join(work, "ann_manifest"),
-        }
-        for layout, root in aroots.items():
-            A.build_ann_index(emb, root, layout=layout)
+        afresh = os.path.join(work, "ann_manifest")
+        A.build_ann_index(emb, afresh)
         ahead = emb.where(F.col("vec_id") % 21 == 0)
         afrag = os.path.join(work, "ann_frag")
-        A.build_ann_index(ahead, afrag, layout="manifest")
+        A.build_ann_index(ahead, afrag)
         for i in range(1, 21):
             A.append_ann_index(emb.where(F.col("vec_id") % 21 == i), afrag)
 
@@ -127,7 +118,7 @@ def main() -> None:
 
             return run
 
-        for name, root in list(aroots.items()) + [("manifest-frag", afrag)]:
+        for name, root in (("manifest", afresh), ("manifest-frag", afrag)):
             out["ann"][name] = {
                 "load": timed(ann_load(root), reps),
                 "probe": timed(ann_probe(root), reps),
