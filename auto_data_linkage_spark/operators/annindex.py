@@ -355,6 +355,9 @@ def build_ann_index(
         # build): mean 1−cos(v, assigned centroid) of the build corpus;
         # appends accumulate route_sum/route_rows against it
         "route_err": route_err,
+        # table schemas, so load_ann_index skips schema inference
+        "coded_schema": coded.schema.simpleString()[7:-1],
+        "centroids_schema": cents.schema.simpleString()[7:-1],
     }
     tables = M.add_gens(
         {}, "coded", M.written_parts(path, "coded", gc_), gc_
@@ -870,8 +873,14 @@ def load_ann_index(
     snap = M.read_manifest(path, version)
     return AnnIndex(
         meta=_read_meta(snap),
-        centroids=M.read_table(spark, path, "centroids", snap),
-        coded=M.read_table(spark, path, "coded", snap),
+        centroids=M.read_table(
+            spark, path, "centroids", snap,
+            schema=snap["meta"].get("centroids_schema"),
+        ),
+        coded=M.read_table(
+            spark, path, "coded", snap,
+            schema=snap["meta"].get("coded_schema"),
+        ),
         tombstones=M.read_table(spark, path, "tombstones", snap),
     )
 

@@ -94,6 +94,16 @@ def _read_meta(snap: dict) -> dict:
     return meta
 
 
+def _read_table(
+    spark: SparkSession, path: str, table: str, snap: dict
+) -> DataFrame | None:
+    """``table`` of the snapshot, read with the schema the build
+    recorded (postings and terms) so opening skips schema inference."""
+    return M.read_table(
+        spark, path, table, snap, schema=snap["meta"].get(f"{table}_schema")
+    )
+
+
 @dataclass
 class LexIndex:
     """Handle to a loaded index: metadata + lazy parquet DataFrames.
@@ -448,7 +458,7 @@ def _delete_once(
         # conflicts the version CAS, and the full re-run re-checks.
         return {"deleted": 0, "meta": meta, "skipped_txn": True}
     local = M.local_path(path)
-    posts = M.read_table(spark, path, "postings", snap)
+    posts = _read_table(spark, path, "postings", snap)
     id_type = (
         posts if posts is not None
         else spark.createDataFrame([], meta["postings_schema"])
@@ -715,7 +725,7 @@ def load_lex_index(
     snap = M.read_manifest(path, version)
     meta = _read_meta(snap)
     tables = {
-        t: M.read_table(spark, path, t, snap)
+        t: _read_table(spark, path, t, snap)
         for t in ("postings", "terms", "tombstones")
     }
     return LexIndex(

@@ -75,6 +75,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifests"
 _LEGACY_DIRS = ("bucket=", "cell=", "batch=")
@@ -617,9 +618,14 @@ def next_gen(root: str, table: str) -> str:
     never land in the SAME directory — each attempt's data is its own
     immutable dir, and the loser of the subsequent version race
     either retries (delta mutations merge, see
-    :func:`commit_with_retry`) or leaves a vacuumable orphan."""
+    :func:`commit_with_retry`) or leaves a vacuumable orphan.
+
+    Every write allocates its generation here first, so a store left
+    by the retired ``rename`` layout is refused
+    (:func:`reject_legacy_store`) before any data lands in it."""
     import uuid
 
+    reject_legacy_store(root)
     tdir = os.path.join(local_path(root), table)
     mx = 0
     if os.path.isdir(tdir):
@@ -710,22 +716,36 @@ def table_paths(
 
 
 def read_table(
-    spark: SparkSession, root: str, table: str, snapshot: dict
+    spark: SparkSession,
+    root: str,
+    table: str,
+    snapshot: dict,
+    *,
+    schema: str | None = None,
 ) -> DataFrame | None:
     """DataFrame over the snapshot's live directories of ``table``
     (``None`` when the table has none). Partitioned tables read with
     ``basePath=<table root>`` so the partition column (``bucket=``/
     ``cell=``) is recovered and predicate/partition pruning work
     exactly as on a plain partitioned table; the ``gen`` column is
-    dropped."""
+    dropped.
+
+    ``schema`` is the table's column list as the store recorded it at
+    build (``a:int,b:string`` or ``a int, b string``, partition column
+    included). Given, the read skips Spark's schema inference — a
+    footer-sampling job per table, most of a handle open's cost; the
+    columns come out in the same order inference gives."""
     paths = table_paths(root, table, snapshot)
     if not paths:
         return None
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.DataType.fromDDL(f"struct<{schema}>"))
     mapping = snapshot["tables"][table]
     if any(p != "" for p in mapping):
         tdir = os.path.join(local_path(root), table)
-        return spark.read.option("basePath", tdir).parquet(*paths).drop("gen")
-    return spark.read.parquet(*paths)
+        return reader.option("basePath", tdir).parquet(*paths).drop("gen")
+    return reader.parquet(*paths)
 
 
 def part_file_counts(root: str, table: str, snapshot: dict) -> dict[str, int]:

@@ -729,10 +729,13 @@ def _legacy_store(root, kind):
 
 
 @pytest.mark.parametrize("kind", ["lex", "ann", "edges", "linker"])
-def test_legacy_rename_layout_stores_are_refused(spark, docs, tmp_path, kind):
+def test_legacy_rename_layout_stores_are_refused(
+    spark, docs, sf_dir, tmp_path, kind
+):
     """Every entry point on a store written in the retired rename layout
     raises ValueError naming the path and the remedy, and leaves the
-    directory untouched (no manifest log is created in it)."""
+    directory untouched: no manifest log, and no data generation from a
+    build aimed at it."""
     from auto_data_linkage_spark.streaming.linkage import StreamingLinker
 
     root = str(tmp_path / kind)
@@ -743,8 +746,14 @@ def test_legacy_rename_layout_stores_are_refused(spark, docs, tmp_path, kind):
         [("http://a.com/1", '<a href="http://b.com/x">b</a>')],
         "url string, html string",
     )
+    vecs = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .select("vec_id", "embedding", "label")
+        .limit(40)
+    )
     ops = {
         "lex": [
+            lambda: L.build_lex_index(batch, root, n_buckets=2),
             lambda: L.load_lex_index(spark, root),
             lambda: L.load_lex_index(spark, root, version=1),
             lambda: L.append_lex_index(batch, root),
@@ -755,6 +764,7 @@ def test_legacy_rename_layout_stores_are_refused(spark, docs, tmp_path, kind):
             lambda: L.lex_index_sink(root, app_id="q")(batch, 0),
         ],
         "ann": [
+            lambda: A.build_ann_index(vecs, root, m=4, n_codewords=8),
             lambda: A.load_ann_index(spark, root),
             lambda: A.append_ann_index(batch, root),
             lambda: A.delete_from_ann_index(spark, root, [1]),
