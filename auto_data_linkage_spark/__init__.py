@@ -39,9 +39,7 @@ __version__ = "0.1.0"
 from auto_data_linkage_spark.autolink import AutoLinker
 from auto_data_linkage_spark.blocking import (
     RuleEstimate,
-    cap_block_size,
     generate_blocking_rules,
-    salt_hot_keys,
     salted_self_join_pairs,
 )
 from auto_data_linkage_spark.sqlext import enable_arc
@@ -83,7 +81,6 @@ __all__ = [
     "align_for_linking",
     "apply_increment",
     "candidate_pairs",
-    "cap_block_size",
     "clean_columns",
     "cluster_at_threshold",
     "clustering_scores",
@@ -97,7 +94,6 @@ __all__ = [
     "information_gain_power_ratio",
     "null_sentinel",
     "pairwise_prf",
-    "salt_hot_keys",
     "salted_self_join_pairs",
     "__version__",
 ]

@@ -75,20 +75,10 @@ class AutoLinker:
         unique_id: str = "unique_id",
         random_seed: int = 42,
         attribute_columns: list[str] | None = None,
-        max_block_size: int | str | None = "auto",
-        block_cap_mode: str = "trim",
         sampler: str = "tpe",
-        total_pairs_guard: int | str | None = "auto",
-        parity: bool = False,
     ):
         if sampler not in ("tpe", "random"):
             raise ValueError(f"sampler must be 'tpe' or 'random', got {sampler!r}")
-        for name, v in (
-            ("max_block_size", max_block_size),
-            ("total_pairs_guard", total_pairs_guard),
-        ):
-            if isinstance(v, str) and v != "auto":
-                raise ValueError(f"{name} must be an int, None, or 'auto', got {v!r}")
         # "random" keeps the sampler in its startup (pure-random) phase
         # for every trial — the A/B control arm for TPE trial-efficiency
         # evidence (tools/tpe_ab.py; reference searches with hyperopt TPE,
@@ -102,23 +92,8 @@ class AutoLinker:
         self.unique_id = unique_id
         self.random_seed = random_seed
         self.attribute_columns = attribute_columns
-        # Scale-safe by DEFAULT (SCALE.md "AutoLinker E2E at 150k rows":
-        # the measured stall reproduced under the old all-None defaults).
-        # "auto" resolves at auto_link time, once n is known:
-        #   n ≤ estimation sample (10k)  → both None — the estimate is
-        #     computed on the FULL frame, bit-identical reference parity;
-        #   n > sample → total_pairs_guard = comparison_size_limit (the
-        #     untrimmed Σcnt² gate, same units as the trimmed gate) and
-        #     max_block_size = ⌈√comparison_size_limit⌉, so one block's
-        #     cap² pairs can never exceed the whole budget.
-        # Explicit ints/None pass through; parity=True forces both to
-        # None at ANY n (reference-faithful, accepts the documented
-        # hot-block risk — generate_blocking_rules then warns loudly).
-        self.parity = parity
-        self.max_block_size = max_block_size
-        self.block_cap_mode = block_cap_mode
-        self.total_pairs_guard = total_pairs_guard
-        # resolved at auto_link time (introspectable after the run)
+        # the scale guard, decided at auto_link time from n (see
+        # _resolve_guards); introspectable after the run
         self.resolved_max_block_size: int | None = None
         self.resolved_total_pairs_guard: int | None = None
         self.trials: list[Trial] = []
@@ -130,37 +105,28 @@ class AutoLinker:
 
     # ------------------------------------------------------------ helpers
     def _resolve_guards(self, n: int) -> tuple[int | None, int | None]:
-        """Resolve ("auto" | int | None) guards against the table size.
+        """The scale guard for an ``n``-row search, as
+        ``(max_block_size, total_pairs_guard)``.
 
-        Returns ``(max_block_size, total_pairs_guard)``. ``parity=True``
-        forces ``(None, None)``. "auto" activates both guards only past
-        the estimation-sample boundary
-        (:data:`blocking.ESTIMATION_SAMPLE_ROWS`) — below it the rule
-        estimate is exact-on-frame and the defaults are bit-identical to
-        reference behavior; above it the trimmed sample extrapolation is
-        measured to under-cost hot-block rules by 10²–10³×
-        (SCALE.md "AutoLinker E2E at 150k rows"), so auto derives:
+        It is on exactly when the rule estimate is sampled
+        (:func:`blocking.estimate_is_sampled`). Below the sample both are
+        None and the search is the reference's. Above it the trimmed
+        sample extrapolation is measured to under-cost hot-block rules by
+        10²–10³× (SCALE.md "AutoLinker E2E at 150k rows"), so:
 
         - ``total_pairs_guard = comparison_size_limit`` — the untrimmed
-          Σcnt² rule gate shares the trimmed gate's units;
-        - ``max_block_size = ⌈√comparison_size_limit⌉`` — one block then
+          Σcnt² rule gate :func:`blocking.generate_blocking_rules`
+          applies, in the trimmed gate's units;
+        - ``max_block_size = ⌈√comparison_size_limit⌉`` — every trial
+          model keeps at most that many rows per block, so one block
           contributes at most cap² ≈ the entire pair budget, bounding
           blowup even for rules both estimators mis-cost.
         """
-        if self.parity:
+        if not blocking_mod.estimate_is_sampled(n):
             return None, None
-        sampled = n > blocking_mod.ESTIMATION_SAMPLE_ROWS
-        cap = self.max_block_size
-        if cap == "auto":
-            cap = (
-                int(math.isqrt(self.comparison_size_limit - 1)) + 1
-                if sampled and self.comparison_size_limit > 0
-                else None
-            )
-        guard = self.total_pairs_guard
-        if guard == "auto":
-            guard = self.comparison_size_limit if sampled else None
-        return cap, guard
+        limit = self.comparison_size_limit
+        cap = int(math.isqrt(limit - 1)) + 1 if limit > 0 else None
+        return cap, limit
 
     def _infer_attributes(self, df: DataFrame) -> list[str]:
         """All string columns minus id/label (reference autolinker.py:1022-1040)."""
@@ -257,12 +223,17 @@ class AutoLinker:
                 df.where(F.col("__src") == "r"),
             )
 
-        # one job materializes the cache; guards key on n, the prior on
-        # the frame predict scores (the left table in link mode)
-        n, n_left = df.agg(
+        # one job materializes the cache and yields every scalar the
+        # search needs: n for the scale guard, the prior's frame size
+        # (the left table in link mode), and the information-gain log
+        # base u — the max distinct count of any attribute column
+        # (autolinker.py:596-602), constant across trials
+        n, n_left, *distinct = df.agg(
             F.count("*"),
             F.count(F.when(F.col("__src") == "l", 1)) if link_mode else F.lit(0),
+            *[F.countDistinct(c) for c in attrs],
         ).first()
+        self._base_u = max(*distinct, 2)
         # the one place the prior is decided: 1/N of the frame predict
         # counts, pinned on every trial model, so search, best
         # predictions and incremental folds all score with the same value
@@ -276,7 +247,6 @@ class AutoLinker:
             attrs,
             comparison_size_limit=self.comparison_size_limit,
             seed=self.random_seed,
-            total_pairs_guard=self.resolved_total_pairs_guard,
         )
         if not rules:
             raise ValueError(
@@ -335,7 +305,6 @@ class AutoLinker:
             rule.to_blocking_rules(),
             unique_id=self.unique_id,
             max_block_size=self.resolved_max_block_size,
-            block_cap_mode=self.block_cap_mode,
             prior=self._prior,
         )
         model.estimate_u(df, target_pairs=100_000, seed=self.random_seed)
@@ -346,7 +315,9 @@ class AutoLinker:
         clusters = cluster_at_threshold(
             df, predictions, self.cluster_threshold, self.unique_id
         )
-        um = information_gain_power_ratio(df, clusters, attrs, self.unique_id)
+        um = information_gain_power_ratio(
+            df, clusters, attrs, self.unique_id, base_u=self._base_u
+        )
         trial = Trial(
             comparisons=comps,
             rule=rule,

@@ -18,7 +18,6 @@ ARC.scala:107-110); the OR search is pure Python arithmetic over that dict.
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass
 from itertools import combinations as _combinations
 
@@ -27,9 +26,9 @@ from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.model import BlockingRule
 from auto_data_linkage_spark.profile import (
+    _block_stats,
     column_combinations,
     combo_value_counts,
-    rule_block_stats,
 )
 
 
@@ -49,10 +48,24 @@ _ARM_CAP = 300
 _EXT_CAP = 60
 
 # default estimation-sample size (reference autolinker.py:280-284). Also
-# the regime boundary for AutoLinker's "auto" guards: past this row
-# count the rule estimate is a quadratically-scaled sample extrapolation
-# and the untrimmed guard becomes mandatory for scale safety.
+# the regime boundary of the scale guard: past this row count the rule
+# estimate is a quadratically-scaled sample extrapolation (see
+# estimate_is_sampled).
 ESTIMATION_SAMPLE_ROWS = 10_000
+
+
+def estimate_is_sampled(
+    n: int, sample_rows: int | None = ESTIMATION_SAMPLE_ROWS
+) -> bool:
+    """Does the rule estimate of an ``n``-row frame come from a row
+    sample? This is the one switch of the scale guard. Below the sample
+    the estimate is exact on the frame and rule selection is the
+    reference's. Above it the trimmed estimate is a quadratic
+    extrapolation that is measured to under-cost hot-block rules by
+    10²–10³× (SCALE.md "AutoLinker E2E at 150k rows"), so
+    :func:`generate_blocking_rules` adds the untrimmed Σcnt² gate and
+    ``AutoLinker`` caps each block at ⌈√comparison_size_limit⌉ rows."""
+    return sample_rows is not None and n > sample_rows
 
 
 @dataclass(frozen=True)
@@ -88,15 +101,45 @@ def count_lookup(
     One explode + one shuffle builds all combination value counts; the
     per-rule stat table is ≤ #combinations rows — safe to collect.
     """
+    return _lookups(
+        df,
+        attribute_columns,
+        max_columns_per_and_rule=max_columns_per_and_rule,
+        min_count=min_count,
+        top_k=top_k,
+    )[0]
+
+
+def _lookups(
+    df: DataFrame,
+    attribute_columns: list[str],
+    *,
+    max_columns_per_and_rule: int = 2,
+    min_count: int = 2,
+    top_k: int = 1000,
+) -> tuple[dict[tuple[str, ...], tuple[int, int]], dict[tuple[str, ...], int]]:
+    """:func:`count_lookup` plus, from the same aggregate, each rule's
+    UNTRIMMED ``Σ cnt²`` — the true (2×) pair mass on this frame, where
+    the reference statistic is a trimmed per-block average (outlier
+    blocks replaced by the median, ARC.scala:36-40). A rule whose few
+    hot blocks dominate its pair count (the null-sentinel block of a
+    mostly-null column, a low-cardinality attribute) keeps a small
+    trimmed average while its total grows quadratically. Hot blocks
+    also survive row sampling proportionally (cnt_sample ≈ f·cnt, so
+    cnt² scales by f², undone by the caller's quadratic scale factor), which
+    makes the total a reliable hot-rule detector on the sample."""
     combos = column_combinations(attribute_columns, max_columns_per_and_rule)
     counts = combo_value_counts(df, combos, min_count=min_count)
-    stats = rule_block_stats(counts).orderBy("avg_squared").limit(
+    stats = _block_stats(counts).orderBy("avg_squared").limit(
         max(top_k, len(combos))
     )
-    out: dict[tuple[str, ...], tuple[int, int]] = {}
+    lookup: dict[tuple[str, ...], tuple[int, int]] = {}
+    totals: dict[tuple[str, ...], int] = {}
     for r in stats.collect():
-        out[tuple(r["rule"].split(","))] = (int(r["n_blocks"]), int(r["avg_squared"]))
-    return out
+        rule = tuple(r["rule"].split(","))
+        lookup[rule] = (int(r["n_blocks"]), int(r["avg_squared"]))
+        totals[rule] = int(r["total_squared"])
+    return lookup, totals
 
 
 def estimate_or_rule(
@@ -118,41 +161,6 @@ def estimate_or_rule(
     return int(total)  # reference does not clamp negatives
 
 
-def total_squared_lookup(
-    df: DataFrame,
-    attribute_columns: list[str],
-    *,
-    max_columns_per_and_rule: int = 2,
-    min_count: int = 2,
-) -> dict[tuple[str, ...], int]:
-    """Per AND-rule UNTRIMMED total squared block size — ``Σ cnt²`` over
-    the rule's blocks, the true (2×) pair mass on this frame, where the
-    reference's :func:`count_lookup` statistic is a TRIMMED per-block
-    average (outlier blocks replaced by the median, ARC.scala:36-40).
-
-    The difference matters exactly at scale: a rule whose few HOT
-    blocks dominate its pair count — the null-sentinel block of a
-    mostly-null column, a low-cardinality attribute — keeps a small
-    trimmed average while its total explodes quadratically; measured at
-    150k rows the gap reaches 10²–10³× (SCALE.md "AutoLinker E2E at
-    150k rows": 8 tasks pinned >1,000 s CPU each by a rule the trimmed
-    estimate admitted). Hot blocks also SURVIVE row sampling
-    proportionally (cnt_sample ≈ f·cnt, so k scales by f² — undone by
-    the caller's quadratic scale factor), which makes this total a
-    reliable hot-rule detector on the same 10k sample, while the many
-    tiny blocks sampling wipes out contribute negligible pair mass
-    anyway. Same one-explode plan as :func:`count_lookup`; the agg is
-    a plain SUM (no percentile window)."""
-    combos = column_combinations(attribute_columns, max_columns_per_and_rule)
-    counts = combo_value_counts(df, combos, min_count=min_count)
-    rows = (
-        counts.groupBy("combo")
-        .agg(F.sum(F.col("cnt") * F.col("cnt")).alias("total"))
-        .collect()
-    )
-    return {tuple(r["combo"].split(",")): int(r["total"]) for r in rows}
-
-
 def generate_blocking_rules(
     df: DataFrame,
     attribute_columns: list[str],
@@ -163,7 +171,6 @@ def generate_blocking_rules(
     sample_rows: int | None = ESTIMATION_SAMPLE_ROWS,
     seed: int = 42,
     top_k: int = 1000,
-    total_pairs_guard: int | None = None,
 ) -> list[RuleEstimate]:
     """Full reference pipeline (§3.2 stages A-C): sample → count lookup →
     enumerate OR-rules for i = 1..max arms → estimate → keep rules under
@@ -174,44 +181,23 @@ def generate_blocking_rules(
     ≤2 cols per AND, ≤3 arms per OR (autolinker.py:263-264), 10k-row
     estimation sample (autolinker.py:280-284).
 
-    ``total_pairs_guard`` adds a conservative second gate the reference
-    lacks: rules whose UNTRIMMED estimated total squared block size
-    (:func:`total_squared_lookup`, union-bounded over OR arms, sample-
-    scaled like the main estimate) exceeds the guard are dropped even
-    when their trimmed estimate fits ``comparison_size_limit``. Same
-    units as ``comparison_size_limit`` (squared counts ≈ 2× pairs).
-    Default ``None`` keeps exact reference parity; the selection order
-    among surviving rules is unchanged either way. Rationale + measured
-    failure mode: SCALE.md "AutoLinker E2E at 150k rows".
+    When the estimate is sampled (:func:`estimate_is_sampled`) a second
+    gate the reference lacks also applies: rules whose UNTRIMMED total
+    squared block size (``Σ cnt²`` from the same count pass, union-
+    bounded over OR arms, sample-scaled like the main estimate) exceeds
+    ``comparison_size_limit`` are dropped even when their trimmed
+    estimate fits. Below the sample the result is the reference's; the
+    order among surviving rules is the same in both regimes.
     """
     n = df.count()
     sampled = df
     scale = 1.0
-    if sample_rows is not None and n > sample_rows:
-        frac = sample_rows / n
-        sampled = df.sample(fraction=frac, seed=seed)
+    gated = estimate_is_sampled(n, sample_rows)
+    if gated:
+        sampled = df.sample(fraction=sample_rows / n, seed=seed)
         scale = (n / sample_rows) ** 2  # pair counts scale quadratically
-        if total_pairs_guard is None:
-            # past the sample size the trimmed avg-k² statistic is
-            # quadratically extrapolated AND median-trimmed — the regime
-            # where it is measured to under-cost hot-block rules by
-            # 10²–10³× (SCALE.md "AutoLinker E2E at 150k rows"). Loud by
-            # design: the silent version of this stalled a 150k-row run.
-            warnings.warn(
-                f"generate_blocking_rules: n={n} exceeds the estimation "
-                f"sample ({sample_rows} rows) and total_pairs_guard is "
-                "None — the trimmed pair estimate can admit rules whose "
-                "true pair count is orders of magnitude over "
-                "comparison_size_limit (hot-block bias; see SCALE.md "
-                "'AutoLinker E2E at 150k rows'). Pass total_pairs_guard="
-                "comparison_size_limit (or use AutoLinker's default "
-                "'auto' guards) unless exact reference parity is "
-                "required.",
-                UserWarning,
-                stacklevel=2,
-            )
 
-    lookup = count_lookup(
+    lookup, totals = _lookups(
         sampled,
         attribute_columns,
         max_columns_per_and_rule=max_columns_per_and_rule,
@@ -220,23 +206,11 @@ def generate_blocking_rules(
     if not lookup:
         return []
 
-    guard_totals: dict[tuple[str, ...], int] = {}
-    if total_pairs_guard is not None:
-        guard_totals = total_squared_lookup(
-            sampled,
-            attribute_columns,
-            max_columns_per_and_rule=max_columns_per_and_rule,
-        )
-
-    def _over_guard(arm_set: tuple[tuple[str, ...], ...]) -> bool:
-        if total_pairs_guard is None:
-            return False
+    def _over_gate(arm_set: tuple[tuple[str, ...], ...]) -> bool:
         # union bound: Σ arm totals ≥ the OR's true total (pairs from
-        # several arms are counted once per arm) — conservative, and
-        # an arm absent from the totals (all blocks pruned by
-        # min_count) contributes 0
-        est = sum(guard_totals.get(a, 0) for a in arm_set) * scale
-        return est > total_pairs_guard
+        # several arms are counted once per arm) — conservative
+        est = sum(totals[a] for a in arm_set) * scale
+        return est > comparison_size_limit
 
     arms_sorted = sorted(lookup)
     seen: set[tuple[tuple[str, ...], ...]] = set()
@@ -324,67 +298,10 @@ def generate_blocking_rules(
         r
         for r in results
         if r.estimated_pairs < comparison_size_limit
-        and not _over_guard(r.arms)
+        and not (gated and _over_gate(r.arms))
     ]
     affordable.sort(key=lambda r: (-r.estimated_pairs, r.arms))
     return affordable[:top_k]
-
-
-def cap_block_size(
-    df: DataFrame,
-    block_columns: tuple[str, ...] | list[str],
-    max_rows_per_block: int,
-    *,
-    id_column: str = "unique_id",
-) -> DataFrame:
-    """Hard per-block cap BEFORE pair generation (SURVEY §7 watch list:
-    a blocking key shared by 10^5 rows creates 10^10 pairs; the reference
-    only filters at rule granularity).
-
-    Keeps a deterministic subset (smallest ``xxhash64(id)`` first) of at
-    most ``max_rows_per_block`` rows per block value, so the worst block
-    contributes ≤ cap²/2 pairs. One window pass — at scale this is a
-    shuffle on the block key, which the subsequent blocking join needs
-    anyway (the partitioning is reused)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*[F.col(c) for c in block_columns]).orderBy(
-        F.xxhash64(F.col(id_column)), F.col(id_column)
-    )
-    return (
-        df.withColumn("__bs_rn", F.row_number().over(w))
-        .where(F.col("__bs_rn") <= max_rows_per_block)
-        .drop("__bs_rn")
-    )
-
-
-def salt_hot_keys(
-    df: DataFrame,
-    block_columns: tuple[str, ...] | list[str],
-    *,
-    hot_threshold: int,
-    salt_buckets: int = 8,
-    id_column: str = "unique_id",
-) -> DataFrame:
-    """Add a ``__salt`` column splitting blocks larger than
-    ``hot_threshold`` into ``salt_buckets`` sub-blocks (hash of the row
-    id); small blocks get salt 0. Joining on (block cols + __salt) bounds
-    any single join partition to ~hot_threshold rows at the cost of
-    missing cross-salt pairs within hot blocks — a LOSSY sampling trade
-    acceptable only for estimation passes. For candidate-pair generation
-    use :func:`salted_self_join_pairs`, which replicates one side across
-    the salts and loses nothing. Deterministic."""
-    from pyspark.sql import Window
-
-    counts = df.groupBy(*[F.col(c) for c in block_columns]).agg(
-        F.count("*").alias("__bs_cnt")
-    )
-    joined = df.join(F.broadcast(counts), list(block_columns), "left")
-    salt = F.when(
-        F.col("__bs_cnt") > hot_threshold,
-        F.pmod(F.xxhash64(F.col(id_column)), F.lit(salt_buckets)),
-    ).otherwise(F.lit(0))
-    return joined.withColumn("__salt", salt.cast("int")).drop("__bs_cnt")
 
 
 def salted_self_join_pairs(
@@ -411,7 +328,7 @@ def salted_self_join_pairs(
 
     A pair (a, b) meets exactly once — at salt ``hash(a) % B``, because b
     is present at every salt — so the pair set equals the unsalted join's
-    (property-tested), unlike :func:`salt_hot_keys` which drops cross-salt
+    (property-tested); salting both sides by row would drop cross-salt
     pairs. Cost: the build side is shipped ``B`` times (explode happens
     before the exchange), in return for the widest block splitting into
     ``B`` shuffle partitions. Pick B ≈ hot-block-rows / desired-partition-

@@ -51,11 +51,15 @@ def information_gain_power_ratio(
 
     Implementation note: entropies in any base are the natural-log entropy
     divided by ``ln(base)``, so one melt + two aggregations produce both
-    bases — the reference runs four separate entropy-agg jobs.
+    bases — the reference runs four separate entropy-agg jobs. ``base_u``
+    depends only on ``data``; a caller scoring many clusterings of the
+    same data passes it in (``AutoLinker`` computes it once per search)
+    and skips that aggregate.
     """
     counts = clusters.groupBy("cluster_id").count()
     multi = counts.where(F.col("count") > 1)
-    c = multi.count()
+    # #multi-record clusters and #records in them, one aggregate
+    c, n_matched = multi.agg(F.count("*"), F.sum("count")).first()
     if c == 0:
         return UnsupervisedMetrics(0.0, 0.0, 0.0)
     matched = clusters.join(
@@ -95,7 +99,6 @@ def information_gain_power_ratio(
     vc = melted.groupBy("cluster_id", "_csize", "col", "val").count().cache()
 
     # natural-log entropy of each column over the whole matched subset
-    n_matched = matched.count()
     overall = (
         vc.groupBy("col", "val")
         .agg(F.sum("count").alias("n"))

@@ -32,7 +32,7 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.compare import (
@@ -86,7 +86,6 @@ def candidate_pairs(
     right_df: DataFrame | None = None,
     deduplicate_across_rules: bool = True,
     max_block_size: int | None = None,
-    block_cap_mode: str = "drop",
 ) -> DataFrame:
     """Generate candidate pairs via blocking self-join (J5) and attach
     gamma columns.
@@ -104,19 +103,14 @@ def candidate_pairs(
     pair count), so one hot value inside an otherwise-fine rule — the null
     sentinel over a mostly-null column, "smith" in a surname block — still
     yields count² pairs; at 100 TB that single block is the job-killer.
-    Two modes (both a documented recall trade, off by default):
-
-    - ``block_cap_mode="drop"``: exclude blocks over the cap entirely.
-      Hot keys are few by definition (count > cap), so the exclusion list
-      stays tiny and broadcasts; the per-rule count aggregation is narrow
-      (key columns only, map-side partials). Zero pairs from hot blocks.
-    - ``block_cap_mode="trim"``: keep a deterministic subset of ``cap``
-      rows per block (:func:`blocking.cap_block_size`) — every block
-      contributes ≤ cap²/2 pairs but hot blocks still participate. The
-      window shuffle it costs is on the block key the join needs anyway.
+    The cap keeps a deterministic subset of ``max_block_size`` rows per
+    block (smallest ``xxhash64(id)`` first), so every block contributes
+    ≤ cap²/2 pairs while hot blocks still participate — a documented
+    recall trade, off by default. The window shuffle it costs is on the
+    block key the join needs anyway.
 
     For bounding TASK size (not output size) under skew without losing
-    pairs, see :func:`blocking.salt_hot_keys`.
+    pairs, see :func:`blocking.salted_self_join_pairs`.
     """
     cols = sorted({c.column for c in comparisons})
     rule_cols = sorted({c for r in rules for c in r.columns})
@@ -127,9 +121,6 @@ def candidate_pairs(
     left_base = df.select(*sel)
     right_base = (right_df.select(*sel) if link_mode else left_base)
 
-    if block_cap_mode not in ("drop", "trim"):
-        raise ValueError(f"unknown block_cap_mode {block_cap_mode!r}")
-
     def _with_surv_flags(base: DataFrame) -> DataFrame:
         """Attach one ``__surv_{j}`` boolean per rule: does this row
         participate in rule j's join under the block cap? Flags (not
@@ -139,28 +130,12 @@ def candidate_pairs(
         cap, compounding the recall trade across rules."""
         out = base
         for j, rule in enumerate(rules):
-            key = list(rule.columns)
-            if block_cap_mode == "trim":
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*[F.col(c) for c in key]).orderBy(
-                    F.xxhash64(F.col(unique_id)), F.col(unique_id)
-                )
-                out = out.withColumn(
-                    f"__surv_{j}", F.row_number().over(w) <= max_block_size
-                )
-            else:
-                hot = (
-                    base.groupBy(*key)
-                    .count()
-                    .where(F.col("count") > max_block_size)
-                    .select(*key, F.lit(True).alias("__hot"))
-                )
-                out = (
-                    out.join(F.broadcast(hot), on=key, how="left")
-                    .withColumn(f"__surv_{j}", F.col("__hot").isNull())
-                    .drop("__hot")
-                )
+            w = Window.partitionBy(*[F.col(c) for c in rule.columns]).orderBy(
+                F.xxhash64(F.col(unique_id)), F.col(unique_id)
+            )
+            out = out.withColumn(
+                f"__surv_{j}", F.row_number().over(w) <= max_block_size
+            )
         return out
 
     if max_block_size is not None:
@@ -250,7 +225,6 @@ class FellegiSunterModel:
         em_convergence: float = 0.01,
         max_em_iterations: int = 60,
         max_block_size: int | None = None,
-        block_cap_mode: str = "drop",
     ):
         self.comparisons = comparisons
         self.blocking_rules = [BlockingRule.parse(r) for r in blocking_rules]
@@ -259,7 +233,6 @@ class FellegiSunterModel:
         self.em_convergence = em_convergence
         self.max_em_iterations = max_em_iterations
         self.max_block_size = max_block_size
-        self.block_cap_mode = block_cap_mode
         self.params: dict[str, ComparisonParams] = {
             c.column: ComparisonParams(c, dict(_DEFAULT_M), dict(_DEFAULT_U))
             for c in comparisons
@@ -508,6 +481,7 @@ class FellegiSunterModel:
             "unique_id": self.unique_id,
             "prior": self.prior,
             "em_convergence": self.em_convergence,
+            "max_block_size": self.max_block_size,
             "params": {
                 col: {
                     "m": {str(k): v for k, v in p.m.items()},
@@ -534,6 +508,7 @@ class FellegiSunterModel:
             unique_id=state.get("unique_id", "unique_id"),
             prior=state.get("prior"),
             em_convergence=state.get("em_convergence", 0.01),
+            max_block_size=state.get("max_block_size"),
         )
         for col, p in state["params"].items():
             model.params[col].m = {int(k): v for k, v in p["m"].items()}
@@ -568,7 +543,6 @@ class FellegiSunterModel:
         pairs = candidate_pairs(
             df, self.blocking_rules, self.comparisons, self.unique_id,
             right_df=right_df, max_block_size=self.max_block_size,
-            block_cap_mode=self.block_cap_mode,
         )
         if any(c.tf_adjustment for c in self.comparisons):
             tf_base = df if right_df is None else df.unionByName(

@@ -69,6 +69,8 @@ __all__ = [
 _EDGES_SCHEMA = (
     "src_domain string, dst_domain string, n_links bigint, bucket int"
 )
+# the domain-takedown mask (delete_domains_from_edge_store writes it)
+_TOMBSTONES_SCHEMA = "domain string"
 
 # href="..." capture: scheme-qualified links only (relative links stay
 # on-site and carry no cross-domain authority). RE2-safe (no
@@ -1054,12 +1056,18 @@ def load_edges(spark, path: str, *, version: int | None = None) -> DataFrame:
     later never change what this reader aggregates; ``version``
     TIME-TRAVELS to that exact committed snapshot (e.g. the edge
     graph as of a crawl epoch, pre-takedown — within vacuum's
-    keep-window)."""
+    keep-window). The reads take the edge schema the store recorded
+    and the fixed tombstone schema, so opening the handle launches no
+    Spark job (a store whose meta has no ``edges_schema`` falls back
+    to inference)."""
     snap = M.read_manifest(path, version)
-    edges = M.read_table(spark, path, "edges", snap)
+    schema = snap["meta"].get("edges_schema")
+    edges = M.read_table(spark, path, "edges", snap, schema=schema)
     if edges is None:
-        edges = spark.createDataFrame([], snap["meta"]["edges_schema"])
-    tombs = M.read_table(spark, path, "tombstones", snap)
+        edges = spark.createDataFrame([], schema)
+    tombs = M.read_table(
+        spark, path, "tombstones", snap, schema=_TOMBSTONES_SCHEMA
+    )
     if tombs is not None:
         edges = edges.join(
             tombs.select(F.col("domain").alias("src_domain")),

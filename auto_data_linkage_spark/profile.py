@@ -177,9 +177,26 @@ def rule_block_stats(
 
     Output: (rule STRING, n_blocks LONG, avg_squared LONG).
     """
+    return _block_stats(
+        combo_counts, trim=trim, exact_percentiles=exact_percentiles
+    ).drop("total_squared")
+
+
+def _block_stats(
+    combo_counts: DataFrame,
+    *,
+    trim: bool = True,
+    exact_percentiles: bool = False,
+) -> DataFrame:
+    """:func:`rule_block_stats` plus each rule's UNTRIMMED
+    ``total_squared = Σ cnt²``, from the same aggregate.
+
+    Output: (rule STRING, n_blocks LONG, avg_squared LONG,
+    total_squared LONG).
+    """
     k = combo_counts.select(
         F.col("combo").alias("rule"), (F.col("cnt") * F.col("cnt")).alias("k")
-    )
+    ).withColumn("raw", F.col("k"))
     if trim:
         # reference keeps k strictly inside (p10, p90); anything at or
         # outside the bounds is replaced by the median (ARC.scala:36-40).
@@ -192,6 +209,7 @@ def rule_block_stats(
             pct = F.percentile_approx("k", F.array(F.lit(0.1), F.lit(0.5), F.lit(0.9)), 1000)
         k = k.withColumn("p", pct.over(w)).select(
             "rule",
+            "raw",
             F.when(
                 (F.col("k") > F.col("p")[0]) & (F.col("k") < F.col("p")[2]),
                 F.col("k"),
@@ -202,6 +220,7 @@ def rule_block_stats(
     return k.groupBy("rule").agg(
         F.count("*").alias("n_blocks"),
         F.floor(F.avg("k")).alias("avg_squared"),
+        F.sum("raw").alias("total_squared"),
     )
 
 

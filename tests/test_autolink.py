@@ -85,6 +85,11 @@ def test_information_gain_matches_reference_formula(spark):
     assert um.information_gain_power_ratio == pytest.approx(
         math.pow(expected[base_c], expected[base_u]), rel=1e-9
     )
+    # a caller-held base u (AutoLinker computes it once per search)
+    # scores identically
+    assert information_gain_power_ratio(
+        data, clusters, ["a", "b"], base_u=base_u
+    ) == um
 
 
 @pytest.mark.slow
@@ -126,9 +131,10 @@ def test_random_sampler_mode(spark, people):
 
 
 class TestAutoGuards:
-    """Round-15: AutoLinker is scale-safe by DEFAULT — the "auto" guards
-    resolve against n at auto_link time (SCALE.md "AutoLinker E2E at
-    150k rows" is the measured failure the defaults now prevent)."""
+    """AutoLinker is scale-safe by construction — one scale guard that
+    switches on once the rule estimate is sampled (n > 10k), decided
+    from n and comparison_size_limit at auto_link time (SCALE.md
+    "AutoLinker E2E at 150k rows" is the measured failure it prevents)."""
 
     def test_small_n_resolves_to_reference_parity(self):
         linker = AutoLinker(comparison_size_limit=100_000)
@@ -148,32 +154,21 @@ class TestAutoGuards:
         assert guard == 5_000_000
         assert cap == 2_237  # ceil(sqrt(5M)) — the 150k E2E's derived cap
 
-    def test_parity_forces_none_at_any_n(self):
-        linker = AutoLinker(comparison_size_limit=100_000, parity=True)
-        assert linker._resolve_guards(10_000_000) == (None, None)
+    def test_bad_string_rejected(self, people):
+        """The guard is not user-settable: the retired knobs (whatever
+        value, "auto" included) are unknown keyword arguments."""
+        from auto_data_linkage_spark.blocking import generate_blocking_rules
+        from auto_data_linkage_spark.model import candidate_pairs
 
-    def test_explicit_values_pass_through(self):
-        linker = AutoLinker(
-            comparison_size_limit=100_000,
-            max_block_size=123,
-            total_pairs_guard=456,
-        )
-        assert linker._resolve_guards(5) == (123, 456)
-        assert linker._resolve_guards(10_000_000) == (123, 456)
-
-    def test_explicit_none_passes_through(self):
-        linker = AutoLinker(
-            comparison_size_limit=100_000,
-            max_block_size=None,
-            total_pairs_guard=None,
-        )
-        assert linker._resolve_guards(10_000_000) == (None, None)
-
-    def test_bad_string_rejected(self):
-        with pytest.raises(ValueError, match="total_pairs_guard"):
-            AutoLinker(total_pairs_guard="yes")
-        with pytest.raises(ValueError, match="max_block_size"):
-            AutoLinker(max_block_size="cap")
+        for knob in (
+            "max_block_size", "block_cap_mode", "total_pairs_guard", "parity"
+        ):
+            with pytest.raises(TypeError, match=knob):
+                AutoLinker(**{knob: "auto"})
+        with pytest.raises(TypeError, match="total_pairs_guard"):
+            generate_blocking_rules(people, ["surname"], total_pairs_guard=1)
+        with pytest.raises(TypeError, match="block_cap_mode"):
+            candidate_pairs(people, [], [], block_cap_mode="trim")
 
     def test_default_run_records_resolved_guards(self, spark, people):
         linker = AutoLinker(

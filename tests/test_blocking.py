@@ -185,8 +185,9 @@ def test_or_rule_search_beam_overflow_returns_true_affordable_topk(spark):
 # ----------------------------------------- untrimmed total-pairs guard
 # The reference's estimator is a TRIMMED per-block average: hot-block
 # rules keep a small trimmed estimate while their true pair count
-# explodes (measured at 150k rows — SCALE.md "AutoLinker E2E"). The
-# total_pairs_guard gate drops them on the UNTRIMMED total.
+# explodes (measured at 150k rows — SCALE.md "AutoLinker E2E"). Once the
+# estimate is sampled, generate_blocking_rules also gates on the
+# UNTRIMMED total from the same count pass.
 
 
 def _skewed_df(spark):
@@ -204,99 +205,60 @@ def _skewed_df(spark):
     return spark.createDataFrame(rows, "unique_id long, hot string, pc string")
 
 
-def test_total_squared_lookup_is_untrimmed(spark):
-    from auto_data_linkage_spark.blocking import total_squared_lookup
+def test_count_pass_totals_are_untrimmed(spark):
+    from auto_data_linkage_spark.blocking import _lookups
 
     df = _skewed_df(spark)
-    totals = total_squared_lookup(
-        df, ["hot", "pc"], max_columns_per_and_rule=1
-    )
+    lookup, totals = _lookups(df, ["hot", "pc"], max_columns_per_and_rule=1)
+    assert lookup == count_lookup(df, ["hot", "pc"], max_columns_per_and_rule=1)
     # untrimmed: the two 60-row blocks dominate (2·3600 + 40·4 = 7360)
     assert totals[("hot",)] == 2 * 60 * 60 + 40 * 2 * 2
     assert totals[("pc",)] == 40 * 5 * 5  # 200 rows over 40 blocks of 5
 
 
 def test_total_pairs_guard_drops_hot_rule_trim_admits(spark):
+    """Sampled regime: the untrimmed gate evicts the hot rule the trimmed
+    estimate admits, and leaves the surviving rules' estimates and
+    order unchanged."""
+    df = _skewed_df(spark)
+    n, limit, sample_rows = 200, 3_000, 199  # sampled: n > sample_rows
+    got = generate_blocking_rules(
+        df, ["hot", "pc"],
+        comparison_size_limit=limit,
+        max_columns_per_and_rule=1,
+        max_rules_per_or_rule=2,
+        sample_rows=sample_rows,
+    )
+    # the trimmed-only selection on the same sample
+    sample = df.sample(fraction=sample_rows / n, seed=42)
+    lookup = count_lookup(sample, ["hot", "pc"], max_columns_per_and_rule=1)
+    scale = (n / sample_rows) ** 2
+    trimmed = sorted(
+        (
+            (arms, est)
+            for arms in ((("hot",),), (("pc",),), (("hot",), ("pc",)))
+            if (est := int(estimate_or_rule(arms, lookup) * scale)) < limit
+        ),
+        key=lambda x: (-x[1], x[0]),
+    )
+    assert (("hot",),) in [arms for arms, _ in trimmed]
+    assert [(r.arms, r.estimated_pairs) for r in got] == [
+        (arms, est) for arms, est in trimmed if ("hot",) not in arms
+    ]
+    assert [r.arms for r in got] == [(("pc",),)]
+
+
+def test_total_pairs_guard_default_is_reference_parity(spark):
+    """Below the estimation sample there is no gate: the hot rule the
+    trimmed estimate admits stays admitted, as in the reference."""
     df = _skewed_df(spark)
     kw = dict(
         comparison_size_limit=3_000,
         max_columns_per_and_rule=1,
         max_rules_per_or_rule=1,
-        sample_rows=None,
     )
-    # reference parity: the trimmed estimate (median-dominated by the
-    # 40 tail blocks) admits the hot rule under the 3k budget
-    base = generate_blocking_rules(df, ["hot", "pc"], **kw)
-    assert ("hot",) in {r.arms[0] for r in base}
-    # guarded: the untrimmed total (7,360 > 3,000) evicts it; the
-    # benign rule survives and its estimate/order are untouched
-    guarded = generate_blocking_rules(
-        df, ["hot", "pc"], total_pairs_guard=3_000, **kw
+    default = generate_blocking_rules(df, ["hot", "pc"], **kw)
+    assert default == generate_blocking_rules(
+        df, ["hot", "pc"], sample_rows=None, **kw
     )
-    arms = {r.arms[0] for r in guarded}
-    assert ("hot",) not in arms and ("pc",) in arms
-    pc_base = next(r for r in base if r.arms[0] == ("pc",))
-    pc_guarded = next(r for r in guarded if r.arms[0] == ("pc",))
-    assert pc_base.estimated_pairs == pc_guarded.estimated_pairs
-
-
-def test_total_pairs_guard_default_is_reference_parity(spark, people):
-    kw = dict(comparison_size_limit=10_000, sample_rows=None)
-    assert generate_blocking_rules(
-        people, ["surname", "postcode", "suburb"], **kw
-    ) == generate_blocking_rules(
-        people, ["surname", "postcode", "suburb"],
-        total_pairs_guard=None, **kw
-    )
-
-
-def test_autolinker_passes_guard_through(spark, people, monkeypatch):
-    from auto_data_linkage_spark import blocking as blocking_mod
-    from auto_data_linkage_spark.autolink import AutoLinker
-
-    seen = {}
-    real = blocking_mod.generate_blocking_rules
-
-    def spy(df, attrs, **kw):
-        seen["guard"] = kw.get("total_pairs_guard")
-        return real(df, attrs, **kw)
-
-    monkeypatch.setattr(blocking_mod, "generate_blocking_rules", spy)
-    linker = AutoLinker(
-        comparison_size_limit=10_000, max_evals=1,
-        total_pairs_guard=9_999_999, random_seed=1,
-    )
-    linker.auto_link(people.drop("unique_id"))
-    assert seen["guard"] == 9_999_999
-
-
-def test_generate_rules_warns_when_sampled_without_guard(spark):
-    """Round-15: the loud runtime signal for the known-biased regime —
-    n past the estimation sample with no untrimmed guard reproduces the
-    measured 150k stall (SCALE.md), so generate_blocking_rules warns."""
-    import warnings as _w
-
-    from tests.febrl_fixture import SCHEMA, make_people
-
-    big = spark.createDataFrame(make_people(120, 0.3, seed=9), SCHEMA)
-    cols = ["surname", "postcode"]
-    # force the sampled regime with a tiny sample_rows instead of 10k+
-    # real rows — the warning keys on n > sample_rows, not on 10k
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        generate_blocking_rules(
-            big, cols, comparison_size_limit=10_000, sample_rows=50
-        )
-    assert any("total_pairs_guard" in str(r.message) for r in rec)
-
-    # guard present → silent; unsampled → silent
-    with _w.catch_warnings(record=True) as rec2:
-        _w.simplefilter("always")
-        generate_blocking_rules(
-            big, cols, comparison_size_limit=10_000, sample_rows=50,
-            total_pairs_guard=10_000,
-        )
-        generate_blocking_rules(
-            big, cols, comparison_size_limit=10_000, sample_rows=None
-        )
-    assert not [r for r in rec2 if "total_pairs_guard" in str(r.message)]
+    assert {r.arms[0] for r in default} == {("hot",), ("pc",)}

@@ -160,21 +160,28 @@ def test_model_roundtrip_preserves_tf_flag(tmp_path):
     assert FellegiSunterModel.load(path).comparisons[0].tf_adjustment is True
 
 
-def test_candidate_pairs_max_block_size_drops_hot_key(spark):
-    # "smith" block has 4 rows (6 pairs); "jones" has 2 (1 pair). Cap 3
-    # excludes the hot block entirely, leaves the small one untouched.
-    rows = [(str(i), "smith", "2000") for i in range(1, 5)]
-    rows += [("8", "jones", "2000"), ("9", "jones", "2000")]
+def test_model_roundtrip_preserves_block_cap(spark, tmp_path):
+    """A guarded search's model (AutoLinker past 10k rows) predicts with
+    its block cap after save/load; JSON saved without the key loads
+    uncapped."""
+    import json
+
     df = spark.createDataFrame(
-        rows, "unique_id string, surname string, postcode string"
+        [(str(i), "smith") for i in range(4)], "unique_id string, surname string"
     )
-    comps = [Comparison("surname", "levenshtein", 2)]
-    rule = BlockingRule(("surname",))
-    full = candidate_pairs(df, [rule], comps)
-    assert full.count() == 7
-    capped = candidate_pairs(df, [rule], comps, max_block_size=3)
-    got = {(r["unique_id_l"], r["unique_id_r"]) for r in capped.collect()}
-    assert got == {("8", "9")}
+    model = FellegiSunterModel(
+        [Comparison("surname", "exact", 0)], [("surname",)], max_block_size=2
+    )
+    path = str(tmp_path / "m.json")
+    model.save(path)
+    loaded = FellegiSunterModel.load(path)
+    assert loaded.max_block_size == 2
+    assert loaded.predict(df).count() == model.predict(df).count() == 1
+    state = model.to_dict()
+    del state["max_block_size"]
+    with open(path, "w") as f:
+        json.dump(state, f)
+    assert FellegiSunterModel.load(path).max_block_size is None
 
 
 def test_candidate_pairs_max_block_size_link_mode(spark):
@@ -192,8 +199,9 @@ def test_candidate_pairs_max_block_size_link_mode(spark):
         left, [rule], comps, right_df=right, max_block_size=1
     )
     got = {(r["unique_id_l"], r["unique_id_r"]) for r in capped.collect()}
-    # smith exceeds the cap on the left side; only jones×jones survives
-    assert got == {("l3", "r2")}
+    # the left smith block (2 rows) is cut to the one row with the
+    # smallest xxhash64(id), l2; each side is capped on its own
+    assert got == {("l2", "r1"), ("l3", "r2")}
 
 
 def test_candidate_pairs_block_cap_trim_bounds_pairs(spark):
@@ -203,24 +211,21 @@ def test_candidate_pairs_block_cap_trim_bounds_pairs(spark):
     )
     comps = [Comparison("surname", "levenshtein", 2)]
     rule = BlockingRule(("surname",))
-    trimmed = candidate_pairs(
-        df, [rule], comps, max_block_size=3, block_cap_mode="trim"
-    )
+    trimmed = candidate_pairs(df, [rule], comps, max_block_size=3)
     # 6-row block trimmed to a deterministic 3-row subset -> C(3,2) pairs
     assert trimmed.count() == 3
-    again = candidate_pairs(
-        df, [rule], comps, max_block_size=3, block_cap_mode="trim"
-    )
+    again = candidate_pairs(df, [rule], comps, max_block_size=3)
     assert sorted(map(tuple, trimmed.collect())) == sorted(
         map(tuple, again.collect())
     )
 
 
 def test_block_cap_negation_sees_capped_prior_rule(spark):
-    # Rows 1,2 live in a hot surname block (4 rows > cap 3) AND share a
-    # small postcode block. The surname rule's cap drops them, so the
-    # postcode rule's cross-rule negation must NOT exclude the pair —
-    # negating the raw prior condition would lose it entirely.
+    # Rows 1..6 form a hot surname block (6 rows > cap 3); the cap keeps
+    # the three smallest xxhash64(id) — 1, 3, 4 — so the pair (1, 2) is
+    # lost to the surname rule. Rows 1, 2 also share a small postcode
+    # block, so the postcode rule's cross-rule negation must NOT exclude
+    # the pair — negating the raw prior condition would lose it entirely.
     rows = [(str(i), "smith", f"{2000 + i}") for i in range(3, 7)]
     rows += [("1", "smith", "9999"), ("2", "smith", "9999")]
     df = spark.createDataFrame(
@@ -228,14 +233,15 @@ def test_block_cap_negation_sees_capped_prior_rule(spark):
     )
     comps = [Comparison("surname", "levenshtein", 2)]
     rules = [BlockingRule(("surname",)), BlockingRule(("postcode",))]
-    # surname block now has 6 rows (> cap), postcode 9999 has 2 (<= cap)
     capped = candidate_pairs(df, rules, comps, max_block_size=3)
-    got = {(r["unique_id_l"], r["unique_id_r"]) for r in capped.collect()}
-    assert ("1", "2") in got
-    # and nothing from the hot surname block via the surname rule
-    assert all(
-        not (l in "3456" and r in "3456") for l, r in got
-    ), got
+    got = {
+        (r["unique_id_l"], r["unique_id_r"], r["match_key"])
+        for r in capped.collect()
+    }
+    assert got == {
+        ("1", "3", 0), ("1", "4", 0), ("3", "4", 0),  # capped surname block
+        ("1", "2", 1),  # recovered by the postcode rule
+    }
 
 
 def test_match_key_dedup_equals_dropduplicates(spark):

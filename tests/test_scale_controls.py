@@ -1,10 +1,9 @@
-"""Scale-control levers: per-block caps, hot-key salting, model
-persistence, bucketed/partitioned sinks."""
+"""Scale-control levers: lossless hot-key salting, model persistence,
+bucketed/partitioned sinks."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from auto_data_linkage_spark.blocking import cap_block_size, salt_hot_keys
 from auto_data_linkage_spark.compare import Comparison
 from auto_data_linkage_spark.model import FellegiSunterModel
 
@@ -13,32 +12,6 @@ from auto_data_linkage_spark.model import FellegiSunterModel
 def skewed(spark):
     rows = [(str(i), "hot" if i < 80 else f"cold{i}") for i in range(100)]
     return spark.createDataFrame(rows, "unique_id string, key string")
-
-
-def test_cap_block_size(spark, skewed):
-    capped = cap_block_size(skewed, ["key"], 10)
-    sizes = {r["key"]: r["count"] for r in capped.groupBy("key").count().collect()}
-    assert sizes["hot"] == 10
-    assert all(v == 1 for k, v in sizes.items() if k != "hot")
-    # deterministic selection
-    a = sorted(r["unique_id"] for r in cap_block_size(skewed, ["key"], 10).collect())
-    b = sorted(r["unique_id"] for r in cap_block_size(skewed, ["key"], 10).collect())
-    assert a == b
-
-
-def test_salt_hot_keys(spark, skewed):
-    salted = salt_hot_keys(skewed, ["key"], hot_threshold=20, salt_buckets=4)
-    hot = salted.where(F.col("key") == "hot")
-    n_salts = hot.select("__salt").distinct().count()
-    assert n_salts > 1  # hot key split
-    cold_salts = {
-        r["__salt"] for r in salted.where(F.col("key") != "hot").select("__salt").distinct().collect()
-    }
-    assert cold_salts == {0}  # cold keys untouched
-    max_bucket = (
-        salted.groupBy("key", "__salt").count().agg(F.max("count")).collect()[0][0]
-    )
-    assert max_bucket < 80  # the hot block is genuinely subdivided
 
 
 def test_model_save_load_roundtrip(spark, people, tmp_path):
@@ -120,7 +93,7 @@ def _unsalted_pairs(df, key="key", id_col="unique_id"):
 def test_salted_self_join_is_lossless(spark, skewed, hot_threshold):
     """Property (round-3 item 5): the replicated-salt join must produce
     EXACTLY the unsalted pair set — salting redistributes work, never
-    drops cross-salt pairs (unlike salt_hot_keys' estimation-only salt)."""
+    drops cross-salt pairs."""
     from auto_data_linkage_spark.blocking import salted_self_join_pairs
 
     got_df = salted_self_join_pairs(

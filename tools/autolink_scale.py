@@ -9,22 +9,18 @@ default, ~10x the prior probe), then scores the winning model's
 clusters against the planted entities. Prints ONE JSON line:
 rows, trials, wall seconds, and pairwise P/R/F1.
 
-As of round 15 the linker is constructed with CLASS DEFAULTS — the
-"auto" guards (untrimmed Σcnt² rule gate at comparison_size_limit +
-per-block cap ⌈√comparison_size_limit⌉, active because n > the 10k
-estimation sample) are what a user who types `AutoLinker(...)` gets.
-The measured reason they exist is in SCALE.md "AutoLinker E2E at
-150k rows": the reference-faithful rule estimator is a TRIMMED
-avg-k² heuristic scaled quadratically from a 10k sample, and at this
-scale it admits rules whose true pair count is orders of magnitude
-over the budget (the unguarded run pinned 8 tasks at >1000 s CPU
-each inside the gamma projection of hot blocks — the exact
-job-killer candidate_pairs' docstring names). `--uncapped` passes
-parity=True (the reference-faithful escape hatch) and reproduces
-that run.
+The linker is constructed with CLASS DEFAULTS. Past the 10k-row
+estimation sample the search switches on its one scale guard on its
+own: an untrimmed Σcnt² rule gate at comparison_size_limit and a
+per-block cap of ⌈√comparison_size_limit⌉ rows; the JSON reports both
+resolved values. SCALE.md "AutoLinker E2E at 150k rows" records why it
+exists: the reference rule estimator is a TRIMMED avg-k² heuristic
+scaled quadratically from a 10k sample, and at this scale it admits
+rules whose true pair count is orders of magnitude over the budget
+(an unguarded run pinned 8 tasks at >1000 s CPU each inside the gamma
+projection of hot blocks).
 
 Usage: python tools/autolink_scale.py [n_entities] [n_trials] [seed]
-       [--uncapped]
 (defaults 107000 / 3 / 42 -> ~150k rows with dup_fraction=0.4).
 """
 
@@ -44,8 +40,7 @@ from tests.febrl_fixture import SCHEMA, make_people
 
 
 def main():
-    argv = [a for a in sys.argv[1:] if a != "--uncapped"]
-    uncapped = "--uncapped" in sys.argv[1:]
+    argv = sys.argv[1:]
     n_entities = int(argv[0]) if len(argv) > 0 else 107_000
     n_trials = int(argv[1]) if len(argv) > 1 else 3
     seed = int(argv[2]) if len(argv) > 2 else 42
@@ -61,16 +56,14 @@ def main():
     # must fit comparison_size_limit; at ~150k rows the tightest single
     # attributes (date_of_birth ~20k values, postcode ~7.2k) estimate
     # at 1-3M pairs, so 5M keeps the same rule shapes the 15k probe had.
-    # Guards are the class DEFAULTS ("auto": untrimmed Σcnt² rule gate at
-    # the budget + per-block cap ⌈√budget⌉ = 2,237, active because
-    # n > the 10k estimation sample); --uncapped sets parity=True, the
-    # reference-faithful escape hatch that reproduces the measured stall.
+    # The scale guard resolves to a rule gate at the budget and a
+    # per-block cap of ⌈√budget⌉ = 2,237 rows, because n > the 10k
+    # estimation sample.
     linker = AutoLinker(
         comparison_size_limit=5_000_000,
         max_evals=n_trials,
         true_label="recid",
         random_seed=seed,
-        parity=uncapped,
     )
     t0 = time.time()
     linker.auto_link(people.drop("unique_id"))

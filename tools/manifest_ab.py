@@ -2,14 +2,19 @@
 
 Builds lexical (BM25) and ANN (IVF-PQ) indexes at the given scale
 factor, then times LOAD (handle open: one manifest JSON read +
-DataFrame plan) and PROBE (the full top-k query) separately, over R
+DataFrame plan) and PROBE (the full top-k query) separately over R
 repetitions, reporting the minimum (quiet-machine estimate) and
 median. Three store states are measured:
 
 - ``manifest``      — freshly built, 1 generation per partition;
 - ``manifest-frag`` — after 20 appends (21 generations per touched
                        partition — the streaming-sink worst case);
-- ``manifest-comp`` — the fragmented store after one compaction.
+- ``manifest-comp`` — a copy of the fragmented store after one
+                       compaction.
+
+All states exist side by side, and each repetition times every state
+once, in an order rotated by one from the previous repetition, so
+warm-up and ordering bias no state.
 
 Usage: python tools/manifest_ab.py [sf_dir] [reps]
 Prints one JSON line.
@@ -35,13 +40,29 @@ from auto_data_linkage_spark.operators.retrieval import query_terms_from_docs
 from auto_data_linkage_spark.session import get_spark
 
 
-def timed(fn, reps):
-    outs = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        outs.append(time.perf_counter() - t0)
-    return {"min": round(min(outs), 4), "median": round(statistics.median(outs), 4)}
+def measure(states: dict, reps: int) -> dict:
+    """``{state: (load_fn, probe_fn)}`` → ``{state: {"load": {min,
+    median}, "probe": {min, median}}}``; repetition r visits the states
+    starting at the r-th, wrapping around."""
+    names = list(states)
+    secs = {name: {"load": [], "probe": []} for name in names}
+    for r in range(reps):
+        k = r % len(names)
+        for name in names[k:] + names[:k]:
+            for kind, fn in zip(("load", "probe"), states[name]):
+                t0 = time.perf_counter()
+                fn()
+                secs[name][kind].append(time.perf_counter() - t0)
+    return {
+        name: {
+            kind: {
+                "min": round(min(v), 4),
+                "median": round(statistics.median(v), 4),
+            }
+            for kind, v in by_kind.items()
+        }
+        for name, by_kind in secs.items()
+    }
 
 
 def main() -> None:
@@ -66,7 +87,7 @@ def main() -> None:
     qvecs = emb.orderBy("vec_id").limit(50).localCheckpoint(eager=True)
 
     work = tempfile.mkdtemp(prefix="manifest_ab_")
-    out: dict = {"sf_dir": sf_dir, "reps": reps, "lex": {}, "ann": {}}
+    out: dict = {"sf_dir": sf_dir, "reps": reps}
     try:
         # ------------------------------------------------------- lexical
         head = docs.where(F.col("doc_id") % 21 == 0)
@@ -88,16 +109,20 @@ def main() -> None:
 
             return run
 
-        for name, root in (("manifest", fresh), ("manifest-frag", frag)):
-            out["lex"][name] = {
-                "load": timed(lex_load(root), reps),
-                "probe": timed(lex_probe(root), reps),
-            }
-        L.compact_lex_index(spark, frag, max_files_per_bucket=1)
-        out["lex"]["manifest-comp"] = {
-            "load": timed(lex_load(frag), reps),
-            "probe": timed(lex_probe(frag), reps),
-        }
+        comp = os.path.join(work, "lex_comp")
+        shutil.copytree(frag, comp)
+        L.compact_lex_index(spark, comp, max_files_per_bucket=1)
+        out["lex"] = measure(
+            {
+                name: (lex_load(root), lex_probe(root))
+                for name, root in (
+                    ("manifest", fresh),
+                    ("manifest-frag", frag),
+                    ("manifest-comp", comp),
+                )
+            },
+            reps,
+        )
 
         # ----------------------------------------------------------- ann
         afresh = os.path.join(work, "ann_manifest")
@@ -118,16 +143,20 @@ def main() -> None:
 
             return run
 
-        for name, root in (("manifest", afresh), ("manifest-frag", afrag)):
-            out["ann"][name] = {
-                "load": timed(ann_load(root), reps),
-                "probe": timed(ann_probe(root), reps),
-            }
-        A.compact_ann_index(spark, afrag, max_files_per_cell=1)
-        out["ann"]["manifest-comp"] = {
-            "load": timed(ann_load(afrag), reps),
-            "probe": timed(ann_probe(afrag), reps),
-        }
+        acomp = os.path.join(work, "ann_comp")
+        shutil.copytree(afrag, acomp)
+        A.compact_ann_index(spark, acomp, max_files_per_cell=1)
+        out["ann"] = measure(
+            {
+                name: (ann_load(root), ann_probe(root))
+                for name, root in (
+                    ("manifest", afresh),
+                    ("manifest-frag", afrag),
+                    ("manifest-comp", acomp),
+                )
+            },
+            reps,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(out))
