@@ -224,10 +224,10 @@ class AutoLinker:
             )
 
         # one job materializes the cache and yields every scalar the
-        # search needs: n for the scale guard, the prior's frame size
-        # (the left table in link mode), and the information-gain log
-        # base u — the max distinct count of any attribute column
-        # (autolinker.py:596-602), constant across trials
+        # search needs: n for the scale guard and each trial's u sample,
+        # the prior's frame size (the left table in link mode), and the
+        # information-gain log base u — the max distinct count of any
+        # attribute column (autolinker.py:596-602), constant across trials
         n, n_left, *distinct = df.agg(
             F.count("*"),
             F.count(F.when(F.col("__src") == "l", 1)) if link_mode else F.lit(0),
@@ -274,7 +274,7 @@ class AutoLinker:
             params = sampler.suggest()
             comps, active = self._params_to_comparisons(params, attrs)
             rule = rules[params["rule"]]
-            trial = self._run_trial(df, attrs, comps, rule, training_rule)
+            trial = self._run_trial(df, n, attrs, comps, rule, training_rule)
             sampler.observe(active, trial.score)
             self.trials.append(trial)
             if trial.score > best_score:
@@ -295,6 +295,7 @@ class AutoLinker:
     def _run_trial(
         self,
         df: DataFrame,
+        n: int,
         attrs: list[str],
         comps: list[Comparison],
         rule: blocking_mod.RuleEstimate,
@@ -307,7 +308,7 @@ class AutoLinker:
             max_block_size=self.resolved_max_block_size,
             prior=self._prior,
         )
-        model.estimate_u(df, target_pairs=100_000, seed=self.random_seed)
+        model.estimate_u(df, target_pairs=100_000, seed=self.random_seed, n=n)
         if training_rule is not None:
             for arm in training_rule.arms:
                 model.estimate_m_em(df, arm)

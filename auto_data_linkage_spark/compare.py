@@ -10,24 +10,22 @@ Spark-first mapping:
 - ``levenshtein`` — built-in ``F.levenshtein`` (JVM, codegen'd)
 - ``jaccard``     — token/char-ngram set Jaccard via ``array_intersect`` /
   ``array_union`` on split tokens — pure built-ins, no UDF
-- ``jaro_winkler``— no Spark built-in; Arrow-batched pandas UDF
-  (rapidfuzz if importable, pure-Python fallback)
+- ``jaro_winkler``— no Spark built-in; one SQL expression of built-ins
+  (``aggregate`` over ``locate``, ``zip_with``), no UDF
 
 Each comparison renders to a ``when()`` ladder producing an integer gamma:
 ``-1`` null on either side, ``2`` exact, ``1`` within threshold, ``0`` else.
 The ladder is a narrow projection over the candidate-pair DataFrame — it
-runs inside the same whole-stage-codegen span as the join that produced the
-pairs (except the pandas-UDF jaro-winkler, which is the one Arrow hop).
+runs in the executor JVM with the join that produced the pairs; no
+comparison starts a Python worker.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 NULL_LEVEL = -1
 EXACT_LEVEL = 2
@@ -35,81 +33,65 @@ FUZZY_LEVEL = 1
 ELSE_LEVEL = 0
 N_LEVELS = 3  # gamma in {0, 1, 2}; -1 excluded from estimation
 
-try:  # optional fast path; not in the base image
-    from rapidfuzz.distance import JaroWinkler as _RF_JW  # type: ignore
 
-    def _jw_one(s1: str, s2: str) -> float:
-        return _RF_JW.similarity(s1, s2)
-
-except Exception:  # pragma: no cover - exercised when rapidfuzz is absent
-
-    def _jw_one(s1: str, s2: str) -> float:
-        return _jaro_winkler_py(s1, s2)
+def _let(name: str, value: str, body: str) -> str:
+    """SQL binding ``name`` to ``value``, evaluated once, in ``body``."""
+    return f"transform(array({value}), {name} -> {body})[0]"
 
 
-def _jaro_py(s1: str, s2: str) -> float:
-    """Jaro similarity, standard definition (public algorithm)."""
-    len1, len2 = len(s1), len(s2)
-    if len1 == 0 and len2 == 0:
-        return 1.0
-    if len1 == 0 or len2 == 0:
-        return 0.0
-    match_window = max(max(len1, len2) // 2 - 1, 0)
-    s1_matched = [False] * len1
-    s2_matched = [False] * len2
-    matches = 0
-    for i, c1 in enumerate(s1):
-        lo = max(0, i - match_window)
-        hi = min(len2, i + match_window + 1)
-        for j in range(lo, hi):
-            if not s2_matched[j] and s2[j] == c1:
-                s1_matched[i] = True
-                s2_matched[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    transpositions = 0
-    j = 0
-    for i in range(len1):
-        if s1_matched[i]:
-            while not s2_matched[j]:
-                j += 1
-            if s1[i] != s2[j]:
-                transpositions += 1
-            j += 1
-    transpositions //= 2
-    return (
-        matches / len1 + matches / len2 + (matches - transpositions) / matches
-    ) / 3.0
+# Jaro–Winkler as one Spark SQL expression over the placeholders {l} and
+# {r}: higher-order built-ins only, so it runs in the executor JVM with
+# no Python worker. DuckDB jaro_winkler_similarity semantics (boost
+# threshold 0.7, prefix weight 0.1, at most 4 prefix characters). The
+# ``jw_`` prefix keeps lambda variables from shadowing columns.
+#
+# Each character c of {l} in turn takes the first unmatched c of {r} in
+# [i - w, i + w], w = max length div 2 - 1 (the cast keeps INT math).
+# The windows only move right, so one character's matches land at
+# increasing positions: the first unmatched c in the window is the first
+# c at or after the window start and one past c's latest match. The
+# state holds matched positions and characters newest first, so instr()
+# finds that latest match. jw_m: the matches in {l} order.
+_JW_MATCHES = _let(
+    "jw_w",
+    "greatest(CAST(greatest(length({l}), length({r})) div 2 AS INT) - 1, 0)",
+    """reverse(aggregate(sequence(1, length({l})),
+    named_struct('m', CAST(array() AS ARRAY<INT>), 's', ''),
+    (jw_acc, jw_i) -> """ + _let("jw_c", "substr({l}, jw_i, 1)", _let(
+        "jw_j",
+        """locate(jw_c, {r}, greatest(jw_i - jw_w, 1, 1 + IF(instr(jw_acc.s, jw_c) > 0,
+            element_at(jw_acc.m, instr(jw_acc.s, jw_c)), 0)))""",
+        """IF(jw_j > 0 AND jw_j <= jw_i + jw_w, named_struct(
+            'm', array_prepend(jw_acc.m, jw_j), 's', concat(jw_c, jw_acc.s)), jw_acc)""",
+    )) + ").m)",
+)
+# Transpositions: half the k where the k-th match in {l} order and in
+# {r} order differ. Double literals (a bare 0.7 is DECIMAL) keep each
+# step an IEEE double operation, in the textbook formula's order.
+_JW_JARO = """(size(jw_m) / length({l}) + size(jw_m) / length({r}) + (size(jw_m)
+    - size(filter(zip_with(jw_m, array_sort(jw_m),
+        (jw_a, jw_b) -> substr({r}, jw_a, 1) != substr({r}, jw_b, 1)), jw_t -> jw_t)) div 2
+    ) / size(jw_m)) / 3.0D"""
+_JW_BOOSTED = """CASE WHEN jw_s <= 0.7D THEN jw_s ELSE jw_s
+    + size(filter(sequence(1, least(4, length({l}), length({r}))),
+        jw_k -> substr({l}, 1, jw_k) = substr({r}, 1, jw_k))) * 0.1D * (1.0D - jw_s) END"""
+_JARO_WINKLER_SQL = f"""CASE WHEN {{l}} IS NULL OR {{r}} IS NULL THEN CAST(NULL AS DOUBLE)
+    WHEN {{l}} = {{r}} THEN 1.0D WHEN length({{l}}) = 0 OR length({{r}}) = 0 THEN 0.0D
+    ELSE {_let("jw_m", _JW_MATCHES, "CASE WHEN size(jw_m) = 0 THEN 0.0D ELSE "
+               + _let("jw_s", _JW_JARO, _JW_BOOSTED) + " END")} END"""
 
 
-def _jaro_winkler_py(
-    s1: str, s2: str, prefix_weight: float = 0.1, boost_threshold: float = 0.7
-) -> float:
-    """Jaro–Winkler with the common 0.7 boost threshold and max prefix 4
-    (matches DuckDB's ``jaro_winkler_similarity`` semantics)."""
-    jaro = _jaro_py(s1, s2)
-    if jaro <= boost_threshold:
-        return jaro
-    prefix = 0
-    for c1, c2 in zip(s1[:4], s2[:4]):
-        if c1 != c2:
-            break
-        prefix += 1
-    return jaro + prefix * prefix_weight * (1.0 - jaro)
+def jaro_winkler_sql(left: str, right: str) -> str:
+    """Jaro–Winkler similarity of two SQL string expressions as SQL text
+    (NULL if either is NULL); ``sqlext`` registers it as arc_jaro_winkler."""
+    return _JARO_WINKLER_SQL.format(l=left, r=right)
 
 
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(left: pd.Series, right: pd.Series) -> pd.Series:
-    """Arrow-batched Jaro–Winkler similarity. The inner loop is per-row
-    Python (vectorizing JW in numpy doesn't pay off for short strings) but
-    batches transfer via Arrow, not per-row pickling."""
-    out = [
-        None if (a is None or b is None) else _jw_one(a, b)
-        for a, b in zip(left, right)
-    ]
-    return pd.Series(out, dtype="float64")
+def jaro_winkler(left: str, right: str) -> Column:
+    """Jaro–Winkler similarity of the string columns named ``left`` and
+    ``right`` (``alias.column`` allowed, as for ``F.col``)."""
+    quoted = [".".join(f"`{p}`" for p in c.split(".")) for c in (left, right)]
+    return F.expr(jaro_winkler_sql(*quoted))
 
 
 def token_jaccard(left: Column, right: Column) -> Column:
@@ -228,25 +210,26 @@ class Comparison:
     def gamma_name(self) -> str:
         return f"gamma_{self.column}"
 
-    def fuzzy_predicate(self, left: Column, right: Column) -> Column | None:
+    def fuzzy_predicate(self, left: str, right: str) -> Column | None:
+        """Within-threshold test on the named columns; None for exact."""
         if self.method == "levenshtein":
             return F.levenshtein(left, right) <= int(self.threshold)
         if self.method == "jaccard":
-            return token_jaccard(left, right) >= float(self.threshold)
+            return token_jaccard(F.col(left), F.col(right)) >= float(self.threshold)
         if self.method == "jaro_winkler":
-            return jaro_winkler_udf(left, right) >= float(self.threshold)
+            return jaro_winkler(left, right) >= float(self.threshold)
         if self.method == "exact":
             return None
         raise ValueError(f"unknown comparison method {self.method!r}")
 
     def gamma_expr(self, left_suffix: str = "_l", right_suffix: str = "_r") -> Column:
         """``when()`` ladder producing the gamma level for this column."""
-        left = F.col(f"{self.column}{left_suffix}")
-        right = F.col(f"{self.column}{right_suffix}")
+        lname, rname = f"{self.column}{left_suffix}", f"{self.column}{right_suffix}"
+        left, right = F.col(lname), F.col(rname)
         ladder = F.when(left.isNull() | right.isNull(), F.lit(NULL_LEVEL)).when(
             left == right, F.lit(EXACT_LEVEL)
         )
-        fuzzy = self.fuzzy_predicate(left, right)
+        fuzzy = self.fuzzy_predicate(lname, rname)
         if fuzzy is not None:
             ladder = ladder.when(fuzzy, F.lit(FUZZY_LEVEL))
         return ladder.otherwise(F.lit(ELSE_LEVEL)).alias(self.gamma_name)

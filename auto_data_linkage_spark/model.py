@@ -243,7 +243,8 @@ class FellegiSunterModel:
 
     # ------------------------------------------------------------------ u
     def estimate_u(
-        self, df: DataFrame, target_pairs: int = 1_000_000, seed: int = 42
+        self, df: DataFrame, target_pairs: int = 1_000_000, seed: int = 42,
+        n: int | None = None,
     ) -> None:
         """u-estimation by random pair sampling (L3; Splink
         ``estimate_u_using_random_sampling`` semantics): sample rows so that
@@ -253,8 +254,10 @@ class FellegiSunterModel:
 
         One shuffle (the sample self-join is a cross join on a ~√target
         sample — executed as a broadcast nested loop on a few thousand rows).
+        Pass ``n``, ``df``'s row count, to save the job that counts it.
         """
-        n = df.count()
+        if n is None:
+            n = df.count()
         cols = sorted({c.column for c in self.comparisons})
         sample_rows = min(n, max(int(math.sqrt(2.0 * target_pairs)) + 1, 10))
         frac = min(1.0, sample_rows / max(n, 1))

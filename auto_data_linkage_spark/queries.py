@@ -760,8 +760,8 @@ def jaccard_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# §2.9 — jaro-winkler (pandas UDF vs DuckDB's built-in — same algorithm,
-# 0.7 boost threshold, max prefix 4)
+# §2.9 — jaro-winkler (built-in-expression kernel vs DuckDB's built-in —
+# same algorithm, 0.7 boost threshold, max prefix 4)
 # --------------------------------------------------------------------------
 @register(
     "jaro_winkler_pairs",
@@ -771,10 +771,10 @@ def jaccard_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier l JOIN supplier r
       ON l.s_nationkey = r.s_nationkey AND l.s_suppkey < r.s_suppkey
     """,
-    survey="§2.9 jaro_winkler (pandas UDF)",
+    survey="§2.9 jaro_winkler (built-in-expression kernel)",
 )
 def jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.compare import jaro_winkler_udf
+    from auto_data_linkage_spark.compare import jaro_winkler
 
     # Same blocking rationale as levenshtein_pairs: equi-key hash join,
     # never an n²/2 BNL cross join.
@@ -788,9 +788,7 @@ def jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("l.s_suppkey").alias("suppkey_l"),
         F.col("r.s_suppkey").alias("suppkey_r"),
-        F.round(
-            jaro_winkler_udf(F.col("l.s_name"), F.col("r.s_name")), 6
-        ).alias("jw"),
+        F.round(jaro_winkler("l.s_name", "r.s_name"), 6).alias("jw"),
     )
 
 
@@ -799,7 +797,7 @@ def jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text runs on both engines, with only the function NAMES swapped —
 # Spark uses the registered arc_* functions (sqlext.enable_arc), DuckDB
 # its native equivalents. Certifies the registration path end-to-end:
-# pandas-UDF jaro-winkler, declarative-SQL-UDF token jaccard + md5 hash.
+# the declarative SQL UDFs jaro-winkler, token jaccard and md5 hash.
 # --------------------------------------------------------------------------
 _SQL_UDF_PAIRS_TEMPLATE = """
     SELECT l.p_partkey AS partkey_l, r.p_partkey AS partkey_r,
@@ -1746,8 +1744,8 @@ _DEPRIORITIZED = (
     #                     cheap in-window ivfpq_topk keeps the driver
     #                     slot while tests/test_oracle_window.py runs
     #                     this one through the identical gate
-    "jaro_winkler_pairs",  # sql_registered_udfs exercises the same pandas
-    #                        UDF through the registered-SQL surface
+    "jaro_winkler_pairs",  # sql_registered_udfs exercises the same
+    #                        kernel through the registered-SQL surface
     "sql_entropy_probe",  # A3 front row is `entropy`; this certifies the
     #                       registration path via tools/check_oracle.py
     "entropy_auto_base",

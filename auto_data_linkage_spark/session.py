@@ -149,26 +149,26 @@ def local_rows_df(spark: SparkSession, rows, schema):
     EVERY consumer stage of that relation then launches Python workers
     just to unpickle a handful of rows — measured 0.3–1.7 s per
     materialization for a 50-row table on local[32], paid again whenever
-    the worker pool has gone cold. Converting driver-side to Arrow
-    batches (the pandas path) keeps execution JVM-only: same rows, same
-    order, same schema. ``schema`` is a DDL string (columns mapped
-    positionally) or a list of column names (types inferred, same rules
-    as the pickle path: int→bigint, float→double, str→string, list of
-    float→array<double>).
-
-    Empty inputs fall back to ``createDataFrame([], schema)`` — there is
-    nothing to unpickle, so the pickle path costs one empty task.
+    the worker pool has gone cold. Converting the rows driver-side to an
+    Arrow table keeps execution JVM-only: same rows, order and schema.
+    ``schema`` is a DDL string (columns mapped positionally) or a list of
+    column names (types inferred: int→bigint, float→double, str→string,
+    list of float→array<double>, all-None→void). Rows Arrow cannot
+    convert raise: no silent fallback to the pickle path. Empty inputs
+    use ``createDataFrame([], schema)``, which costs one empty task.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
 
     rows = list(rows)
     if not rows:
         return spark.createDataFrame([], schema)
-    if isinstance(schema, (list, tuple)):
-        pdf = pd.DataFrame(rows, columns=list(schema), dtype=object)
-        return spark.createDataFrame(pdf)
-    pdf = pd.DataFrame(rows, dtype=object)
-    return spark.createDataFrame(pdf, schema)
+    names = (
+        list(schema) if isinstance(schema, (list, tuple))
+        else DataType.fromDDL(schema).names
+    )
+    table = pa.table([pa.array(col) for col in zip(*rows)], names=names)
+    return spark.createDataFrame(table, schema)
 
 
 TPCH_TABLES = (

@@ -8,10 +8,9 @@ Spark-first design: everything expressible as an expression is
 registered as a **declarative SQL UDF** (``CREATE FUNCTION … RETURN
 <expr>``) — the body inlines into the caller's plan, stays inside
 Catalyst/WholeStageCodegen, and costs nothing over writing the
-expression by hand. Only the two genuinely procedural helpers use
-Python: Jaro–Winkler (Arrow-batched scalar pandas UDF, compare.py) and
-the entropy aggregate (grouped-agg pandas UDF). Registration is
-per-session and idempotent.
+expression by hand, Jaro–Winkler included (compare.jaro_winkler_sql).
+Only the entropy aggregate uses Python (a grouped-agg pandas UDF).
+Registration is per-session and idempotent.
 """
 
 # NOTE: no `from __future__ import annotations` here — postponed (string)
@@ -19,12 +18,17 @@ per-session and idempotent.
 # aggregate defined inside enable_arc (UNSUPPORTED_SIGNATURE).
 from pyspark.sql import SparkSession
 
+from auto_data_linkage_spark.compare import jaro_winkler_sql
+
 # SQL UDF bodies. `\\s+` survives the f-string as the SQL regex literal.
 # Tokenization mirrors compare.token_jaccard EXACTLY (no lowercasing, no
 # empty-token filter) so the registered function is a drop-in twin.
 _TOKENS = r"array_distinct(split({c}, '\\s+'))"
 
 _SQL_FUNCTIONS: dict[str, str] = {
+    # Jaro–Winkler — twin of compare.jaro_winkler (the same SQL body)
+    "arc_jaro_winkler": "(l STRING, r STRING) RETURNS DOUBLE RETURN "
+    + jaro_winkler_sql("l", "r"),
     # token-set Jaccard — twin of compare.token_jaccard
     "arc_token_jaccard": f"""
         (l STRING, r STRING) RETURNS DOUBLE RETURN
@@ -67,14 +71,14 @@ def enable_arc(spark: SparkSession) -> None:
     """Register the arc_* SQL surface on ``spark``: after this call,
     ``spark.sql`` text can use
 
-    - ``arc_jaro_winkler(l, r)`` — Jaro–Winkler similarity (Arrow pandas
-      UDF; DuckDB ``jaro_winkler_similarity`` semantics),
     - ``arc_entropy(col)`` — grouped-agg Shannon entropy in the
       reference's base-0/auto mode (log base = the group's distinct
       count, so values land in [0, 1]; singleton/empty groups → 0),
-    - ``arc_token_jaccard(l, r)`` / ``arc_ngram_jaccard(l, r, n)`` /
-      ``arc_md5_hash64(s, seed)`` — declarative SQL UDFs that inline
-      into the caller's plan (no Python, no codegen break).
+    - ``arc_jaro_winkler(l, r)`` (DuckDB ``jaro_winkler_similarity``
+      semantics) / ``arc_token_jaccard(l, r)`` /
+      ``arc_ngram_jaccard(l, r, n)`` / ``arc_md5_hash64(s, seed)`` —
+      declarative SQL UDFs that inline into the caller's plan (no
+      Python).
 
     Temporary functions are session-scoped; on a shared cluster register
     once per session (idempotent — CREATE OR REPLACE).
@@ -82,10 +86,6 @@ def enable_arc(spark: SparkSession) -> None:
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
-
-    from auto_data_linkage_spark.compare import jaro_winkler_udf
-
-    spark.udf.register("arc_jaro_winkler", jaro_winkler_udf)
 
     # arc_entropy is an Arrow-batched grouped-agg pandas UDF — the right
     # tool for INTERACTIVE SQL text, but each group's values ship to

@@ -1,46 +1,115 @@
+import random
+
 import duckdb
 import pytest
+from jw_reference import jaro_winkler as reference_jw
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.compare import (
     Comparison,
-    _jaro_winkler_py,
-    jaro_winkler_udf,
+    jaro_winkler,
     ngram_jaccard,
     token_jaccard,
 )
+from auto_data_linkage_spark.session import local_rows_df
+
+
+def _kernel(spark, pairs):
+    """compare.jaro_winkler over ``pairs`` in one DataFrame, in order."""
+    df = local_rows_df(
+        spark, [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i long, a string, b string",
+    )
+    rows = df.select("i", jaro_winkler("a", "b").alias("jw")).collect()
+    return [r.jw for r in sorted(rows, key=lambda r: r.i)]
+
+
+def _seeded_pairs(n_each: int = 1000, seed: int = 20240) -> list:
+    """Pairs covering empty, single-character, equal, long (over 20
+    characters), prefix-sharing and non-ASCII strings, plus near-miss
+    typo pairs that reach the Winkler boost."""
+    rnd = random.Random(seed)
+    alphabets = ("ab", "abcdef", "abcdefghijklmnopqrstuvwxyz", "aeéüß漢字😀")
+
+    def word(lo, hi, alpha=None):
+        alpha = alpha or rnd.choice(alphabets)
+        return "".join(rnd.choice(alpha) for _ in range(rnd.randint(lo, hi)))
+
+    def typo(s):
+        if not s:
+            return word(1, 2)
+        i = rnd.randrange(len(s))
+        op = rnd.randrange(4)
+        if op == 0 and len(s) > 1:  # transpose
+            i = min(i, len(s) - 2)
+            return s[:i] + s[i + 1] + s[i] + s[i + 2:]
+        if op == 1:  # delete
+            return s[:i] + s[i + 1:]
+        if op == 2:  # insert
+            return s[:i] + rnd.choice("xyzé") + s[i:]
+        return s[:i] + rnd.choice("xyzé") + s[i + 1:]  # substitute
+
+    pairs = []
+    for _ in range(n_each):
+        pairs.append((word(0, 12), word(0, 12)))  # random, empties included
+        pairs.append((word(1, 1, "abc"), word(1, 1, "abc")))  # single chars
+        s = word(0, 30)
+        pairs.append((s, s))  # equal
+        pairs.append((word(21, 40), word(21, 40)))  # long
+        p = word(1, 6)
+        pairs.append((p + word(0, 10), p + word(0, 10)))  # shared prefix
+        s = word(3, 25)
+        pairs.append((s, typo(s)))  # near miss
+    return pairs
 
 
 def test_jaro_winkler_pure_python_known_values():
     # classic textbook values
-    assert _jaro_winkler_py("MARTHA", "MARHTA") == pytest.approx(0.9611, abs=1e-4)
-    assert _jaro_winkler_py("DWAYNE", "DUANE") == pytest.approx(0.84, abs=1e-2)
-    assert _jaro_winkler_py("abc", "abc") == 1.0
-    assert _jaro_winkler_py("abc", "xyz") == 0.0
-    assert _jaro_winkler_py("", "") == 1.0
+    assert reference_jw("MARTHA", "MARHTA") == pytest.approx(0.9611, abs=1e-4)
+    assert reference_jw("DWAYNE", "DUANE") == pytest.approx(0.84, abs=1e-2)
+    assert reference_jw("abc", "abc") == 1.0
+    assert reference_jw("abc", "xyz") == 0.0
+    assert reference_jw("", "") == 1.0
 
 
-def test_jaro_winkler_matches_duckdb():
-    """DuckDB ships jaro_winkler_similarity — cross-validate our UDF against
-    it on a spread of realistic strings (same 0.7 boost threshold)."""
+def test_jaro_winkler_kernel_equals_reference(spark):
+    """The JVM kernel equals the pure-Python reference bit for bit."""
+    pairs = _seeded_pairs()
+    assert len(pairs) >= 5000
+    assert any(a == "" for a, _ in pairs) and any(len(a) > 20 for a, _ in pairs)
+    assert any(ord(c) > 0xFFFF for a, _ in pairs for c in a)
+    got = _kernel(spark, pairs)
+    bad = [
+        (a, b, g, reference_jw(a, b))
+        for (a, b), g in zip(pairs, got)
+        if g != reference_jw(a, b)
+    ]
+    assert not bad, bad[:10]
+    assert sum(0.7 < g < 1.0 for g in got) > 500  # the boost branch ran
+
+
+def test_jaro_winkler_matches_duckdb(spark):
+    """DuckDB ships jaro_winkler_similarity — cross-validate the kernel
+    against it on a spread of realistic strings (same 0.7 boost
+    threshold)."""
     pairs = [
         ("martha", "marhta"), ("dwayne", "duane"), ("smith", "smyth"),
         ("crate", "trace"), ("lachlan", "lachlam"), ("", "abc"),
         ("jellyfish", "smellyfish"), ("a", "a"), ("ab", "ba"),
     ]
     con = duckdb.connect()
-    for a, b in pairs:
+    for (a, b), got in zip(pairs, _kernel(spark, pairs)):
         expected = con.execute(
             "select jaro_winkler_similarity(?, ?)", [a, b]
         ).fetchone()[0]
-        assert _jaro_winkler_py(a, b) == pytest.approx(expected, abs=1e-9), (a, b)
+        assert got == pytest.approx(expected, abs=1e-9), (a, b)
 
 
-def test_jaro_winkler_udf(spark):
+def test_jaro_winkler_kernel_nulls(spark):
     df = spark.createDataFrame(
         [("martha", "marhta"), (None, "x")], "a string, b string"
     )
-    rows = df.select(jaro_winkler_udf("a", "b").alias("jw")).collect()
+    rows = df.select(jaro_winkler("a", "b").alias("jw")).collect()
     assert rows[0]["jw"] == pytest.approx(0.9611, abs=1e-4)
     assert rows[1]["jw"] is None
 

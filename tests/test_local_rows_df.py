@@ -60,3 +60,22 @@ def test_no_python_eval_in_plan(spark):
 @pytest.mark.parametrize("n", [1, 7])
 def test_singleton_and_small(spark, n):
     _same(spark, [(i,) for i in range(n)], "k long")
+
+
+def test_all_none_column_stays_on_arrow(spark):
+    """An all-None column takes its type from the DDL schema and the rows
+    still arrive as Arrow batches (a local scan, no Python RDD)."""
+    rows = [(1, None), (2, None)]
+    _same(spark, rows, "k long, v string")
+    df = local_rows_df(spark, rows, "k long, v string")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "PythonRDD" not in plan
+
+
+def test_unconvertible_rows_raise(spark):
+    """No silent fallback to the pickle path: a column Arrow cannot
+    type raises."""
+    import pyarrow as pa
+
+    with pytest.raises(pa.ArrowException):
+        local_rows_df(spark, [(1,), ("x",)], ["c"])

@@ -165,12 +165,44 @@ def test_salted_self_join_no_cartesian_bounded_exchanges(spark, sf_dir):
 
 
 def test_sql_udf_query_no_python_eval(spark, sf_dir):
-    """sql_registered_udfs' declarative SQL UDF columns must inline; the
-    only Python in the plan is the single Arrow-batched jaro-winkler."""
+    """sql_registered_udfs' declarative SQL UDF columns, jaro-winkler
+    included, must inline: no Python eval in the plan."""
     df = entry_mod.queries()["sql_registered_udfs"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") <= 1
+    assert plan.count("ArrowEvalPython") == 0
     assert "BatchEvalPython" not in plan  # never row-at-a-time
+
+
+def test_jaro_winkler_linkage_plans_have_no_python_eval(spark, people, monkeypatch):
+    """With a jaro_winkler comparison, neither FellegiSunterModel.predict
+    nor estimate_u's pair histogram starts a Python worker."""
+    from auto_data_linkage_spark.cleaning import null_sentinel
+    from auto_data_linkage_spark.compare import Comparison
+    from auto_data_linkage_spark.model import FellegiSunterModel
+
+    def python_evals(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+
+    histogram_plans = []
+    level_histogram = FellegiSunterModel._level_histogram
+
+    def spy(gammas):
+        histogram_plans.append(python_evals(gammas))
+        return level_histogram(gammas)
+
+    monkeypatch.setattr(FellegiSunterModel, "_level_histogram", staticmethod(spy))
+    df = null_sentinel(people)
+    model = FellegiSunterModel(
+        [
+            Comparison("given_name", "jaro_winkler", 0.9),
+            Comparison("surname", "levenshtein", 2),
+        ],
+        [("postcode",)],
+    )
+    model.estimate_u(df, target_pairs=500)
+    assert histogram_plans == [[]]
+    assert python_evals(model.predict(df)) == []
 
 
 def test_ivfpq_no_nested_loop_over_corpus(spark, sf_dir):
@@ -611,11 +643,17 @@ class TestScaleAudit:
     def test_arrow_udf_and_broadcast_join_pass(self, spark, sf_dir):
         from auto_data_linkage_spark.plans.explain import assert_scalable
 
-        # the registered Arrow pandas UDF path (jaro_winkler) is the
-        # idiomatic vectorized form — NOT an error-grade finding
-        df = entry_mod.queries()["jaro_winkler_pairs"](spark, sf_dir)
-        findings = assert_scalable(df)
-        assert not any(f["severity"] == "error" for f in findings)
+        # an Arrow pandas UDF (normalize_text's NFC step) is the
+        # idiomatic vectorized form and a broadcast join the idiomatic
+        # small-side join — neither is an error-grade finding
+        for name, node in (
+            ("normalize_text", "ArrowEvalPython"),
+            ("join_inner_multi", "BroadcastHashJoin"),
+        ):
+            df = entry_mod.queries()[name](spark, sf_dir)
+            assert node in df._jdf.queryExecution().executedPlan().toString()
+            findings = assert_scalable(df)
+            assert not any(f["severity"] == "error" for f in findings)
 
     def test_every_catalog_query_is_scalable(self, spark, sf_dir):
         """The invariant the whole engine claims: NO registered catalog

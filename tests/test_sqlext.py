@@ -33,7 +33,7 @@ def strings(spark):
 
 
 def test_arc_jaro_winkler_matches_udf_twin(spark, strings):
-    from auto_data_linkage_spark.compare import jaro_winkler_udf
+    from auto_data_linkage_spark.compare import jaro_winkler
 
     got = {
         r["id"]: r["jw"]
@@ -44,7 +44,7 @@ def test_arc_jaro_winkler_matches_udf_twin(spark, strings):
     want = {
         r["id"]: r["jw"]
         for r in strings.select(
-            "id", jaro_winkler_udf("a", "b").alias("jw")
+            "id", jaro_winkler("a", "b").alias("jw")
         ).collect()
     }
     assert got == want
@@ -145,8 +145,9 @@ def test_sql_udfs_stay_declarative(spark, strings):
     as declarative SQL functions)."""
     plan = (
         spark.sql(
-            "SELECT arc_token_jaccard(a, b), arc_ngram_jaccard(a, b, 2),"
-            " arc_md5_hash64(a, 0) FROM sqlext_strings"
+            "SELECT arc_jaro_winkler(a, b), arc_token_jaccard(a, b),"
+            " arc_ngram_jaccard(a, b, 2), arc_md5_hash64(a, 0)"
+            " FROM sqlext_strings"
         )
         ._jdf.queryExecution()
         .executedPlan()
