@@ -31,7 +31,9 @@ Layers (see SURVEY.md §7):
 
 Design stance: pure PySpark, zero JVM code, DataFrame/SQL plans that keep
 whole-stage codegen; Pandas UDFs only where built-ins genuinely cannot
-express the semantics (jaro-winkler, embedding kernels).
+express the semantics (corpus text kernels, BPE, the interactive-SQL
+``arc_entropy``); Jaro–Winkler is one SQL expression of built-ins
+(``compare.jaro_winkler_sql``).
 """
 
 __version__ = "0.1.0"

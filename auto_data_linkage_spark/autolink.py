@@ -69,7 +69,6 @@ class AutoLinker:
         *,
         comparison_size_limit: int = 100_000,
         max_evals: int = 5,
-        threshold: float = 0.9,
         cluster_threshold: float = 0.8,
         true_label: str | None = None,
         unique_id: str = "unique_id",
@@ -86,7 +85,6 @@ class AutoLinker:
         self.sampler = sampler
         self.comparison_size_limit = comparison_size_limit
         self.max_evals = max_evals
-        self.threshold = threshold
         self.cluster_threshold = cluster_threshold
         self.true_label = true_label
         self.unique_id = unique_id

@@ -26,6 +26,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def collect_if_small(df: DataFrame, threshold: int):
+    """Bounded-probe collect, the adaptive-execution switch of
+    :func:`connected_components` and ``graph.pagerank``/``graph.hits``:
+    a ``limit(threshold + 1)`` count ships ONE long to the driver; only
+    when the frame is actually small do the (cached) rows follow. The
+    probe's persist makes the often-expensive lineage (blocking join +
+    scoring) execute once — the collect reads cache, never recomputes.
+    Returns the row list, or None when the frame exceeds ``threshold``
+    (no row ever crossed)."""
+    lim = df.limit(threshold + 1).persist()
+    try:
+        n = lim.count()
+        return lim.collect() if n <= threshold else None
+    finally:
+        lim.unpersist()
+
+
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return edges.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
@@ -124,21 +141,10 @@ def connected_components(
     # edges, so the raw edge list collects without the symmetrize+distinct
     # shuffle (self-loops register the node, then union is a no-op — the
     # node still comes out as a singleton component). The size probe is a
-    # bounded DISTRIBUTED count — limit(threshold+1).count() ships one
-    # long to the driver, never edge rows — so a 100M-edge graph pays no
-    # driver transfer before taking the distributed path. The limited
-    # frame is persisted around the probe so the (often expensive —
-    # blocking-join + scoring) edge lineage executes ONCE: the fast
-    # path's collect reads the ≤ threshold+1 cached rows instead of
-    # recomputing the plan.
-    lim = e.limit(driver_threshold + 1).persist()
-    try:
-        n_probe = lim.count()
-        small = n_probe <= driver_threshold
-        probe_rows = lim.collect() if small else None
-    finally:
-        lim.unpersist()
-    if small:
+    # bounded DISTRIBUTED count (collect_if_small), so a 100M-edge graph
+    # pays no driver transfer before taking the distributed path.
+    probe_rows = collect_if_small(e, driver_threshold)
+    if probe_rows is not None:
         rows = [(r["src"], r["dst"]) for r in probe_rows]
         if not rows:
             return e.limit(0).select(

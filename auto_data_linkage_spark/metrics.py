@@ -23,11 +23,6 @@ class UnsupervisedMetrics:
     adjusted_gain: float
     information_gain_power_ratio: float
 
-    # backward-compat alias (pre-round-2 field name)
-    @property
-    def standardized_gain(self) -> float:
-        return self.adjusted_gain
-
 
 def information_gain_power_ratio(
     data: DataFrame,

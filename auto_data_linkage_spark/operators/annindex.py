@@ -716,7 +716,8 @@ def compact_ann_index(
     target_rows_per_file: int = 5_000_000,
 ) -> dict:
     """Rewrite over-fragmented cells of ``coded`` into few large files
-    — the index-side mirror of :func:`..sources.layout.compact_corpus`.
+    — the index-side mirror of
+    :func:`..sources.corpusstore.compact_corpus_snapshot`.
     Streaming ingestion via :func:`ann_index_sink` appends one small
     parquet file per cell per micro-batch, so without maintenance a
     long-running stream degrades every probe-time scan into
@@ -820,12 +821,12 @@ def ann_index_sink(
     """``foreachBatch`` sink folding each micro-batch of vectors into
     the persisted index via :func:`append_ann_index` — continuous
     embedding ingestion (the streaming analog of
-    ``streaming.documents.upsert_sink``). The index must already exist
-    (:func:`build_ann_index` on the initial corpus). With ``app_id``
-    set, appends are EXACTLY-ONCE across replays: the ``(app_id,
-    batch_id)`` idempotence token commits atomically with the batch's
-    coded rows, so a batch replayed after a crash — before OR after
-    its commit — lands exactly once (see
+    ``sources.corpusstore.corpus_snapshot_sink``). The index must
+    already exist (:func:`build_ann_index` on the initial corpus). With
+    ``app_id`` set, appends are EXACTLY-ONCE across replays: the
+    ``(app_id, batch_id)`` idempotence token commits atomically with
+    the batch's coded rows, so a batch replayed after a crash — before
+    OR after its commit — lands exactly once (see
     :func:`manifestfs.txn_version`). ``app_id`` names the query's
     checkpoint lineage and is OPT-IN (default None = no token,
     at-least-once): an implicit shared default would silently drop the

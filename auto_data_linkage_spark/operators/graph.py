@@ -40,6 +40,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..cluster import collect_if_small
 from . import manifestfs as M
 from .text import ensure_parallelism
 from .urls import registered_domain
@@ -255,21 +256,6 @@ def link_graph_stats(edges: DataFrame, *, materialize: bool = True) -> DataFrame
 PAGERANK_SCALE = 10**12
 
 
-def _collect_if_small(df: DataFrame, threshold: int):
-    """Bounded-probe collect (the connected-components convention): a
-    ``limit(threshold + 1)`` count ships ONE long to the driver; only
-    when the frame is actually small do the (cached) rows follow. The
-    probe's persist makes the often-expensive lineage execute once —
-    the collect reads cache, never recomputes. Returns the row list, or
-    None when the frame exceeds ``threshold`` (no row ever crossed)."""
-    lim = df.limit(threshold + 1).persist()
-    try:
-        n = lim.count()
-        return lim.collect() if n <= threshold else None
-    finally:
-        lim.unpersist()
-
-
 def _pagerank_driver(
     edge_rows,
     spark,
@@ -470,12 +456,12 @@ def pagerank(
     # the threshold NO edge row reaches the driver (bounded limit probe)
     # and the star of the show stays the executor-side loop.
     if driver_threshold and driver_threshold > 0:
-        rows = _collect_if_small(e, driver_threshold)
+        rows = collect_if_small(e, driver_threshold)
         if rows is not None:
             init_rows = (
                 None
                 if init_ranks is None
-                else _collect_if_small(
+                else collect_if_small(
                     # a warm-start vector for a ≤ threshold-edge graph
                     # has ≤ 2·threshold useful rows; a bigger one means
                     # the PREVIOUS graph was over-threshold — keep that
@@ -753,7 +739,7 @@ def hits(
     # two total collects, two vector checkpoints — all fixed latency
     # on a small graph); see _pagerank_driver for the memory math.
     if driver_threshold and driver_threshold > 0:
-        rows = _collect_if_small(e, driver_threshold)
+        rows = collect_if_small(e, driver_threshold)
         if rows is not None:
             return _hits_driver(
                 rows,

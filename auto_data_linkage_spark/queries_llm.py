@@ -1194,13 +1194,16 @@ def ann_topk_synced_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sync_ann_index(spark, corpus, idx, since=1)
         # serve from the PERSISTED synced index, made exact: probe all
-        # 10 cells, shortlist k·100 = 500 ≥ |corpus| so the true-vector
-        # rerank re-scores every candidate
+        # 10 cells, shortlist k·rerank_factor ≥ |corpus| so the
+        # true-vector rerank re-scores every candidate (a fixed factor
+        # stops covering the corpus once it outgrows k·factor)
         head = C.load_corpus_snapshot(spark, corpus)
+        k = 5
         out = A.ann_index_topk(
             A.load_ann_index(spark, idx),
             head.where(F.col("vec_id") % 100 == 0),
-            k=5, nprobe=10, rerank_factor=100, corpus=head,
+            k=k, nprobe=10, rerank_factor=-(-head.count() // k),
+            corpus=head,
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

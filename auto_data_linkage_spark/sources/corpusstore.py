@@ -1,21 +1,15 @@
-"""Manifest-layout corpus snapshots — `layout.py`'s corpus MERGE
-re-based onto the ONE commit protocol the persisted stores already use
-(:mod:`..operators.manifestfs`), closing the two-protocols seam.
+"""Manifest-layout corpus snapshots — the corpus store, on the ONE
+commit protocol every persisted store uses
+(:mod:`..operators.manifestfs`).
 
-Why a second corpus layout exists at all: :func:`..sources.layout.
-upsert_corpus` mutates partition directories IN PLACE (dynamic
-partition overwrite), which is fast and fine on a POSIX filesystem but
-structurally torn-prone — the overwrite is not atomic across
-partitions, so a mid-write death leaves some directories new and some
-old, and `upsert_corpus_versioned` exists precisely to TRACK that torn
-state in a `_commits/` log. The snapshot layout removes the torn state
-instead of tracking it:
+A corpus that changes after its first write lives here:
 
 - an upsert writes the merged rows of the touched partitions into a
   fresh immutable ``data/gen=N`` directory and publishes them by ONE
   conditional manifest commit — observed fully-old or fully-new,
   never mixed; a crashed writer leaves only invisible orphan dirs
-  (:func:`vacuum_corpus_snapshot` reclaims them);
+  (:func:`vacuum_corpus_snapshot` reclaims them), so there is no torn
+  state to track or repair;
 - readers pin the manifest they opened: a concurrent upsert, even of
   the SAME partitions, never disturbs a running scan — plain dynamic
   partition overwrite deletes files under active readers;
@@ -26,14 +20,13 @@ instead of tracking it:
 - it works on object stores (no renames anywhere; the log rides any
   CommitStore via ``manifestfs.use_commit_log``).
 
-The in-place layout stays the right call for single-writer POSIX-local
-corpora where rewrite-churn of hot partitions matters (no gen
-accumulation, no vacuum to schedule); this one is the multi-writer /
-object-store / audit-trail path. Partition-granular semantics are
-IDENTICAL to :func:`..sources.layout.upsert_corpus`: within touched
-partitions, corpus rows whose ``key`` appears in the delta are
-replaced and all delta rows inserted; untouched partitions are not
-read, not rewritten, and keep serving their existing files.
+Upsert semantics are partition-granular: within touched partitions,
+corpus rows whose ``key`` appears in the delta are replaced and all
+delta rows inserted; untouched partitions are not read, not rewritten,
+and keep serving their existing files. The cost of immutability is
+disk held between vacuums: each upsert's rewrite of its touched
+partitions stays on disk until :func:`vacuum_corpus_snapshot` reclaims
+the superseded generation (SCALE.md "One corpus commit protocol").
 
 No reference analogue (the reference persists nothing); same public
 Delta-log/Iceberg-snapshot design basis as manifestfs.
@@ -92,6 +85,23 @@ def _write_gen(
         .parquet(os.path.join(M.local_path(root), _TABLE, gen))
     )
     return M.written_parts(root, _TABLE, gen)
+
+
+def touched_partition_filter(partition_by: list[str], touched) -> F.Column:
+    """Planning-time partition predicate for a list of touched
+    partition-value tuples — OR of per-tuple ANDs built with NULL-SAFE
+    equality. Plain ``==``/``isin`` evaluate to NULL for a NULL
+    partition value (Spark's ``__HIVE_DEFAULT_PARTITION__``), which
+    would silently filter the partition's surviving rows OUT of the
+    merge — the rewrite then drops them."""
+    cond = None
+    for vals in touched:
+        one = None
+        for c, v in zip(partition_by, vals):
+            expr = F.col(c).eqNullSafe(F.lit(v))
+            one = expr if one is None else (one & expr)
+        cond = one if cond is None else (cond | one)
+    return cond
 
 
 def build_corpus_snapshot(
@@ -300,7 +310,7 @@ def upsert_corpus_snapshot(
     generation becomes a vacuumable orphan. Two upserts of DISJOINT
     partitions therefore both land, in some serial order, with no lost
     update — the scenario plain dynamic partition overwrite silently
-    corrupts and `upsert_corpus_versioned` can only abort on.
+    corrupts.
 
     Returns ``{"partitions": n_touched, "rows_written": n, "version"}``.
     """
@@ -337,11 +347,8 @@ def _upsert_once(
         }
     # Planning-time partition filter (never hand-built directory paths:
     # Spark owns partition-value escaping in BOTH directions — it wrote
-    # the dir names, it parses them back), null-safe, shared with the
-    # in-place MERGE (layout.touched_partition_filter), pruned against
+    # the dir names, it parses them back), null-safe, pruned against
     # the PINNED snapshot's paths only.
-    from .layout import touched_partition_filter
-
     cond = touched_partition_filter(partition_by, touched)
     merged = delta
     old = M.read_table(spark, path, _TABLE, snap)

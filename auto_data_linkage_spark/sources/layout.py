@@ -1,5 +1,6 @@
 """Corpus layout sinks: file-size-disciplined partitioned writes,
-small-file compaction, and partition manifests.
+partition manifests, and the commit-log backends of the manifest
+protocol.
 
 These address the storage problems a 100 TB curation pipeline actually
 hits, which the plain ``df.write.partitionBy(...)`` call does not:
@@ -17,11 +18,15 @@ hits, which the plain ``df.write.partitionBy(...)`` call does not:
   ``sortWithinPartitions`` before the write, so parquet min/max column
   statistics become selective — downstream range predicates on the sort
   key skip whole row groups without any index structure.
-- **Compaction** (:func:`compact_corpus`): curation deltas accumulate
-  small files; re-write a partition subtree into size-targeted files.
 - **Manifest** (:func:`corpus_manifest`): per-partition row counts and
   sort-key min/max as a DataFrame — the audit artifact for "did the
   layout actually prune".
+
+A corpus that changes after its first write (MERGE upserts, appends,
+compaction) lives in a snapshot store, :mod:`.corpusstore`, which
+commits every change through :mod:`..operators.manifestfs` — the one
+commit protocol of every persisted store. :class:`CommitStore` and its
+backends here are that protocol's pluggable log.
 """
 
 from __future__ import annotations
@@ -66,222 +71,27 @@ def write_corpus(
     )
 
 
-def compact_corpus(
-    spark: SparkSession,
-    path: str,
-    *,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    target_rows_per_file: int = 5_000_000,
-) -> int:
-    """Rewrite a corpus directory into size-targeted files.
-
-    Reads the existing layout (partition columns come back from the
-    directory structure), sizes the file count per partition from actual
-    row counts, and rewrites via :func:`write_corpus`. Returns the total
-    row count rewritten. The read and write use distinct Spark jobs, so
-    the rewrite is atomic only at partition-directory granularity —
-    callers wanting atomicity should write to a new root and swap.
-    """
-    df = spark.read.parquet(path)
-    total = df.count()
-    files = max(1, -(-total // target_rows_per_file))  # ceil
-    compacted = path.rstrip("/") + "__compact"
-    write_corpus(
-        df,
-        compacted,
-        partition_by=partition_by,
-        sort_by=sort_by,
-        files_per_partition=files,
-        max_records_per_file=target_rows_per_file,
-    )
-    return total
-
-
-def touched_partition_filter(partition_by: list[str], touched) -> "F.Column":
-    """Planning-time partition predicate for a list of touched
-    partition-value tuples — OR of per-tuple ANDs built with NULL-SAFE
-    equality. Plain ``==``/``isin`` evaluate to NULL for a NULL
-    partition value (Spark's ``__HIVE_DEFAULT_PARTITION__``), which
-    silently filters the partition's surviving rows OUT of the merge —
-    the overwrite then deletes them. Shared by the in-place MERGE
-    (:func:`upsert_corpus`) and the snapshot layout
-    (:mod:`.corpusstore`) so the two paths cannot diverge on null
-    semantics again."""
-    cond = None
-    for vals in touched:
-        one = None
-        for c, v in zip(partition_by, vals):
-            expr = F.col(c).eqNullSafe(F.lit(v))
-            one = expr if one is None else (one & expr)
-        cond = one if cond is None else (cond | one)
-    return cond
-
-
-def _merge_touched(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    key: str,
-    partition_by: list[str],
-):
-    """The read/merge phase shared by :func:`upsert_corpus` and
-    :func:`upsert_corpus_versioned`: returns ``(touched, merged)`` where
-    ``touched`` is the delta's distinct partition-value tuples and
-    ``merged`` the eagerly-materialized replacement rows for exactly
-    those partitions (surviving old rows + all delta rows)."""
-    touched = [
-        tuple(r[c] for c in partition_by)
-        for r in delta.select(*partition_by).distinct().collect()
-    ]
-    if not touched:
-        return [], delta
-    # prune via a planning-time partition filter rather than hand-built
-    # directory paths — Spark then handles partition-value escaping, so
-    # no touched partition can be silently missed (which would drop its
-    # surviving rows on overwrite); null-safe (see
-    # touched_partition_filter) so a NULL partition value cannot drop
-    # its survivors either
-    cond = touched_partition_filter(partition_by, touched)
-
-    from pyspark.errors import AnalysisException
-
-    merged = delta
-    try:
-        corpus = spark.read.parquet(path)
-        # a delta MISSING a corpus column would make the select below
-        # silently drop that column from every kept row of the touched
-        # partitions (data loss, not a crash); an extra column would
-        # fork the stored schema — both are hard errors
-        if set(corpus.columns) != set(delta.columns):
-            missing = sorted(set(corpus.columns) - set(delta.columns))
-            extra = sorted(set(delta.columns) - set(corpus.columns))
-            raise ValueError(
-                "upsert delta columns do not match the corpus: missing "
-                f"{missing or '[]'}, unexpected {extra or '[]'}"
-            )
-        old = corpus.where(cond).select(*delta.columns)
-        keep = old.join(
-            F.broadcast(delta.select(key).distinct()), key, "left_anti"
-        )
-        # materialize BEFORE the overwrite: the merged plan reads the
-        # very files the write replaces (Spark rejects same-path
-        # read+overwrite, and a lazy plan would otherwise re-read
-        # post-overwrite data for any later action)
-        merged = keep.unionByName(delta).localCheckpoint(eager=True)
-    except AnalysisException as e:
-        # ONLY the first-ingest case (corpus path absent) may fall back
-        # to insert-only; any other failure must abort, or the overwrite
-        # below would silently drop the touched partitions' old rows
-        if "PATH_NOT_FOUND" not in str(e) and "does not exist" not in str(e):
-            raise
-        merged = delta
-    return touched, merged
-
-
-def upsert_corpus(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    *,
-    key: str,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    max_records_per_file: int = 5_000_000,
-) -> dict:
-    """Merge a delta into a partitioned parquet corpus, rewriting ONLY
-    the partition directories the delta touches — the plain-parquet
-    equivalent of ``MERGE INTO`` with partition-granular atomicity.
-
-    Semantics: within touched partitions, a corpus row whose ``key``
-    appears in the delta is replaced; all delta rows are inserted.
-    Untouched partition directories are not read, not rewritten, and
-    keep their files byte-identical — at 100 TB the rewrite cost is
-    proportional to the delta's partition footprint, never the corpus.
-
-    Mechanics:
-
-    - the touched partition values come from one tiny distinct on the
-      delta (collected — bounded by the delta's partition fan-out, which
-      a sane ingest keeps small);
-    - only those partitions are scanned: the values become a
-      planning-time partition filter, so untouched directories are
-      pruned before any file is listed;
-    - replaced keys drop via a broadcast left-anti join on ``key``;
-    - the rewrite goes through :func:`write_corpus` into the same
-      directories with dynamic partition overwrite, so concurrent
-      readers of OTHER partitions are never disturbed.
-
-    Returns ``{"partitions": n_touched, "rows_written": n}``.
-    """
-    touched, merged = _merge_touched(spark, path, delta, key, partition_by)
-    if not touched:  # empty delta: nothing to merge, nothing to rewrite
-        return {"partitions": 0, "rows_written": 0}
-    _overwrite_touched(
-        spark, path, merged, partition_by, sort_by, max_records_per_file
-    )
-    n = merged.count()  # safe: checkpointed, no file-source lineage
-    return {"partitions": len(touched), "rows_written": n}
-
-
-def _overwrite_touched(
-    spark: SparkSession,
-    path: str,
-    merged: DataFrame,
-    partition_by: list[str],
-    sort_by: list[str] | None,
-    max_records_per_file: int,
-) -> None:
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out = merged.repartition(*[F.col(c) for c in partition_by])
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
-        (
-            out.write.mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-class CommitConflictError(RuntimeError):
-    """Raised when :func:`upsert_corpus_versioned` exhausts its retries
-    against concurrent writers touching the same partitions."""
-
-
 class CommitStore:
-    """The ONE storage primitive the optimistic-commit protocol needs:
-    atomic create-if-absent of a named record (exactly one writer can
-    win a version), plus atomic replace, remove, and listing. The
-    protocol itself (:func:`upsert_corpus_versioned`) is
-    backend-agnostic — anything that can conditionally create an
-    object can host the commit log:
+    """The log primitive of the manifest commit protocol
+    (:mod:`..operators.manifestfs`, wired in per store root by
+    ``manifestfs.use_commit_log``): atomic create-if-absent of a named
+    record (exactly one writer can win a version), plus remove, listing,
+    point-read and record age. By default manifestfs keeps its log as
+    posix files under ``_manifests/`` (``O_CREAT|O_EXCL``); anything
+    that can conditionally create an object can host it instead:
 
-    - :class:`PosixCommitStore` — ``O_CREAT|O_EXCL`` + ``os.replace``
-      on a local/NFS directory (the single-cluster default);
     - :class:`MemoryCommitStore` — an in-process conditional-put map,
       proving the protocol needs no POSIX semantics and standing in
       for an object-store backend in tests;
-    - an object store maps 1:1: create-if-absent is S3
-      ``PutObject`` + ``If-None-Match: *`` or GCS
-      ``x-goog-if-generation-match: 0`` (both public, documented
-      preconditions); replace is an unconditional put (last-writer-wins
-      on a token only its owner rewrites); listing is a prefix list.
-      At real 100 TB scale prefer a transactional table format
-      (Delta/Iceberg MERGE) — this protocol is the minimal stand-in,
-      not a replacement.
+    - :class:`S3CommitStore` — create-if-absent is S3 ``PutObject`` +
+      ``If-None-Match: *`` (GCS: ``x-goog-if-generation-match: 0``;
+      both public, documented preconditions); listing is a prefix list;
+    - :class:`FlakyCommitStore` — injected object-store weather over
+      any of the above.
     """
 
     def create_exclusive(self, name: str, record: dict) -> bool:
         """Atomically create ``name`` iff absent. True on win."""
-        raise NotImplementedError
-
-    def replace(self, name: str, record: dict) -> None:
-        """Atomically overwrite an existing record (owner-only)."""
         raise NotImplementedError
 
     def remove(self, name: str) -> None:
@@ -314,99 +124,10 @@ class CommitStore:
         return None
 
 
-class PosixCommitStore(CommitStore):
-    """O_CREAT|O_EXCL-based commit log under ``<dir>/``."""
-
-    def __init__(self, log_dir: str):
-        self.log_dir = log_dir
-
-    def create_exclusive(self, name: str, record: dict) -> bool:
-        import json
-        import os
-
-        os.makedirs(self.log_dir, exist_ok=True)
-        try:
-            fd = os.open(
-                os.path.join(self.log_dir, name),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(record, f)
-        return True
-
-    def replace(self, name: str, record: dict) -> None:
-        import json
-        import os
-
-        target = os.path.join(self.log_dir, name)
-        tmp = target + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp, target)  # atomic state flip
-
-    def remove(self, name: str) -> None:
-        import os
-
-        try:
-            os.remove(os.path.join(self.log_dir, name))
-        except OSError:
-            pass
-
-    def list_records(self) -> dict[str, "dict | None"]:
-        import json
-        import os
-
-        if not os.path.isdir(self.log_dir):
-            return {}
-        out: dict[str, dict | None] = {}
-        for name in os.listdir(self.log_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    with open(os.path.join(self.log_dir, name)) as f:
-                        out[name] = json.load(f)
-                except (OSError, ValueError):
-                    out[name] = None  # mid-write by its owner
-        return out
-
-    def list_names(self) -> list[str]:
-        import os
-
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            n for n in os.listdir(self.log_dir) if n.endswith(".json")
-        )
-
-    def get(self, name: str) -> "dict | None":
-        import json
-        import os
-
-        try:
-            with open(os.path.join(self.log_dir, name)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def age_seconds(self, name: str) -> "float | None":
-        import os
-        import time
-
-        try:
-            return max(
-                0.0,
-                time.time()
-                - os.path.getmtime(os.path.join(self.log_dir, name)),
-            )
-        except OSError:
-            return None
-
-
 class MemoryCommitStore(CommitStore):
     """In-process conditional-put map — the object-store semantics
-    (create-if-absent precondition, unconditional replace) without any
-    filesystem, usable to run the full protocol in tests."""
+    (create-if-absent precondition) without any filesystem, usable to
+    run the full protocol in tests."""
 
     def __init__(self, clock=None):
         """``clock`` (callable -> float, default ``time.time``) feeds
@@ -427,11 +148,6 @@ class MemoryCommitStore(CommitStore):
             self._data[name] = dict(record)
             self._ctime[name] = float(self._clock())
             return True
-
-    def replace(self, name: str, record: dict) -> None:
-        with self._lock:
-            self._data[name] = dict(record)
-            self._ctime[name] = float(self._clock())
 
     def remove(self, name: str) -> None:
         with self._lock:
@@ -478,8 +194,7 @@ class FlakyCommitStore(CommitStore):
     ``list_delay_s`` sleeps before every ``list_records`` (slow LIST
     calls). ``remove_fail_rate`` injects transient DELETE failures
     (vacuum must be restartable: a failed remove only delays garbage
-    collection to the re-run). ``replace`` passes through untouched —
-    the manifest log never replaces."""
+    collection to the re-run)."""
 
     def __init__(
         self,
@@ -530,9 +245,6 @@ class FlakyCommitStore(CommitStore):
                 )
             return False  # slot already taken: a plain lost race
         return self.inner.create_exclusive(name, record)
-
-    def replace(self, name: str, record: dict) -> None:
-        self.inner.replace(name, record)
 
     def remove(self, name: str) -> None:
         self.stats["removes"] += 1
@@ -602,8 +314,6 @@ class S3CommitStore(CommitStore):
       :class:`..operators.manifestfs.TransientCommitError` so the
       protocol retries and resolves by reading the slot back, the
       same path FlakyCommitStore's ambiguous-success injection proves.
-    - ``replace`` = unconditional ``PutObject`` (last-writer-wins on a
-      token only its owner rewrites — the protocol's contract).
     - ``remove`` = ``DeleteObject`` (idempotent: deleting an absent
       key succeeds, so vacuum re-runs are safe).
     - ``list_names`` = prefix LIST without bodies (the O(1)-opens
@@ -661,20 +371,6 @@ class S3CommitStore(CommitStore):
             if code == "PreconditionFailed":
                 return False  # clean lost race: the slot exists
             raise self._wrap(e, "put", name) from e
-
-    def replace(self, name: str, record: dict) -> None:
-        import json
-
-        from botocore.exceptions import ClientError
-
-        try:
-            self.client.put_object(
-                Bucket=self.bucket,
-                Key=self._key(name),
-                Body=json.dumps(record).encode(),
-            )
-        except ClientError as e:
-            raise self._wrap(e, "replace", name) from e
 
     def remove(self, name: str) -> None:
         from botocore.exceptions import ClientError
@@ -739,202 +435,6 @@ class S3CommitStore(CommitStore):
             return max(0.0, (now - head["LastModified"]).total_seconds())
         except (ClientError, KeyError):
             return None  # unknown age: the vacuum floor degrades SAFE
-
-
-def _commit_log_dir(path: str) -> str:
-    import os
-
-    local = path[7:] if path.startswith("file://") else path
-    if "://" in local:
-        raise ValueError(
-            "upsert_corpus_versioned's default commit log needs a "
-            "local/file: path for its POSIX atomic-create; for object "
-            "stores pass a CommitStore backed by a conditional put "
-            "(S3 If-None-Match / GCS generation-match preconditions) "
-            "or use a transactional table format (Delta/Iceberg "
-            f"MERGE). Got: {path}"
-        )
-    return os.path.join(local, "_commits")
-
-
-def _read_commits(store: CommitStore) -> list[dict]:
-    out = []
-    for name, rec in store.list_records().items():
-        if rec is None:
-            # a token mid-write by its owner: treat as pending with
-            # unknown footprint — conservatively conflicting
-            out.append({"version": int(name[1:-5]), "partitions": None})
-        else:
-            out.append(rec)
-    return sorted(out, key=lambda c: c["version"])
-
-
-def failed_commits(
-    path: str | None = None, *, store: CommitStore | None = None
-) -> list[dict]:
-    """Failed-commit tokens whose touched partitions are NOT yet covered
-    by a later committed version — i.e. partitions that may still hold
-    torn data from a mid-overwrite death and need repair (re-run the
-    failed upsert, or any upsert touching those partitions).
-
-    The torn list is an OVER-approximation: a writer that died after
-    winning its version token but before replacing any partition
-    directory still records ``state: failed`` with its full intended
-    partition list, so healthy partitions can be reported as torn.
-    Repairing (re-upserting) a healthy partition is a harmless rewrite
-    — the conservative direction for a durability check."""
-    if store is None and path is None:
-        raise ValueError("failed_commits needs either path= or store=")
-    store = store or PosixCommitStore(_commit_log_dir(path))
-    commits = _read_commits(store)
-    out = []
-    for c in commits:
-        if c.get("state") != "failed":
-            continue
-        torn = {tuple(t) for t in (c.get("partitions") or [])}
-        for later in commits:
-            if (
-                later.get("state") == "committed"
-                and later["version"] > c["version"]
-            ):
-                torn -= {tuple(t) for t in (later.get("partitions") or [])}
-        if torn:
-            out.append({**c, "unrepaired": sorted(torn)})
-    return out
-
-
-def upsert_corpus_versioned(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    *,
-    key: str,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    max_records_per_file: int = 5_000_000,
-    writer_id: str | None = None,
-    max_retries: int = 3,
-    conflict_wait_s: float = 60.0,
-    store: CommitStore | None = None,
-) -> dict:
-    """:func:`upsert_corpus` with OPTIMISTIC CONCURRENCY against other
-    writers of the same corpus — the lost-update scenario plain
-    dynamic-partition-overwrite cannot see: writer B reads a partition,
-    writer A rewrites it, writer B's overwrite then silently discards
-    A's merge.
-
-    Protocol (Delta-style linear version history on a ``_commits/``
-    log under the corpus root):
-
-    1. observe the current committed version V (and wait for any
-       still-pending commit ≤ V to finish);
-    2. run the read/merge phase against that snapshot;
-    3. ACQUIRE version V+1 by atomically creating ``_commits/v{V+1}.json``
-       (``O_CREAT|O_EXCL`` — exactly one writer can win a version).
-       Success proves no commit intervened between the read and the
-       acquisition, so the merge is based on the latest state and the
-       partition overwrite proceeds; the token then records the touched
-       partitions and flips to ``state: committed``.
-    4. losing the race means a concurrent commit landed first: the
-       merge may be stale, so re-read and retry (``max_retries`` times,
-       waiting up to ``conflict_wait_s`` for the winner's data files to
-       land), then raise :class:`CommitConflictError` loudly rather
-       than overwrite on a stale snapshot.
-
-    A writer that acquires a version and DIES before committing leaves
-    a pending token; later writers fail after ``conflict_wait_s`` with
-    a :class:`CommitConflictError` naming the stuck version (manual
-    cleanup — the honest failure mode without a heartbeat, stated
-    rather than hidden). A writer whose OVERWRITE raises (dynamic
-    partition overwrite is not atomic — an executor loss can leave
-    some partition directories replaced and others not) flips its
-    token to ``state: failed`` KEEPING the touched-partition list, so
-    the torn partitions are discoverable (:func:`failed_commits`)
-    instead of hidden behind a clean-looking history; any later
-    committed upsert covering those partitions repairs them.
-
-    The commit log lives behind :class:`CommitStore` — POSIX
-    ``O_CREAT|O_EXCL`` by default (local/file: paths, asserted); pass
-    ``store=`` for any backend with a conditional-put primitive (see
-    :class:`CommitStore` for the S3/GCS mapping).
-
-    Returns ``{"partitions": n, "rows_written": n, "version": V+1}``.
-    """
-    import time
-    import uuid
-
-    store = store or PosixCommitStore(_commit_log_dir(path))
-    wid = writer_id or uuid.uuid4().hex[:12]
-
-    def _wait_pending(upto: float) -> None:
-        while True:
-            pending = [
-                c
-                for c in _read_commits(store)
-                if c.get("state") not in ("committed", "failed")
-            ]
-            if not pending:
-                return
-            if time.monotonic() > upto:
-                raise CommitConflictError(
-                    "commit(s) still pending after "
-                    f"{conflict_wait_s}s: versions "
-                    f"{[c['version'] for c in pending]} — a writer died "
-                    "mid-commit or is stuck; inspect the commit store "
-                    "and remove the stale token(s)"
-                )
-            time.sleep(0.1)
-
-    for _attempt in range(max_retries + 1):
-        deadline = time.monotonic() + conflict_wait_s
-        _wait_pending(deadline)
-        commits = _read_commits(store)
-        version = commits[-1]["version"] if commits else 0
-
-        touched, merged = _merge_touched(
-            spark, path, delta, key, partition_by
-        )
-        if not touched:
-            return {"partitions": 0, "rows_written": 0, "version": version}
-
-        token_name = f"v{version + 1}.json"
-        record = {
-            "version": version + 1,
-            "writer": wid,
-            "partitions": [list(t) for t in touched],
-            "state": "pending",
-        }
-        if not store.create_exclusive(token_name, record):
-            # lost the race — the merge may be stale; re-read and retry
-            continue
-        try:
-            _overwrite_touched(
-                spark, path, merged, partition_by, sort_by,
-                max_records_per_file,
-            )
-        except BaseException:
-            # the overwrite is NOT atomic: some partitions may already
-            # be replaced. Record the failure with its footprint so
-            # later writers/readers can detect and repair the torn
-            # partitions — deleting the token would show a clean
-            # history over inconsistent data.
-            try:
-                store.replace(token_name, {**record, "state": "failed"})
-            except Exception:
-                pass
-            raise
-        store.replace(token_name, {**record, "state": "committed"})
-        n = merged.count()
-        return {
-            "partitions": len(touched),
-            "rows_written": n,
-            "version": version + 1,
-        }
-    raise CommitConflictError(
-        f"lost the commit race {max_retries + 1} times on {path}; "
-        "concurrent writers are saturating this corpus — serialize "
-        "them or move to a transactional table format"
-    )
 
 
 def corpus_manifest(

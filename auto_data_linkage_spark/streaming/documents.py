@@ -152,47 +152,6 @@ def curate_stream(
     return kept.dropDuplicates(["fingerprint"])
 
 
-def upsert_sink(
-    path: str,
-    *,
-    key: str = "doc_id",
-    partition_by: tuple[str, ...] = ("lang",),
-    sort_by: tuple[str, ...] | None = None,
-):
-    """``foreachBatch`` sink folding each micro-batch into a partitioned
-    parquet corpus via :func:`sources.layout.upsert_corpus` — continuous
-    ingestion with partition-scoped merges (late re-sends of a key
-    replace the stored row; untouched partition directories are never
-    rewritten).
-
-    Exactly-once caveat: dynamic partition overwrite is idempotent per
-    (batch content → partition directory), so a replayed micro-batch
-    after a failure re-produces the same directories — the standard
-    foreachBatch replay story. Use with a checkpointLocation.
-
-    Usage::
-
-        stream.writeStream.foreachBatch(
-            upsert_sink("/corpus", partition_by=("lang",))
-        ).option("checkpointLocation", ckpt).start()
-    """
-    from auto_data_linkage_spark.sources.layout import upsert_corpus
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_corpus(
-            batch_df.sparkSession,
-            path,
-            batch_df,
-            key=key,
-            partition_by=list(partition_by),
-            sort_by=list(sort_by) if sort_by else None,
-        )
-
-    return _sink
-
-
 def source_quality_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Running per-source corpus health (complete/update mode): document
     count, mean quality, kept-rate under the default gate — the

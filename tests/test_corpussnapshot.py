@@ -1,12 +1,12 @@
 """Manifest-layout corpus snapshots (sources/corpusstore.py): the
 corpus MERGE on the same commit protocol the persisted index stores
-use — closing the two-commit-protocols seam (VERDICT r11 ask #5).
+use — the one corpus commit protocol.
 
 Pinned here:
 
-- upsert semantics are IDENTICAL to layout.upsert_corpus (replaced
-  keys dropped, delta inserted, untouched partitions untouched) —
-  compared row-for-row on the same inputs;
+- upsert semantics (replaced keys dropped, delta inserted, untouched
+  partitions untouched) — compared row-for-row with an expected row
+  set computed independently of the store;
 - untouched partitions keep their exact generation list AND files
   across an upsert (nothing rewritten outside the delta's footprint);
 - a reader handle pinned before an upsert keeps serving the old rows;
@@ -16,6 +16,8 @@ Pinned here:
   order (the lost-update case in-place overwrite corrupts);
 - nested (multi-column) partitioning and Spark-escaped partition
   values round-trip;
+- a delta whose columns differ from the store's (missing or extra)
+  is rejected before anything is written;
 - compaction rewrites only fragmented partitions, one commit,
   bit-equal before/after;
 - the whole lifecycle also runs on a MemoryCommitStore log (object-
@@ -29,7 +31,6 @@ from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.sources import corpusstore as C
-from auto_data_linkage_spark.sources import layout as L
 
 
 @pytest.fixture(scope="module")
@@ -62,24 +63,23 @@ def _delta(spark, docs):
     return rep.unionByName(ins).localCheckpoint(eager=True)
 
 
-def test_upsert_matches_inplace_layout_semantics(spark, docs, tmp_path):
-    snap_root = str(tmp_path / "snap")
-    flat_root = str(tmp_path / "flat")
+def test_upsert_matches_independent_expected_rows(spark, docs, tmp_path):
+    """Replaced keys dropped, delta rows inserted, every other row kept —
+    the expected set is computed from the inputs alone (the upsert is
+    partition-granular, but a row-level anti-join gives the same rows
+    because every replaced key sits in a touched partition)."""
+    root = str(tmp_path / "snap")
     delta = _delta(spark, docs)
 
-    C.build_corpus_snapshot(
-        docs, snap_root, key="doc_id", partition_by=["lang"]
-    )
-    out = C.upsert_corpus_snapshot(spark, snap_root, delta)
+    C.build_corpus_snapshot(docs, root, key="doc_id", partition_by=["lang"])
+    out = C.upsert_corpus_snapshot(spark, root, delta)
     assert out["version"] == 2 and out["partitions"] > 0
 
-    L.write_corpus(docs, flat_root, partition_by=["lang"])
-    L.upsert_corpus(
-        spark, flat_root, delta, key="doc_id", partition_by=["lang"]
+    want = _rows(
+        docs.join(delta.select("doc_id"), "doc_id", "left_anti")
+        .unionByName(delta)
     )
-    assert _rows(C.load_corpus_snapshot(spark, snap_root)) == _rows(
-        spark.read.parquet(flat_root)
-    )
+    assert _rows(C.load_corpus_snapshot(spark, root)) == want
 
 
 def test_untouched_partitions_not_rewritten(spark, docs, tmp_path):
@@ -127,8 +127,7 @@ def test_lost_race_rerun_equals_serial_order(spark, docs, tmp_path, monkeypatch)
     before B's commit. B must lose the race, re-run its merge against
     v2, and land as v3 — final content equal to running A then B
     serially. In-place dynamic partition overwrite silently drops A's
-    update in this interleaving; upsert_corpus_versioned can only
-    abort."""
+    update in this interleaving."""
     langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
     la, lb = sorted(langs)[:2]
     delta_a = (
@@ -381,7 +380,7 @@ def test_null_partition_survivors_not_dropped(spark, tmp_path):
     """A NULL partition value must not lose its surviving rows on
     upsert: plain ==/isin partition predicates evaluate to NULL for
     the null-partition rows, silently filtering them out of the merge
-    — the overwrite then deletes them. Both layouts."""
+    — the rewrite then drops them."""
     df = spark.createDataFrame(
         [(1, "keep-a", None), (2, "replace-me", None), (3, "other", "en")],
         "doc_id int, text string, lang string",
@@ -392,17 +391,10 @@ def test_null_partition_survivors_not_dropped(spark, tmp_path):
     want = _rows(
         df.where(F.col("doc_id") != 2).unionByName(delta)
     )
-    snap_root = str(tmp_path / "snap")
-    C.build_corpus_snapshot(df, snap_root, key="doc_id", partition_by=["lang"])
-    C.upsert_corpus_snapshot(spark, snap_root, delta)
-    assert _rows(C.load_corpus_snapshot(spark, snap_root)) == want
-
-    flat_root = str(tmp_path / "flat")
-    L.write_corpus(df, flat_root, partition_by=["lang"])
-    L.upsert_corpus(
-        spark, flat_root, delta, key="doc_id", partition_by=["lang"]
-    )
-    assert _rows(spark.read.parquet(flat_root)) == want
+    root = str(tmp_path / "snap")
+    C.build_corpus_snapshot(df, root, key="doc_id", partition_by=["lang"])
+    C.upsert_corpus_snapshot(spark, root, delta)
+    assert _rows(C.load_corpus_snapshot(spark, root)) == want
 
 
 def test_empty_store_loads_and_accepts_first_batch(spark, docs, tmp_path):
@@ -422,14 +414,20 @@ def test_empty_store_loads_and_accepts_first_batch(spark, docs, tmp_path):
 
 
 def test_inplace_upsert_rejects_schema_drift(spark, docs, tmp_path):
-    """layout.upsert_corpus had the same silent-column-drop hazard:
-    a delta lacking a corpus column made the merge keep rows via
-    old.select(*delta.columns), erasing that column from the whole
-    touched partition."""
-    root = str(tmp_path / "flat")
-    L.write_corpus(docs, root, partition_by=["lang"])
-    with pytest.raises(ValueError, match="missing \\['text'\\]"):
-        L.upsert_corpus(
-            spark, root, docs.drop("text").limit(3),
-            key="doc_id", partition_by=["lang"],
+    """The in-place partition MERGE once had a silent-column-drop
+    hazard: a delta lacking a corpus column kept the touched
+    partitions' rows via old.select(*delta.columns), erasing that
+    column. The snapshot MERGE refuses a delta whose columns differ
+    from the store's in either direction, before it writes or commits
+    anything."""
+    root = str(tmp_path / "snap")
+    C.build_corpus_snapshot(docs, root, key="doc_id", partition_by=["lang"])
+    with pytest.raises(ValueError, match="missing \\['n_chars'\\]"):
+        C.upsert_corpus_snapshot(spark, root, docs.drop("n_chars").limit(3))
+    with pytest.raises(ValueError, match="unexpected \\['score'\\]"):
+        C.upsert_corpus_snapshot(
+            spark, root, docs.limit(3).withColumn("score", F.lit(1.0))
         )
+    # nothing committed and no generation allocated: only the build's
+    assert M.read_manifest(root)["version"] == 1
+    assert len(os.listdir(os.path.join(root, "data"))) == 1

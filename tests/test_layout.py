@@ -1,5 +1,6 @@
-"""Corpus layout sinks: file-count discipline, sort clustering,
-compaction, and manifest fidelity."""
+"""Corpus layout sinks: file-count discipline, sort clustering and
+manifest fidelity; the corpus MERGE and compaction on plain corpus
+inputs; the commit-log backends of the manifest protocol."""
 
 import glob
 import os
@@ -7,6 +8,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from auto_data_linkage_spark.operators import manifestfs as M
+from auto_data_linkage_spark.sources import corpusstore as C
 from auto_data_linkage_spark.sources import layout as L
 
 
@@ -92,18 +95,27 @@ def test_write_corpus_max_records_splits_files(spark, corpus, tmp_path):
 
 
 def test_compact_corpus_round_trip(spark, corpus, tmp_path):
-    messy = str(tmp_path / "messy")
-    # simulate small-files damage: many tasks x partitions
-    corpus.repartition(8).write.partitionBy("lang").parquet(messy)
-    assert len(_parquet_files(messy)) > corpus.select("lang").distinct().count()
-    total = L.compact_corpus(
-        spark, messy, partition_by=["lang"], sort_by=["doc_id"]
+    root = str(tmp_path / "messy")
+    # small-files damage: one generation per appended chunk, so every
+    # partition a chunk reaches gains another file
+    chunk = F.col("doc_id") % 4
+    C.build_corpus_snapshot(
+        corpus.where(chunk == 0), root, key="doc_id",
+        partition_by=["lang"], sort_by=["doc_id"],
     )
-    assert total == corpus.count()
-    compacted = messy + "__compact"
-    back = spark.read.parquet(compacted)
-    assert back.count() == total
-    assert len(_parquet_files(compacted)) >= corpus.select("lang").distinct().count()
+    for i in (1, 2, 3):
+        C.append_corpus_snapshot(root, corpus.where(chunk == i))
+    n_langs = corpus.select("lang").distinct().count()
+    assert len(_parquet_files(root)) > n_langs
+    out = C.compact_corpus_snapshot(spark, root, max_files_per_partition=1)
+    assert out["compacted"] and out["version"] == 5
+    counts = M.part_file_counts(root, "data", M.read_manifest(root))
+    assert len(counts) == n_langs and all(n == 1 for n in counts.values())
+    back = C.load_corpus_snapshot(spark, root)
+    assert back.count() == corpus.count()
+    assert {r.doc_id for r in back.select("doc_id").collect()} == {
+        r.doc_id for r in corpus.select("doc_id").collect()
+    }
 
 
 def test_corpus_manifest_counts_and_ranges(spark, corpus, tmp_path):
@@ -122,9 +134,16 @@ def test_corpus_manifest_counts_and_ranges(spark, corpus, tmp_path):
         assert r.min_doc_id <= r.max_doc_id
 
 
+# ------------------------------------------------------- corpus MERGE
+# The one upsert path is the snapshot store (sources/corpusstore.py):
+# partition-granular replace, one atomic manifest commit per upsert.
+
+
 def test_upsert_corpus_merges_and_preserves_untouched(spark, corpus, tmp_path):
     root = str(tmp_path / "upsert")
-    L.write_corpus(corpus, root, partition_by=["lang"], sort_by=["doc_id"])
+    C.build_corpus_snapshot(
+        corpus, root, key="doc_id", partition_by=["lang"], sort_by=["doc_id"]
+    )
     untouched_before = {
         f: os.path.getmtime(f)
         for f in _parquet_files(root)
@@ -138,11 +157,9 @@ def test_upsert_corpus_merges_and_preserves_untouched(spark, corpus, tmp_path):
         ],
         "doc_id long, text string, lang string, source string",
     )
-    res = L.upsert_corpus(
-        spark, root, delta, key="doc_id", partition_by=["lang"]
-    )
+    res = C.upsert_corpus_snapshot(spark, root, delta)
     assert res["partitions"] == 1
-    back = spark.read.parquet(root)
+    back = C.load_corpus_snapshot(spark, root)
     assert back.count() == corpus.count() + 1
     got = {r.doc_id: r.text for r in back.where("lang = 'en'").collect()}
     assert got[en[0]] == "replaced text"
@@ -158,27 +175,35 @@ def test_upsert_corpus_merges_and_preserves_untouched(spark, corpus, tmp_path):
 
 
 def test_upsert_corpus_first_ingest(spark, corpus, tmp_path):
+    """A store built empty (the create-then-stream pattern) takes its
+    first rows through an upsert."""
     root = str(tmp_path / "fresh")
-    delta = corpus.limit(10)
-    res = L.upsert_corpus(
-        spark, root, delta, key="doc_id", partition_by=["lang"]
+    C.build_corpus_snapshot(
+        corpus.limit(0), root, key="doc_id", partition_by=["lang"]
     )
-    assert res["rows_written"] == 10
-    assert spark.read.parquet(root).count() == 10
+    delta = corpus.orderBy("doc_id").limit(10)
+    res = C.upsert_corpus_snapshot(spark, root, delta)
+    assert res["rows_written"] == 10 and res["version"] == 2
+    back = C.load_corpus_snapshot(spark, root)
+    assert back.count() == 10
+    assert {r.doc_id for r in back.collect()} == {
+        r.doc_id for r in delta.collect()
+    }
 
 
 def test_upsert_corpus_multi_partition_cols(spark, corpus, tmp_path):
     root = str(tmp_path / "multi")
-    L.write_corpus(corpus, root, partition_by=["lang", "source"])
+    C.build_corpus_snapshot(
+        corpus, root, key="doc_id", partition_by=["lang", "source"]
+    )
     one = corpus.limit(1).collect()[0]
     delta = spark.createDataFrame(
         [(one.doc_id, "patched", one.lang, one.source)],
         "doc_id long, text string, lang string, source string",
     )
-    L.upsert_corpus(
-        spark, root, delta, key="doc_id", partition_by=["lang", "source"]
-    )
-    back = spark.read.parquet(root)
+    res = C.upsert_corpus_snapshot(spark, root, delta)
+    assert res["partitions"] == 1
+    back = C.load_corpus_snapshot(spark, root)
     assert back.count() == corpus.count()
     assert (
         back.where(back.doc_id == one.doc_id).collect()[0].text == "patched"
@@ -187,134 +212,108 @@ def test_upsert_corpus_multi_partition_cols(spark, corpus, tmp_path):
 
 def test_upsert_corpus_empty_delta_is_noop(spark, corpus, tmp_path):
     root = str(tmp_path / "noop")
-    L.write_corpus(corpus, root, partition_by=["lang"])
+    C.build_corpus_snapshot(corpus, root, key="doc_id", partition_by=["lang"])
     before = {f: os.path.getmtime(f) for f in _parquet_files(root)}
-    empty = corpus.limit(0)
-    res = L.upsert_corpus(spark, root, empty, key="doc_id", partition_by=["lang"])
-    assert res == {"partitions": 0, "rows_written": 0}
+    res = C.upsert_corpus_snapshot(spark, root, corpus.limit(0))
+    assert res == {"partitions": 0, "rows_written": 0, "version": 1}
     assert {f: os.path.getmtime(f) for f in _parquet_files(root)} == before
+    # no new manifest version either
+    assert M.read_manifest(root)["version"] == 1
+    assert [h["version"] for h in C.corpus_snapshot_history(root)] == [1]
 
 
-# ------------------------------------------- optimistic concurrency
+# --------------------------------------------- optimistic concurrency
 def _mk(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
 
 def test_upsert_versioned_sequential_versions(spark, tmp_path):
     root = str(tmp_path / "vc")
-    r1 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
+    C.build_corpus_snapshot(
+        _mk(spark, [(1, "en", "a"), (2, "de", "b")]), root,
         key="doc_id", partition_by=["lang"],
     )
-    assert r1["version"] == 1
-    r2 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(3, "en", "c")]),
-        key="doc_id", partition_by=["lang"],
-    )
+    assert M.read_manifest(root)["version"] == 1
+    r2 = C.upsert_corpus_snapshot(spark, root, _mk(spark, [(3, "en", "c")]))
     assert r2["version"] == 2 and r2["partitions"] == 1
     got = sorted(
         (r.doc_id, r.lang, r.text)
-        for r in spark.read.parquet(root).collect()
+        for r in C.load_corpus_snapshot(spark, root).collect()
     )
     assert got == [(1, "en", "a"), (2, "de", "b"), (3, "en", "c")]
     # empty delta commits nothing, version unchanged
-    r3 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, []).where(F.lit(False)),
-        key="doc_id", partition_by=["lang"],
+    r3 = C.upsert_corpus_snapshot(
+        spark, root, _mk(spark, []).where(F.lit(False))
     )
     assert r3 == {"partitions": 0, "rows_written": 0, "version": 2}
+    assert [h["op"] for h in C.corpus_snapshot_history(root)] == [
+        "build", "upsert"
+    ]
 
 
 def test_upsert_versioned_interleaved_writers_lose_no_update(
     spark, tmp_path, monkeypatch
 ):
     """The lost-update interleave: both writers MERGE against the same
-    snapshot (forced by a barrier), then race to commit the same
-    partition. The loser must detect the conflict (version token taken),
-    re-merge against the winner's output, and retry — both deltas
-    survive. Plain upsert_corpus would keep only the last writer's."""
+    snapshot of the SAME partition (forced by a barrier after each has
+    written its generation), then race to commit. The loser must see
+    the version taken, re-run its merge against the winner's commit and
+    land next — both deltas survive. Plain dynamic partition overwrite
+    keeps only the last writer's."""
     import threading
 
     root = str(tmp_path / "race")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "base")]),
+    C.build_corpus_snapshot(
+        _mk(spark, [(1, "en", "base")]), root,
         key="doc_id", partition_by=["lang"],
     )
 
-    real = L._merge_touched
+    real = C._write_gen
     barrier = threading.Barrier(2, timeout=30)
     first_round = {"a": True, "b": True}
 
-    def stalled(s, path, delta, key, partition_by):
-        out = real(s, path, delta, key, partition_by)
-        tag = delta._race_tag
+    def stalled(*a, **k):
+        out = real(*a, **k)
+        tag = threading.current_thread().name
         if first_round[tag]:
             first_round[tag] = False
             barrier.wait()  # both writers hold their stale snapshot
         return out
 
-    monkeypatch.setattr(L, "_merge_touched", stalled)
+    monkeypatch.setattr(C, "_write_gen", stalled)
 
     results, errors = {}, {}
 
     def writer(tag, rows):
         try:
-            delta = _mk(spark, rows)
-            delta._race_tag = tag
-            results[tag] = L.upsert_corpus_versioned(
-                spark, root, delta, key="doc_id", partition_by=["lang"],
-                writer_id=tag, conflict_wait_s=30.0,
+            results[tag] = C.upsert_corpus_snapshot(
+                spark, root, _mk(spark, rows)
             )
         except Exception as e:  # pragma: no cover - surfaced below
             errors[tag] = e
 
-    ta = threading.Thread(target=writer, args=("a", [(2, "en", "from_a")]))
-    tb = threading.Thread(target=writer, args=("b", [(3, "en", "from_b")]))
+    ta = threading.Thread(
+        target=writer, name="a", args=("a", [(2, "en", "from_a")])
+    )
+    tb = threading.Thread(
+        target=writer, name="b", args=("b", [(3, "en", "from_b")])
+    )
     ta.start(); tb.start(); ta.join(60); tb.join(60)
     assert not errors, errors
 
     got = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(root).collect()
+        (r.doc_id, r.text)
+        for r in C.load_corpus_snapshot(spark, root).collect()
     )
     # no lost update: base + both writers' rows all present
     assert got == [(1, "base"), (2, "from_a"), (3, "from_b")]
     assert sorted(r["version"] for r in results.values()) == [2, 3]
 
 
-def test_upsert_versioned_stuck_pending_commit_fails_loudly(spark, tmp_path):
-    import json
-    import os
-
-    root = str(tmp_path / "stuck")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a")]),
-        key="doc_id", partition_by=["lang"],
-    )
-    # simulate a writer that died after acquiring v2
-    with open(os.path.join(root, "_commits", "v2.json"), "w") as f:
-        json.dump({"version": 2, "writer": "dead", "state": "pending",
-                   "partitions": [["en"]]}, f)
-    with pytest.raises(L.CommitConflictError, match="pending"):
-        L.upsert_corpus_versioned(
-            spark, root, _mk(spark, [(2, "en", "b")]),
-            key="doc_id", partition_by=["lang"], conflict_wait_s=0.5,
-        )
-
-
-def test_upsert_versioned_rejects_object_store_paths(spark):
-    with pytest.raises(ValueError, match="Delta/Iceberg"):
-        L.upsert_corpus_versioned(
-            spark, "s3a://bucket/corpus",
-            _mk(spark, [(1, "en", "a")]),
-            key="doc_id", partition_by=["lang"],
-        )
-
-
 # ---------------------------------------------------------- CommitStore
-# The protocol tests below run against BOTH backends: the POSIX
-# O_CREAT|O_EXCL impl and the in-memory conditional-put impl (the
-# object-store stand-in) — proving upsert_corpus_versioned needs only
-# the CommitStore primitive, not POSIX semantics.
+# The log primitives the manifest protocol (operators/manifestfs.py)
+# uses, against the in-memory conditional-put backend (the object-store
+# stand-in) and the moto-backed S3 backend.
 
 
 def _s3_store():
@@ -337,11 +336,9 @@ def _s3_store():
     return store, mock
 
 
-@pytest.fixture(params=["posix", "memory", "s3"])
-def commit_store(request, tmp_path):
-    if request.param == "posix":
-        yield L.PosixCommitStore(str(tmp_path / "log"))
-    elif request.param == "s3":
+@pytest.fixture(params=["memory", "s3"])
+def commit_store(request):
+    if request.param == "s3":
         store, mock = _s3_store()
         try:
             yield store
@@ -357,77 +354,39 @@ def test_commit_store_create_exclusive_once(commit_store):
     assert commit_store.list_records()["v1.json"]["version"] == 1
 
 
-def test_commit_store_replace_and_remove(commit_store):
-    commit_store.create_exclusive("v1.json", {"version": 1, "state": "pending"})
-    commit_store.replace("v1.json", {"version": 1, "state": "committed"})
-    assert commit_store.list_records()["v1.json"]["state"] == "committed"
+def test_commit_store_remove(commit_store):
+    commit_store.create_exclusive("v1.json", {"version": 1})
     commit_store.remove("v1.json")
     assert "v1.json" not in commit_store.list_records()
+    assert commit_store.get("v1.json") is None
+    commit_store.remove("v1.json")  # idempotent: vacuum re-runs are safe
 
 
 def test_upsert_versioned_runs_on_memory_store(spark, tmp_path):
-    """Full protocol through the conditional-put backend: the data files
-    still land under the corpus path, the versions still linearize."""
+    """The corpus MERGE through the conditional-put log backend: the
+    data files still land under the corpus path, the versions still
+    linearize, and no manifest file touches the local disk."""
     root = str(tmp_path / "memstore")
-    store = L.MemoryCommitStore()
-    r1 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
-        key="doc_id", partition_by=["lang"], store=store,
-    )
-    r2 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "A2")]),
-        key="doc_id", partition_by=["lang"], store=store,
-    )
-    assert (r1["version"], r2["version"]) == (1, 2)
-    loaded = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(root).select("doc_id", "text").collect()
-    }
-    assert loaded == {1: "A2", 2: "b"}
-    states = [c["state"] for c in L._read_commits(store)]
-    assert states == ["committed", "committed"]
-    assert not os.path.isdir(os.path.join(root, "_commits"))
-
-
-def test_upsert_versioned_failed_overwrite_leaves_failed_token(
-    spark, tmp_path, monkeypatch
-):
-    """A mid-overwrite death must NOT show a clean history: the token
-    flips to state=failed keeping the touched-partition list,
-    failed_commits() surfaces the torn partitions, later writers are
-    not blocked, and a committed upsert covering those partitions
-    clears the repair report."""
-    root = str(tmp_path / "torn")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
-        key="doc_id", partition_by=["lang"],
-    )
-
-    real = L._overwrite_touched
-
-    def boom(*a, **k):
-        raise RuntimeError("executor lost mid-overwrite")
-
-    monkeypatch.setattr(L, "_overwrite_touched", boom)
-    with pytest.raises(RuntimeError, match="mid-overwrite"):
-        L.upsert_corpus_versioned(
-            spark, root, _mk(spark, [(3, "en", "c")]),
+    M.use_commit_log(root, L.MemoryCommitStore())
+    try:
+        C.build_corpus_snapshot(
+            _mk(spark, [(1, "en", "a"), (2, "de", "b")]), root,
             key="doc_id", partition_by=["lang"],
         )
-    failed = L.failed_commits(root)
-    assert len(failed) == 1
-    assert failed[0]["version"] == 2
-    assert failed[0]["unrepaired"] == [("en",)]
-
-    # later writers see the failed token as terminal, not pending —
-    # version numbering continues past it
-    monkeypatch.setattr(L, "_overwrite_touched", real)
-    r3 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(3, "en", "c")]),
-        key="doc_id", partition_by=["lang"], conflict_wait_s=2.0,
-    )
-    assert r3["version"] == 3
-    # the committed v3 touched the torn partition: repaired
-    assert L.failed_commits(root) == []
-    loaded = {r.doc_id for r in spark.read.parquet(root).collect()}
-    assert loaded == {1, 2, 3}
+        r2 = C.upsert_corpus_snapshot(
+            spark, root, _mk(spark, [(1, "en", "A2")])
+        )
+        assert r2["version"] == 2
+        loaded = {
+            r.doc_id: r.text
+            for r in C.load_corpus_snapshot(spark, root)
+            .select("doc_id", "text").collect()
+        }
+        assert loaded == {1: "A2", 2: "b"}
+        assert [h["version"] for h in C.corpus_snapshot_history(root)] == [
+            1, 2
+        ]
+        assert _parquet_files(root)
+        assert not os.path.isdir(os.path.join(root, "_manifests"))
+    finally:
+        M.clear_commit_log(root)

@@ -144,32 +144,38 @@ def test_foreachbatch_incremental_near_dedup_maintenance(spark, sf_dir, tmp_path
 
 
 def test_upsert_sink_folds_stream_into_corpus(spark, sf_dir, tmp_path):
-    """Streaming ingestion through the partition-scoped upsert sink:
-    driving the documents table in micro-batches must land every doc
-    exactly once, partitioned by lang, with re-sent keys replaced."""
+    """Streaming ingestion through the snapshot store's MERGE sink
+    (corpusstore.corpus_upsert_sink over a store built empty): driving
+    the documents table in micro-batches must land every doc exactly
+    once, partitioned by lang, with re-sent keys replaced, and a replay
+    of an already-committed batch id must change nothing."""
+    from auto_data_linkage_spark.operators import manifestfs as M
+    from auto_data_linkage_spark.sources import corpusstore as C
     from auto_data_linkage_spark.streaming.documents import (
         read_document_stream,
-        upsert_sink,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang", "source"
     )
     corpus = str(tmp_path / "corpus")
+    C.build_corpus_snapshot(
+        docs.limit(0), corpus, key="doc_id", partition_by=["lang"],
+        sort_by=["doc_id"],
+    )
+    sink = C.corpus_upsert_sink(corpus, app_id="docs")
     stream = read_document_stream(
         spark, f"{sf_dir}/documents.parquet", max_files_per_trigger=1
     ).select("doc_id", "text", "lang", "source")
     q = (
-        stream.writeStream.foreachBatch(
-            upsert_sink(corpus, partition_by=("lang",), sort_by=("doc_id",))
-        )
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(180)
 
-    back = spark.read.parquet(corpus)
+    back = C.load_corpus_snapshot(spark, corpus)
     assert back.count() == docs.count()
     assert back.select("doc_id").distinct().count() == docs.count()
 
@@ -179,10 +185,21 @@ def test_upsert_sink_folds_stream_into_corpus(spark, sf_dir, tmp_path):
         [(one.doc_id, "corrected text", one.lang, one.source)],
         "doc_id long, text string, lang string, source string",
     )
-    sink = upsert_sink(corpus, partition_by=("lang",))
     sink(resend, batch_id=999)
-    got = spark.read.parquet(corpus)
+    head = M.read_manifest(corpus)["version"]
+    got = C.load_corpus_snapshot(spark, corpus)
     assert got.count() == docs.count()
+    assert (
+        got.where(got.doc_id == one.doc_id).collect()[0].text
+        == "corrected text"
+    )
+
+    # replaying the same batch_id with different content is a no-op:
+    # the (app_id, batch_id) token already committed
+    stale = resend.withColumn("text", F.lit("stale replay"))
+    sink(stale, batch_id=999)
+    assert M.read_manifest(corpus)["version"] == head
+    got = C.load_corpus_snapshot(spark, corpus)
     assert (
         got.where(got.doc_id == one.doc_id).collect()[0].text
         == "corrected text"
