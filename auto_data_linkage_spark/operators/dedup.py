@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators.text import (
     doc_fingerprint,
-    ensure_parallelism,
     md5_hash64,
     shingles,
     tokens,
@@ -203,7 +202,6 @@ def banded_table(
     which :func:`exact_dedup` already catches without any self-join.
     """
     rows_per_band = num_hashes // num_bands
-    df = ensure_parallelism(df)
     if route_short:
         df = df.where(F.size(tokens(text_col)) >= shingle_k)
     sig = df.select(
@@ -372,8 +370,7 @@ def minhash_dedup_pairs(
         .distinct()
     )
     sh = (
-        ensure_parallelism(df)
-        .join(cand_ids, id_col, "left_semi")
+        df.join(cand_ids, id_col, "left_semi")
         .select(F.col(id_col), shingles(text_col, shingle_k).alias("sh"))
         .localCheckpoint(eager=True)
     )
@@ -439,7 +436,6 @@ def simhash_table(
     (An explode + grouped bit-vote-sum variant was benchmarked and lost
     3×: the md5 token hashing — shared by both — dominates, and the
     explode adds a |tokens|-row shuffle the folds avoid.)"""
-    df = ensure_parallelism(df)
     return df.select(
         F.col(id_col), token_hashes(text_col).alias("__h")
     ).select(
@@ -554,7 +550,7 @@ def ngram_jaccard_pairs(
     """Exact word-shingle Jaccard over pairs blocked on ``block_cols``
     (lang/source/length-bucket). Standalone small-block dedup; for
     unblocked scale use MinHash LSH first."""
-    base = ensure_parallelism(df).select(
+    base = df.select(
         F.col(id_col), *block_cols, shingles(text_col, shingle_k).alias("sh")
     )
     left = base.alias("l")
@@ -596,11 +592,7 @@ def embedding_dup_pairs(
     cols = [F.col(id_col), F.col(vec_col), norm_expr(F.col(vec_col)).alias("__n")]
     if bucket_col:
         cols.append(F.col(bucket_col))
-    # the per-cell self-join does Σ cell² dot products — quadratic compute
-    # on linear bytes. A single-row-group scan would feed the (broadcast)
-    # join from ONE partition and serialize all of it on one task; the
-    # repartition is a no-op once the input arrives in ≥ cores partitions.
-    base = ensure_parallelism(df).select(*cols)
+    base = df.select(*cols)
     left = base.alias("l")
     right = base.alias("r")
     cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
@@ -1096,6 +1088,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     cell_col: str = "label",
     threshold: float = 0.95,
+    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): within
     each coarse cluster cell, link items whose embedding cosine ≥
@@ -1111,13 +1104,16 @@ def semantic_dedup(
     under the bounded probe, Spark iteration above it), and the survivor
     filter is a join on the component map — the same composition as the
     MinHash ``near_dedup_keep`` pipeline, swapped onto embedding space.
+    ``pairs`` takes that stage precomputed (like ``centroids=`` on the
+    vector searches), e.g. over a repartitioned read of ``df``.
     """
     from auto_data_linkage_spark.cluster import connected_components
 
-    pairs = embedding_dup_pairs(
-        df, vec_col=vec_col, id_col=id_col, bucket_col=cell_col,
-        threshold=threshold,
-    )
+    if pairs is None:
+        pairs = embedding_dup_pairs(
+            df, vec_col=vec_col, id_col=id_col, bucket_col=cell_col,
+            threshold=threshold,
+        )
     edges = pairs.select(
         F.col(f"{id_col}_l").alias("src"), F.col(f"{id_col}_r").alias("dst")
     )

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cluster import collect_if_small
 from . import manifestfs as M
-from .text import ensure_parallelism
 from .urls import registered_domain
 
 __all__ = [
@@ -484,7 +483,7 @@ def pagerank(
                     stats=stats,
                 )
     # reused every iteration (both loop reads) — materialize once.
-    e = ensure_parallelism(e).localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
 
     nodes = e.select(F.col("src").alias("domain")).union(
         e.select(F.col("dst").alias("domain"))
@@ -747,7 +746,7 @@ def hits(
                 iterations=iterations,
                 scale=scale,
             )
-    e = ensure_parallelism(e).localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("domain"))
         .union(e.select(F.col("dst").alias("domain")))

@@ -64,7 +64,9 @@ def curate_documents(
     LSH candidates are probabilistic (with b bands of 1 hash a pair of
     true Jaccard j collides with probability 1−(1−j)^b, so dissimilar
     documents would chain into one transitive blob and be dropped);
-    verification touches only candidate pairs, never n².
+    verification touches only candidate pairs, never n². Input
+    partitioning is the caller's: read a single-file corpus through a
+    catalog reader (``queries_llm._docs``) to spread its scan.
     """
     if keeper not in ("min_id", "best_quality"):
         raise ValueError("keeper must be 'min_id' or 'best_quality'")
@@ -79,7 +81,7 @@ def curate_documents(
     )
     kept = annotated.where(
         # no_pushdown: without it Catalyst pushes the regex gate below
-        # ensure_parallelism's repartition, serializing the whole
+        # the reader's read-time repartition, serializing the whole
         # quality/lang pass on the scan's (possibly single) partition —
         # measured as two ~3 s one-task stages at sf0.1.
         X.no_pushdown(
@@ -398,7 +400,8 @@ def prepare_training_set(
     PARAMETERS or the input row count change (a params+input
     fingerprint in ``_stages/manifest.json``); pass ``resume=False``
     to force a clean run (e.g. same-count input with different
-    contents, which the fingerprint cannot see).
+    contents, which the fingerprint cannot see). Input partitioning is
+    the caller's, as in :func:`curate_documents`.
     """
     import json
     import os

@@ -18,16 +18,17 @@ A vectorized pandas-UDF path (numpy matmul per Arrow batch) is provided
 for wide corpora where the per-element fold dominates; semantics are
 identical, so tests pin them to each other.
 
-The SCORING side of every search pre-repartitions single-partition scans
-(``ensure_parallelism``): each corpus row scores against |queries| (or
-|probes|) broadcast rows, so per-row compute is O(|queries|·d) — far above
-the one-time cost of shuffling the row — and a single-row-group file would
-otherwise serialize the whole scoring scan on ONE task (measured r15:
-pq_topk 2.65 s → 0.71 s, ivfpq 2.77 s → 1.03 s at sf0.1/local[32]). The
-AGGREGATION inputs (centroid means) deliberately stay on the raw corpus:
-float sums are order-dependent, and keeping the scan order fixed keeps the
-rounded centroids bit-identical to the DuckDB oracle under any core count.
-At real scale inputs arrive in many files and the repartition is a no-op.
+Input partitioning is the caller's: every search builds its plan over
+the corpus as given and never repartitions it. The scoring side is
+per-row O(|queries|·d) against broadcast queries/probes, so a corpus that
+scans as one partition (a single-row-group file) scores on one task —
+the catalog reader ``queries_llm._emb`` repartitions such a scan at read
+time (measured r15: pq_topk 2.65 s → 0.71 s, ivfpq 2.77 s → 1.03 s at
+sf0.1/local[32]). AGGREGATION inputs (centroid means) must see the raw
+scan: float sums are order-dependent, and a fixed scan order keeps the
+rounded centroids bit-identical to the DuckDB oracle under any core
+count — pass ``centroids=`` built from the plain read when the corpus
+itself is repartitioned (the catalog also passes ``codebooks=``).
 """
 
 from __future__ import annotations
@@ -97,15 +98,13 @@ def brute_force_topk(
     Output: (query_id, neighbor_id, cosine, rank). Queries are broadcast —
     the corpus never shuffles. Ties break by neighbor id (deterministic).
     """
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
     qid = query_id_col or id_col
     q = queries.select(
         F.col(qid).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
         norm_expr(F.col(vec_col)).alias("__qn"),
     )
-    c = ensure_parallelism(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
         norm_expr(F.col(vec_col)).alias("__cn"),
@@ -220,9 +219,7 @@ def ivf_topk(
         F.col("cr") <= nprobe
     ).select("query_id", "__qvec", "__qn", "cell")
 
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
-    c = ensure_parallelism(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
         norm_expr(F.col(vec_col)).alias("__cn"),
@@ -356,9 +353,7 @@ def lsh_topk(
             id_alias, f"__vec_{id_alias}", f"__n_{id_alias}", "b.band", "b.val"
         )
 
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
-    c = banded(ensure_parallelism(corpus), "neighbor_id")
+    c = banded(corpus, "neighbor_id")
     q = banded(queries, "query_id", flips=multiprobe)
     cands = (
         c.join(F.broadcast(q), ["band", "val"])
@@ -692,12 +687,8 @@ def sq8_topk(
     against true float vectors, the same two-phase recipe as
     :func:`pq_topk`.  Output: (query_id, neighbor_id, cosine, rank).
     """
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
     if codes is None:
-        coded = sq8_encode(
-            ensure_parallelism(corpus), vec_col=vec_col, id_col=id_col
-        )
+        coded = sq8_encode(corpus, vec_col=vec_col, id_col=id_col)
     else:
         coded = codes
     c = coded.select(
@@ -946,13 +937,9 @@ def pq_topk(
     budget. At 100 TB use :func:`ivfpq_topk`, which prunes the ADC scan
     to the ``nprobe`` IVF cells nearest each query.
     """
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
     cbs = codebooks if codebooks is not None else pq_codebooks(
         corpus, m=m, n_codewords=n_codewords, vec_col=vec_col, id_col=id_col
     )
-
-    corpus = ensure_parallelism(corpus)
     coded = pq_encode(corpus, cbs, vec_col=vec_col, id_col=id_col).select(
         F.col(id_col).alias("neighbor_id"),
         "codes",
@@ -1065,12 +1052,6 @@ def ivfpq_topk(
     )
 
     # ---- encode once: (neighbor_id, cell, codes, recon norm) ----------
-    # the repartition sits BELOW the encode so the per-row ADC prep and
-    # scoring parallelize; cents/cbs above read the raw scan (float-sum
-    # order stays fixed → centroids stay oracle-bit-identical)
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
     coded = pq_encode(
         corpus, cbs, vec_col=vec_col, id_col=id_col, keep=(cell_col,)
     ).select(
@@ -1457,21 +1438,13 @@ def prototypicality(
     aggregation, never an exploded shuffle), broadcast back; the score
     is a row-local fold.  The corpus never shuffles.
     """
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
-    # Centroids aggregate the RAW corpus — repartitioning a float-mean
-    # input reorders FP summation and changes results. The per-row
-    # cosine scoring below is row-local, so ITS scan side is safe to
-    # parallelize (single-row-group inputs otherwise serialize the
-    # whole fold chain on one core — measured: every embedding_outliers
-    # job 1-task at sf0.1).
     cents = (
         centroids
         if centroids is not None
         else build_centroids(corpus, vec_col=vec_col, cell_col=cell_col)
     )
     return (
-        ensure_parallelism(corpus).select(
+        corpus.select(
             F.col(id_col),
             F.col(cell_col).alias("cell"),
             F.col(vec_col).alias("__vec"),

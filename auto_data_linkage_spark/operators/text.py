@@ -16,25 +16,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition when the input has fewer partitions than cores.
-
-    Small single-row-group parquet files scan as ONE partition, which
-    serializes CPU-bound per-row work (shingling, hashing) no matter how
-    many executors exist — the scan cannot split below a row group. The
-    one-off shuffle here is tiny compared to serialized compute. At real
-    scale inputs arrive in many files and this is a no-op."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
 def no_pushdown(cond: Column) -> Column:
     """``cond``, wrapped so the optimizer cannot push the filter below an
     upstream exchange.
 
     Catalyst pushes deterministic predicates through round-robin
-    repartitions — correct, but it undoes :func:`ensure_parallelism`:
+    repartitions — correct, but it undoes the catalog readers'
+    read-time repartition (``queries.ensure_parallelism``):
     a compute-heavy gate (regex quality/language scoring) lands BELOW
     the repartition, on the single-partition scan, serializing the
     whole pass on one core (measured: two ~3 s single-task stages in

@@ -56,6 +56,21 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     ]
 
 
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition a freshly read table when its scan has fewer
+    partitions than cores — the one place input parallelism is decided.
+
+    A single-row-group parquet file scans as ONE partition, serializing
+    CPU-bound per-row work (regex scoring, hashing, per-pair comparisons)
+    on one task. Operators take their input as given; the catalog readers
+    call this on the bare scan, where the check plans a file scan and runs
+    no job. At real scale inputs arrive in many files and this is a no-op."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 # --------------------------------------------------------------------------
 # A1/A10/P5 — the flagship: TPC-H Q1-style grouped aggregation with pushdown
 # --------------------------------------------------------------------------
@@ -134,8 +149,6 @@ def global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="P1 P2 P3 P5",
 )
 def clean_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
     (part,) = _t(spark, sf_dir, "part")
     part = ensure_parallelism(part)
     return part.where(F.col("p_size") > 20).select(
@@ -292,8 +305,6 @@ def join_inner_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="J5 §2.9 (blocking + comparison vector)",
 )
 def blocking_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
-
     (cust,) = _t(spark, sf_dir, "customer")
     # probe side repartitioned: the small file scans as one partition, and
     # the per-pair levenshtein work would otherwise run on a single task;
@@ -640,7 +651,6 @@ def _phonetic_sql_entry() -> str:
 )
 def phonetic_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auto_data_linkage_spark.compare import phonetic_key
-    from auto_data_linkage_spark.operators.text import ensure_parallelism
 
     (part,) = _t(spark, sf_dir, "part")
     # probe side repartitioned (same rationale as blocking_self_join): a

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from auto_data_linkage_spark.operators import dedup as D
 from auto_data_linkage_spark.operators import similarity as S
 from auto_data_linkage_spark.operators import text as X
-from auto_data_linkage_spark.queries import register, _t
+from auto_data_linkage_spark.queries import ensure_parallelism, register, _t
 from auto_data_linkage_spark.session import epoch_seconds as _epoch_seconds
 
 
@@ -24,7 +24,17 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents table with scan parallelism fixed up (single-row-group
     files scan as one partition, serializing regex/hash-heavy work)."""
     (docs,) = _t(spark, sf_dir, "documents")
-    return X.ensure_parallelism(docs)
+    return ensure_parallelism(docs)
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Embeddings table as scanned, and with scan parallelism fixed up
+    for the SCORING side of a vector search (each row scores against
+    every broadcast query). Queries, centroid means and PQ codebooks use
+    the plain scan: a mean's float sum must keep the oracle's file order,
+    and the small driver-side jobs gain nothing from a shuffle."""
+    (emb,) = _t(spark, sf_dir, "embeddings")
+    return emb, ensure_parallelism(emb)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,9 +680,9 @@ _COS_SQL = """
     survey="LLM similarity: brute-force cosine top-k",
 )
 def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.brute_force_topk(emb, queries, k=5)
+    return S.brute_force_topk(corpus, queries, k=5)
 
 
 # IVF is deterministic end-to-end (label-mean centroids, rounded routing
@@ -733,9 +743,12 @@ _IVF_SQL = """
     survey="LLM similarity: IVF-bucketed ANN (scale path)",
 )
 def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.ivf_topk(emb, queries, k=5, nprobe=3, dim=64)
+    return S.ivf_topk(
+        corpus, queries, k=5, nprobe=3,
+        centroids=S.build_centroids(emb, dim=64),
+    )
 
 
 # The ±1 hyperplanes come from md5("seed|plane|dim") first-byte parity
@@ -804,9 +817,9 @@ _LSH_SQL = """
     survey="LLM similarity: random-hyperplane LSH ANN (scale path)",
 )
 def lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.lsh_topk(emb, queries, k=5, dim=64, n_planes=12, band_bits=6)
+    return S.lsh_topk(corpus, queries, k=5, dim=64, n_planes=12, band_bits=6)
 
 
 # Deterministic fixed-k per-group sampling: rank by portable id-hash
@@ -1236,8 +1249,8 @@ def ann_topk_synced_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auto_data_linkage_spark.operators.dedup import embedding_dup_pairs
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    return embedding_dup_pairs(emb, threshold=0.3)
+    _, corpus = _emb(spark, sf_dir)
+    return embedding_dup_pairs(corpus, threshold=0.3)
 
 
 # Image/media near-dup through the pluggable embedding hook
@@ -2267,10 +2280,11 @@ def _pq_sql() -> str:
     survey="LLM similarity: product-quantization ANN (ADC, 8-byte codes)",
 )
 def pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return S.pq_topk(
-        emb, queries, k=_PQ_K, m=_PQ_M, n_codewords=_PQ_NC
+        corpus, queries, k=_PQ_K,
+        codebooks=S.pq_codebooks(emb, m=_PQ_M, n_codewords=_PQ_NC),
     )
 
 
@@ -2388,16 +2402,15 @@ def _ivfpq_sql() -> str:
     survey="LLM similarity: IVF-PQ ANN (cell-pruned ADC — the composed scale path)",
 )
 def ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return S.ivfpq_topk(
-        emb,
+        corpus,
         queries,
         k=_PQ_K,
         nprobe=_IVFPQ_NPROBE,
-        m=_PQ_M,
-        n_codewords=_PQ_NC,
-        dim=64,
+        centroids=S.build_centroids(emb, dim=64),
+        codebooks=S.pq_codebooks(emb, m=_PQ_M, n_codewords=_PQ_NC),
     )
 
 
@@ -2995,8 +3008,9 @@ def _semantic_dedup_sql(tau: float = _SEM_TAU) -> str:
     survey="LLM dedup: SemDeDup (cell-blocked cosine -> CC -> survivors)",
 )
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    return D.semantic_dedup(emb, threshold=_SEM_TAU)
+    emb, corpus = _emb(spark, sf_dir)
+    pairs = D.embedding_dup_pairs(corpus, bucket_col="label", threshold=_SEM_TAU)
+    return D.semantic_dedup(emb, threshold=_SEM_TAU, pairs=pairs)
 
 
 _MIX_ALPHA = 0.5
@@ -3415,12 +3429,12 @@ def knn_graph_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_graph,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb, corpus = _emb(spark, sf_dir)
     cents = kmeans_centroids(emb, k=16, max_iter=3, seed=11)
     g = knn_graph(emb, cents, k=5, nprobe=2).localCheckpoint()
 
     sample = emb.where(F.col("vec_id") % 29 == 0)
-    exact = brute_force_topk(emb, sample, k=5).select(
+    exact = brute_force_topk(corpus, sample, k=5).select(
         "query_id", "neighbor_id"
     )
     hits = exact.join(g.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
@@ -4240,13 +4254,13 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # raw scan for the lexical leg — same reasoning as bm25_topk_q
     (docs,) = _t(spark, sf_dir, "documents")
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     probes = R.query_terms_from_docs(
         docs.where(F.col("doc_id") % 100 == 0), n_terms=8
     )
     qv = emb.where(F.col("vec_id") % 100 == 0)
     return R.hybrid_topk(
-        docs, emb, probes, qv,
+        docs, corpus, probes, qv,
         k=_HYBRID_K, fetch_k=_HYBRID_DEEP, k0=_HYBRID_K0,
     )
 
@@ -4611,9 +4625,9 @@ _SQ8_SQL = """
     "int8 decode + cosine, two-phase rerank available)",
 )
 def sq8_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    return S.sq8_topk(emb, queries, k=5)
+    return S.sq8_topk(corpus, queries, k=5)
 
 
 # --------------------------------------------------------------------------
@@ -4656,8 +4670,10 @@ _OUTLIER_SQL = """
     "cell centroid, per-cell quantile cut — D4-style)",
 )
 def embedding_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    return S.embedding_outliers(emb, quantile=0.1)
+    emb, corpus = _emb(spark, sf_dir)
+    return S.embedding_outliers(
+        corpus, quantile=0.1, centroids=S.build_centroids(emb)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4803,10 +4819,12 @@ def ann_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         retrieval_metrics,
     )
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    emb, corpus = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % 100 == 0)
-    approx = S.ivf_topk(emb, queries, k=5, nprobe=3)
-    truth = S.brute_force_topk(emb, queries, k=5)
+    approx = S.ivf_topk(
+        corpus, queries, k=5, nprobe=3, centroids=S.build_centroids(emb)
+    )
+    truth = S.brute_force_topk(corpus, queries, k=5)
     return retrieval_metrics(approx, truth)
 
 

@@ -448,7 +448,8 @@ def corpus_snapshot_sink(
     (the same scheduling policy as the index sinks): after each
     append, partitions holding more than that many files are merged
     via :func:`compact_corpus_snapshot` — pinned readers are never
-    disturbed (they hold the prior manifest).
+    disturbed (they hold the prior manifest). Each batch ends with a
+    default :func:`vacuum_corpus_snapshot` (1 h floor).
 
     Usage::
 
@@ -472,6 +473,7 @@ def corpus_snapshot_sink(
                 max_files_per_partition=compact_over,
                 target_rows_per_file=max_records_per_file,
             )
+        vacuum_corpus_snapshot(path)
 
     return _sink
 
@@ -494,7 +496,9 @@ def corpus_upsert_sink(
     MERGE is only idempotent while no later batch touched the same
     keys. Cost note: each batch rewrites its touched partitions in
     full; route high-rate streams through partition keys that bound
-    the per-batch footprint."""
+    the per-batch footprint. Each batch ends with a default
+    :func:`vacuum_corpus_snapshot` (1 h floor), so superseded
+    generations do not accumulate for the life of the stream."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -513,6 +517,7 @@ def corpus_upsert_sink(
                 max_files_per_partition=compact_over,
                 target_rows_per_file=max_records_per_file,
             )
+        vacuum_corpus_snapshot(path)
 
     return _sink
 

@@ -21,10 +21,14 @@ Pinned here:
 - compaction rewrites only fragmented partitions, one commit,
   bit-equal before/after;
 - the whole lifecycle also runs on a MemoryCommitStore log (object-
-  store semantics, no _manifests/ on disk).
+  store semantics, no _manifests/ on disk);
+- both streaming sinks vacuum after each batch with the defaults:
+  superseded generations past the 1 h floor go at the next batch,
+  those inside it stay.
 """
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -431,3 +435,53 @@ def test_inplace_upsert_rejects_schema_drift(spark, docs, tmp_path):
     # nothing committed and no generation allocated: only the build's
     assert M.read_manifest(root)["version"] == 1
     assert len(os.listdir(os.path.join(root, "data"))) == 1
+
+
+@pytest.mark.parametrize(
+    "make_sink",
+    [
+        lambda root: C.corpus_upsert_sink(root),
+        lambda root: C.corpus_snapshot_sink(root, compact_over=1),
+    ],
+    ids=["upsert", "append_compact"],
+)
+def test_streaming_sinks_reclaim_superseded_generations(
+    spark, docs, tmp_path, make_sink
+):
+    root = str(tmp_path / "snap")
+    data = os.path.join(root, "data")
+    C.build_corpus_snapshot(docs, root, key="doc_id", partition_by=["lang"])
+    hot = docs.orderBy("doc_id").first()["lang"]
+    sink = make_sink(root)
+
+    def batch(i):
+        return (
+            docs.where(F.col("lang") == hot).limit(3)
+            .withColumn("doc_id", F.col("doc_id") + (i + 1) * 1_000_000)
+            .localCheckpoint(eager=True)
+        )
+
+    def on_disk():
+        return set(os.listdir(data))
+
+    def superseded():
+        head = M.read_manifest(root)["tables"]["data"]
+        return on_disk() - {g for gens in head.values() for g in gens}
+
+    sink(batch(0), 0)
+    sink(batch(1), 1)
+    old = superseded()
+    assert old
+    # age the superseded generations and every manifest past the floor
+    past = time.time() - 2 * 3600
+    for name in old:
+        os.utime(os.path.join(data, name), (past, past))
+    mdir = os.path.join(root, M.MANIFEST_DIR)
+    for name in os.listdir(mdir):
+        os.utime(os.path.join(mdir, name), (past, past))
+    sink(batch(2), 2)
+    assert not old & on_disk()
+    young = superseded()
+    sink(batch(3), 3)
+    assert young and young <= on_disk()
+    assert C.load_corpus_snapshot(spark, root).count() == docs.count() + 12

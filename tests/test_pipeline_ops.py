@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from auto_data_linkage_spark.operators.dedup import (
     chunk_dedup,
     decontaminate,
+    embedding_dup_pairs,
     semantic_dedup,
 )
 from auto_data_linkage_spark.operators.lm import unigram_logprob
@@ -135,6 +136,10 @@ def test_semantic_dedup_keeps_min_id_per_component(spark):
     )
     kept = {r["vec_id"] for r in semantic_dedup(df, threshold=0.9).collect()}
     assert kept == {1, 3, 4}
+    # the pair stage precomputed over another read of df: same survivors
+    pairs = embedding_dup_pairs(df.repartition(3), bucket_col="label", threshold=0.9)
+    same = semantic_dedup(df, threshold=0.9, pairs=pairs).collect()
+    assert {r["vec_id"] for r in same} == kept
 
 
 def test_semantic_dedup_cells_block_cross_cell_pairs(spark):

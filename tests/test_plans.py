@@ -242,13 +242,38 @@ def test_round6_pipeline_ops_no_smj_no_python(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
 
 
+def test_operators_take_their_input_as_given(spark, sf_dir):
+    """Operators never repartition their input — the catalog readers
+    decide input parallelism at read time. Fed the post-shuffle output
+    of exact_dedup over a one-partition scan, simhash_table and
+    ngram_jaccard_pairs add no round-robin exchange, and building them
+    launches no job (probing the partition count of a frame with a
+    shuffle inside plans and runs it)."""
+    from auto_data_linkage_spark.operators import dedup as D
+    from auto_data_linkage_spark.plans.explain import physical_plan
+
+    from test_store_open import _jobs_launched_by
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").coalesce(1)
+    deduped = D.exact_dedup(docs)
+    built = []
+
+    def build():
+        built.extend([D.simhash_table(deduped), D.ngram_jaccard_pairs(deduped)])
+
+    assert _jobs_launched_by(spark, "operator-build", build) == []
+    for df in built:
+        assert "RoundRobinPartitioning" not in physical_plan(df)
+
+
 def test_chunk_dedup_two_hash_exchanges(spark, sf_dir):
     """chunk_dedup's contract: one hash exchange keyed by chunk (the
     global keep-decision window) + one keyed by id (reassembly) — the
     text never shuffles a third time. The other two exchanges in the
-    catalog query are ensure_parallelism round-robin repartitions (one
-    per scan branch of the self-referencing left join), which vanish on
-    a properly row-grouped production table."""
+    catalog query are the `_docs` reader's read-time round-robin
+    repartitions of the single-row-group test file (one per scan branch
+    of the self-referencing left join), which vanish on a properly
+    row-grouped production table."""
     df = entry_mod.queries()["chunk_dedup"](spark, sf_dir)
     assert count_exchanges(df) <= 4
 
@@ -420,8 +445,9 @@ def test_epoch_mixture_corpus_never_shuffles(spark, sf_dir):
     plan = physical_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # per-domain aggregate = 1 exchange; ensure_parallelism round-robin
-    # repartitions of the single-row-group test parquet add at most 2
+    # per-domain aggregate = 1 exchange; the `_docs` reader's read-time
+    # round-robin repartitions of the single-row-group test parquet add
+    # at most 2
     assert count_exchanges(df) <= 3
 
 
