@@ -361,6 +361,7 @@ class AutoLinker:
         from auto_data_linkage_spark.incremental import (
             apply_increment,
             incremental_assign,
+            require_new_ids,
         )
 
         if self.best_trial is None or self.clean_data is None:
@@ -402,24 +403,9 @@ class AutoLinker:
                     col, F.lit(None).cast(self.clean_data.schema[col].dataType)
                 )
         batch = batch.select(*self.clean_data.columns).cache()
-        # actually enforce the non-collision contract (a colliding id would
-        # contract to a cluster super-node and silently come back as a
-        # bogus singleton) — one delta-sized semi-join
-        collisions = (
-            batch.select(self.unique_id)
-            .join(
-                self.clean_data.select(self.unique_id),
-                self.unique_id,
-                "left_semi",
-            )
-            .limit(1)
-            .count()
-        )
-        if collisions:
-            raise ValueError(
-                "new_records contains unique_id values already present in "
-                "the base — incremental_update requires disjoint ids"
-            )
+        # a colliding id would contract to a cluster super-node and
+        # silently come back as a bogus singleton
+        require_new_ids(batch, self.clean_data, unique_id=self.unique_id)
 
         # the model's prior was pinned by auto_link, so folds score with
         # the prior the base clustering used, whatever the batch size

@@ -137,6 +137,27 @@ def incremental_components(
     )
 
 
+def require_new_ids(
+    batch: DataFrame, known: DataFrame, *, unique_id: str
+) -> None:
+    """Raise ``ValueError`` when ``batch`` carries a ``unique_id`` that
+    ``known`` (the clustered state) already holds. Folds assume
+    disjoint ids: a re-sent id would be appended a second time, or — if
+    the state store keeps one row per id — coalesced to its own id and
+    pulled out of its cluster. One delta-sized semi-join job."""
+    collisions = (
+        batch.select(unique_id)
+        .join(known.select(unique_id), unique_id, "left_semi")
+        .limit(1)
+        .count()
+    )
+    if collisions:
+        raise ValueError(
+            f"the batch re-sends {unique_id!r} values already in the "
+            "clustered state — incremental folds require disjoint ids"
+        )
+
+
 def incremental_assign(
     model,
     base_clusters: DataFrame,

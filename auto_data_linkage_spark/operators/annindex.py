@@ -31,6 +31,10 @@ docstring): immutable ``gen=N`` dirs + one-JSON-commit manifests
 and whole-store cutover, snapshot-pinned readers, explicit
 :func:`vacuum_ann_index`. Indexes in the retired in-place ``rename``
 layout are refused with a ``ValueError``; rebuild them at a new path.
+The mutation model is the lexical index's too: the same sequence-stamp
+tombstones, tombstone cut and append commit (imported from
+:mod:`.lexindex`), and the same refusal of indexes written before the
+sequence counter.
 """
 
 from __future__ import annotations
@@ -42,19 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifestfs as M
-from .lexindex import _mask_tombstoned, _RestampRequired
-
-_VERSION = 1
-
-
-def _read_meta(snap: dict) -> dict:
-    """The snapshot's metadata, checked against the supported version."""
-    meta = dict(snap["meta"])
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported ann-index version {meta.get('version')!r}"
-        )
-    return meta
+from .lexindex import (  # one mutation model, one meta version
+    _VERSION,
+    _commit_append,
+    _cut_tombstones,
+    _mask_tombstoned,
+    _read_meta,
+)
 
 
 @dataclass
@@ -340,9 +338,6 @@ def build_ann_index(
         # n_rows/n_cells from the DELTA alone instead of rescanning the
         # whole coded/ tree per append (O(delta), not O(index))
         "cells": sorted(cells),
-        # id column's Spark type, so delete can cast tombstone ids even
-        # when the coded table is empty (built from an empty corpus)
-        "id_type": coded.schema["neighbor_id"].dataType.simpleString(),
         # mutation counter: appends stamp rows with seq+1, deletes cut
         # their tombstones at the current value — re-appended ids serve
         # their new rows (lexindex._mask_tombstoned)
@@ -405,7 +400,7 @@ def append_ann_index(
     local = M.local_path(path)
     spark = delta.sparkSession
     snap = M.read_manifest(path)
-    meta = _read_meta(snap)
+    meta = _read_meta(snap, path, "ann")
     cents_df = M.read_table(spark, path, "centroids", snap)
     if txn is not None and M.txn_version(meta, txn[0]) >= int(txn[1]):
         return meta  # this batch already committed: a checkpoint replay
@@ -505,87 +500,43 @@ def append_ann_index(
         if meta.get("route_err") is not None
         else None
     )
-    seq_aware = "seq" in meta
-    if seq_aware:
-        coded = coded.withColumn("__seq", F.lit(int(meta["seq"]) + 1))
+    coded = coded.withColumn("__seq", F.lit(int(meta["seq"]) + 1))
     gc_ = M.next_gen(path, "coded")
     coded.write.partitionBy("cell").parquet(os.path.join(local, "coded", gc_))
-    # merge-retry commit: the coded generation is already written and
-    # immutable; losing the version race to a concurrent
-    # append/delete/compaction only re-runs this manifest merge. A
-    # concurrent rebuild changes the encode state (codebooks /
-    # centroids) — our delta was encoded against the OLD state, so that
-    # case is guarded and loud.
     cp = M.written_parts(path, "coded", gc_)
-    orig = snap["meta"]
 
-    def mutate(fresh: dict):
-        fm = fresh["meta"]
-        if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
-            # same-token concurrent writer won since the entry
-            # check: merging would double-append — abort atomically
-            # with the commit (see lexindex.append_lex_index)
-            raise M.AlreadyApplied(fresh)
-        # route_err is in the guard set because it is recomputed by
-        # every rebuild — it catches a concurrent rebuild even on
-        # SQ8 indexes, whose codebooks are None before AND after
-        for k in ("version", "codec", "m", "n_codewords", "vec_col",
-                  "id_col", "cell_col", "codebooks", "route_err"):
-            if fm.get(k) != orig.get(k):
-                raise M.ManifestConflictError(
-                    f"ann-index parameter {k!r} changed under this "
-                    "append (concurrent rebuild?) — re-encode the "
-                    "delta against the new index"
-                )
-        if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
-            # stale __seq stamp vs a possibly-interleaved delete:
-            # restamp if any fresh cut covers our rows (see
-            # lexindex.append_lex_index)
-            tombs = M.read_table(spark, path, "tombstones", fresh)
-            if tombs is not None and "as_of_seq" in tombs.columns:
-                mx = tombs.agg(F.max("as_of_seq")).first()[0]
-                if mx is not None and int(mx) >= int(
-                    orig.get("seq", 0)
-                ) + 1:
-                    raise _RestampRequired()
-        m2 = dict(fm)
-        c2 = sorted(set(fm["cells"]) | set(delta_cells))
-        m2["n_rows"] = int(fm["n_rows"]) + int(n_delta)
-        m2["cells"] = c2
-        m2["n_cells"] = len(c2)
-        if seq_aware:
-            m2["seq"] = int(fm.get("seq", 0)) + 1
+    def grow(fm: dict) -> dict:
+        cells = sorted(set(fm["cells"]) | set(delta_cells))
+        fm["n_rows"] = int(fm["n_rows"]) + int(n_delta)
+        fm["cells"] = cells
+        fm["n_cells"] = len(cells)
         if err is not None:
-            m2["err_sum"] = float(fm.get("err_sum", 0.0)) + err * int(
-                n_delta
-            )
-            m2["err_rows"] = int(fm.get("err_rows", 0)) + int(n_delta)
-            m2["last_err"] = float(err)
+            fm["err_sum"] = float(fm.get("err_sum", 0.0)) + err * int(n_delta)
+            fm["err_rows"] = int(fm.get("err_rows", 0)) + int(n_delta)
+            fm["last_err"] = float(err)
         if rerr is not None:
-            m2["route_sum"] = float(
-                fm.get("route_sum", 0.0)
-            ) + rerr * int(n_delta)
-            m2["route_rows"] = int(fm.get("route_rows", 0)) + int(
+            fm["route_sum"] = float(fm.get("route_sum", 0.0)) + rerr * int(
                 n_delta
             )
-            m2["last_route_err"] = float(rerr)
-        m2 = M.with_txn(m2, txn)
-        return M.add_gens(fresh["tables"], "coded", cp, gc_), m2
+            fm["route_rows"] = int(fm.get("route_rows", 0)) + int(n_delta)
+            fm["last_route_err"] = float(rerr)
+        return fm
 
-    try:
-        return M.commit_with_retry(path, mutate)["meta"]
-    except M.AlreadyApplied as e:
-        return dict(e.snapshot["meta"])
-    except _RestampRequired:
-        if _attempts <= 1:
-            raise M.ManifestConflictError(
-                "this append keeps racing concurrent deletes whose "
-                "tombstone cuts cover its row stamps — serialize "
-                "the writers"
-            ) from None
-        return append_ann_index(
-            delta, path, txn=txn, _attempts=_attempts - 1
-        )
+    # route_err is in the guard set because it is recomputed by every
+    # rebuild — it catches a concurrent rebuild (which changes the
+    # encode state our delta was encoded against) even on SQ8 indexes,
+    # whose codebooks are None before AND after
+    return _commit_append(
+        spark, path, snap,
+        kind="ann",
+        keys=("version", "codec", "m", "n_codewords", "vec_col", "id_col",
+              "cell_col", "codebooks", "route_err"),
+        add_tables=lambda t: M.add_gens(t, "coded", cp, gc_),
+        update_meta=grow,
+        txn=txn,
+        rerun=lambda n: append_ann_index(delta, path, txn=txn, _attempts=n),
+        attempts=_attempts,
+    )
 
 
 def delete_from_ann_index(
@@ -593,119 +544,40 @@ def delete_from_ann_index(
 ) -> dict:
     """Delete vectors from the stored index WITHOUT rewriting it — the
     dense mirror of :func:`lexindex.delete_from_lex_index` (takedowns,
-    right-to-be-forgotten): a ``(neighbor_id)`` row appends to
-    ``tombstones/`` and probes mask it before scoring, so
-    deleted vectors never appear as neighbors and ranks recompute over
-    the survivors. ``ids`` is a one-column DataFrame or a Python list.
+    right-to-be-forgotten): a ``(neighbor_id, as_of_seq)`` row appends
+    to ``tombstones/`` and probes mask it before scoring, so deleted
+    vectors never appear as neighbors and ranks recompute over the
+    survivors. ``ids`` is a one-column DataFrame or a Python list.
 
     ``n_rows`` decrements exactly (one coded scan — ids are not the
     partition key, so batch deletions); the per-cell occupancy
     inventory stays an over-approximation (it only gates append
     accounting — documented there). Physical purge happens when
-    compaction rewrites a cell; tombstones are SEQUENCE-AWARE (see
-    lexindex._mask_tombstoned): a deleted id re-appended later serves
-    its new rows — revisions are first-class; legacy pre-counter
-    indexes keep the permanent mask, for which: do
-    NOT re-use a deleted id in later appends. On sequence-aware
-    stores, ids that are absent or already masked write NO tombstone
-    (the early return keeps the mask proportional to rows actually
-    deleted) — so a PRE-EMPTIVE delete of a never-appended id does not
-    prevent a later append of that id from serving, and a re-appended
-    id serves again; permanent takedowns must be enforced upstream
-    (filter the ingest) rather than by tombstone. Returns
-    ``{"deleted": n, "meta": updated-metadata}``.
+    compaction rewrites a cell. A deleted id re-appended later serves
+    its new rows (lexindex._mask_tombstoned) — revisions are
+    first-class. Ids that are absent or already masked write NO
+    tombstone — so a PRE-EMPTIVE delete of a never-appended id does
+    not prevent a later append of that id from serving; permanent
+    takedowns must be enforced upstream (filter the ingest) rather
+    than by tombstone. Returns ``{"deleted": n, "meta":
+    updated-metadata}``.
 
     The tombstone batch and the decremented metadata land in ONE
-    manifest commit — the delete is atomic, so ``n_rows`` cannot
-    drift. A delete that loses the version race to another commit
-    re-RUNS fully against the fresh snapshot (its counts were computed
-    from the snapshot it read, so a racing append may have added rows
-    with the very ids being deleted) — see
-    :func:`manifestfs.retry_on_conflict`; the losing attempt's
-    tombstone generation is a vacuumable orphan.
+    manifest commit, re-run in full on a lost version race — the
+    tombstone cut shared with the lexical index
+    (:func:`lexindex._cut_tombstones`), so ``n_rows`` cannot drift.
+    ``guard_txn=(app_id, batch_id)`` — same conditional-delete
+    contract as :func:`lexindex.delete_from_lex_index`."""
 
-    ``guard_txn=(app_id, batch_id)`` — same conditional-delete contract
-    as :func:`lexindex.delete_from_lex_index`: no-op when the fresh
-    snapshot already carries the token (atomic with the commit via the
-    version CAS + full re-run), closing the overlapping-sync
-    re-cut-after-re-append race."""
-    return M.retry_on_conflict(
-        lambda: _delete_ann_once(spark, path, ids, guard_txn=guard_txn)
-    )
+    def shrink(hits: DataFrame, tables: dict, meta: dict):
+        n_del = hits.count()
+        meta["n_rows"] = int(meta["n_rows"]) - int(n_del)
+        return n_del, tables, meta
 
-
-def _delete_ann_once(
-    spark: SparkSession, path: str, ids, *, guard_txn: tuple | None = None
-) -> dict:
-    local = M.local_path(path)
-    snap = M.read_manifest(path)
-    meta = _read_meta(snap)
-    if guard_txn is not None and M.txn_version(
-        meta, guard_txn[0]
-    ) >= int(guard_txn[1]):
-        # token already committed by another sync pass: cutting now
-        # would mask its re-appended rows (see lexindex)
-        return {"deleted": 0, "meta": meta, "skipped_txn": True}
-    coded = M.read_table(spark, path, "coded", snap)
-    tombs = M.read_table(spark, path, "tombstones", snap)
-    if coded is not None:
-        id_type = coded.schema["neighbor_id"].dataType
-    else:
-        # empty-corpus store: no coded partitions were ever
-        # written; the stored schema string still types the tombstone
-        # mask so ids deleted now mask rows appended later
-        id_type = meta.get("id_type", "string")
-    if not isinstance(ids, DataFrame):
-        from auto_data_linkage_spark.session import local_rows_df
-
-        ids = local_rows_df(
-            spark, [(i,) for i in ids], ["neighbor_id"]
-        ).select(F.col("neighbor_id").cast(id_type))
-    else:
-        ids = ids.select(
-            F.col(ids.columns[0]).cast(id_type).alias("neighbor_id")
-        )
-    ids = ids.distinct()
-    seq_aware = "seq" in meta
-    if seq_aware:
-        # live view excludes earlier-masked rows; given ids are NOT
-        # pre-filtered (a re-appended id needs a NEW tombstone at the
-        # current counter)
-        live = _mask_tombstoned(coded, tombs, id_col="neighbor_id")
-    else:
-        if tombs is not None:
-            ids = ids.join(tombs, "neighbor_id", "left_anti")
-        live = coded
-    ids = ids.localCheckpoint(eager=True)
-    live_hits = (
-        live.join(ids, "neighbor_id", "left_semi").localCheckpoint(
-            eager=True
-        )
-        if live is not None
-        else None
+    return _cut_tombstones(
+        spark, path, ids, kind="ann", table="coded", id_col="neighbor_id",
+        shrink=shrink, guard_txn=guard_txn,
     )
-    n_del = live_hits.count() if live_hits is not None else 0
-    if ids.count() == 0 or (seq_aware and not n_del):
-        # absent or already-masked ids need no new cut (a cut masks
-        # nothing appended after it) — nothing to commit
-        return {"deleted": 0, "meta": meta}
-    gb = M.next_gen(path, "tombstones")
-    out_ids = (
-        live_hits.select("neighbor_id").distinct()
-        .withColumn("as_of_seq", F.lit(int(meta["seq"])))
-        if seq_aware
-        else ids
-    )
-    out_ids.write.parquet(os.path.join(local, "tombstones", gb))
-    tables = M.add_gens(
-        snap["tables"], "tombstones",
-        M.written_parts(path, "tombstones", gb), gb,
-    )
-    meta["n_rows"] = int(meta["n_rows"]) - int(n_del)
-    M.commit_manifest(
-        path, tables=tables, meta=meta, expected_version=snap["version"]
-    )
-    return {"deleted": int(n_del), "meta": meta}
 
 
 def compact_ann_index(
@@ -725,56 +597,38 @@ def compact_ann_index(
 
     Only cells whose data-file count exceeds ``max_files_per_cell`` are
     rewritten (a cell-targeted parquet read; untouched cells are never
-    scanned), tombstone-purged, into one fresh generation; every
-    rewritten cell cuts over in one atomic manifest commit (pinned
-    readers untouched; superseded generations reclaimed by
-    :func:`vacuum_ann_index`). Codebooks and centroids are untouched.
-    Returns a summary dict ``{cells_rewritten, files_before,
-    files_after, rows_rewritten}``."""
+    scanned), tombstone-purged, into one fresh generation
+    (:func:`manifestfs.compact_table`); every rewritten cell cuts over
+    in one atomic manifest commit (pinned readers untouched;
+    superseded generations reclaimed by :func:`vacuum_ann_index`).
+    Codebooks and centroids are untouched. Returns a summary dict
+    ``{cells_rewritten, files_before, files_after, rows_rewritten}``."""
     snap = M.read_manifest(path)
-    meta = _read_meta(snap)
-    local = M.local_path(path)
-    counts = M.part_file_counts(path, "coded", snap)
-    hot = sorted(p for p, c in counts.items() if c > max_files_per_cell)
-    if not hot:
-        return {
-            "cells_rewritten": 0,
-            "files_before": sum(counts.values()),
-            "files_after": sum(counts.values()),
-            "rows_rewritten": 0,
-        }
-    tdir = os.path.join(local, "coded")
-    df = (
-        spark.read.option("basePath", tdir)
-        .parquet(*M.table_paths(path, "coded", snap, parts=hot))
-        .drop("gen")
-    )
+    meta = _read_meta(snap, path, "ann")
     tombstones = M.read_table(spark, path, "tombstones", snap)
-    if tombstones is not None:
+    out = M.compact_table(
+        spark, path, snap, "coded",
+        max_files=max_files_per_cell,
+        partition_by=["cell"], sort_by=["cell", "neighbor_id"],
+        max_records_per_file=target_rows_per_file,
         # physical purge of deleted rows in the rewritten cells (probe
         # results unchanged — the tombstone anti-join already masked
-        # them); the mask stays for the unrewritten cells.
-        df = _mask_tombstoned(df, tombstones, id_col="neighbor_id")
-    rows = df.count()
-    files = max(1, -(-rows // target_rows_per_file))  # ceil
-    gen = M.next_gen(path, "coded")
-    (
-        df.repartition(files, "cell")
-        .sortWithinPartitions("cell", "neighbor_id")
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy("cell")
-        .parquet(os.path.join(tdir, gen))
+        # them); the mask stays for the unrewritten cells
+        rewrite=lambda df: _mask_tombstoned(
+            df, tombstones, id_col="neighbor_id"
+        ),
+        tables=None,
     )
-    tables = M.replace_parts(snap["tables"], "coded", hot, gen, path)
-    M.commit_manifest(
-        path, tables=tables, meta=meta, expected_version=snap["version"]
-    )
-    after = M.part_file_counts(path, "coded", {"tables": tables})
+    if out["parts"]:
+        M.commit_manifest(
+            path, tables=out["tables"], meta=meta,
+            expected_version=snap["version"],
+        )
     return {
-        "cells_rewritten": len(hot),
-        "files_before": sum(counts.values()),
-        "files_after": sum(after.values()),
-        "rows_rewritten": int(rows),
+        "cells_rewritten": len(out["parts"]),
+        "files_before": out["files_before"],
+        "files_after": out["files_after"],
+        "rows_rewritten": out["rows"],
     }
 
 
@@ -802,9 +656,9 @@ def rebuild_ann_index(corpus: DataFrame, path: str, **build_kwargs) -> dict:
     old index serving.
 
     Tombstones do NOT carry over: the rebuild reflects exactly the
-    corpus passed in (deletions should already be gone from it), so
-    the mask resets — the one moment deleted ids become reusable.
-    ``build_kwargs`` forward to :func:`build_ann_index` (m,
+    corpus passed in (deletions should already be gone from it). It is
+    also how an index written before the sequence counter is brought
+    back into service. ``build_kwargs`` forward to :func:`build_ann_index` (m,
     n_codewords, column names...). Returns the new metadata."""
     snap = M.read_manifest(path)
     return build_ann_index(
@@ -873,7 +727,7 @@ def load_ann_index(
     :func:`lexindex.load_lex_index`)."""
     snap = M.read_manifest(path, version)
     return AnnIndex(
-        meta=_read_meta(snap),
+        meta=_read_meta(snap, path, "ann"),
         centroids=M.read_table(
             spark, path, "centroids", snap,
             schema=snap["meta"].get("centroids_schema"),
@@ -926,7 +780,7 @@ def ann_index_topk(
         # deleted-ids mask (delete_from_ann_index): deleted-ids-sized,
         # broadcast; the cell-pruning filter pushes through the
         # anti-join's left side so the partition-pruned scan is kept.
-        # Sequence-aware: re-appended ids serve their NEW rows
+        # Re-appended ids serve their NEW rows
         # (lexindex._mask_tombstoned).
         coded = _mask_tombstoned(
             coded, index.tombstones, id_col="neighbor_id"

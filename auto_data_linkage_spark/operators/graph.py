@@ -1448,52 +1448,47 @@ def compact_edge_store(
     one row per edge and few files per bucket (streaming appends write
     one small file per touched bucket per micro-batch), purging
     taken-down domains' edges on the way. The rewrite lands in one
-    fresh generation and every rewritten bucket cuts over in ONE
-    manifest commit; pinned readers are untouched and superseded
-    generations are reclaimed by :func:`vacuum_edge_store`. Returns
+    fresh generation (:func:`manifestfs.compact_table`) and every
+    rewritten bucket cuts over in ONE manifest commit; pinned readers
+    are untouched and superseded generations are reclaimed by
+    :func:`vacuum_edge_store`. Returns
     ``{buckets_rewritten, files_before, files_after}``."""
     snap = M.read_manifest(path)
-    local = M.local_path(path)
-    counts = M.part_file_counts(path, "edges", snap)
-    hot = sorted(p for p, c in counts.items() if c > max_files_per_bucket)
-    summary = {
-        "buckets_rewritten": len(hot),
-        "files_before": sum(counts.values()),
-        "files_after": sum(counts.values()),
-    }
-    if not hot:
-        return summary
-    tdir = os.path.join(local, "edges")
-    df = (
-        spark.read.option("basePath", tdir)
-        .parquet(*M.table_paths(path, "edges", snap, parts=hot))
-        .drop("gen")
+    tombs = M.read_table(
+        spark, path, "tombstones", snap, schema=_TOMBSTONES_SCHEMA
     )
-    tombs = M.read_table(spark, path, "tombstones", snap)
-    if tombs is not None:
-        df = df.join(
-            tombs.select(F.col("domain").alias("src_domain")),
-            "src_domain",
-            "left_anti",
-        ).join(
-            tombs.select(F.col("domain").alias("dst_domain")),
-            "dst_domain",
-            "left_anti",
+
+    def purge_and_merge(df: DataFrame) -> DataFrame:
+        if tombs is not None:
+            df = df.join(
+                tombs.select(F.col("domain").alias("src_domain")),
+                "src_domain",
+                "left_anti",
+            ).join(
+                tombs.select(F.col("domain").alias("dst_domain")),
+                "dst_domain",
+                "left_anti",
+            )
+        return df.groupBy("bucket", "src_domain", "dst_domain").agg(
+            F.sum("n_links").cast("bigint").alias("n_links")
         )
-    df = df.groupBy("bucket", "src_domain", "dst_domain").agg(
-        F.sum("n_links").cast("bigint").alias("n_links")
+
+    out = M.compact_table(
+        spark, path, snap, "edges",
+        max_files=max_files_per_bucket,
+        partition_by=["bucket"],
+        sort_by=["bucket", "src_domain", "dst_domain"],
+        max_records_per_file=target_rows_per_file,
+        rewrite=purge_and_merge, tables=None,
     )
-    rows = df.count()
-    files = max(1, -(-rows // target_rows_per_file))  # ceil
-    gen = M.next_gen(path, "edges")
-    (
-        df.repartition(files, "bucket")
-        .sortWithinPartitions("bucket", "src_domain", "dst_domain")
-        .write.option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy("bucket")
-        .parquet(os.path.join(tdir, gen))
-    )
-    tables = M.replace_parts(snap["tables"], "edges", hot, gen, path)
+    summary = {
+        "buckets_rewritten": len(out["parts"]),
+        "files_before": out["files_before"],
+        "files_after": out["files_after"],
+    }
+    if not out["parts"]:
+        return summary
+    tables = out["tables"]
     meta = snap["meta"]
     pre_key = _edge_state_key(snap)
     post_key = _edge_state_key({"tables": tables})
@@ -1515,8 +1510,5 @@ def compact_edge_store(
     M.commit_manifest(
         path, tables=tables, meta=meta,
         expected_version=snap["version"],
-    )
-    summary["files_after"] = sum(
-        M.part_file_counts(path, "edges", {"tables": tables}).values()
     )
     return summary

@@ -46,6 +46,14 @@ in the retired in-place ``rename`` layout are refused with a
 ``ValueError`` (:func:`manifestfs.reject_legacy_store`); rebuild them
 at a new path.
 
+One mutation model, shared with :mod:`.annindex`: rows carry the
+store's sequence counter at append time and tombstones the counter
+they were cut at (:func:`_mask_tombstoned`); :func:`_cut_tombstones`
+and :func:`_commit_append` are the one delete and the one append
+commit of both indexes. An index written before the counter existed
+(no ``seq`` in its meta) is refused before any read or write
+(:func:`_read_meta`) — rebuild it.
+
 Scale design: the postings shuffle at build time is the inverted index
 itself (map-side combined distinct (doc, term) pairs — any index build
 must pay it once). Probe-time work is bounded by |query vocabulary|:
@@ -84,12 +92,24 @@ __all__ = [
 ]
 
 
-def _read_meta(snap: dict) -> dict:
-    """The snapshot's metadata, checked against the supported version."""
+def _read_meta(snap: dict, path: str, kind: str) -> dict:
+    """The snapshot's metadata, checked against the supported version
+    and the one tombstone model (sequence stamps, see
+    :func:`_mask_tombstoned`) — shared by the lexical and ANN indexes,
+    and called before any read or write of the store. An index written
+    before the sequence counter existed (no ``seq`` in its meta) is
+    refused: rebuild it."""
     meta = dict(snap["meta"])
     if meta.get("version") != _VERSION:
         raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
+            f"unsupported {kind}-index version {meta.get('version')!r}"
+        )
+    if "seq" not in meta:
+        raise ValueError(
+            f"{path} is a {kind} index written before the sequence "
+            "counter (its tombstones cannot tell a re-appended id from "
+            f"a deleted one); rebuild it with rebuild_{kind}_index or "
+            "at a new path"
         )
     return meta
 
@@ -137,28 +157,21 @@ def _mask_tombstoned(
     tombs: DataFrame | None,
     id_col: str = "doc_id",
 ):
-    """Live view of postings/coded rows under the tombstone mask.
-
-    Sequence-aware stores (rows carry ``__seq`` — the store's mutation
-    counter at append time — and tombstones carry ``as_of_seq``) mask
-    only rows appended AT OR BEFORE the delete: a doc id deleted and
-    later re-appended is live again, which is what lets revisions
-    (delete old row, append new row, same id) flow through the index
-    instead of being silently masked forever. Legacy stores (built
-    before the counter existed) keep the permanent id mask."""
+    """Live view of postings/coded rows under the tombstone mask. Rows
+    carry ``__seq`` — the store's mutation counter at append time — and
+    tombstones carry ``as_of_seq``, the counter they were cut at; a cut
+    masks only rows appended AT OR BEFORE it, so a doc id deleted and
+    later re-appended is live again (revisions — delete old row,
+    append new row, same id — flow through the index)."""
     if tombs is None or rows is None:
         return rows
-    if "as_of_seq" in tombs.columns and "__seq" in rows.columns:
-        t = tombs.select(
-            F.col(id_col).alias("__t_id"), F.col("as_of_seq")
-        )
-        return rows.join(
-            t,
-            on=(rows[id_col] == F.col("__t_id"))
-            & (rows["__seq"] <= F.col("as_of_seq")),
-            how="left_anti",
-        )
-    return rows.join(tombs.select(id_col), id_col, "left_anti")
+    t = tombs.select(F.col(id_col).alias("__t_id"), F.col("as_of_seq"))
+    return rows.join(
+        t,
+        on=(rows[id_col] == F.col("__t_id"))
+        & (rows["__seq"] <= F.col("as_of_seq")),
+        how="left_anti",
+    )
 
 
 def _build_commit(
@@ -253,6 +266,78 @@ class _RestampRequired(Exception):
     fully (re-encode against the fresh counter)."""
 
 
+def _commit_append(
+    spark: SparkSession,
+    path: str,
+    snap: dict,
+    *,
+    kind: str,
+    keys: tuple[str, ...],
+    add_tables,
+    update_meta,
+    txn: tuple | None,
+    rerun,
+    attempts: int,
+) -> dict:
+    """The one append commit of the lexical and ANN indexes. The
+    delta's generations are already written (rows stamped ``__seq =
+    snap seq + 1``); this merges them into the FRESH snapshot with
+    :func:`manifestfs.commit_with_retry`, so losing the version race
+    to another append, a delete or a compaction only re-runs the
+    manifest merge. ``add_tables(tables)`` adds the delta generations,
+    ``update_meta(meta)`` returns the meta with the store's counts
+    grown; the commit also bumps ``seq`` and records ``txn``.
+
+    Guards, all atomic with the commit: a fresh snapshot already
+    carrying ``txn`` aborts (:class:`manifestfs.AlreadyApplied` — a
+    concurrent writer with the same token won, merging would
+    double-append); a changed parameter in ``keys`` (a concurrent
+    rebuild) raises; a concurrent delete whose cut covers our stamp
+    would mask the rows on arrival, so the append re-runs fully via
+    ``rerun(attempts - 1)`` against the fresh counter. Returns the
+    committed metadata."""
+    orig = snap["meta"]
+    stamp = int(orig["seq"]) + 1
+
+    def mutate(fresh: dict):
+        fm = fresh["meta"]
+        if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
+            raise M.AlreadyApplied(fresh)
+        for k in keys:
+            if fm.get(k) != orig.get(k):
+                raise M.ManifestConflictError(
+                    f"{kind}-index parameter {k!r} changed under this "
+                    "append (concurrent rebuild?) — re-run the append "
+                    "against the new index"
+                )
+        if int(fm["seq"]) != int(orig["seq"]):
+            # our rows were stamped against the OLD counter; appends
+            # alone move seq but cut nothing, so only a fresh cut at or
+            # past the stamp forces a restamp
+            tombs = M.read_table(spark, path, "tombstones", fresh)
+            if tombs is not None:
+                mx = tombs.agg(F.max("as_of_seq")).first()[0]
+                if mx is not None and int(mx) >= stamp:
+                    raise _RestampRequired()
+        m2 = update_meta(dict(fm))
+        m2["seq"] = int(fm["seq"]) + 1
+        return add_tables(fresh["tables"]), M.with_txn(m2, txn)
+
+    try:
+        return M.commit_with_retry(path, mutate)["meta"]
+    except M.AlreadyApplied as e:
+        return dict(e.snapshot["meta"])
+    except _RestampRequired:
+        if attempts <= 1:
+            raise M.ManifestConflictError(
+                "this append keeps racing concurrent deletes whose "
+                "tombstone cuts cover its row stamps — serialize "
+                "the writers"
+            ) from None
+        # the losing attempt's generations are vacuumable orphans
+        return rerun(attempts - 1)
+
+
 def append_lex_index(
     delta: DataFrame, path: str, *, txn: tuple | None = None,
     _attempts: int = 3,
@@ -263,11 +348,16 @@ def append_lex_index(
     stored row is ever rewritten). ``n_docs``/``sum_dl`` update from one
     aggregate over the delta. Ids are NOT dedup-checked against stored
     rows (dedup upstream — the same contract as ``append_ann_index``).
+    Rows carry ``__seq`` = the store's counter + 1, so a previously
+    deleted id re-appended here is LIVE (:func:`_mask_tombstoned`).
 
     The delta lands in fresh ``gen=N`` dirs and becomes visible only at
     the single manifest commit — a crash before the commit leaves
     nothing visible, so a checkpointed streaming replay of the failed
-    batch appends exactly once.
+    batch appends exactly once. A concurrent commit costs only a
+    manifest merge; a concurrent REBUILD (it may change
+    tokenization-relevant parameters) is guarded and loud
+    (:func:`_commit_append`).
 
     ``txn=(app_id, batch_id)`` makes replays idempotent from the OTHER
     side too (crash AFTER the commit but before the streaming
@@ -277,7 +367,7 @@ def append_lex_index(
     :func:`manifestfs.txn_version`)."""
     local = M.local_path(path)
     snap = M.read_manifest(path)
-    meta = _read_meta(snap)
+    meta = _read_meta(snap, path, "lex")
     if txn is not None and M.txn_version(meta, txn[0]) >= int(txn[1]):
         return meta  # this batch already committed: a checkpoint replay
     n_docs, sum_dl = delta.select(
@@ -285,21 +375,16 @@ def append_lex_index(
     ).agg(F.count("*"), F.sum("__dl")).first()
     if not n_docs:
         return meta
-    posts = _bucketed_postings(
-        delta,
-        id_col=meta["id_col"],
-        text_col=meta["text_col"],
-        n_buckets=meta["n_buckets"],
-    )
-    seq_aware = "seq" in meta
-    if seq_aware:
-        # rows appended now carry seq+1 — past a tombstone cut at the
-        # current counter, so a previously deleted id re-appended here
-        # is LIVE (see _mask_tombstoned); legacy stores stay unstamped
-        posts = posts.withColumn(
-            "__seq", F.lit(int(meta["seq"]) + 1)
+    posts = (
+        _bucketed_postings(
+            delta,
+            id_col=meta["id_col"],
+            text_col=meta["text_col"],
+            n_buckets=meta["n_buckets"],
         )
-    posts = posts.localCheckpoint(eager=False)
+        .withColumn("__seq", F.lit(int(meta["seq"]) + 1))
+        .localCheckpoint(eager=False)
+    )
     gp = M.next_gen(path, "postings")
     gt = M.next_gen(path, "terms")
     posts.write.mode("append").partitionBy("bucket").parquet(
@@ -312,76 +397,26 @@ def append_lex_index(
         .partitionBy("bucket")
         .parquet(os.path.join(local, "terms", gt))
     )
-    # merge-retry commit (manifestfs.commit_with_retry): the delta
-    # generations are already written and immutable, so losing the
-    # version race to a concurrent commit (another append, a delete, a
-    # compaction) only re-runs this cheap manifest merge — adding our
-    # gens to the FRESH snapshot composes with any interleaved
-    # delta/compaction. A concurrent REBUILD is the one non-mergeable
-    # case (it may change tokenization-relevant parameters and resets
-    # the corpus) — guarded, loud.
     pp = M.written_parts(path, "postings", gp)
     tp = M.written_parts(path, "terms", gt)
-    orig = snap["meta"]
 
-    def mutate(fresh: dict):
-        fm = fresh["meta"]
-        if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
-            # a concurrent writer presenting the SAME token won the
-            # race since the entry check (duplicate sink instance /
-            # overlapping sync): merging would double-append the batch
-            # — abort atomically with the commit; our gens stay
-            # invisible (vacuumable orphans)
-            raise M.AlreadyApplied(fresh)
-        for k in ("version", "n_buckets", "id_col", "text_col"):
-            if fm.get(k) != orig.get(k):
-                raise M.ManifestConflictError(
-                    f"lex-index parameter {k!r} changed under this "
-                    "append (concurrent rebuild?) — re-run the "
-                    "append against the new index"
-                )
-        if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
-            # our rows were stamped against the OLD counter; if a
-            # concurrent delete cut at or past that stamp, merging now
-            # would mask the rows the moment they arrive — check the
-            # FRESH cuts and restamp if so (appends alone never trip
-            # this: they move seq but not cuts)
-            tombs = M.read_table(
-                delta.sparkSession, path, "tombstones", fresh
-            )
-            if tombs is not None and "as_of_seq" in tombs.columns:
-                mx = tombs.agg(F.max("as_of_seq")).first()[0]
-                if mx is not None and int(mx) >= int(
-                    orig.get("seq", 0)
-                ) + 1:
-                    raise _RestampRequired()
-        m2 = dict(fm)
-        m2["n_docs"] = int(fm["n_docs"]) + int(n_docs)
-        m2["sum_dl"] = int(fm["sum_dl"]) + int(sum_dl or 0)
-        if seq_aware:
-            m2["seq"] = int(fm.get("seq", 0)) + 1
-        m2 = M.with_txn(m2, txn)
-        t2 = M.add_gens(fresh["tables"], "postings", pp, gp)
-        t2 = M.add_gens(t2, "terms", tp, gt)
-        return t2, m2
+    def grow(fm: dict) -> dict:
+        fm["n_docs"] = int(fm["n_docs"]) + int(n_docs)
+        fm["sum_dl"] = int(fm["sum_dl"]) + int(sum_dl or 0)
+        return fm
 
-    try:
-        return M.commit_with_retry(path, mutate)["meta"]
-    except M.AlreadyApplied as e:
-        return dict(e.snapshot["meta"])
-    except _RestampRequired:
-        if _attempts <= 1:
-            raise M.ManifestConflictError(
-                "this append keeps racing concurrent deletes whose "
-                "tombstone cuts cover its row stamps — serialize "
-                "the writers"
-            ) from None
-        # full re-run: re-read meta, re-encode, restamp past the new
-        # cuts (the losing attempt's generations are vacuumable
-        # orphans)
-        return append_lex_index(
-            delta, path, txn=txn, _attempts=_attempts - 1
-        )
+    return _commit_append(
+        delta.sparkSession, path, snap,
+        kind="lex",
+        keys=("version", "n_buckets", "id_col", "text_col"),
+        add_tables=lambda t: M.add_gens(
+            M.add_gens(t, "postings", pp, gp), "terms", tp, gt
+        ),
+        update_meta=grow,
+        txn=txn,
+        rerun=lambda n: append_lex_index(delta, path, txn=txn, _attempts=n),
+        attempts=_attempts,
+    )
 
 
 def delete_from_lex_index(
@@ -394,8 +429,8 @@ def delete_from_lex_index(
 
     Everything is a DELTA, riding the contracts the store already has:
 
-    - a ``(doc_id)`` row appends to ``tombstones`` — probes LEFT-ANTI
-      it (deleted-ids-sized, AQE broadcasts it);
+    - a ``(doc_id, as_of_seq)`` row appends to ``tombstones`` — probes
+      LEFT-ANTI it (deleted-ids-sized, AQE broadcasts it);
     - a NEGATIVE df delta ``(term, -n)`` appends to ``terms`` for the
       deleted docs' terms — the probe's SUM(df)-at-read then yields the
       exact post-delete document frequencies with no stored row
@@ -410,16 +445,13 @@ def delete_from_lex_index(
     (tested) — idf, avgdl, and the candidate set all see the deletion.
     Cost: ONE full postings scan per delete call (doc ids are not the
     partition key), so batch deletions. Physical purge of the masked
-    postings rows happens at the next compaction; the tombstone mask
-    is permanent ONLY on legacy pre-sequence-counter indexes — there,
-    do NOT re-use a deleted doc id in later appends. On
-    sequence-aware stores, ids that are absent or already masked write
-    NO tombstone (the early return keeps the mask proportional to rows
-    actually deleted) — a pre-emptive delete of a never-appended id
-    does not prevent a later append of that id from serving, and a
-    re-appended id serves again; permanent takedowns must be enforced
-    upstream (filter the ingest) rather than by tombstone. Returns
-    ``{"deleted": n, "meta": updated-metadata}``.
+    postings rows happens at the next compaction. Ids that are absent
+    or already masked write NO tombstone (the mask stays proportional
+    to rows actually deleted) — a pre-emptive delete of a
+    never-appended id does not prevent a later append of that id from
+    serving, and a re-appended id serves again; permanent takedowns
+    must be enforced upstream (filter the ingest) rather than by
+    tombstone. Returns ``{"deleted": n, "meta": updated-metadata}``.
 
     ``guard_txn=(app_id, batch_id)`` makes the delete CONDITIONAL on
     the index's stored idempotence token still being below
@@ -428,115 +460,115 @@ def delete_from_lex_index(
     with the commit (re-run on a lost version race re-checks fresh
     state), closing the sync race where an overlapping :mod:`.sync`
     pass would otherwise re-cut tombstones AFTER the leader's
-    re-append landed, permanently masking the revision rows.
+    re-append landed, masking the revision rows.
     """
-    # concurrency: a delete racing another commit re-RUNS against the
-    # fresh snapshot (not a cheap merge — its df deltas and counts were
-    # computed from the snapshot it read, so a racing
-    # append/compaction/rebuild makes them stale). See
-    # manifestfs.retry_on_conflict.
-    return M.retry_on_conflict(
-        lambda: _delete_once(spark, path, ids, guard_txn=guard_txn)
-    )
-
-
-def _delete_once(
-    spark: SparkSession, path: str, ids, *, guard_txn: tuple | None = None
-) -> dict:
-    """One delete attempt against the current snapshot: the negative df
-    deltas, the tombstone batch, and the decremented metadata all
-    become visible in ONE manifest commit."""
-    snap = M.read_manifest(path)
-    meta = _read_meta(snap)
-    if guard_txn is not None and M.txn_version(
-        meta, guard_txn[0]
-    ) >= int(guard_txn[1]):
-        # the guarded token is already committed — this delete belongs
-        # to a sync pass another writer completed; cutting tombstones
-        # now would mask rows that writer re-appended. Atomic with the
-        # commit: a leader landing between this read and our commit
-        # conflicts the version CAS, and the full re-run re-checks.
-        return {"deleted": 0, "meta": meta, "skipped_txn": True}
     local = M.local_path(path)
-    posts = _read_table(spark, path, "postings", snap)
-    id_type = (
-        posts if posts is not None
-        else spark.createDataFrame([], meta["postings_schema"])
-    ).schema["doc_id"].dataType
-    if not isinstance(ids, DataFrame):
-        from auto_data_linkage_spark.session import local_rows_df
 
-        ids = local_rows_df(
-            spark, [(i,) for i in ids], ["doc_id"]
-        ).select(F.col("doc_id").cast(id_type))
-    else:
-        ids = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc_id"))
-    ids = ids.distinct()
-    tombs = M.read_table(spark, path, "tombstones", snap)
-    seq_aware = "seq" in meta
-    if seq_aware:
-        # the live view already excludes earlier-masked rows, so a
-        # re-delete of a re-appended id counts only its LIVE rows; the
-        # given ids are NOT pre-filtered (a re-appended id needs a NEW
-        # tombstone at the current counter)
-        live = _mask_tombstoned(posts, tombs)
-    else:
-        if tombs is not None:
-            ids = ids.join(tombs, "doc_id", "left_anti")
-        live = posts
-    ids = ids.localCheckpoint(eager=True)
-    n_new = ids.count()
-    n_del, dl_del = 0, 0
-    hit = None
-    if live is not None and n_new:
-        # one postings scan: the deleted docs' rows feed BOTH the exact
-        # n_docs/sum_dl decrement and the per-term negative df deltas
-        hit = live.join(ids, "doc_id", "left_semi").localCheckpoint(
-            eager=True
-        )
+    def shrink(hits: DataFrame, tables: dict, meta: dict):
+        # the deleted docs' rows feed BOTH the exact n_docs/sum_dl
+        # decrement and the per-term negative df deltas
         n_del, dl_del = (
-            hit.select("doc_id", "dl")
+            hits.select("doc_id", "dl")
             .distinct()
             .agg(F.count("*"), F.coalesce(F.sum("dl"), F.lit(0)))
             .first()
         )
-    if not n_new:
-        return {"deleted": 0, "meta": meta}
-    if seq_aware and not n_del:
-        # nothing live matches: absent or already-masked ids need no
-        # new cut (a cut masks nothing appended after it), so there is
-        # nothing to commit — keeps the tombstone table proportional
-        # to rows actually deleted
-        return {"deleted": 0, "meta": meta}
-    tables = snap["tables"]
-    if n_del:
-        gt = M.next_gen(path, "terms")
-        (
-            hit.groupBy("bucket", "term")
-            .agg((-F.count("*")).alias("df"))
-            .write.partitionBy("bucket")
-            .parquet(os.path.join(local, "terms", gt))
+        if n_del:
+            gt = M.next_gen(path, "terms")
+            (
+                hits.groupBy("bucket", "term")
+                .agg((-F.count("*")).alias("df"))
+                .write.partitionBy("bucket")
+                .parquet(os.path.join(local, "terms", gt))
+            )
+            tables = M.add_gens(
+                tables, "terms", M.written_parts(path, "terms", gt), gt
+            )
+            meta["n_docs"] = int(meta["n_docs"]) - int(n_del)
+            meta["sum_dl"] = int(meta["sum_dl"]) - int(dl_del)
+        return n_del, tables, meta
+
+    return _cut_tombstones(
+        spark, path, ids, kind="lex", table="postings", id_col="doc_id",
+        shrink=shrink, guard_txn=guard_txn,
+    )
+
+
+def _cut_tombstones(
+    spark: SparkSession,
+    path: str,
+    ids,
+    *,
+    kind: str,
+    table: str,
+    id_col: str,
+    shrink,
+    guard_txn: tuple | None,
+) -> dict:
+    """The one tombstone cut of the lexical and ANN indexes: the LIVE
+    rows of ``table`` whose ``id_col`` is in ``ids`` get a tombstone at
+    the store's current ``seq`` (masking every row appended at or
+    before it, :func:`_mask_tombstoned`), committed in ONE manifest
+    together with whatever ``shrink(hits, tables, meta) -> (n_deleted,
+    tables, meta)`` adds — the store's own counts and stats deltas.
+    Nothing is committed when no live row matches (a cut masks nothing
+    appended after it).
+
+    A lost version race re-RUNS the whole cut against the fresh
+    snapshot (:func:`manifestfs.retry_on_conflict`): its counts were
+    computed from the snapshot it read, so a racing append may have
+    added rows with the very ids being deleted. The losing attempt's
+    generations are vacuumable orphans."""
+
+    def once() -> dict:
+        snap = M.read_manifest(path)
+        meta = _read_meta(snap, path, kind)
+        if guard_txn is not None and M.txn_version(
+            meta, guard_txn[0]
+        ) >= int(guard_txn[1]):
+            # the guarded token is already committed — this delete
+            # belongs to a sync pass another writer completed; cutting
+            # now would mask rows that writer re-appended
+            return {"deleted": 0, "meta": meta, "skipped_txn": True}
+        rows = M.read_table(
+            spark, path, table, snap, schema=meta[f"{table}_schema"]
         )
+        if rows is None:
+            return {"deleted": 0, "meta": meta}
+        id_type = rows.schema[id_col].dataType
+        if isinstance(ids, DataFrame):
+            wanted = ids.select(
+                F.col(ids.columns[0]).cast(id_type).alias(id_col)
+            )
+        else:
+            from auto_data_linkage_spark.session import local_rows_df
+
+            wanted = local_rows_df(
+                spark, [(i,) for i in ids], [id_col]
+            ).select(F.col(id_col).cast(id_type))
+        # the live view already excludes earlier-masked rows, so a
+        # re-delete of a re-appended id counts only its live rows
+        live = _mask_tombstoned(
+            rows, M.read_table(spark, path, "tombstones", snap), id_col
+        )
+        hits = live.join(wanted.distinct(), id_col, "left_semi")
+        hits = hits.localCheckpoint(eager=True)
+        n_del, tables, meta = shrink(hits, snap["tables"], meta)
+        if not n_del:
+            return {"deleted": 0, "meta": meta}
+        gb = M.next_gen(path, "tombstones")
+        hits.select(id_col).distinct().withColumn(
+            "as_of_seq", F.lit(int(meta["seq"]))
+        ).write.parquet(os.path.join(M.local_path(path), "tombstones", gb))
         tables = M.add_gens(
-            tables, "terms", M.written_parts(path, "terms", gt), gt
+            tables, "tombstones", M.written_parts(path, "tombstones", gb), gb
         )
-    gb = M.next_gen(path, "tombstones")
-    out_ids = (
-        hit.select("doc_id").distinct()
-        .withColumn("as_of_seq", F.lit(int(meta["seq"])))
-        if seq_aware and hit is not None
-        else ids
-    )
-    out_ids.write.parquet(os.path.join(local, "tombstones", gb))
-    tables = M.add_gens(
-        tables, "tombstones", M.written_parts(path, "tombstones", gb), gb
-    )
-    meta["n_docs"] = int(meta["n_docs"]) - int(n_del)
-    meta["sum_dl"] = int(meta["sum_dl"]) - int(dl_del)
-    M.commit_manifest(
-        path, tables=tables, meta=meta, expected_version=snap["version"]
-    )
-    return {"deleted": int(n_del), "meta": meta}
+        M.commit_manifest(
+            path, tables=tables, meta=meta, expected_version=snap["version"]
+        )
+        return {"deleted": int(n_del), "meta": meta}
+
+    return M.retry_on_conflict(once)
 
 
 def compact_lex_index(
@@ -563,57 +595,40 @@ def compact_lex_index(
     ``terms`` rows whose df deltas cancel to 0 are removed — probe
     results are unchanged (the tombstone mask and SUM(df) already
     masked them), the bytes just stop being carried; rows of
-    RE-APPENDED ids survive the purge (the mask is sequence-aware).
+    RE-APPENDED ids survive the purge (it is the probes' mask).
     The tombstone rows themselves are kept (unrewritten buckets still
     need them; past cuts never mask newer appends).
     Returns ``{buckets_rewritten, files_before, files_after}``."""
     snap = M.read_manifest(path)
-    meta = _read_meta(snap)
-    local = M.local_path(path)
+    meta = _read_meta(snap, path, "lex")
     tombstones = M.read_table(spark, path, "tombstones", snap)
+
+    def merge_terms(df: DataFrame) -> DataFrame:
+        # deltas collapse (delete's negatives included); a term whose
+        # deltas cancel to 0 carries no information — drop it
+        return (
+            df.groupBy("bucket", "term")
+            .agg(F.sum("df").alias("df"))
+            .where(F.col("df") != 0)
+        )
+
     tables = snap["tables"]
     summary = {"buckets_rewritten": 0, "files_before": 0, "files_after": 0}
-    for table, merge in (("postings", False), ("terms", True)):
-        counts = M.part_file_counts(path, table, snap)
-        summary["files_before"] += sum(counts.values())
-        hot = sorted(p for p, c in counts.items() if c > max_files_per_bucket)
-        if not hot:
-            summary["files_after"] += sum(counts.values())
-            continue
-        tdir = os.path.join(local, table)
-        df = (
-            spark.read.option("basePath", tdir)
-            .parquet(*M.table_paths(path, table, snap, parts=hot))
-            .drop("gen")
+    for table, rewrite in (
+        ("postings", lambda df: _mask_tombstoned(df, tombstones)),
+        ("terms", merge_terms),
+    ):
+        out = M.compact_table(
+            spark, path, snap, table,
+            max_files=max_files_per_bucket,
+            partition_by=["bucket"], sort_by=["bucket", "term"],
+            max_records_per_file=target_rows_per_file,
+            rewrite=rewrite, tables=tables,
         )
-        if table == "postings" and tombstones is not None:
-            # purge = the same seq-aware mask probes apply: rows of
-            # re-appended ids survive the rewrite (only the masked
-            # generations' rows drop)
-            df = _mask_tombstoned(df, tombstones)
-        if merge:
-            # deltas collapse (delete's negatives included); a term
-            # whose deltas cancel to 0 carries no information — drop it
-            df = (
-                df.groupBy("bucket", "term")
-                .agg(F.sum("df").alias("df"))
-                .where(F.col("df") != 0)
-            )
-        rows = df.count()
-        files = max(1, -(-rows // target_rows_per_file))  # ceil
-        gen = M.next_gen(path, table)
-        (
-            df.repartition(files, "bucket")
-            .sortWithinPartitions("bucket", "term")
-            .write.option("maxRecordsPerFile", target_rows_per_file)
-            .partitionBy("bucket")
-            .parquet(os.path.join(tdir, gen))
-        )
-        tables = M.replace_parts(tables, table, hot, gen, path)
-        summary["buckets_rewritten"] += len(hot)
-        summary["files_after"] += sum(
-            M.part_file_counts(path, table, {"tables": tables}).values()
-        )
+        tables = out["tables"]
+        summary["buckets_rewritten"] += len(out["parts"])
+        summary["files_before"] += out["files_before"]
+        summary["files_after"] += out["files_after"]
     if summary["buckets_rewritten"]:
         M.commit_manifest(
             path, tables=tables, meta=meta, expected_version=snap["version"]
@@ -641,8 +656,8 @@ def rebuild_lex_index(
     untouched (the orphan generations are vacuumed later).
 
     Tombstones do NOT carry over — the rebuild reflects exactly the
-    corpus passed in, the one moment deleted ids become reusable.
-    Parameters default as in :func:`build_lex_index`. Returns the new
+    corpus passed in. It is also how an index written before the
+    sequence counter is brought back into service. Parameters default as in :func:`build_lex_index`. Returns the new
     metadata."""
     snap = M.read_manifest(path)
     return _build_commit(
@@ -723,7 +738,7 @@ def load_lex_index(
     snapshot (still retained by vacuum's keep-window) — e.g. serve the
     pre-delete index for an audit, or diff top-k across versions."""
     snap = M.read_manifest(path, version)
-    meta = _read_meta(snap)
+    meta = _read_meta(snap, path, "lex")
     tables = {
         t: _read_table(spark, path, t, snap)
         for t in ("postings", "terms", "tombstones")
@@ -824,8 +839,8 @@ def lex_index_topk(
     if index.tombstones is not None:
         # deleted-ids mask (delete_from_lex_index): deleted-ids-sized,
         # broadcast; the negative df deltas already corrected the
-        # stats side, this masks the candidate set — sequence-aware,
-        # so re-appended ids serve their NEW rows (_mask_tombstoned).
+        # stats side, this masks the candidate set — re-appended ids
+        # serve their NEW rows (_mask_tombstoned).
         matched = _mask_tombstoned(matched, index.tombstones)
     if exclude_self:
         matched = matched.where(F.col("doc_id") != F.col("query_id"))

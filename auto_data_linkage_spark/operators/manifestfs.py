@@ -75,6 +75,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifests"
@@ -98,8 +99,10 @@ __all__ = [
     "with_txn",
     "next_gen",
     "written_parts",
+    "write_gen",
     "add_gens",
     "replace_parts",
+    "compact_table",
     "table_paths",
     "read_table",
     "part_file_counts",
@@ -669,6 +672,34 @@ def written_parts(root: str, table: str, gen: str) -> list[str]:
     return [""] if has_files else []
 
 
+def write_gen(
+    df: DataFrame,
+    root: str,
+    table: str,
+    gen: str,
+    *,
+    partition_by: list[str],
+    sort_by: list[str] | None,
+    max_records_per_file: int,
+) -> list[str]:
+    """Write ``df`` into ``<table>/<gen>/`` partitioned by
+    ``partition_by``: hash-repartition on the partition columns (each
+    partition's rows land in one task, so each directory gets a
+    bounded file count), optionally sort within tasks (parquet min/max
+    selectivity), cap rows per file. Returns the leaf partition keys
+    actually created (:func:`written_parts`)."""
+    out = df.repartition(*[F.col(c) for c in partition_by])
+    if sort_by:
+        out = out.sortWithinPartitions(*[F.col(c) for c in sort_by])
+    (
+        out.write.mode("error")
+        .option("maxRecordsPerFile", max_records_per_file)
+        .partitionBy(*partition_by)
+        .parquet(os.path.join(local_path(root), table, gen))
+    )
+    return written_parts(root, table, gen)
+
+
 def add_gens(tables: dict, table: str, parts: list[str], gen: str) -> dict:
     """New tables mapping with ``gen`` appended to each part's live
     list (append/delete deltas). Input is not mutated."""
@@ -694,6 +725,71 @@ def replace_parts(
             tm[part] = [gen]
         else:
             tm.pop(part, None)
+    return out
+
+
+def compact_table(
+    spark: SparkSession,
+    root: str,
+    snapshot: dict,
+    table: str,
+    *,
+    max_files: int,
+    partition_by: list[str],
+    sort_by: list[str] | None,
+    max_records_per_file: int,
+    rewrite,
+    tables: dict | None,
+) -> dict:
+    """The one fragment compaction of every store: read the live
+    partitions of ``table`` holding more than ``max_files`` parquet
+    files, apply the store's ``rewrite(df) -> df`` (tombstone purge,
+    delta merge; None for a verbatim rewrite), write the result as ONE
+    fresh generation (:func:`write_gen`) and replace those partitions
+    in ``tables`` (None: the snapshot's; pass the running mapping to
+    compact several tables into one commit). The caller commits.
+
+    Returns ``{"tables", "parts", "files_before", "files_after",
+    "rows"}``: ``parts`` are the rewritten partition keys (empty — and
+    nothing written — when none is over the limit), ``rows`` the row
+    count written, summed from the new files' parquet footers (no
+    Spark job)."""
+    counts = part_file_counts(root, table, snapshot)
+    tables = snapshot["tables"] if tables is None else tables
+    hot = sorted(p for p, c in counts.items() if c > max_files)
+    out = {
+        "tables": tables,
+        "parts": hot,
+        "files_before": sum(counts.values()),
+        "files_after": sum(counts.values()),
+        "rows": 0,
+    }
+    if not hot:
+        return out
+    df = (
+        spark.read.option("basePath", os.path.join(local_path(root), table))
+        .parquet(*table_paths(root, table, snapshot, parts=hot))
+        .drop("gen")
+    )
+    if rewrite is not None:
+        df = rewrite(df)
+    gen = next_gen(root, table)
+    write_gen(
+        df, root, table, gen, partition_by=partition_by, sort_by=sort_by,
+        max_records_per_file=max_records_per_file,
+    )
+    out["tables"] = replace_parts(tables, table, hot, gen, root)
+    out["files_after"] = sum(
+        part_file_counts(root, table, {"tables": out["tables"]}).values()
+    )
+    import pyarrow.parquet as pq
+
+    for d, _, names in os.walk(os.path.join(local_path(root), table, gen)):
+        out["rows"] += sum(
+            pq.read_metadata(os.path.join(d, n)).num_rows
+            for n in names
+            if n.endswith(".parquet")
+        )
     return out
 
 

@@ -13,12 +13,10 @@ Per corpus commit, in version order:
 - ``upsert`` — the commit replaced whole partitions: the OLD content
   of the changed partitions (time travel to ``v-1``) is DELETED from
   the index by id, then the post-merge content appends. This relies
-  on the indexes' SEQUENCE-AWARE tombstones (rows carry ``__seq``,
+  on the indexes' sequence-stamp tombstones (rows carry ``__seq``,
   tombstones carry ``as_of_seq``; lexindex._mask_tombstoned): the
   re-appended revision rows are live because they postdate the
-  delete's cut. Indexes built before the sequence counter existed
-  have a PERMANENT mask and are refused loudly (rebuild them once to
-  upgrade).
+  delete's cut.
 
 The sync CURSOR is the index's own ``(app_id, batch_id)`` idempotence
 token (app id ``corpus-sync:<corpus path>``, batch id = corpus
@@ -204,15 +202,6 @@ def _sync(
             )
             continue
         if op == "upsert":
-            if "seq" not in index_meta:
-                raise ValueError(
-                    f"corpus commit v{v} is an upsert (revision) but "
-                    f"this {kind} index predates sequence-aware "
-                    "tombstones (permanent mask — re-appended ids "
-                    "would be silently hidden): rebuild the index "
-                    "once (rebuild_lex_index / rebuild_ann_index) to "
-                    "upgrade, then sync revisions incrementally"
-                )
             prev = M.read_manifest(corpus_path, version=v - 1)
             old = _old_rows(
                 spark, corpus_path, prev, _changed_parts(prev, cur)
@@ -256,8 +245,8 @@ def sync_lex_index(
     compact_over: int | None = None,
 ) -> dict:
     """Fold corpus snapshot commits since the last sync into the
-    lexical index (module docstring for semantics, cursor, crash
-    behavior, and the upsert refusal). ``since`` overrides the stored
+    lexical index (module docstring for semantics, cursor and crash
+    behavior). ``since`` overrides the stored
     cursor for the FIRST sync of an index built from a non-empty
     corpus version.
 

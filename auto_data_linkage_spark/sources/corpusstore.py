@@ -61,32 +61,6 @@ __all__ = [
 ]
 
 
-def _write_gen(
-    df: DataFrame,
-    root: str,
-    gen: str,
-    *,
-    partition_by: list[str],
-    sort_by: list[str] | None,
-    max_records_per_file: int,
-) -> list[str]:
-    """Write ``df`` into ``data/<gen>/`` with the layout discipline of
-    :func:`..sources.layout.write_corpus` (repartition on the partition
-    columns so each directory gets a bounded file count; optional
-    sort-within for parquet min/max selectivity; row cap per file), and
-    return the leaf partition keys actually created."""
-    out = df.repartition(*[F.col(c) for c in partition_by])
-    if sort_by:
-        out = out.sortWithinPartitions(*[F.col(c) for c in sort_by])
-    (
-        out.write.mode("error")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_by)
-        .parquet(os.path.join(M.local_path(root), _TABLE, gen))
-    )
-    return M.written_parts(root, _TABLE, gen)
-
-
 def touched_partition_filter(partition_by: list[str], touched) -> F.Column:
     """Planning-time partition predicate for a list of touched
     partition-value tuples — OR of per-tuple ANDs built with NULL-SAFE
@@ -133,8 +107,8 @@ def build_corpus_snapshot(
             "upsert_corpus_snapshot to merge into it"
         )
     gen = M.next_gen(path, _TABLE)
-    parts = _write_gen(
-        df, path, gen,
+    parts = M.write_gen(
+        df, path, _TABLE, gen,
         partition_by=partition_by, sort_by=sort_by,
         max_records_per_file=max_records_per_file,
     )
@@ -252,8 +226,8 @@ def append_corpus_snapshot(
     # paying a second scan of the delta (or of the freshly written
     # parquet) per streaming micro-batch
     delta = delta.localCheckpoint(eager=False)
-    parts = _write_gen(
-        delta, path, gen,
+    parts = M.write_gen(
+        delta, path, _TABLE, gen,
         partition_by=meta["partition_by"], sort_by=meta.get("sort_by"),
         max_records_per_file=max_records_per_file,
     )
@@ -364,8 +338,8 @@ def _upsert_once(
         merged = keep.unionByName(delta).localCheckpoint(eager=True)
 
     gen = M.next_gen(path, _TABLE)
-    parts = _write_gen(
-        merged, path, gen,
+    parts = M.write_gen(
+        merged, path, _TABLE, gen,
         partition_by=partition_by, sort_by=meta.get("sort_by"),
         max_records_per_file=max_records_per_file,
     )
@@ -405,25 +379,20 @@ def compact_corpus_snapshot(
     snap = M.read_manifest(path)
     meta = snap["meta"]
     _check_meta(meta)
-    counts = M.part_file_counts(path, _TABLE, snap)
-    sel = sorted(p for p, n in counts.items() if n > max_files_per_partition)
-    if not sel:
-        return {"compacted": [], "version": snap["version"]}
-    paths = M.table_paths(path, _TABLE, snap, parts=sel)
-    tdir = os.path.join(M.local_path(path), _TABLE)
-    df = spark.read.option("basePath", tdir).parquet(*paths).drop("gen")
-    gen = M.next_gen(path, _TABLE)
-    parts = _write_gen(
-        df, path, gen,
+    out = M.compact_table(
+        spark, path, snap, _TABLE,
+        max_files=max_files_per_partition,
         partition_by=meta["partition_by"], sort_by=meta.get("sort_by"),
         max_records_per_file=target_rows_per_file,
+        rewrite=None, tables=None,
     )
-    tables = M.replace_parts(snap["tables"], _TABLE, sel, gen, path)
-    out = M.commit_manifest(
-        path, tables=tables, meta=meta,
+    if not out["parts"]:
+        return {"compacted": [], "version": snap["version"]}
+    committed = M.commit_manifest(
+        path, tables=out["tables"], meta=meta,
         expected_version=snap["version"], op="compact",
     )
-    return {"compacted": sel, "version": out["version"]}
+    return {"compacted": out["parts"], "version": committed["version"]}
 
 
 def corpus_snapshot_sink(

@@ -69,6 +69,7 @@ from auto_data_linkage_spark.cluster import cluster_at_threshold
 from auto_data_linkage_spark.incremental import (
     apply_increment,
     incremental_assign,
+    require_new_ids,
 )
 from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.sources import corpusstore as C
@@ -221,6 +222,7 @@ class StreamingLinker:
             return cluster_at_threshold(
                 batch_df, scored, self.threshold, unique_id=uid
             )
+        require_new_ids(batch_df, base, unique_id=uid)
         inc = incremental_assign(
             self.model, base, batch_df,
             threshold=self.threshold, unique_id=uid,
@@ -320,6 +322,7 @@ class StreamingLinker:
             }
             return
         base = C.load_corpus_snapshot(spark, self.state_dir).drop(_BUCKET)
+        require_new_ids(batch_df, base, unique_id=uid)
         inc = incremental_assign(
             self.model, base, batch_df,
             threshold=self.threshold, unique_id=uid,

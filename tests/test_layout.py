@@ -268,7 +268,7 @@ def test_upsert_versioned_interleaved_writers_lose_no_update(
         key="doc_id", partition_by=["lang"],
     )
 
-    real = C._write_gen
+    real = M.write_gen
     barrier = threading.Barrier(2, timeout=30)
     first_round = {"a": True, "b": True}
 
@@ -280,7 +280,7 @@ def test_upsert_versioned_interleaved_writers_lose_no_update(
             barrier.wait()  # both writers hold their stale snapshot
         return out
 
-    monkeypatch.setattr(C, "_write_gen", stalled)
+    monkeypatch.setattr(M, "write_gen", stalled)
 
     results, errors = {}, {}
 

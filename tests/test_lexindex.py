@@ -155,6 +155,61 @@ def test_version_guard(spark, docs, tmp_path):
         L.load_lex_index(spark, out)
 
 
+def _files(root):
+    """Every file under ``root`` with its size and mtime."""
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.join(d, n)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_pre_sequence_counter_indexes_are_refused(
+    spark, docs, sf_dir, tmp_path
+):
+    """One tombstone model: a lex or ANN store whose meta predates the
+    sequence counter is refused with the rebuild hint on open, append,
+    delete and compact — before anything is read or written."""
+    from auto_data_linkage_spark.operators import annindex as A
+
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding", "label"
+    )
+    lex, ann = str(tmp_path / "lex_old"), str(tmp_path / "ann_old")
+    L.build_lex_index(docs.limit(20), lex, n_buckets=4)
+    A.build_ann_index(vecs.limit(40), ann, m=4, n_codewords=4)
+    for root in (lex, ann):
+        snap = M.read_manifest(root)
+        M.commit_manifest(
+            root, tables=snap["tables"],
+            meta={k: v for k, v in snap["meta"].items() if k != "seq"},
+            expected_version=snap["version"],
+        )
+    calls = {
+        lex: (
+            lambda: L.load_lex_index(spark, lex),
+            lambda: L.append_lex_index(docs.limit(3), lex),
+            lambda: L.delete_from_lex_index(spark, lex, [1]),
+            lambda: L.compact_lex_index(spark, lex, max_files_per_bucket=0),
+        ),
+        ann: (
+            lambda: A.load_ann_index(spark, ann),
+            lambda: A.append_ann_index(vecs.limit(3), ann),
+            lambda: A.delete_from_ann_index(spark, ann, [1]),
+            lambda: A.compact_ann_index(spark, ann, max_files_per_cell=0),
+        ),
+    }
+    for root, fns in calls.items():
+        before = _files(root)
+        for fn in fns:
+            with pytest.raises(ValueError, match="rebuild"):
+                fn()
+        assert _files(root) == before
+
+
 def test_streaming_sink_appends_and_compacts(spark, docs, tmp_path):
     out = str(tmp_path / "lex_stream")
     L.build_lex_index(docs.where(F.col("doc_id") < 100), out,

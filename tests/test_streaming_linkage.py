@@ -153,7 +153,7 @@ def test_manifest_state_replay_skipped_bit_equal(
 
     root = tmp_path_factory.mktemp("slink_manifest")
     state = str(root / "state")
-    _, (b0, b1, _) = people_batches
+    _, (b0, b1, b2) = people_batches
     linker = StreamingLinker(_model(), state, threshold=THRESHOLD)
 
     linker.process_batch(b0, 0)
@@ -167,8 +167,9 @@ def test_manifest_state_replay_skipped_bit_equal(
     assert M.txn_version(M.read_manifest(state)["meta"], "linker") == 1
     assert calls == [], f"python-side renames in manifest state: {calls[:5]}"
 
-    # the NEXT batch id still lands
-    linker.process_batch(b0.limit(5), 2)
+    # the NEXT batch id still lands (new records: a re-sent id is
+    # refused, test_resent_record_is_refused_and_state_kept)
+    linker.process_batch(b2.limit(5), 2)
     assert M.read_manifest(state)["version"] == v_head + 1
 
 
@@ -464,3 +465,33 @@ def test_merge_layout_reports_bucket_saturation(
     assert rep2["delta_saturates_buckets"] is False
     assert rep2["changed_rows"] < 512
     assert rep2["buckets_touched"] <= rep2["changed_rows"]
+
+
+@pytest.mark.parametrize("layout", ["manifest", "merge"])
+def test_resent_record_is_refused_and_state_kept(
+    spark, people_batches, tmp_path_factory, layout
+):
+    """A batch re-sending an id the state already holds is refused, as
+    ``AutoLinker.incremental_update`` refuses it. Without the check the
+    snapshot layout appended a second row for the id, and the merge
+    layout's upsert kept one row but labelled it with its own id,
+    pulling a non-minimum member out of its cluster."""
+    from auto_data_linkage_spark.operators import manifestfs as M
+
+    root = tmp_path_factory.mktemp(f"slink_resend_{layout}")
+    state = str(root / "state")
+    full_df, _ = people_batches
+    linker = StreamingLinker(
+        _model(), state, threshold=THRESHOLD, layout=layout, n_buckets=64,
+    )
+    linker.process_batch(full_df, 0)
+    before = _rows(linker.current_clusters(spark))
+    v = M.read_manifest(state)["version"]
+    member = [uid for uid, cid in before if uid != cid]
+    assert member, "fixture has no multi-record cluster"
+    resent = full_df.where(F.col("unique_id") == member[0])
+
+    with pytest.raises(ValueError, match="disjoint ids"):
+        linker.process_batch(resent, 1)
+    assert M.read_manifest(state)["version"] == v
+    assert _rows(linker.current_clusters(spark)) == before

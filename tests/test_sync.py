@@ -1,7 +1,8 @@
 """Index sync from the corpus snapshot commit log (operators/sync.py):
 append-only corpus commits fold into the persisted indexes O(Δ), with
-the index's own txn token as the resume cursor; upserts are refused
-loudly (permanent tombstone mask — module docstring)."""
+the index's own txn token as the resume cursor; upserts delete the
+replaced rows and re-append the revisions (sequence-stamp tombstones
+— module docstring)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -260,9 +261,10 @@ def test_first_sync_without_since_on_nonempty_index_raises(
 
 
 def test_sync_refuses_upserts_on_legacy_index(spark, docs, tmp_path):
-    """An index whose meta predates the sequence counter (permanent
-    tombstone mask) must refuse revision commits with the rebuild
-    hint."""
+    """An index whose meta predates the sequence counter is refused
+    with the rebuild hint when the sync OPENS it — whatever the
+    pending corpus commits are (an upsert's revisions, or a plain
+    append) — and the sync commits nothing to either store."""
     corpus = str(tmp_path / "corpus")
     idx = str(tmp_path / "idx")
     C.build_corpus_snapshot(
@@ -280,11 +282,16 @@ def test_sync_refuses_upserts_on_legacy_index(spark, docs, tmp_path):
         idx, tables=snap["tables"], meta=legacy_meta,
         expected_version=snap["version"],
     )
+    C.append_corpus_snapshot(corpus, docs.where(F.col("doc_id") > 900))
     C.upsert_corpus_snapshot(
         spark, corpus, docs.limit(3).withColumn("text", F.lit("revised"))
     )
+    heads = (M.read_manifest(idx)["version"],
+             M.read_manifest(corpus)["version"])
     with pytest.raises(ValueError, match="rebuild"):
         sync_lex_index(spark, corpus, idx)
+    assert (M.read_manifest(idx)["version"],
+            M.read_manifest(corpus)["version"]) == heads
 
 
 def test_ann_sync_matches_manual_appends(spark, emb, tmp_path):
