@@ -138,23 +138,43 @@ def incremental_components(
 
 
 def require_new_ids(
-    batch: DataFrame, known: DataFrame, *, unique_id: str
+    batch: DataFrame, known: DataFrame | None, *, unique_id: str
 ) -> None:
     """Raise ``ValueError`` when ``batch`` carries a ``unique_id`` that
-    ``known`` (the clustered state) already holds. Folds assume
-    disjoint ids: a re-sent id would be appended a second time, or — if
-    the state store keeps one row per id — coalesced to its own id and
-    pulled out of its cluster. One delta-sized semi-join job."""
-    collisions = (
-        batch.select(unique_id)
-        .join(known.select(unique_id), unique_id, "left_semi")
-        .limit(1)
-        .count()
+    ``known`` (the clustered state, or None before the first batch)
+    already holds, or carries one id twice. Folds assume disjoint ids:
+    a re-sent id would be appended a second time, or — if the state
+    store keeps one row per id — coalesced to its own id and pulled out
+    of its cluster. One delta-sized aggregate: the batch's ids, flagged
+    by a join against the state, meet in one partition, where the
+    distinct count needs no further exchange."""
+    ids = batch.select(unique_id)
+    if known is None:
+        ids = ids.withColumn("__known", F.lit(None).cast("boolean"))
+    else:
+        ids = ids.join(
+            known.select(unique_id, F.lit(True).alias("__known")),
+            unique_id,
+            "left",
+        )
+    n, n_distinct, collisions = (
+        ids.repartition(1)
+        .agg(
+            F.count(unique_id),
+            F.count_distinct(unique_id),
+            F.count("__known"),
+        )
+        .first()
     )
     if collisions:
         raise ValueError(
             f"the batch re-sends {unique_id!r} values already in the "
             "clustered state — incremental folds require disjoint ids"
+        )
+    if n != n_distinct:
+        raise ValueError(
+            f"the batch carries {n - n_distinct} {unique_id!r} value(s) "
+            "more than once — incremental folds require disjoint ids"
         )
 
 

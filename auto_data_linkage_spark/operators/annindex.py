@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from . import manifestfs as M
 from .lexindex import (  # one mutation model, one meta version
     _VERSION,
+    _build_counters,
     _commit_append,
     _cut_tombstones,
     _mask_tombstoned,
@@ -239,7 +240,7 @@ def build_ann_index(
     n_cells: int | None = None,
     kmeans_iter: int = 5,
     seed: int = 0,
-    _expected_version: int = 0,
+    _replaces: dict | None = None,
 ) -> dict:
     """One corpus pass → stored index, committed as manifest v1.
     Centroids are the per-cell means of the existing ``cell_col``
@@ -312,7 +313,8 @@ def build_ann_index(
     gn = M.next_gen(path, "centroids")
     coded_dir = os.path.join(local, "coded", gc_)
     cents_dir = os.path.join(local, "centroids", gn)
-    coded = coded.withColumn("__seq", F.lit(1))
+    seq, expected_version = _build_counters(_replaces)
+    coded = coded.withColumn("__seq", F.lit(seq))
     coded.write.mode("overwrite").partitionBy("cell").parquet(coded_dir)
     cents.write.mode("overwrite").parquet(cents_dir)
 
@@ -341,7 +343,7 @@ def build_ann_index(
         # mutation counter: appends stamp rows with seq+1, deletes cut
         # their tombstones at the current value — re-appended ids serve
         # their new rows (lexindex._mask_tombstoned)
-        "seq": 1,
+        "seq": seq,
         # quantization-drift baseline (PQ only, None for sq8/empty):
         # mean relative quantization error of the build corpus; appends
         # accumulate err_sum/err_rows against it — see ann_drift
@@ -361,7 +363,7 @@ def build_ann_index(
         tables, "centroids", M.written_parts(path, "centroids", gn), gn
     )
     M.commit_manifest(
-        path, tables=tables, meta=meta, expected_version=_expected_version,
+        path, tables=tables, meta=meta, expected_version=expected_version,
     )
     return meta
 
@@ -656,13 +658,14 @@ def rebuild_ann_index(corpus: DataFrame, path: str, **build_kwargs) -> dict:
     old index serving.
 
     Tombstones do NOT carry over: the rebuild reflects exactly the
-    corpus passed in (deletions should already be gone from it). It is
-    also how an index written before the sequence counter is brought
-    back into service. ``build_kwargs`` forward to :func:`build_ann_index` (m,
-    n_codewords, column names...). Returns the new metadata."""
-    snap = M.read_manifest(path)
+    corpus passed in (deletions should already be gone from it). The
+    mutation counter carries forward (old ``seq`` + 1), as in
+    :func:`.lexindex.rebuild_lex_index`. It is also how an index
+    written before the sequence counter is brought back into service.
+    ``build_kwargs`` forward to :func:`build_ann_index` (m, n_codewords,
+    column names...). Returns the new metadata."""
     return build_ann_index(
-        corpus, path, _expected_version=snap["version"], **build_kwargs
+        corpus, path, _replaces=M.read_manifest(path), **build_kwargs
     )
 
 

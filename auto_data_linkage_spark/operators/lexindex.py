@@ -174,6 +174,17 @@ def _mask_tombstoned(
     )
 
 
+def _build_counters(replaces: dict | None) -> tuple[int, int]:
+    """``(seq, expected_version)`` for a build's commit: a new store
+    (``replaces=None``) starts at counter 1 and manifest v1; a rebuild
+    of the snapshot ``replaces`` carries its counter forward (+1), so
+    the counter never goes down and an append staged before the
+    rebuild still sees it move (:func:`_commit_append`)."""
+    if replaces is None:
+        return 1, 0
+    return int(replaces["meta"].get("seq", 0)) + 1, replaces["version"]
+
+
 def _build_commit(
     corpus: DataFrame,
     path: str,
@@ -181,15 +192,17 @@ def _build_commit(
     id_col: str,
     text_col: str,
     n_buckets: int,
-    expected_version: int,
+    replaces: dict | None,
 ) -> dict:
     """Write a complete fresh build into new generations and return
-    the committed manifest — v1 for a new store (``expected_version
-    = 0``), vN+1 replacing every table for a rebuild (old generations
-    stay on disk for pinned readers until vacuum). Postings rows are
-    stamped with ``__seq`` = 1 (the store's mutation counter — appends
-    stamp meta.seq+1, tombstones record the counter they were cut at;
-    see :func:`_mask_tombstoned`)."""
+    the committed manifest — v1 for a new store (``replaces=None``),
+    vN+1 replacing every table of the snapshot ``replaces`` for a
+    rebuild (old generations stay on disk for pinned readers until
+    vacuum). Postings rows are stamped with ``__seq`` = the store's
+    mutation counter after the build (:func:`_build_counters`) —
+    appends stamp meta.seq+1, tombstones record the counter they were
+    cut at; see :func:`_mask_tombstoned`."""
+    seq, expected_version = _build_counters(replaces)
     local = M.local_path(path)
     gp = M.next_gen(path, "postings")
     gt = M.next_gen(path, "terms")
@@ -197,7 +210,7 @@ def _build_commit(
         _bucketed_postings(
             corpus, id_col=id_col, text_col=text_col, n_buckets=n_buckets
         )
-        .withColumn("__seq", F.lit(1))
+        .withColumn("__seq", F.lit(seq))
         .localCheckpoint(eager=False)
     )
     posts.write.mode("overwrite").partitionBy("bucket").parquet(
@@ -224,7 +237,7 @@ def _build_commit(
         "sum_dl": int(sum_dl or 0),
         # mutation counter: appends stamp rows with seq+1, deletes cut
         # their tombstones at the current value (_mask_tombstoned)
-        "seq": 1,
+        "seq": seq,
         # an EMPTY build writes no parquet data files, so the loader
         # cannot infer schemas from disk — store them (DDL) at build
         # time and fall back to empty frames on read
@@ -255,7 +268,7 @@ def build_lex_index(
         id_col=id_col,
         text_col=text_col,
         n_buckets=n_buckets,
-        expected_version=0,
+        replaces=None,
     )["meta"]
 
 
@@ -656,17 +669,19 @@ def rebuild_lex_index(
     untouched (the orphan generations are vacuumed later).
 
     Tombstones do NOT carry over — the rebuild reflects exactly the
-    corpus passed in. It is also how an index written before the
-    sequence counter is brought back into service. Parameters default as in :func:`build_lex_index`. Returns the new
-    metadata."""
-    snap = M.read_manifest(path)
+    corpus passed in. The mutation counter does: the rebuild commits
+    the old ``seq`` + 1, so a delete after an append that raced the
+    rebuild still cuts past that append's stamp. It is also how an
+    index written before the sequence counter is brought back into
+    service. Parameters default as in :func:`build_lex_index`. Returns
+    the new metadata."""
     return _build_commit(
         corpus,
         path,
         id_col=id_col,
         text_col=text_col,
         n_buckets=n_buckets,
-        expected_version=snap["version"],
+        replaces=M.read_manifest(path),
     )["meta"]
 
 

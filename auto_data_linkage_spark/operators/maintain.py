@@ -20,11 +20,10 @@ maintenance pass an operator schedules:
 
 Non-index stores ride the same pass: a registered consumer (or an
 ``extra_stores`` entry) whose meta identifies a streaming-linker state
-store (``kind="linkage-state"``), another corpus snapshot (the
-merge-layout linker's state, ``kind="corpus"``), or a manifest-layout
-domain edge store (:func:`..operators.graph.init_edge_store` — the
-continuous-crawl link graph) gets the compact/checkpoint/vacuum
-treatment instead of a sync.
+store (``kind="linkage-state"``), another corpus snapshot
+(``kind="corpus"``), or a manifest-layout domain edge store
+(:func:`..operators.graph.init_edge_store` — the continuous-crawl link
+graph) gets the compact/checkpoint/vacuum treatment instead of a sync.
 
 Dead consumers are never silently unregistered, but they are no longer
 silently CHEAP either: each one's retention pin (manifests/bytes the
@@ -60,12 +59,11 @@ __all__ = ["maintain_corpus"]
 
 
 def _index_kind(path: str) -> str | None:
-    """'lex' / 'ann' / 'linkage' (snapshot-layout streaming-linker
-    state) / 'corpus' (a corpus snapshot store — e.g. the merge-layout
-    linker state) / 'edges' (a manifest-layout domain edge store,
-    :func:`..operators.graph.init_edge_store`) from the store's meta;
-    None when the path no longer holds a readable store (a retired
-    consumer whose store was deleted without
+    """'lex' / 'ann' / 'linkage' (streaming-linker state) / 'corpus'
+    (a corpus snapshot store) / 'edges' (a manifest-layout domain edge
+    store, :func:`..operators.graph.init_edge_store`) from the store's
+    meta; None when the path no longer holds a readable store (a
+    retired consumer whose store was deleted without
     :func:`..sources.corpusstore.unregister_corpus_consumer`)."""
     try:
         meta = M.read_manifest(path)["meta"]
@@ -96,9 +94,9 @@ def _maintain_store(
 ) -> dict:
     """Compaction + checkpoint + vacuum for one NON-SYNCED store — the
     linker-state / standalone-store leg of the pass. Each step is the
-    store-kind's own primitive; the snapshot-layout linker state has
-    nothing to compact (every batch replaces the whole table, so there
-    is exactly one live generation)."""
+    store-kind's own primitive; the linker state has nothing to compact
+    (every batch replaces the whole table, so there is exactly one live
+    generation)."""
     out: dict = {"kind": kind}
     if kind == "corpus":
         out["compacted"] = C.compact_corpus_snapshot(
@@ -190,9 +188,9 @@ def maintain_corpus(
 
     ``extra_stores`` appends stores the registry does not name — most
     usefully a streaming linker's state store
-    (:class:`..streaming.linkage.StreamingLinker`), either layout:
-    the snapshot layout gets checkpoint + vacuum, the merge layout
-    (a corpus snapshot store) gets compaction + checkpoint + vacuum.
+    (:class:`..streaming.linkage.StreamingLinker`), which gets
+    checkpoint + vacuum; another corpus snapshot store gets compaction
+    + checkpoint + vacuum.
     A manifest-layout edge store (:func:`.graph.edge_store_sink` —
     its feed is the crawl stream, not this corpus, so it is never a
     registered consumer) gets compaction + checkpoint + vacuum too;

@@ -86,17 +86,12 @@ def build_corpus_snapshot(
     partition_by: list[str],
     sort_by: list[str] | None = None,
     max_records_per_file: int = 5_000_000,
-    txn: tuple | None = None,
 ) -> dict:
     """Create the snapshot store: the initial corpus lands in
     ``data/gen=1`` and manifest v1 publishes it. Returns the metadata
-    dict (embedded in every manifest thereafter).
-
-    ``txn=(app_id, batch_id)`` records an idempotence token IN the v1
-    commit — the stream-bootstrap pattern: when batch 0 of a streaming
-    sink CREATES the store, the token must be atomic with the build or
-    a crash between build and token would make the replayed batch 0
-    re-apply over its own rows."""
+    dict (embedded in every manifest thereafter). To stream into a new
+    corpus, build it empty first (``df.limit(0)``); the sinks' tokens
+    ride the append/upsert commits."""
     if not partition_by:
         raise ValueError("corpus snapshots require partition_by columns")
     local = M.local_path(path)
@@ -128,7 +123,6 @@ def build_corpus_snapshot(
         "schema": df.schema.json(),
     }
     tables = M.add_gens({}, _TABLE, parts, gen)
-    meta = M.with_txn(meta, txn)
     M.init_manifest_store(path, tables=tables, meta=meta, op="build")
     return meta
 

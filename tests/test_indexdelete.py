@@ -157,6 +157,54 @@ def test_append_restamps_when_a_delete_interleaves(
     }
 
 
+def test_delete_masks_an_append_that_raced_a_rebuild(
+    spark, docs, tmp_path, monkeypatch
+):
+    """The counter-reset race: after one append the counter is 2, so
+    append B stamps its rows __seq=3. While B races its merge, a rebuild
+    with unchanged parameters commits; B's parameter keys still match,
+    so B merges into the rebuilt store. A later takedown of B's ids must
+    mask them: a rebuild that restarted the counter at 1 would leave it
+    at 2 after B, and a cut at 2 misses stamp 3."""
+    ids = [9_000_001, 9_000_002]
+    raced = spark.createDataFrame(
+        [(i, "unique xylocarp quillwort rebuild race") for i in ids],
+        "doc_id long, text string",
+    )
+    other = (
+        docs.orderBy(F.col("doc_id").desc()).limit(3)
+        .withColumn("doc_id", F.col("doc_id") + 8_000_000)
+        .localCheckpoint(eager=True)
+    )
+    out = str(tmp_path / "lex")
+    L.build_lex_index(docs, out, n_buckets=4)
+    L.append_lex_index(other, out)
+    seq_before = M.read_manifest(out)["meta"]["seq"]
+
+    real = M.commit_manifest
+    state = {"armed": True}
+
+    def rebuild_sneaks_in(path, **kw):
+        if state["armed"]:
+            state["armed"] = False
+            monkeypatch.setattr(M, "commit_manifest", real)
+            L.rebuild_lex_index(docs, out, n_buckets=4)
+            monkeypatch.setattr(M, "commit_manifest", rebuild_sneaks_in)
+        return real(path, **kw)
+
+    monkeypatch.setattr(M, "commit_manifest", rebuild_sneaks_in)
+    L.append_lex_index(raced, out)
+    monkeypatch.setattr(M, "commit_manifest", real)
+
+    q = query_terms_from_docs(raced, n_terms=4)
+    assert {h[1] for h in _lex_topk(spark, out, q)} & set(ids)
+    L.delete_from_lex_index(spark, out, ids)
+    served = {h[1] for h in _lex_topk(spark, out, q)}
+    assert not served & set(ids), f"deleted ids still served: {served}"
+    # the counter never went down: the rebuild and the append each moved it
+    assert M.read_manifest(out)["meta"]["seq"] == seq_before + 2
+
+
 def test_lex_delete_bit_equals_fresh_build(spark, docs, probes, tmp_path):
     keep = docs.where(F.col("doc_id") % 3 != 0)
     victims = [r.doc_id for r in docs.where(F.col("doc_id") % 3 == 0)
@@ -432,6 +480,7 @@ def test_ann_rebuild_retrains_and_promotes(spark, sf_dir, tmp_path):
     A.delete_from_ann_index(spark, out_dir, [0, 2, 4])
     meta = A.rebuild_ann_index(vecs, out_dir, m=4, n_codewords=8)
     assert meta["n_rows"] == vecs.count()
+    assert meta["seq"] == 2  # the mutation counter carries forward
     idx = A.load_ann_index(spark, out_dir)
     assert idx.tombstones is None
     queries = vecs.orderBy("vec_id").limit(5)

@@ -2,6 +2,7 @@
 discovery from the corpus registry, lex/ANN sync with fragmentation
 and drift policies applied, checkpoint + consumer-aware vacuum."""
 
+import os
 import random
 import shutil
 
@@ -242,7 +243,7 @@ def test_dead_consumer_pin_cost_and_retire(spark, sf_dir, tmp_path, centers):
     assert rep3["skipped"] == [] and rep3["dead"] == {}
 
 
-def _tiny_linker(state, layout, n_buckets=64):
+def _tiny_linker(state):
     from auto_data_linkage_spark.compare import Comparison
     from auto_data_linkage_spark.model import FellegiSunterModel
     from auto_data_linkage_spark.streaming.linkage import StreamingLinker
@@ -253,8 +254,7 @@ def _tiny_linker(state, layout, n_buckets=64):
         prior=1.0 / 50,
     )
     return StreamingLinker(
-        model, state, threshold=0.5, layout=layout, n_buckets=n_buckets,
-        vacuum_age_seconds=0.0,
+        model, state, threshold=0.5, vacuum_age_seconds=0.0,
     )
 
 
@@ -271,31 +271,40 @@ def _people(spark, lo, hi):
 def test_maintain_corpus_covers_linker_state_stores(
     spark, sf_dir, tmp_path, centers
 ):
-    """VERDICT r13 ask #8: a streaming-linker state store — passed via
-    extra_stores OR registered as a corpus consumer — gets the
-    compaction/checkpoint/vacuum tier in the same maintain pass, for
-    both the snapshot (kind=linkage-state) and merge (corpus snapshot)
-    layouts; the served state is unchanged by maintenance."""
+    """VERDICT r13 ask #8: a streaming-linker state store (kind=
+    linkage-state) gets the checkpoint/vacuum tier in the same maintain
+    pass whether it is registered as a corpus consumer or passed via
+    extra_stores, and another corpus snapshot store (kind=corpus) gets
+    compaction too; the served state is unchanged by maintenance."""
     corpus = str(tmp_path / "corpus")
     C.build_corpus_snapshot(
         _rows(spark, sf_dir, centers, 0, 100, seed=9), corpus,
         key="doc_id", partition_by=["part"],
     )
 
-    snap_state = str(tmp_path / "snap_state")
-    merge_state = str(tmp_path / "merge_state")
-    lk1 = _tiny_linker(snap_state, "manifest")
-    lk2 = _tiny_linker(merge_state, "merge", n_buckets=8)
+    reg_state = str(tmp_path / "reg_state")
+    extra_state = str(tmp_path / "extra_state")
+    lk1 = _tiny_linker(reg_state)
+    lk2 = _tiny_linker(extra_state)
     for i, (lo, hi) in enumerate(((0, 30), (30, 60), (60, 90))):
         lk1.process_batch(_people(spark, lo, hi), i)
         lk2.process_batch(_people(spark, lo, hi), i)
     before1 = lk1.current_clusters(spark).count()
     before2 = lk2.current_clusters(spark).count()
 
-    # the merge state is ALSO registrable as a consumer — exercise the
-    # registry branch with it, and the extra_stores branch with the
-    # snapshot state
-    key = "corpus-sync:" + __import__("os").path.abspath(merge_state)
+    # a second corpus snapshot store, fragmented by two appends
+    other = str(tmp_path / "other_corpus")
+    people = _people(spark, 0, 60).withColumn("part", F.col("unique_id") % 2)
+    C.build_corpus_snapshot(
+        people.where("unique_id < 20"), other, key="unique_id",
+        partition_by=["part"],
+    )
+    C.append_corpus_snapshot(other, people.where("unique_id BETWEEN 20 AND 39"))
+    C.append_corpus_snapshot(other, people.where("unique_id >= 40"))
+
+    # one linker state registered as a consumer (the registry branch),
+    # the other passed via extra_stores with the other corpus store
+    key = "corpus-sync:" + reg_state
 
     def mutate(fresh):
         return fresh["tables"], M.with_txn(fresh["meta"], (key, 1))
@@ -304,21 +313,24 @@ def test_maintain_corpus_covers_linker_state_stores(
 
     rep = maintain_corpus(
         spark, corpus, compact_over=1, min_age_seconds=0,
-        extra_stores=[snap_state],
+        extra_stores=[extra_state, other],
     )
-    snap_abs = snap_state
-    merge_abs = __import__("os").path.abspath(merge_state)
     assert rep["skipped"] == []
-    m1 = rep["maintained"][snap_abs]
+    m1 = rep["maintained"][reg_state]
     assert m1["kind"] == "linkage" and "vacuum" in m1
-    m2 = rep["maintained"][merge_abs]
-    assert m2["kind"] == "corpus" and "vacuum" in m2
-    assert "compacted" in m2  # merge layout is a corpus store: compacted
+    m2 = rep["maintained"][extra_state]
+    assert m2["kind"] == "linkage" and "vacuum" in m2
+    m3 = rep["maintained"][other]
+    assert m3["kind"] == "corpus" and "vacuum" in m3
+    assert "compacted" in m3
     # maintenance preserved the served state, history checkpointed
     assert lk1.current_clusters(spark).count() == before1
     assert lk2.current_clusters(spark).count() == before2
-    versions = [h["version"] for h in M.history(snap_state)]
-    assert versions and versions[-1] == M.read_manifest(snap_state)["version"]
+    assert C.load_corpus_snapshot(spark, other).count() == 60
+    for state in (reg_state, extra_state):
+        versions = [h["version"] for h in M.history(state)]
+        assert versions
+        assert versions[-1] == M.read_manifest(state)["version"]
 
 
 def test_maintain_corpus_covers_edge_stores(spark, sf_dir, tmp_path, centers):

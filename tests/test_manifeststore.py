@@ -785,8 +785,7 @@ def test_legacy_rename_layout_stores_are_refused(
         "linker": [
             lambda: StreamingLinker(None, root).process_batch(batch, 2),
             lambda: StreamingLinker(None, root).current_clusters(spark),
-            lambda: StreamingLinker(None, root, layout="merge")
-            .process_batch(batch, 2),
+            lambda: StreamingLinker(None, root).vacuum(),
         ],
     }[kind]
     for op in ops:

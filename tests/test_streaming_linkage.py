@@ -18,11 +18,12 @@ PEOPLE_SCHEMA = (
 THRESHOLD = 0.9
 
 
-# r16 test-tier split: this module is a lifecycle-matrix / property /
-# full-catalog sweep — cost is a matrix-sized multiple of a unit test,
-# so it runs in the exhaustive tier (pytest -m exhaustive), not the
-# default wall-budgeted gate. See pytest.ini + OPTIMIZATION_r16.md.
-pytestmark = pytest.mark.exhaustive
+# r16 test-tier split: most of this module is a lifecycle matrix whose
+# cost is a multiple of a unit test, so those tests run in the
+# exhaustive tier (pytest -m exhaustive), not the default wall-budgeted
+# gate (pytest.ini + OPTIMIZATION_r16.md). The default tier keeps one
+# exactly-once test (crash before the commit, then the replay) and the
+# retired-layout refusal.
 
 
 def _model():
@@ -58,6 +59,7 @@ def people_batches(spark):
     return df, (b0, b1, b2)
 
 
+@pytest.mark.exhaustive
 def test_streaming_linker_matches_batch_reclustering(
     spark, people_batches, tmp_path_factory
 ):
@@ -92,6 +94,7 @@ def test_streaming_linker_matches_batch_reclustering(
     assert _assignments(linker.current_clusters(spark)) == before
 
 
+@pytest.mark.exhaustive
 def test_streaming_linker_replay_is_idempotent(
     spark, people_batches, tmp_path_factory
 ):
@@ -127,6 +130,7 @@ def _rows(df):
     )
 
 
+@pytest.mark.exhaustive
 def test_manifest_state_replay_skipped_bit_equal(
     spark, people_batches, tmp_path_factory, monkeypatch
 ):
@@ -173,6 +177,7 @@ def test_manifest_state_replay_skipped_bit_equal(
     assert M.read_manifest(state)["version"] == v_head + 1
 
 
+@pytest.mark.exhaustive
 def test_manifest_state_checkpointed_stream_restart(
     spark, people_batches, tmp_path_factory
 ):
@@ -217,6 +222,7 @@ def test_manifest_state_checkpointed_stream_restart(
     )
 
 
+@pytest.mark.exhaustive
 def test_manifest_state_time_travel_and_vacuum(
     spark, people_batches, tmp_path_factory
 ):
@@ -315,175 +321,19 @@ def test_manifest_state_crash_before_commit_replays_cleanly(
     ) | set(M.read_manifest(state, version=v)["tables"]["clusters"][""])
 
 
-def test_merge_layout_state_matches_batch_reclustering(
-    spark, people_batches, tmp_path_factory
-):
-    """layout='merge': the cluster table lives in a corpus snapshot
-    keyed by unique_id; every batch upserts only the CHANGED
-    assignments, yet the served state equals full batch re-clustering
-    of everything seen so far, replays are exactly-once, and buckets a
-    batch does not touch keep serving from the SAME files."""
-    import os
-
-    from auto_data_linkage_spark.operators import manifestfs as M
-
-    root = tmp_path_factory.mktemp("slink_merge")
-    state = str(root / "state")
-    _, (b0, b1, b2) = people_batches
-    linker = StreamingLinker(
-        _model(), state, threshold=THRESHOLD, layout="merge", n_buckets=64,
-    )
-
-    seen = None
-    for i, b in enumerate((b0, b1, b2)):
-        linker.process_batch(b, i)
-        seen = b if seen is None else seen.unionByName(b)
-        expected = cluster_at_threshold(
-            seen, _model().predict(seen), THRESHOLD
-        )
-        assert _assignments(linker.current_clusters(spark)) == _assignments(
-            expected
-        ), f"merge state diverged after batch {i}"
-
-    # replay of the last batch: skipped by the token, state unchanged
-    v = M.read_manifest(state)["version"]
-    before = _rows(linker.current_clusters(spark))
-    linker.process_batch(b2, 2)
-    assert M.read_manifest(state)["version"] == v
-    assert _rows(linker.current_clusters(spark)) == before
-
-    # partition-granular writes: across the LAST upsert, at least one
-    # bucket kept its exact live generation list (untouched partitions
-    # keep serving byte-identically — the O(touched partitions) proof)
-    cur = M.read_manifest(state)["tables"]["data"]
-    prev = M.read_manifest(state, version=v - 1)["tables"]["data"]
-    untouched = [p for p in prev if cur.get(p) == prev[p]]
-    assert untouched, "every bucket was rewritten — not partition-granular"
-
-    # time travel: the state as of batch 0 is still replayable
-    v0_rows = _rows(linker.current_clusters(spark, version=1))
-    expected0 = cluster_at_threshold(b0, _model().predict(b0), THRESHOLD)
-    assert v0_rows == sorted(
-        (str(r["unique_id"]), str(r["cluster_id"]))
-        for r in expected0.select("unique_id", "cluster_id").collect()
-    )
-
-    # fresh-handle read (a second "session" view): same state
-    linker2 = StreamingLinker(_model(), state, threshold=THRESHOLD)
-    assert linker2._mode() == "merge"  # auto-detected
-    assert _rows(linker2.current_clusters(spark)) == before
-
-
-def test_merge_layout_through_checkpointed_stream(
-    spark, people_batches, tmp_path_factory
-):
-    """Merge layout end-to-end through a real checkpointed stream:
-    drain, restart with nothing new (no replay, no commit), then new
-    data folds in — state equals full batch re-clustering."""
-    from auto_data_linkage_spark.operators import manifestfs as M
-
-    root = tmp_path_factory.mktemp("slink_merge_ckpt")
-    in_dir, state, ckpt = (
-        str(root / "in"), str(root / "state"), str(root / "ckpt")
-    )
-    _, (b0, b1, _) = people_batches
-    linker = StreamingLinker(
-        _model(), state, threshold=THRESHOLD, layout="merge", n_buckets=32,
-    )
-
-    b0.write.mode("append").parquet(in_dir)
-    q = linker.attach(
-        spark.readStream.schema(PEOPLE_SCHEMA).parquet(in_dir), ckpt
-    )
-    q.awaitTermination()
-    before = _rows(linker.current_clusters(spark))
-    v = M.read_manifest(state)["version"]
-
-    # restart, nothing new: no commit anywhere
-    q = linker.attach(
-        spark.readStream.schema(PEOPLE_SCHEMA).parquet(in_dir), ckpt
-    )
-    q.awaitTermination()
-    assert M.read_manifest(state)["version"] == v
-    assert _rows(linker.current_clusters(spark)) == before
-
-    # new data folds in via the delta upsert
-    b1.write.mode("append").parquet(in_dir)
-    q = linker.attach(
-        spark.readStream.schema(PEOPLE_SCHEMA).parquet(in_dir), ckpt
-    )
-    q.awaitTermination()
-    seen = b0.unionByName(b1)
-    expected = cluster_at_threshold(seen, _model().predict(seen), THRESHOLD)
-    assert _assignments(linker.current_clusters(spark)) == _assignments(
-        expected
-    )
-
-
-def test_merge_layout_reports_bucket_saturation(
-    spark, people_batches, tmp_path_factory
-):
-    """The bucket-saturation guard (VERDICT r13 ask #2): every merge
-    batch records changed_rows/buckets_touched in last_batch_report;
-    a dense delta (changed rows >= n_buckets — the measured 2.6x
-    write-regression case) sets delta_saturates_buckets and WARNS,
-    while a sparse delta stays quiet."""
-    import warnings as W
-
-    root = tmp_path_factory.mktemp("slink_sat")
-    state = str(root / "state")
-    _, (b0, b1, _) = people_batches
-
-    # tiny bucket count: batch 1's delta (~30 rows) saturates 4 buckets
-    linker = StreamingLinker(
-        _model(), state, threshold=THRESHOLD, layout="merge", n_buckets=4,
-    )
-    assert linker.last_batch_report is None
-    linker.process_batch(b0, 0)
-    assert linker.last_batch_report == {
-        "mode": "merge", "batch_id": 0, "action": "build", "n_buckets": 4,
-    }
-    with pytest.warns(UserWarning, match="saturates the bucket layout"):
-        linker.process_batch(b1, 1)
-    rep = linker.last_batch_report
-    assert rep["action"] == "upsert" and rep["batch_id"] == 1
-    assert rep["delta_saturates_buckets"] is True
-    assert rep["changed_rows"] >= rep["n_buckets"] == 4
-    assert 1 <= rep["buckets_touched"] <= 4
-
-    # well-sized store: the same delta over 512 buckets stays quiet
-    state2 = str(root / "state2")
-    linker2 = StreamingLinker(
-        _model(), state2, threshold=THRESHOLD, layout="merge",
-        n_buckets=512,
-    )
-    linker2.process_batch(b0, 0)
-    with W.catch_warnings():
-        W.simplefilter("error")
-        linker2.process_batch(b1, 1)
-    rep2 = linker2.last_batch_report
-    assert rep2["delta_saturates_buckets"] is False
-    assert rep2["changed_rows"] < 512
-    assert rep2["buckets_touched"] <= rep2["changed_rows"]
-
-
-@pytest.mark.parametrize("layout", ["manifest", "merge"])
+@pytest.mark.exhaustive
 def test_resent_record_is_refused_and_state_kept(
-    spark, people_batches, tmp_path_factory, layout
+    spark, people_batches, tmp_path_factory
 ):
     """A batch re-sending an id the state already holds is refused, as
     ``AutoLinker.incremental_update`` refuses it. Without the check the
-    snapshot layout appended a second row for the id, and the merge
-    layout's upsert kept one row but labelled it with its own id,
-    pulling a non-minimum member out of its cluster."""
+    snapshot appended a second row for the id."""
     from auto_data_linkage_spark.operators import manifestfs as M
 
-    root = tmp_path_factory.mktemp(f"slink_resend_{layout}")
+    root = tmp_path_factory.mktemp("slink_resend")
     state = str(root / "state")
     full_df, _ = people_batches
-    linker = StreamingLinker(
-        _model(), state, threshold=THRESHOLD, layout=layout, n_buckets=64,
-    )
+    linker = StreamingLinker(_model(), state, threshold=THRESHOLD)
     linker.process_batch(full_df, 0)
     before = _rows(linker.current_clusters(spark))
     v = M.read_manifest(state)["version"]
@@ -495,3 +345,76 @@ def test_resent_record_is_refused_and_state_kept(
         linker.process_batch(resent, 1)
     assert M.read_manifest(state)["version"] == v
     assert _rows(linker.current_clusters(spark)) == before
+
+
+@pytest.mark.exhaustive
+def test_batch_carrying_one_id_twice_is_refused(
+    spark, people_batches, tmp_path_factory
+):
+    """A batch that carries the same id twice is refused whether it is
+    the first batch (clustered outright) or a later one (folded), and
+    commits nothing; the same batch id then lands once the batch is
+    clean. Without the check both copies of the id landed."""
+    from auto_data_linkage_spark.operators import manifestfs as M
+
+    root = tmp_path_factory.mktemp("slink_dup")
+    state = str(root / "state")
+    _, (b0, b1, _) = people_batches
+    linker = StreamingLinker(_model(), state, threshold=THRESHOLD)
+
+    with pytest.raises(ValueError, match="more than once"):
+        linker.process_batch(b0.unionByName(b0.limit(1)), 0)
+    assert linker.current_clusters(spark) is None
+    linker.process_batch(b0, 0)
+    before = _rows(linker.current_clusters(spark))
+    v = M.read_manifest(state)["version"]
+
+    with pytest.raises(ValueError, match="more than once"):
+        linker.process_batch(b1.unionByName(b1.limit(1)), 1)
+    assert M.read_manifest(state)["version"] == v
+    assert _rows(linker.current_clusters(spark)) == before
+    linker.process_batch(b1, 1)
+    assert linker.current_clusters(spark).count() == b0.count() + b1.count()
+
+
+def test_merge_layout_state_dirs_are_refused(spark, tmp_path):
+    """The merge layout is retired: a state_dir holding its store (a
+    corpus snapshot, meta kind="corpus") raises ValueError naming the
+    path and the remedy on every entry point, before any read or write
+    — every file keeps its size and mtime. The layout knobs are gone."""
+    import os
+
+    from auto_data_linkage_spark.sources import corpusstore as C
+
+    state = str(tmp_path / "state")
+    rows = spark.createDataFrame(
+        [("1", "1", 0), ("2", "1", 1)],
+        "unique_id string, cluster_id string, __bucket int",
+    )
+    C.build_corpus_snapshot(
+        rows, state, key="unique_id", partition_by=["__bucket"]
+    )
+
+    def files():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_size,
+             os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(state) for f in fs
+        )
+
+    before = files()
+    linker = StreamingLinker(None, state)
+    for op in (
+        lambda: linker.process_batch(rows.drop("__bucket"), 1),
+        lambda: linker.current_clusters(spark),
+        lambda: linker.current_clusters(spark, version=1),
+        lambda: linker.vacuum(min_age_seconds=0),
+    ):
+        with pytest.raises(ValueError, match="new state_dir") as e:
+            op()
+        assert state in str(e.value)
+    assert files() == before
+
+    for knob in ({"layout": "merge"}, {"n_buckets": 16}):
+        with pytest.raises(TypeError):
+            StreamingLinker(None, state, **knob)
