@@ -139,15 +139,16 @@ def incremental_components(
 
 def require_new_ids(
     batch: DataFrame, known: DataFrame | None, *, unique_id: str
-) -> None:
+) -> int:
     """Raise ``ValueError`` when ``batch`` carries a ``unique_id`` that
     ``known`` (the clustered state, or None before the first batch)
-    already holds, or carries one id twice. Folds assume disjoint ids:
-    a re-sent id would be appended a second time, or — if the state
-    store keeps one row per id — coalesced to its own id and pulled out
-    of its cluster. One delta-sized aggregate: the batch's ids, flagged
-    by a join against the state, meet in one partition, where the
-    distinct count needs no further exchange."""
+    already holds, or carries one id twice; else return the batch's
+    row count. Folds assume disjoint ids: a re-sent id would be
+    appended a second time, or — if the state store keeps one row per
+    id — coalesced to its own id and pulled out of its cluster. One
+    delta-sized aggregate: the batch's ids, flagged by a join against
+    the state, meet in one partition, where the distinct count needs
+    no further exchange."""
     ids = batch.select(unique_id)
     if known is None:
         ids = ids.withColumn("__known", F.lit(None).cast("boolean"))
@@ -157,9 +158,10 @@ def require_new_ids(
             unique_id,
             "left",
         )
-    n, n_distinct, collisions = (
+    n_rows, n, n_distinct, collisions = (
         ids.repartition(1)
         .agg(
+            F.count("*"),
             F.count(unique_id),
             F.count_distinct(unique_id),
             F.count("__known"),
@@ -176,6 +178,7 @@ def require_new_ids(
             f"the batch carries {n - n_distinct} {unique_id!r} value(s) "
             "more than once — incremental folds require disjoint ids"
         )
+    return n_rows
 
 
 def incremental_assign(

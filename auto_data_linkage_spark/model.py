@@ -240,6 +240,8 @@ class FellegiSunterModel:
         self._m_sessions: dict[str, list[dict[int, float]]] = {
             c.column: [] for c in comparisons
         }
+        # within-block match proportion of the last EM session that ran
+        self.em_lambda: float | None = None
 
     # ------------------------------------------------------------------ u
     def estimate_u(
@@ -323,7 +325,9 @@ class FellegiSunterModel:
         runs EM driver-side in numpy until the max absolute parameter delta
         ≤ ``em_convergence`` (reference default 0.01, autolinker.py:544).
         Comparisons whose column appears in the training rule are excluded
-        (their gamma is forced exact by the block). Returns iterations run.
+        (their gamma is forced exact by the block). Returns iterations run
+        and records the session's within-block match proportion as
+        ``em_lambda``.
         """
         rule = BlockingRule.parse(training_rule)
         active = [c for c in self.comparisons if c.column not in rule.columns]
@@ -401,6 +405,7 @@ class FellegiSunterModel:
                 self.params[comp.column].u = {
                     l: float(u[k, level_index[l]]) for l in levels
                 }
+        self.em_lambda = lam
         return iters
 
     # ------------------------------------------------------------ predict

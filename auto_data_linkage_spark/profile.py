@@ -67,41 +67,39 @@ def column_entropies(
 ) -> dict[str, float]:
     """Per-column Shannon entropy ``−Σ p·log_base p`` in one shuffle
     (reference A3, ARC_EntropyAggExpression.scala:48-68; pure-PySpark proof
-    at reference archive/autolinker.py:69-93).
+    at reference archive/autolinker.py:69-93): :func:`entropy_df`,
+    collected.
 
     ``base`` may be a number, or ``"distinct"`` to use each column's own
     distinct-value count as the log base (the reference's base-0/auto mode,
     ARC_EntropyAggExpression.scala:57-63) — entropy then lands in [0, 1].
     """
-    vc = value_counts(df, columns)
-    p = F.col("cnt") / F.sum("cnt").over(Window.partitionBy("col"))
-    terms = vc.select("col", (-p * F.log(p)).alias("term"))
-    nats = {
-        r["col"]: float(r["h"] or 0.0)
-        for r in terms.groupBy("col").agg(F.sum("term").alias("h")).collect()
+    got = {
+        r["col"]: float(r["entropy"] or 0.0)
+        for r in entropy_df(df, columns, base).collect()
     }
-    if base == "distinct":
-        distinct = {
-            r["col"]: r["n"]
-            for r in vc.groupBy("col").agg(F.count("*").alias("n")).collect()
-        }
-        return {
-            c: (nats[c] / math.log(distinct[c]) if distinct.get(c, 1) > 1 else 0.0)
-            for c in columns
-        }
-    denom = math.log(float(base))
-    return {c: nats.get(c, 0.0) / denom for c in columns}
+    return {c: got.get(c, 0.0) for c in columns}
 
 
-def entropy_df(df: DataFrame, columns: Sequence[str], base: float = math.e) -> DataFrame:
+def entropy_df(
+    df: DataFrame, columns: Sequence[str], base: float | str = math.e
+) -> DataFrame:
     """Distributed variant of :func:`column_entropies`: returns a DataFrame
-    ``(col, entropy)`` without collecting — composable into larger plans."""
+    ``(col, entropy)`` without collecting — composable into larger plans.
+    ``base`` as there; a column with one distinct value has entropy 0 in
+    ``"distinct"`` mode."""
     vc = value_counts(df, columns)
-    p = F.col("cnt") / F.sum("cnt").over(Window.partitionBy("col"))
+    w = Window.partitionBy("col")
+    p = F.col("cnt") / F.sum("cnt").over(w)
+    if base == "distinct":
+        n = F.count("*").over(w)
+        denom = F.when(n > 1, F.log(n)).otherwise(F.lit(1.0))
+    else:
+        denom = F.lit(math.log(float(base)))
     return (
-        vc.select("col", (-p * F.log(float(base), p)).alias("term"))
+        vc.select("col", (-p * F.log(p)).alias("term"), denom.alias("denom"))
         .groupBy("col")
-        .agg(F.sum("term").alias("entropy"))
+        .agg((F.sum("term") / F.max("denom")).alias("entropy"))
     )
 
 

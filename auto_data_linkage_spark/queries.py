@@ -24,6 +24,19 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from auto_data_linkage_spark.cluster import cluster_at_threshold
+from auto_data_linkage_spark.compare import (
+    ELSE_LEVEL,
+    EXACT_LEVEL,
+    FUZZY_LEVEL,
+    Comparison,
+)
+from auto_data_linkage_spark.model import (
+    _DEFAULT_M,
+    _DEFAULT_U,
+    FellegiSunterModel,
+    candidate_pairs,
+)
 from auto_data_linkage_spark.session import load_tables, local_rows_df
 
 
@@ -306,23 +319,58 @@ def join_inner_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def blocking_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cust,) = _t(spark, sf_dir, "customer")
-    # probe side repartitioned: the small file scans as one partition, and
-    # the per-pair levenshtein work would otherwise run on a single task;
-    # the build side broadcasts either way
-    left = ensure_parallelism(cust).alias("l")
-    right = cust.alias("r")
-    cond = (
-        (F.col("l.c_nationkey") == F.col("r.c_nationkey"))
-        & (F.col("l.c_mktsegment") == F.col("r.c_mktsegment"))
-        & (F.col("l.c_custkey") < F.col("r.c_custkey"))
+    model = _name_model(_FS_PRIOR)
+    pairs = candidate_pairs(
+        ensure_parallelism(cust), model.blocking_rules, model.comparisons,
+        "c_custkey", right_df=cust,
     )
-    return left.join(right, cond).select(
-        F.col("l.c_custkey").alias("custkey_l"),
-        F.col("r.c_custkey").alias("custkey_r"),
-        F.when(F.col("l.c_name") == F.col("r.c_name"), 2)
-        .when(F.levenshtein(F.col("l.c_name"), F.col("r.c_name")) <= 2, 1)
-        .otherwise(0)
-        .alias("gamma_name"),
+    return _each_pair_once(pairs).select(
+        F.col("c_custkey_l").alias("custkey_l"),
+        F.col("c_custkey_r").alias("custkey_r"),
+        F.col("gamma_c_name").alias("gamma_name"),
+    )
+
+
+def _name_model(prior: float | None, **settings) -> FellegiSunterModel:
+    """The customer-name model behind the linkage rows: one levenshtein
+    ≤ 2 comparison on ``c_name``, blocked on nation and market segment,
+    at the engine's default m/u."""
+    return FellegiSunterModel(
+        [Comparison("c_name", "levenshtein", 2)],
+        [("c_nationkey", "c_mktsegment")],
+        unique_id="c_custkey",
+        prior=prior,
+        **settings,
+    )
+
+
+def _each_pair_once(pairs: DataFrame) -> DataFrame:
+    """Keep each unordered customer pair once. The linkage rows call the
+    engine in link mode, with the repartitioned scan as the probe side
+    and the raw scan as the build side: the small file scans as one
+    partition, and the per-pair levenshtein work would otherwise run on
+    a single task. Catalyst folds this filter into the join condition,
+    so the plan is the self-join's; a dedup-mode call would repartition
+    the build side too."""
+    return pairs.where(F.col("c_custkey_l") < F.col("c_custkey_r"))
+
+
+def _name_predictions(model: FellegiSunterModel, cust: DataFrame) -> DataFrame:
+    """``model``'s predictions over each customer pair once."""
+    return _each_pair_once(
+        model.predict(ensure_parallelism(cust), right_df=cust)
+    )
+
+
+def _pinned_scores(model: FellegiSunterModel, cust: DataFrame) -> DataFrame:
+    """:func:`_name_predictions`' ids and scores, pinned by the first
+    job that reads them. A funnel reads them twice (its pair counts,
+    then ``cluster_at_threshold``), and at sf0.1 the pin beats doing
+    the pair work twice (CHANGES.md)."""
+    return (
+        _name_predictions(model, cust)
+        .select("c_custkey_l", "c_custkey_r", "match_weight", "match_probability")
+        .localCheckpoint(eager=False)
     )
 
 
@@ -888,23 +936,24 @@ def sql_entropy_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# L5 — Fellegi–Sunter scoring with fixed m/u as pure arithmetic
-# (the predict() math, hash-checked end-to-end against SQL)
+# L5 — Fellegi–Sunter scoring with the engine's default m/u
+# (FellegiSunterModel.predict, hash-checked end-to-end against SQL that
+# spells the math out)
 # --------------------------------------------------------------------------
 _FS_PRIOR = 0.001
-_FS = {
-    # (m, u) per gamma level for the single name comparison
-    2: (0.90, 0.01),
-    1: (0.08, 0.04),
-    0: (0.02, 0.95),
-}
+
+
+def _fs_log2_terms() -> tuple[float, float, float, float]:
+    """log2 prior odds at ``_FS_PRIOR`` and the log2 Bayes factors of
+    gamma 2, 1 and 0 at the engine's default m/u, for the oracle SQL."""
+    return math.log2(_FS_PRIOR / (1 - _FS_PRIOR)), *(
+        math.log2(_DEFAULT_M[lvl] / _DEFAULT_U[lvl])
+        for lvl in (EXACT_LEVEL, FUZZY_LEVEL, ELSE_LEVEL)
+    )
 
 
 def _fs_sql() -> str:
-    prior_odds = math.log2(_FS_PRIOR / (1 - _FS_PRIOR))
-    bf2 = math.log2(_FS[2][0] / _FS[2][1])
-    bf1 = math.log2(_FS[1][0] / _FS[1][1])
-    bf0 = math.log2(_FS[0][0] / _FS[0][1])
+    prior_odds, bf2, bf1, bf0 = _fs_log2_terms()
     return f"""
     WITH pairs AS (
         SELECT l.c_custkey AS custkey_l, r.c_custkey AS custkey_r,
@@ -933,22 +982,44 @@ def _fs_sql() -> str:
     survey="L5 (Fellegi-Sunter predict math)",
 )
 def fs_score_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = blocking_self_join(spark, sf_dir)
-    prior_odds = math.log2(_FS_PRIOR / (1 - _FS_PRIOR))
-    g = F.col("gamma_name")
-    bf = (
-        F.when(g == 2, math.log2(_FS[2][0] / _FS[2][1]))
-        .when(g == 1, math.log2(_FS[1][0] / _FS[1][1]))
-        .otherwise(math.log2(_FS[0][0] / _FS[0][1]))
+    (cust,) = _t(spark, sf_dir, "customer")
+    scored = _name_predictions(_name_model(_FS_PRIOR), cust)
+    return scored.select(
+        F.col("c_custkey_l").alias("custkey_l"),
+        F.col("c_custkey_r").alias("custkey_r"),
+        F.col("gamma_c_name").alias("gamma_name"),
+        F.round("match_weight", 6).alias("match_weight"),
+        F.round("match_probability", 6).alias("match_probability"),
     )
-    weight = F.lit(prior_odds) + bf
-    prob = F.lit(1.0) / (F.lit(1.0) + F.pow(F.lit(2.0), -weight))
-    return pairs.select(
-        "custkey_l",
-        "custkey_r",
-        "gamma_name",
-        F.round(weight, 6).alias("match_weight"),
-        F.round(prob, 6).alias("match_probability"),
+
+
+def _funnel_rows(
+    spark: SparkSession, clustered: DataFrame, pair_stages: list
+) -> DataFrame:
+    """A linkage funnel's counts row: records, then ``pair_stages``
+    (``(stage, n)`` pairs), then matched records, clusters and resolved
+    entities. The four record-side counts come from one aggregate over
+    the cluster sizes of ``cluster_at_threshold``'s output: a record
+    touched by a match sits in a cluster of two or more."""
+    sizes = clustered.groupBy("cluster_id").agg(F.count("*").alias("size"))
+    linked = F.col("size") > 1
+    n_records, n_touched, n_clusters, n_entities = sizes.agg(
+        F.sum("size"),
+        F.coalesce(F.sum(F.when(linked, F.col("size"))), F.lit(0)),
+        F.count_if(linked),
+        F.count("*"),
+    ).first()
+    stages = [
+        ("records", n_records),
+        *pair_stages,
+        ("matched_records", n_touched),
+        ("clusters", n_clusters),
+        ("entities", n_entities),
+    ]
+    return local_rows_df(
+        spark,
+        [(i, stage, n) for i, (stage, n) in enumerate(stages)],
+        "stage_idx int, stage string, n long",
     )
 
 
@@ -956,25 +1027,25 @@ def fs_score_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Linkage funnel — the whole Fellegi–Sunter pipeline composed as ONE
 # counts row (the linkage twin of curation_funnel): records → blocked
 # candidate pairs → above-threshold matches → records touched by a
-# match → connected clusters → resolved entities. The oracle re-derives
-# every stage in one DuckDB program, recursive-CTE closure included, so
-# a hash match certifies the END-TO-END composition (blocking ∘ gamma ∘
-# FS arithmetic ∘ threshold ∘ transitive closure) — the report a
+# match → connected clusters → resolved entities. The Spark side runs
+# the engine (FellegiSunterModel.predict, then
+# cluster.cluster_at_threshold); the oracle re-derives every stage in
+# one DuckDB program, recursive-CTE closure included, so a hash match
+# certifies the END-TO-END composition (blocking ∘ gamma ∘ FS
+# arithmetic ∘ threshold ∘ transitive closure) — the report a
 # production linkage run publishes next to its cluster table.
 # Threshold on match_weight (exact arithmetic both engines round
 # identically): −9.0 sits between the gamma=1 weight (≈ −8.97) and the
 # gamma=0 weight (≈ −15.5), so near-matches link and non-matches don't
 # — nonempty at every shipped SF (gamma=1 pairs: 58 at sf0.001, 1661
-# at sf0.01).
+# at sf0.01). Clustering thresholds the probability at that weight, the
+# same test: no weight lies within 0.03 of −9.0.
 # --------------------------------------------------------------------------
 _FUNNEL_MIN_WEIGHT = -9.0
 
 
 def _linkage_funnel_sql() -> str:
-    prior_odds = math.log2(_FS_PRIOR / (1 - _FS_PRIOR))
-    bf2 = math.log2(_FS[2][0] / _FS[2][1])
-    bf1 = math.log2(_FS[1][0] / _FS[1][1])
-    bf0 = math.log2(_FS[0][0] / _FS[0][1])
+    prior_odds, bf2, bf1, bf0 = _fs_log2_terms()
     return f"""
     WITH RECURSIVE pairs AS MATERIALIZED (
         SELECT l.c_custkey AS custkey_l, r.c_custkey AS custkey_r,
@@ -1039,99 +1110,50 @@ def _linkage_funnel_sql() -> str:
     "oracle",
 )
 def linkage_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.cluster import connected_components
-
     (cust,) = _t(spark, sf_dir, "customer")
-    n_records = cust.count()
-    scored = fs_score_fixed(spark, sf_dir).localCheckpoint(eager=True)
-    n_pairs = scored.count()
-    matched = scored.where(
-        F.col("match_weight") >= _FUNNEL_MIN_WEIGHT
-    ).select("custkey_l", "custkey_r").localCheckpoint(eager=True)
-    n_matches = matched.count()
-    n_touched = (
-        matched.select(F.col("custkey_l").alias("k"))
-        .union(matched.select("custkey_r"))
-        .distinct()
-        .count()
+    scored = _pinned_scores(_name_model(_FS_PRIOR), cust)
+    n_pairs, n_matches = scored.agg(
+        F.count("*"),
+        F.count_if(F.round("match_weight", 6) >= _FUNNEL_MIN_WEIGHT),
+    ).first()
+    clustered = cluster_at_threshold(
+        cust, scored, 1.0 / (1.0 + 2.0 ** -_FUNNEL_MIN_WEIGHT),
+        unique_id="c_custkey",
     )
-    comp = connected_components(
-        matched.select(
-            F.col("custkey_l").alias("src"), F.col("custkey_r").alias("dst")
-        )
+    return _funnel_rows(
+        spark, clustered,
+        [("candidate_pairs", n_pairs), ("matches", n_matches)],
     )
-    n_clusters = comp.select("component").distinct().count()
-    rows = [
-        (0, "records", n_records),
-        (1, "candidate_pairs", n_pairs),
-        (2, "matches", n_matches),
-        (3, "matched_records", n_touched),
-        (4, "clusters", n_clusters),
-        (5, "entities", n_records - n_touched + n_clusters),
-    ]
-    return local_rows_df(spark, rows, "stage_idx int, stage string, n long")
 
 
 # --------------------------------------------------------------------------
-# L4 ∘ L5 ∘ L6 — the TRAINED funnel (round-15 ask #7): the deterministic
-# contingency-table EM (the exact arithmetic of
-# model.FellegiSunterModel.estimate_m_em, model.py — fix_u, single
-# comparison, so the sufficient statistic collapses to the three
-# gamma-level pair counts) runs TO CONVERGENCE at the reference default
-# em_convergence=0.01 (reference autolinker.py:544) on the Spark side as
-# driver arithmetic over one 3-row aggregate, and in the ORACLE as a
-# recursive CTE iterating the identical update — so the hash match
-# certifies L4's trained parameters feeding the L5 threshold and the L6
-# closure CROSS-ENGINE at any SF (no data-dependent literals; the SQL
-# re-derives the fixed point itself). Classification at posterior ≥ 0.5
-# (trained match_weight ≥ 0); measured margins between the trained
-# per-gamma weights and 0 are ≥ 2.17 at both shipped SFs, so EM
-# floating-point jitter (ulp-order between numpy/libm and DuckDB) cannot
-# flip a pair across the threshold. em_iterations is emitted as a funnel
-# stage to pin the EM trajectory itself cross-engine (integer — exact).
+# L4 ∘ L5 ∘ L6 — the TRAINED funnel: FellegiSunterModel.estimate_m_em
+# trains the name comparison's m (fix_u, one comparison, so its
+# contingency table is the three gamma-level pair counts) TO
+# CONVERGENCE at the reference default em_convergence=0.01 (reference
+# autolinker.py:544); predict scores at the session's within-block match
+# proportion as the prior, and cluster_at_threshold links at posterior
+# ≥ 0.5 (trained match_weight ≥ 0). The ORACLE iterates the same update
+# as a recursive CTE, so the hash match certifies the engine's trained
+# parameters feeding the L5 threshold and the L6 closure CROSS-ENGINE
+# at any SF (no data-dependent literals; the SQL re-derives the fixed
+# point itself). The engine's E-step runs in log space, the CTE's on
+# the plain products; measured margins between the trained per-gamma
+# weights and 0 are ≥ 2.17 at both shipped SFs, so that ulp-order
+# jitter cannot flip a pair across the threshold. em_iterations is
+# emitted as a funnel stage to pin the EM trajectory itself
+# cross-engine (integer — exact). A comment inside the oracle SQL still
+# names _em_contingency, the driver-side copy of the EM this row ran
+# before it called the engine; the oracle text is kept byte-identical.
 # --------------------------------------------------------------------------
 _EM_TOL = 0.01  # reference default em_convergence (autolinker.py:544)
 _EM_MAX_ITER = 100
 
 
-def _em_contingency(
-    n0: float, n1: float, n2: float
-) -> tuple[float, float, float, float, int]:
-    """Fixed-u contingency EM over the three gamma-level counts →
-    ``(m0, m1, m2, lam, iterations)``. EXPRESSION-IDENTICAL to the
-    recursive CTE in :func:`_linkage_funnel_trained_sql` (same
-    association order, same clamps) and arithmetically the
-    single-comparison, fix_u case of
-    ``FellegiSunterModel.estimate_m_em`` (model.py) — the parity is
-    pinned by tests/test_model.py::test_em_contingency_matches_model_em."""
-    m0, m1, m2 = _FS[0][0], _FS[1][0], _FS[2][0]
-    u0, u1, u2 = _FS[0][1], _FS[1][1], _FS[2][1]
-    lam = 0.5
-    iters = 0
-    for iters in range(1, _EM_MAX_ITER + 1):
-        p0 = (lam * m0) / ((lam * m0) + (1.0 - lam) * u0)
-        p1 = (lam * m1) / ((lam * m1) + (1.0 - lam) * u1)
-        p2 = (lam * m2) / ((lam * m2) + (1.0 - lam) * u2)
-        q0, q1, q2 = n0 * p0, n1 * p1, n2 * p2
-        s = q0 + q1 + q2
-        t = n0 + n1 + n2
-        nm0 = max(q0 / s, 1e-9)
-        nm1 = max(q1 / s, 1e-9)
-        nm2 = max(q2 / s, 1e-9)
-        nlam = s / t
-        delta = max(
-            abs(nm0 - m0), abs(nm1 - m1), abs(nm2 - m2), abs(nlam - lam)
-        )
-        m0, m1, m2, lam = nm0, nm1, nm2, nlam
-        if delta <= _EM_TOL:
-            break
-    return m0, m1, m2, lam, iters
-
-
 def _linkage_funnel_trained_sql() -> str:
-    m0_0, u0 = _FS[0]
-    m1_0, u1 = _FS[1]
-    m2_0, u2 = _FS[2]
+    m0_0, u0 = _DEFAULT_M[ELSE_LEVEL], _DEFAULT_U[ELSE_LEVEL]
+    m1_0, u1 = _DEFAULT_M[FUZZY_LEVEL], _DEFAULT_U[FUZZY_LEVEL]
+    m2_0, u2 = _DEFAULT_M[EXACT_LEVEL], _DEFAULT_U[EXACT_LEVEL]
     return f"""
     WITH RECURSIVE pairs AS MATERIALIZED (
         SELECT l.c_custkey AS custkey_l, r.c_custkey AS custkey_r,
@@ -1238,72 +1260,39 @@ def _linkage_funnel_trained_sql() -> str:
     "data-dependent literals",
 )
 def linkage_funnel_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.cluster import connected_components
-
     (cust,) = _t(spark, sf_dir, "customer")
-    n_records = cust.count()
-    pairs = blocking_self_join(spark, sf_dir).localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    # L4: the 3-row contingency aggregate is the EM's entire input
-    lvl = {
-        int(r["gamma_name"]): float(r["count"])
-        for r in pairs.groupBy("gamma_name").count().collect()
-    }
-    m0, m1, m2, lam, iters = _em_contingency(
-        lvl.get(0, 0.0), lvl.get(1, 0.0), lvl.get(2, 0.0)
+    model = _name_model(
+        None, em_convergence=_EM_TOL, max_em_iterations=_EM_MAX_ITER
     )
-    # L5 at the trained parameters: per-gamma weights are driver
-    # constants; posterior >= 0.5 <=> match_weight >= 0
-    prior_odds = math.log2(lam / (1.0 - lam))
-    w = {
-        0: prior_odds + math.log2(m0 / _FS[0][1]),
-        1: prior_odds + math.log2(m1 / _FS[1][1]),
-        2: prior_odds + math.log2(m2 / _FS[2][1]),
-    }
-    match_levels = [g for g, wt in w.items() if wt >= 0.0]
-    matched = (
-        pairs.where(F.col("gamma_name").isin(match_levels))
-        .select("custkey_l", "custkey_r")
-        .localCheckpoint(eager=True)
+    iters = model.estimate_m_em(
+        ensure_parallelism(cust), model.blocking_rules[0]
     )
-    n_matches = matched.count()
-    n_touched = (
-        matched.select(F.col("custkey_l").alias("k"))
-        .union(matched.select("custkey_r"))
-        .distinct()
-        .count()
+    model.prior = model.em_lambda
+    scored = _pinned_scores(model, cust)
+    n_pairs, n_matches = scored.agg(
+        F.count("*"), F.count_if(F.col("match_probability") >= 0.5)
+    ).first()
+    clustered = cluster_at_threshold(cust, scored, 0.5, unique_id="c_custkey")
+    return _funnel_rows(
+        spark, clustered,
+        [
+            ("candidate_pairs", n_pairs),
+            ("em_iterations", iters),
+            ("matches", n_matches),
+        ],
     )
-    comp = connected_components(
-        matched.select(
-            F.col("custkey_l").alias("src"), F.col("custkey_r").alias("dst")
-        )
-    )
-    n_clusters = comp.select("component").distinct().count()
-    rows = [
-        (0, "records", n_records),
-        (1, "candidate_pairs", n_pairs),
-        (2, "em_iterations", iters),
-        (3, "matches", n_matches),
-        (4, "matched_records", n_touched),
-        (5, "clusters", n_clusters),
-        (6, "entities", n_records - n_touched + n_clusters),
-    ]
-    return local_rows_df(spark, rows, "stage_idx int, stage string, n long")
 
 
 # --------------------------------------------------------------------------
 # L5 + tf — Fellegi–Sunter scoring with term-frequency adjustment: on an
 # exact match the generic u is replaced by the matched VALUE's relative
 # frequency, so agreeing on a rare segment scores higher than agreeing on
-# a common one (Splink tf-adjustment semantics; model.py:350-362)
+# a common one (Splink tf-adjustment semantics; the tf_adjustment
+# comparison of FellegiSunterModel.predict)
 # --------------------------------------------------------------------------
-_TF_PRIOR = 0.001
-_TF_M_EXACT, _TF_M_ELSE, _TF_U_ELSE = 0.9, 0.02, 0.95
-
-
 def _fs_tf_sql() -> str:
-    prior_odds = math.log2(_TF_PRIOR / (1 - _TF_PRIOR))
-    bf_else = math.log2(_TF_M_ELSE / _TF_U_ELSE)
+    prior_odds = math.log2(_FS_PRIOR / (1 - _FS_PRIOR))
+    bf_else = math.log2(_DEFAULT_M[ELSE_LEVEL] / _DEFAULT_U[ELSE_LEVEL])
     return f"""
     WITH tf AS (
         SELECT c_mktsegment AS seg,
@@ -1323,7 +1312,7 @@ def _fs_tf_sql() -> str:
     )
     SELECT custkey_l, custkey_r, gamma_seg,
            ROUND(({prior_odds!r}) + CASE WHEN gamma_seg = 1
-                THEN log2({_TF_M_EXACT!r} / GREATEST(tf, 1e-9))
+                THEN log2({_DEFAULT_M[EXACT_LEVEL]!r} / GREATEST(tf, 1e-9))
                 ELSE {bf_else!r} END, 6) AS match_weight
     FROM pairs JOIN tf ON pairs.seg_l = tf.seg
     """
@@ -1336,44 +1325,24 @@ def _fs_tf_sql() -> str:
 )
 def fs_score_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cust,) = _t(spark, sf_dir, "customer")
-    n = cust.count()
-    tf = cust.groupBy(F.col("c_mktsegment").alias("seg")).agg(
-        (F.count("*") * F.lit(1.0) / F.lit(float(n))).alias("tf")
-    )
     # Two-key block (nation + acctbal-thousands bucket): sub-divides each
     # nation block ~11× so the pair count stays bounded as blocks grow —
     # a single linear-in-n key makes candidate pairs quadratic at scale.
-    left = cust.alias("l")
-    right = cust.alias("r")
-    pairs = left.join(
-        right,
-        (F.col("l.c_nationkey") == F.col("r.c_nationkey"))
-        & (
-            F.floor(F.col("l.c_acctbal") / 1000.0).cast("int")
-            == F.floor(F.col("r.c_acctbal") / 1000.0).cast("int")
-        )
-        & (F.col("l.c_custkey") < F.col("r.c_custkey")),
-    ).select(
-        F.col("l.c_custkey").alias("custkey_l"),
-        F.col("r.c_custkey").alias("custkey_r"),
-        F.col("l.c_mktsegment").alias("seg_l"),
-        F.when(F.col("l.c_mktsegment") == F.col("r.c_mktsegment"), 1)
-        .otherwise(0)
-        .alias("gamma_seg"),
+    keyed = cust.withColumn(
+        "acctbal_k", F.floor(F.col("c_acctbal") / 1000.0).cast("int")
     )
-    prior_odds = math.log2(_TF_PRIOR / (1 - _TF_PRIOR))
-    bf = F.when(
-        F.col("gamma_seg") == 1,
-        F.log2(F.lit(_TF_M_EXACT) / F.greatest(F.col("tf"), F.lit(1e-9))),
-    ).otherwise(F.lit(math.log2(_TF_M_ELSE / _TF_U_ELSE)))
-    return (
-        pairs.join(F.broadcast(tf), pairs["seg_l"] == tf["seg"])
-        .select(
-            "custkey_l",
-            "custkey_r",
-            "gamma_seg",
-            F.round(F.lit(prior_odds) + bf, 6).alias("match_weight"),
-        )
+    model = FellegiSunterModel(
+        [Comparison("c_mktsegment", "exact", tf_adjustment=True)],
+        [("c_nationkey", "acctbal_k")],
+        unique_id="c_custkey",
+        prior=_FS_PRIOR,
+    )
+    # the engine's exact comparison is 2/0; the row reports it as 1/0
+    return model.predict(keyed).select(
+        F.col("c_custkey_l").alias("custkey_l"),
+        F.col("c_custkey_r").alias("custkey_r"),
+        (F.col("gamma_c_mktsegment") == EXACT_LEVEL).cast("int").alias("gamma_seg"),
+        F.round("match_weight", 6).alias("match_weight"),
     )
 
 
@@ -1523,27 +1492,13 @@ def incremental_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="A3 (auto log base = per-column distinct count)",
 )
 def entropy_auto_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auto_data_linkage_spark.profile import value_counts
+    from auto_data_linkage_spark.profile import entropy_df
 
     (orders,) = _t(spark, sf_dir, "orders")
-    vc = value_counts(orders, ["o_orderstatus", "o_orderpriority"])
-    totals = vc.groupBy("col").agg(
-        F.sum("cnt").alias("total"), F.count("*").alias("n_distinct")
+    ent = entropy_df(
+        orders, ["o_orderstatus", "o_orderpriority"], base="distinct"
     )
-    joined = vc.join(totals, "col")
-    p = F.col("cnt") / F.col("total")
-    return (
-        joined.groupBy("col")
-        .agg(
-            F.round(
-                F.sum(-p * F.log(p))
-                / F.when(
-                    F.max("n_distinct") > 1, F.log(F.max("n_distinct"))
-                ).otherwise(F.lit(1.0)),
-                6,
-            ).alias("entropy")
-        )
-    )
+    return ent.select("col", F.round("entropy", 6).alias("entropy"))
 
 
 # --------------------------------------------------------------------------

@@ -163,7 +163,6 @@ class StreamingLinker:
     # ------------------------------------------------------------- logic
     def _fold(self, base, batch_df: DataFrame) -> DataFrame:
         uid = self.unique_id
-        require_new_ids(batch_df, base, unique_id=uid)
         if base is None:
             scored = self.model.predict(batch_df)
             return cluster_at_threshold(
@@ -186,9 +185,9 @@ class StreamingLinker:
         atomically. A replayed batch id is skipped by its token BEFORE
         any data work (exactly-once); a crash before the commit leaves
         nothing visible, so the replay re-runs cleanly and the orphan
-        generation is vacuumable. A batch that re-sends an id the state
-        holds, or carries one id twice, raises ``ValueError`` and
-        commits nothing."""
+        generation is vacuumable. An empty batch commits nothing. A
+        batch that re-sends an id the state holds, or carries one id
+        twice, raises ``ValueError`` and commits nothing."""
         spark = batch_df.sparkSession
         try:
             snap = self._read_state()
@@ -205,9 +204,9 @@ class StreamingLinker:
         meta = snap["meta"]
         if M.txn_version(meta, self.app_id) >= int(batch_id):
             return  # batch already committed: a checkpoint replay
-        if batch_df.isEmpty():
-            return
         base = M.read_table(spark, self.state_dir, _TABLE, snap)
+        if require_new_ids(batch_df, base, unique_id=self.unique_id) == 0:
+            return  # an empty batch: nothing to fold or commit
         clustered = self._fold(base, batch_df)
         gen = M.next_gen(self.state_dir, _TABLE)
         clustered.write.parquet(

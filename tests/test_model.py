@@ -98,8 +98,11 @@ def test_em_converges_and_improves_m(spark, people):
     ]
     model = FellegiSunterModel(comps, [("postcode",)])
     model.estimate_u(df, target_pairs=500)
+    assert model.em_lambda is None
     iters = model.estimate_m_em(df, ("postcode",))
     assert 1 <= iters <= model.max_em_iterations
+    # the session's within-block match proportion, recorded for scoring
+    assert 0.0 < model.em_lambda < 1.0
     m = model.params["surname"].m
     assert m[2] > 0.5  # matches mostly agree exactly on surname
 
@@ -280,57 +283,3 @@ def test_match_key_dedup_equals_dropduplicates(spark):
             ).collect()
         }
         assert a == b, f"case {case}: {a ^ b}"
-
-
-def test_em_contingency_matches_model_em(spark):
-    """Round-15 ask #7 parity pin: queries._em_contingency — the driver
-    arithmetic behind the linkage_funnel_trained catalog row (and its
-    recursive-CTE DuckDB twin) — IS the single-comparison fix_u case of
-    FellegiSunterModel.estimate_m_em: same init (the model's default
-    m/u priors = queries._FS), same tol (em_convergence 0.01), same
-    update. The model's E-step runs in log space (exp∘log round-trip),
-    so equality is to 1e-9, with the iteration count exact."""
-    from auto_data_linkage_spark.model import ELSE_LEVEL, EXACT_LEVEL, FUZZY_LEVEL
-    from auto_data_linkage_spark.queries import _FS, _em_contingency
-
-    # model default priors and the funnel's constants must be the same
-    # numbers, or the parity claim is vacuous
-    from auto_data_linkage_spark.model import _DEFAULT_M, _DEFAULT_U
-
-    assert {l: _FS[l][0] for l in (0, 1, 2)} == {
-        ELSE_LEVEL: _DEFAULT_M[ELSE_LEVEL],
-        FUZZY_LEVEL: _DEFAULT_M[FUZZY_LEVEL],
-        EXACT_LEVEL: _DEFAULT_M[EXACT_LEVEL],
-    }
-    assert {l: _FS[l][1] for l in (0, 1, 2)} == {
-        ELSE_LEVEL: _DEFAULT_U[ELSE_LEVEL],
-        FUZZY_LEVEL: _DEFAULT_U[FUZZY_LEVEL],
-        EXACT_LEVEL: _DEFAULT_U[EXACT_LEVEL],
-    }
-
-    # small frame with all three gamma levels inside one block
-    rows = [
-        ("1", "smith", "b"), ("2", "smith", "b"),        # exact
-        ("3", "smyth", "b"), ("4", "smythe", "b"),       # fuzzy vs 1/2
-        ("5", "jonathan", "b"), ("6", "zzzzzzzz", "b"),  # else
-    ]
-    df = spark.createDataFrame(rows, "unique_id string, name string, blk string")
-    comps = [Comparison("name", "levenshtein", 2)]
-    model = FellegiSunterModel(comps, [BlockingRule(("blk",))])
-    iters_model = model.estimate_m_em(df, BlockingRule(("blk",)), fix_u=True)
-
-    pairs = candidate_pairs(df, [BlockingRule(("blk",))], comps)
-    lvl = {
-        int(r["gamma_name"]): float(r["count"])
-        for r in pairs.groupBy("gamma_name").count().collect()
-    }
-    m0, m1, m2, lam, iters = _em_contingency(
-        lvl.get(0, 0.0), lvl.get(1, 0.0), lvl.get(2, 0.0)
-    )
-    assert iters == iters_model
-    trained = model.params["name"].m
-    assert trained[ELSE_LEVEL] == pytest.approx(m0, abs=1e-9)
-    assert trained[FUZZY_LEVEL] == pytest.approx(m1, abs=1e-9)
-    assert trained[EXACT_LEVEL] == pytest.approx(m2, abs=1e-9)
-    # fix_u left u at the priors
-    assert model.params["name"].u[EXACT_LEVEL] == _FS[2][1]

@@ -166,8 +166,7 @@ def test_no_oracle_sql_yields_hugeint(sf_dir):
     assert not offenders, f"HUGEINT oracle columns (driver-red risk): {offenders}"
 
 
-@pytest.mark.parametrize("name", _window_split()[1])
-def test_out_of_window_query_matches_oracle(spark, sf_dir, name):
+def _assert_matches_oracle(spark, sf_dir, name):
     catalog._load_extensions()
     fn = catalog.REGISTRY[name].fn
     sql = catalog.REGISTRY[name].sql
@@ -176,3 +175,20 @@ def test_out_of_window_query_matches_oracle(spark, sf_dir, name):
     con = duckdb_connect(sf_dir)
     problems = compare_query(spark, con, fn, sql, sf_dir)
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+@pytest.mark.parametrize("name", _window_split()[1])
+def test_out_of_window_query_matches_oracle(spark, sf_dir, name):
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize(
+    "name", ["blocking_self_join", "fs_score_fixed", "connected_components"]
+)
+def test_front_window_engine_row_matches_oracle(spark, sf_dir, name):
+    """The front-window rows that run the linkage engine (candidate_pairs,
+    FellegiSunterModel.predict, connected_components) get the same
+    oracle comparison here, so a drift in the engine fails this suite,
+    not only the external gate."""
+    assert name in _window_split()[0]
+    _assert_matches_oracle(spark, sf_dir, name)

@@ -321,6 +321,28 @@ def test_manifest_state_crash_before_commit_replays_cleanly(
     ) | set(M.read_manifest(state, version=v)["tables"]["clusters"][""])
 
 
+def test_empty_batch_commits_nothing(spark, people_batches, tmp_path):
+    """An empty micro-batch after a real one writes nothing: the
+    manifest version and the cluster table stay as they were, and the
+    next batch still folds in."""
+    from auto_data_linkage_spark.operators import manifestfs as M
+
+    state = str(tmp_path / "state")
+    _, (b0, b1, _) = people_batches
+    linker = StreamingLinker(_model(), state, threshold=THRESHOLD)
+    linker.process_batch(b0, 0)
+    before = _rows(linker.current_clusters(spark))
+    v = M.read_manifest(state)["version"]
+
+    linker.process_batch(b1.limit(0), 1)
+    assert M.read_manifest(state)["version"] == v
+    assert _rows(linker.current_clusters(spark)) == before
+
+    linker.process_batch(b1, 2)
+    assert M.read_manifest(state)["version"] == v + 1
+    assert linker.current_clusters(spark).count() == b0.count() + b1.count()
+
+
 @pytest.mark.exhaustive
 def test_resent_record_is_refused_and_state_kept(
     spark, people_batches, tmp_path_factory
