@@ -9,9 +9,14 @@ dependency-free TPE in :mod:`auto_data_linkage_spark.tpe` (random
 startup trials, then l/g Parzen sampling per dimension with hyperopt's
 conditional-dimension rule) — identical space, identical per-trial cost.
 
-Per-trial pipeline (all Spark work):
-  clean → unique_id → candidate blocking rules (estimated, never joined) →
-  u-estimation → EM per training rule → predict → cluster → score.
+Search pipeline (all Spark work). Once per search: clean → unique_id →
+candidate blocking rules (estimated, never joined). Per trial, each phase
+one Spark query: u-estimation → EM over every arm of the training rule
+(one contingency aggregate) → predict (every candidate pair, no
+threshold) → cluster at ``cluster_threshold`` → score (one
+information-gain collect). The best trial's predictions and clustering
+are kept, not recomputed: they become ``best_predictions`` and the
+memoized clustering at ``cluster_threshold``.
 """
 
 from __future__ import annotations
@@ -272,23 +277,31 @@ class AutoLinker:
             params = sampler.suggest()
             comps, active = self._params_to_comparisons(params, attrs)
             rule = rules[params["rule"]]
-            trial = self._run_trial(df, n, attrs, comps, rule, training_rule)
+            trial, frames = self._run_trial(
+                df, n, attrs, comps, rule, training_rule
+            )
             sampler.observe(active, trial.score)
             self.trials.append(trial)
             if trial.score > best_score:
                 best_score = trial.score
                 self.best_trial = trial
+                # only the best-so-far trial's frames are held
+                best_frames = frames
         assert self.best_trial is not None
-        self.best_predictions = self._predict(self.best_trial.model).cache()
-        self._cluster_cache.clear()
+        # the winning trial already predicted every pair and clustered at
+        # cluster_threshold: reuse both instead of running them again
+        predictions, clusters = best_frames
+        self.best_predictions = predictions.cache()
+        self._cluster_cache = {self.cluster_threshold: clusters}
         return self.best_trial
 
-    def _predict(self, model: FellegiSunterModel, threshold: float = 0.0) -> DataFrame:
-        """Cross-table pairs in link mode, within-table otherwise."""
+    def _predict(self, model: FellegiSunterModel) -> DataFrame:
+        """Every candidate pair, scored: cross-table pairs in link mode,
+        within-table otherwise."""
         if self._link_frames is not None:
             left, right = self._link_frames
-            return model.predict(left, right_df=right, threshold=threshold)
-        return model.predict(self.clean_data, threshold=threshold)
+            return model.predict(left, right_df=right)
+        return model.predict(self.clean_data)
 
     def _run_trial(
         self,
@@ -298,7 +311,9 @@ class AutoLinker:
         comps: list[Comparison],
         rule: blocking_mod.RuleEstimate,
         training_rule: blocking_mod.RuleEstimate | None,
-    ) -> Trial:
+    ) -> tuple[Trial, tuple[DataFrame, DataFrame]]:
+        """One trial: train, predict, cluster and score. Returns the
+        trial and its ``(predictions, clusters)``."""
         model = FellegiSunterModel(
             comps,
             rule.to_blocking_rules(),
@@ -308,9 +323,8 @@ class AutoLinker:
         )
         model.estimate_u(df, target_pairs=100_000, seed=self.random_seed, n=n)
         if training_rule is not None:
-            for arm in training_rule.arms:
-                model.estimate_m_em(df, arm)
-        predictions = self._predict(model, threshold=0.01)
+            model.estimate_m_em(df, *training_rule.to_blocking_rules())
+        predictions = self._predict(model)
         clusters = cluster_at_threshold(
             df, predictions, self.cluster_threshold, self.unique_id
         )
@@ -329,7 +343,7 @@ class AutoLinker:
         )
         if self.true_label and self.true_label in df.columns:
             trial.metrics.update(pairwise_prf(clusters, self.true_label))
-        return trial
+        return trial, (predictions, clusters)
 
     # ------------------------------------------------- incremental fold
     def incremental_update(
@@ -448,7 +462,10 @@ class AutoLinker:
     # ------------------------------------------------------------ output
     def best_clusters_at_threshold(self, threshold: float = 0.8) -> DataFrame:
         """Memoized clustering of the best model's predictions (reference
-        autolinker.py:1069-1094)."""
+        autolinker.py:1069-1094). The clustering at ``cluster_threshold``
+        is the winning trial's own, kept by ``auto_link``, so asking for
+        it runs no Spark job until its rows are read; other thresholds
+        cluster ``best_predictions``."""
         if self.best_trial is None or self.clean_data is None:
             raise RuntimeError("call auto_link first")
         if threshold not in self._cluster_cache:

@@ -45,32 +45,22 @@ def information_gain_power_ratio(
     ``I_s ** I_a`` (autolinker.py:217).
 
     Implementation note: entropies in any base are the natural-log entropy
-    divided by ``ln(base)``, so one melt + two aggregations produce both
-    bases — the reference runs four separate entropy-agg jobs. ``base_u``
-    depends only on ``data``; a caller scoring many clusterings of the
-    same data passes it in (``AutoLinker`` computes it once per search)
-    and skips that aggregate.
+    divided by ``ln(base)``, so one melt feeds both bases — the reference
+    runs four separate entropy-agg jobs. Both entropy sums ride one
+    aggregation chain over the value counts and one collect; ``c`` and
+    the matched-record count come from the same rows. Cluster sizes are a
+    ``groupBy`` joined back, not a window keyed on the cluster, because
+    one bad clustering can put most records in a single cluster.
+    ``base_u`` depends only on ``data``; a caller scoring many
+    clusterings of the same data passes it in (``AutoLinker`` computes it
+    once per search) and skips that aggregate.
     """
-    counts = clusters.groupBy("cluster_id").count()
-    multi = counts.where(F.col("count") > 1)
-    # #multi-record clusters and #records in them, one aggregate
-    c, n_matched = multi.agg(F.count("*"), F.sum("count")).first()
-    if c == 0:
-        return UnsupervisedMetrics(0.0, 0.0, 0.0)
-    matched = clusters.join(
-        F.broadcast(multi.withColumnRenamed("count", "_csize")),
-        "cluster_id",
-        "inner",
+    multi = (
+        clusters.groupBy("cluster_id").count()
+        .where(F.col("count") > 1)
+        .withColumnRenamed("count", "_csize")
     )
-
-    if base_u is None:
-        # max distinct-value count across attribute columns of the ORIGINAL
-        # data (A8, autolinker.py:596-602) — one job via a single agg
-        row = data.agg(
-            *[F.countDistinct(col).alias(col) for col in attribute_columns]
-        ).collect()[0]
-        base_u = max(max(row[col] for col in attribute_columns), 2)
-    base_c = max(c, 2)
+    matched = clusters.join(F.broadcast(multi), "cluster_id", "inner")
 
     # one melt pass over the matched subset; value counts per
     # (cluster, column, value) feed both entropy terms
@@ -91,35 +81,53 @@ def information_gain_power_ratio(
             )
         ).alias("kv"),
     ).select("cluster_id", "_csize", "kv.col", "kv.val")
-    vc = melted.groupBy("cluster_id", "_csize", "col", "val").count().cache()
+    vc = melted.groupBy("cluster_id", "_csize", "col", "val").count()
 
-    # natural-log entropy of each column over the whole matched subset
-    overall = (
+    # both entropy sums per column in one aggregation chain, collected
+    # once (one row per column):
+    # - over the whole matched subset: with n a value's count, Σ n·ln n
+    #   and Σ n = N, the matched-record count, give the entropy
+    #   ln N − Σ n·ln n / N;
+    # - within clusters: with p = count / cluster size, Σ −p·ln p is the
+    #   sum over clusters of the per-cluster entropy, and Σ p is the
+    #   number of clusters c (each cluster's p sum to 1). Both are sums
+    #   over value-count rows, so they ride the per-value grouping that
+    #   the first term needs, and the mean takes no cluster-level pass
+    n = F.col("n")
+    p = F.col("count") / F.col("_csize")
+    rows = (
         vc.groupBy("col", "val")
-        .agg(F.sum("count").alias("n"))
-        .select(
-            "col",
-            (
-                -(F.col("n") / F.lit(float(n_matched)))
-                * F.log(F.col("n") / F.lit(float(n_matched)))
-            ).alias("term"),
+        .agg(
+            F.sum("count").alias("n"),
+            F.sum(-p * F.log(p)).alias("h"),
+            F.sum(p).alias("q"),
         )
         .groupBy("col")
-        .agg(F.sum("term").alias("h"))
+        .agg(
+            F.sum(n * F.log(n)).alias("n_ln_n"),
+            F.sum(n).alias("n_matched"),
+            F.sum("h").alias("h_within"),
+            F.sum("q").alias("c"),
+        )
+        .collect()
     )
-    h_matched = {r["col"]: float(r["h"] or 0.0) for r in overall.collect()}
+    if not rows:
+        return UnsupervisedMetrics(0.0, 0.0, 0.0)
+    c = round(rows[0]["c"])
+    h_matched = {
+        r["col"]: math.log(r["n_matched"]) - r["n_ln_n"] / r["n_matched"]
+        for r in rows
+    }
+    h_within = {r["col"]: r["h_within"] / c for r in rows}
 
-    # natural-log per-cluster entropy, then per-column mean over clusters
-    p = F.col("count") / F.col("_csize")
-    within = (
-        vc.select("cluster_id", "col", (-p * F.log(p)).alias("term"))
-        .groupBy("cluster_id", "col")
-        .agg(F.sum("term").alias("h"))
-        .groupBy("col")
-        .agg(F.avg("h").alias("mh"))
-    )
-    h_within = {r["col"]: float(r["mh"] or 0.0) for r in within.collect()}
-    vc.unpersist()
+    if base_u is None:
+        # max distinct-value count across attribute columns of the ORIGINAL
+        # data (A8, autolinker.py:596-602) — one job via a single agg
+        row = data.agg(
+            *[F.countDistinct(col).alias(col) for col in attribute_columns]
+        ).collect()[0]
+        base_u = max(max(row[col] for col in attribute_columns), 2)
+    base_c = max(c, 2)
 
     gain_nat = sum(
         h_matched.get(col, 0.0) - h_within.get(col, 0.0)

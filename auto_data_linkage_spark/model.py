@@ -10,12 +10,15 @@ Spark-first design decisions:
   needed. Each rule's join is an equi-join on its AND-clause keys — Catalyst
   picks hash/sort-merge/broadcast, AQE handles skew.
 - **EM on a contingency table, not per-iteration Spark jobs.** The gamma
-  vector has at most ``3^k`` distinct patterns for ``k`` comparison columns.
-  One ``groupBy(gammas).count()`` builds the pattern histogram (tiny), and
-  EM iterates driver-side in numpy over it — mathematically identical to
-  per-row EM but with exactly one Spark job per training session instead of
-  two per iteration. At 100 TB this is the difference between minutes and
-  hours.
+  vector has at most ``4^k`` distinct patterns for ``k`` comparison columns
+  (levels −1..2). One self-join over every training arm's tagged rows
+  and one ``groupBy(arm, gammas).count()`` build all the pattern
+  histograms (tiny), and EM iterates driver-side in numpy over them —
+  mathematically identical to per-row EM but with one Spark query per EM
+  call, whatever the number of arms, instead of two jobs per iteration.
+  At 100 TB this is the difference between minutes and hours.
+  u-estimation reads its per-column level counts off the same kind of
+  pattern histogram.
 - **Scoring is a codegen'd projection**: per-column Bayes factors are a
   constant-array lookup indexed by the gamma level (each gamma referenced
   exactly once — a when() ladder triples the cost when a threshold filter
@@ -212,7 +215,7 @@ class FellegiSunterModel:
 
     Lifecycle mirrors the reference's Splink drive (autolinker.py:549-561):
     ``prior = 1/N`` → :meth:`estimate_u` (random pair sampling) →
-    :meth:`estimate_m_em` per training rule → :meth:`predict`.
+    :meth:`estimate_m_em` over the training rules → :meth:`predict`.
     Defaults are usable untrained (fixed m/u) for the no-training slice.
     """
 
@@ -292,56 +295,115 @@ class FellegiSunterModel:
 
     @staticmethod
     def _level_histogram(gammas: DataFrame) -> dict[str, dict[int, float]]:
-        """Per-gamma-column level counts in ONE pass: melt the gamma columns
-        into (name, level) rows via explode and group once, instead of one
-        job per column."""
+        """Per-gamma-column level counts from ONE pattern histogram:
+        ``groupBy(*gammas).count()`` has at most ``4^k`` rows (levels
+        −1..2 per column), and the driver sums each column's marginal
+        from it."""
         gcols = gammas.columns
-        melted = gammas.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(g).alias("g"), F.col(g).cast("int").alias("level")
-                        )
-                        for g in gcols
-                    ]
-                )
-            ).alias("kv")
-        ).select("kv.g", "kv.level")
-        rows = melted.groupBy("g", "level").count().collect()
         out: dict[str, dict[int, float]] = {g.removeprefix("gamma_"): {} for g in gcols}
-        for r in rows:
-            out[r["g"].removeprefix("gamma_")][r["level"]] = float(r["count"])
+        for r in gammas.groupBy(*gcols).count().collect():
+            for g in gcols:
+                hist = out[g.removeprefix("gamma_")]
+                hist[r[g]] = hist.get(r[g], 0.0) + r["count"]
         return out
 
     # ----------------------------------------------------------------- EM
     def estimate_m_em(
-        self, df: DataFrame, training_rule: BlockingRule | str | tuple, *,
+        self, df: DataFrame, *training_rules: BlockingRule | str | tuple,
         fix_u: bool = True,
     ) -> int:
-        """EM m-estimation blocked on ``training_rule`` (L4).
+        """EM m-estimation, one session per training rule (L4).
 
-        Builds the gamma-pattern contingency table with one Spark job, then
-        runs EM driver-side in numpy until the max absolute parameter delta
-        ≤ ``em_convergence`` (reference default 0.01, autolinker.py:544).
-        Comparisons whose column appears in the training rule are excluded
-        (their gamma is forced exact by the block). Returns iterations run
-        and records the session's within-block match proportion as
+        Each rule is one arm, and one Spark query serves all of them: every
+        arm's rows carry the arm's index and are unioned, ONE self-join on
+        ``(arm, the arm's columns)`` makes every arm's candidate pairs,
+        and one ``groupBy(arm, gammas).count()`` builds every arm's
+        gamma-pattern contingency table — the jobs of a one-arm call,
+        whatever the number of arms. A comparison whose column an arm
+        blocks on is excluded from that arm's session (its gamma is forced
+        exact by the block), so its gamma there is a NULL literal, never
+        evaluated. The sessions then run driver-side in numpy, in rule
+        order, each until the max absolute parameter delta ≤
+        ``em_convergence`` (reference default 0.01, autolinker.py:544) —
+        exactly as one call per rule would. A list or tuple is the columns
+        of ONE rule. Returns the total of the sessions' iterations and
+        records the last session's within-block match proportion as
         ``em_lambda``.
         """
-        rule = BlockingRule.parse(training_rule)
-        active = [c for c in self.comparisons if c.column not in rule.columns]
-        if not active:
+        rules = [BlockingRule.parse(r) for r in training_rules]
+        arms = [
+            [c for c in self.comparisons if c.column not in rule.columns]
+            for rule in rules
+        ]
+        live = [i for i, active in enumerate(arms) if active]
+        if not live:
             return 0
-        pairs = candidate_pairs(df, [rule], active, self.unique_id)
-        gcols = [c.gamma_name for c in active]
-        pattern_rows = pairs.groupBy(*gcols).count().collect()
-        patterns = np.array(
-            [[r[g] for g in gcols] for r in pattern_rows], dtype=np.int64
+        uid = self.unique_id
+        cols = sorted({c.column for c in self.comparisons})
+        keys = sorted({k for i in live for k in rules[i].columns})
+        # an arm's join key is its own columns, with the other rule
+        # columns NULL on both sides and compared null-safe; a row with a
+        # NULL in its arm's columns drops out, as it does from l.c = r.c
+        tagged = None
+        for i in live:
+            own = rules[i].columns
+            part = df.dropna(subset=list(own)).select(
+                uid,
+                F.lit(i).alias("__arm"),
+                *[
+                    (F.col(k) if k in own
+                     else F.lit(None).cast(df.schema[k].dataType)).alias(f"__k_{k}")
+                    for k in keys
+                ],
+                *cols,
+            )
+            tagged = part if tagged is None else tagged.unionByName(part)
+        left, right = tagged.alias("l"), tagged.alias("r")
+        cond = (F.col("l.__arm") == F.col("r.__arm")) & (
+            F.col(f"l.{uid}") < F.col(f"r.{uid}")
         )
-        counts = np.array([r["count"] for r in pattern_rows], dtype=np.float64)
-        if counts.sum() == 0:
+        for k in keys:
+            cond = cond & F.col(f"l.__k_{k}").eqNullSafe(F.col(f"r.__k_{k}"))
+        pairs = left.join(right, cond, "inner").select(
+            F.col("l.__arm").alias("__arm"),
+            *[F.col(f"l.{c}").alias(f"{c}_l") for c in cols],
+            *[F.col(f"r.{c}").alias(f"{c}_r") for c in cols],
+        )
+        gammas = []
+        for c in self.comparisons:
+            blocked = [i for i in live if c.column in rules[i].columns]
+            gammas.append(
+                F.when(F.col("__arm").isin(blocked), F.lit(None).cast("int"))
+                .otherwise(c.gamma_expr()).alias(c.gamma_name)
+                if blocked else c.gamma_expr()
+            )
+        gcols = [c.gamma_name for c in self.comparisons]
+        rows = (
+            pairs.select("__arm", *gammas).groupBy("__arm", *gcols)
+            .count().collect()
+        )
+        iters = 0
+        for i, active in enumerate(arms):
+            names = [c.gamma_name for c in active]
+            # sorted, so the session does not depend on Spark's row order
+            table = sorted(
+                (tuple(row[g] for g in names), row["count"])
+                for row in rows if row["__arm"] == i
+            )
+            iters += self._em_session(active, table, fix_u=fix_u)
+        return iters
+
+    def _em_session(
+        self, active: list[Comparison], table: list[tuple[tuple, int]], *,
+        fix_u: bool,
+    ) -> int:
+        """One EM session over a ``(pattern, count)`` contingency table of
+        the ``active`` comparisons' gammas; folds the session's m into the
+        per-column mean over sessions. Returns the iterations run."""
+        if not table:
             return 0
+        patterns = np.array([p for p, _ in table], dtype=np.int64)
+        counts = np.array([n for _, n in table], dtype=np.float64)
 
         levels = [EXACT_LEVEL, FUZZY_LEVEL, ELSE_LEVEL]
         # parameter matrices: comp x level

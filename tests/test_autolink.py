@@ -1,10 +1,69 @@
 import pytest
+from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.autolink import AutoLinker
+from auto_data_linkage_spark.cluster import cluster_at_threshold
 from auto_data_linkage_spark.metrics import (
     information_gain_power_ratio,
     pairwise_prf,
 )
+from auto_data_linkage_spark.model import FellegiSunterModel
+
+
+def _jobs_launched_by(spark, group, fn) -> list[int]:
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def link_tables(spark):
+    """Link-mode fixture: the 12 clean people on the left; on the right
+    their 5 typo-duplicates plus 4 impostors that each share one field
+    with a left record, so the search's blocking admits pairs that score
+    far below 0.01."""
+    base = [
+        ("lachlan", "berry", "bittern", "4814"),
+        ("mitchell", "green", "kooringal", "4558"),
+        ("sophie", "white", "tardun", "2321"),
+        ("amber", "dixon", "gowrie", "3073"),
+        ("ruby", "campbell", "parkes", "2620"),
+        ("oliver", "harris", "seaford", "5162"),
+        ("chloe", "walker", "mildura", "3500"),
+        ("jack", "taylor", "penrith", "2750"),
+        ("emily", "clark", "hobart", "7000"),
+        ("liam", "lewis", "cairns", "4870"),
+        ("grace", "young", "darwin", "0800"),
+        ("noah", "hall", "geelong", "3220"),
+    ]
+    right = [
+        ("lachlam", "berry", "bittern", "4814"),
+        ("mitchell", "grene", "kooringal", "4558"),
+        ("sophie", "white", "tardun", "2321"),
+        ("amber", "dixon", "gowrie", "3037"),
+        (None, "campbell", "parkes", "2620"),
+        ("lachlan", "quinn", "yass", "9141"),
+        ("xavier", "green", "moree", "6663"),
+        ("yusuf", "okafor", "tardun", "1187"),
+        ("zoe", "park", "dubbo", "3073"),
+    ]
+    schema = (
+        "unique_id string, given_name string, surname string, "
+        "suburb string, postcode string"
+    )
+    return (
+        spark.createDataFrame(
+            [(f"a{i}",) + r for i, r in enumerate(base)], schema
+        ),
+        spark.createDataFrame(
+            [(f"b{i}",) + r for i, r in enumerate(right)], schema
+        ),
+    )
 
 
 def test_pairwise_prf_perfect_clustering(spark, people):
@@ -90,6 +149,109 @@ def test_information_gain_matches_reference_formula(spark):
     assert information_gain_power_ratio(
         data, clusters, ["a", "b"], base_u=base_u
     ) == um
+
+
+# The scores the three-job implementation (a scalar ``first()``, then
+# one collect per entropy term) returned on the ``people`` fixture.
+_IG_BEFORE = {
+    "true": (4.000000000000001, 2.5098942523012138, 32.441947098316575),
+    "nulls": (3.8277293767706433, 2.4017989905302857, 25.125091171690023),
+}
+
+
+@pytest.mark.parametrize("clustering", ["true", "singletons", "nulls"])
+def test_information_gain_matches_previous_scores(spark, people, clustering):
+    """One collect scores what the three-job form scored: the true
+    clusters, all singletons (exactly 0.0) and a clustering whose
+    matched records carry null attribute values."""
+    data = people
+    if clustering == "singletons":
+        clusters = people.withColumn("cluster_id", F.col("unique_id"))
+    else:
+        if clustering == "nulls":
+            data = people.withColumn(
+                "suburb",
+                F.when(F.col("recid").isin("e1", "e3"), None).otherwise(
+                    F.col("suburb")
+                ),
+            )
+        clusters = data.withColumn("cluster_id", F.col("recid"))
+    um = information_gain_power_ratio(
+        data, clusters, ["given_name", "surname", "suburb", "postcode"]
+    )
+    got = (um.scaled_gain, um.adjusted_gain, um.information_gain_power_ratio)
+    if clustering == "singletons":
+        assert got == (0.0, 0.0, 0.0)
+    else:
+        assert got == pytest.approx(_IG_BEFORE[clustering], rel=1e-12, abs=1e-12)
+
+
+def test_auto_link_reuses_the_winning_trial(spark, link_tables):
+    """The search's own clustering at ``cluster_threshold`` and its
+    predictions are the linker's results: reading them back launches no
+    Spark job, the rows equal a fresh re-link with the best model, and
+    the scores keep every candidate pair, those under 0.01 included."""
+    linker = AutoLinker(
+        comparison_size_limit=5_000, max_evals=1, random_seed=7
+    )
+    linker.auto_link(list(link_tables))
+    t = linker.cluster_threshold
+    assert _jobs_launched_by(
+        spark, "best-clusters", lambda: linker.best_clusters_at_threshold(t)
+    ) == []
+
+    def rows(df):
+        return sorted(
+            tuple(r) for r in df.select("unique_id", "cluster_id").collect()
+        )
+
+    fresh_predictions = linker._predict(linker.best_trial.model)
+    assert rows(linker.best_clusters_at_threshold(t)) == rows(
+        cluster_at_threshold(linker.clean_data, fresh_predictions, t)
+    )
+    scores = linker.get_scores_df()
+    probs = sorted(r[0] for r in scores.select("match_probability").collect())
+    assert probs == sorted(
+        r[0] for r in fresh_predictions.select("match_probability").collect()
+    )
+    assert probs[0] < 0.01
+
+
+def test_search_job_budget(spark, people, link_tables):
+    """Each trial phase is one Spark query: EM runs as many jobs for a
+    three-arm training rule as for one arm, and a one-trial link-mode
+    search stays within its measured job budget (44 jobs before EM,
+    information gain and the winner's re-clustering were cut to one
+    pass each; 32 after)."""
+    from auto_data_linkage_spark.cleaning import null_sentinel
+    from auto_data_linkage_spark.compare import Comparison
+
+    df = null_sentinel(people)
+    comps = [
+        Comparison(c, "levenshtein", 2)
+        for c in ("given_name", "surname", "suburb", "postcode")
+    ]
+    one = _jobs_launched_by(
+        spark, "em-one-arm",
+        lambda: FellegiSunterModel(comps, [("postcode",)]).estimate_m_em(
+            df, ("postcode",)
+        ),
+    )
+    three = _jobs_launched_by(
+        spark, "em-three-arms",
+        lambda: FellegiSunterModel(comps, [("postcode",)]).estimate_m_em(
+            df, ("postcode",), ("surname",), ("suburb",)
+        ),
+    )
+    assert len(one) == len(three) > 0
+
+    linker = AutoLinker(
+        comparison_size_limit=5_000, max_evals=1, random_seed=7
+    )
+    search = _jobs_launched_by(
+        spark, "search", lambda: linker.auto_link(list(link_tables))
+    )
+    assert len(search) <= 32
 
 
 @pytest.mark.slow

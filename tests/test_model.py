@@ -107,6 +107,115 @@ def test_em_converges_and_improves_m(spark, people):
     assert m[2] > 0.5  # matches mostly agree exactly on surname
 
 
+_FOUR = [
+    Comparison("given_name", "levenshtein", 2),
+    Comparison("surname", "jaro_winkler", 0.9),
+    Comparison("suburb", "levenshtein", 1),
+    Comparison("postcode", "levenshtein", 1),
+]
+# the null given_name of the fixture's e5 duplicate drops out of the
+# given_name arm, as it does from a plain equi-join
+_ARMS = [("given_name",), ("postcode",), ("surname", "suburb")]
+
+
+def test_em_arms_in_one_call_equal_sequential_calls(spark, people):
+    """One call over three arms is three one-arm calls on a fresh model:
+    the same m (1e-12), the same total iterations and the same λ."""
+    together = FellegiSunterModel(_FOUR, [("postcode",)])
+    iters = together.estimate_m_em(people, *_ARMS)
+    apart = FellegiSunterModel(_FOUR, [("postcode",)])
+    assert iters == sum(apart.estimate_m_em(people, arm) for arm in _ARMS)
+    assert together.em_lambda == apart.em_lambda
+    for col, p in together.params.items():
+        assert p.m.keys() == apart.params[col].m.keys()
+        for lvl, m in p.m.items():
+            assert m == pytest.approx(apart.params[col].m[lvl], abs=1e-12)
+
+
+def test_em_contingency_tables_equal_candidate_pair_histograms(
+    spark, people, monkeypatch
+):
+    """The one self-join over all arms yields, per arm, the pattern
+    counts of that arm's own blocking join (``candidate_pairs``)."""
+    tables = []
+    session = FellegiSunterModel._em_session
+
+    def spy(self, active, table, *, fix_u):
+        tables.append(table)
+        return session(self, active, table, fix_u=fix_u)
+
+    monkeypatch.setattr(FellegiSunterModel, "_em_session", spy)
+    FellegiSunterModel(_FOUR, [("postcode",)]).estimate_m_em(people, *_ARMS)
+    expected = []
+    for arm in _ARMS:
+        active = [c for c in _FOUR if c.column not in arm]
+        names = [c.gamma_name for c in active]
+        pairs = candidate_pairs(people, [BlockingRule(arm)], active)
+        expected.append(sorted(
+            (tuple(r[g] for g in names), r["count"])
+            for r in pairs.groupBy(*names).count().collect()
+        ))
+    assert tables == expected
+    assert all(expected)
+
+
+def test_em_session_independent_of_partitioning(spark, people):
+    """Patterns are sorted before the numpy session, so m and λ are bit
+    for bit the same whatever order Spark returns the counts in: a
+    1-partition copy against a 4-partition copy whose counts come back
+    over 7 uncoalesced shuffle partitions."""
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = [spark.conf.get(k) for k in keys]
+    results = []
+    try:
+        for frame, shuffle in ((people.coalesce(1), "1"), (people.repartition(4), "7")):
+            spark.conf.set(keys[0], shuffle)
+            spark.conf.set(keys[1], "false")
+            model = FellegiSunterModel(_FOUR, [("postcode",)])
+            model.estimate_m_em(frame, *_ARMS)
+            results.append((
+                {c: p.m for c, p in model.params.items()}, model.em_lambda
+            ))
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    assert results[0] == results[1]
+
+
+def test_estimate_u_pattern_histogram_equals_exploded_counts(
+    spark, people, monkeypatch
+):
+    """u from the one pattern histogram equals u from per-column level
+    counts of an explode over (column, level) rows."""
+
+    def exploded(gammas):
+        melted = gammas.select(
+            F.explode(F.array(*[
+                F.struct(F.lit(g).alias("g"), F.col(g).cast("int").alias("level"))
+                for g in gammas.columns
+            ])).alias("kv")
+        ).select("kv.g", "kv.level")
+        out = {g.removeprefix("gamma_"): {} for g in gammas.columns}
+        for r in melted.groupBy("g", "level").count().collect():
+            out[r["g"].removeprefix("gamma_")][r["level"]] = float(r["count"])
+        return out
+
+    df = null_sentinel(people)
+    new = FellegiSunterModel(_FOUR, [("postcode",)])
+    new.estimate_u(df, target_pairs=500)
+    monkeypatch.setattr(
+        FellegiSunterModel, "_level_histogram", staticmethod(exploded)
+    )
+    old = FellegiSunterModel(_FOUR, [("postcode",)])
+    old.estimate_u(df, target_pairs=500)
+    for col, p in new.params.items():
+        assert p.u == old.params[col].u
+        assert p.u != FellegiSunterModel(_FOUR, []).params[col].u
+
+
 def test_end_to_end_dedup_recovers_entities(spark, people):
     """The PR-1 slice: clean -> block -> compare -> score -> cluster."""
     df = null_sentinel(people)
